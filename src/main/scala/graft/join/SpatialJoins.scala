@@ -1,7 +1,7 @@
 package graft.join
 
 import graft.sql.GraftFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -701,172 +701,77 @@ object SpatialJoins {
   }
 
   /**
-   * Batch kNN via iterative ring expansion over sorted cell ids (#47).
+   * Batch exact kNN (#47): the k nearest points of every query, as
+   * (q_id, p_id, d2, rank) with rank 1..k.
    *
-   * Metric: squared euclidean distance in the normalized web-mercator unit
-   * square (where level-L cells are uniform 2^-L squares, giving the exact
-   * termination bound: any point outside Chebyshev ring r is at distance
-   * ≥ r·2^-L). Queries/points: (id, nx, ny) in [0,1)².
+   * Metric: squared euclidean distance `d2` in the normalized web-mercator
+   * unit square; points and queries are (id, nx, ny) with string ids.
+   * Ties rank by id (UTF-8 byte order), as `topk_pairs` does, and an equal
+   * (d2, id) pair counts once. Rows with a null or NaN coordinate and
+   * points with a null id are dropped.
    *
-   * Each round joins only still-unsatisfied queries against the points'
-   * cell index; the loop is driver-side but each iteration is a fully
-   * distributed join — the standard scalable formulation.
+   * Routing: the queries are collected once with a bounded
+   * `limit(B + 1)`, B = [[KnnBroadcastRows]] = 2²² rows.
+   *  - At most B queries: ONE distributed pass over the points. The
+   *    queries ship to every task as one broadcast; each partition of
+   *    `points` builds a k-d tree ([[KdTree]]) over its own points and
+   *    emits its exact top k per query; the `topk_pairs` aggregate merges
+   *    the partitions. Exact for any point distribution; the points are
+   *    read once and nothing is cached.
+   *  - Above B: the all-DataFrame ring loop ([[knnRings]]), which keeps no
+   *    per-query state on the driver; `level` is its cell level.
+   *
+   * Scale cost of the pass: every partition emits up to Q·k rows into the
+   * merge (Q = query count), so the shuffle carries up to P·Q·k pairs for
+   * P point partitions, and the driver holds the Q collected queries.
+   *
+   * `largeQThreshold` no longer selects a path: every query set of at most
+   * B rows takes the pass. It stays for source compatibility.
    */
   def knn(points: DataFrame, queries: DataFrame, k: Int, level: Int,
           largeQThreshold: Long = 2000): DataFrame = {
+    GraftFunctions.install(points.sparkSession)
+    val qs = queries.select(col("id"), col("nx"), col("ny"))
+      .where(located("nx", "ny"))
+      .limit(KnnBroadcastRows + 1).collect()
+    if (qs.length > KnnBroadcastRows) knnRings(points, queries, k, level)
+    else knnPass(points, qs, k)
+  }
+
+  /** Most queries [[knn]] collects and broadcasts: 2²² rows, the
+    * broadcast budget of the ring loop's probe side. */
+  private val KnnBroadcastRows: Int = 1 << 22
+
+  /** Non-null, non-NaN values in every named column. */
+  private def located(cols: String*): Column =
+    cols.map(c => col(c).isNotNull && !isnan(col(c))).reduce(_ && _)
+
+  /** The single pass of [[knn]] over the collected queries `qs` (id, nx, ny). */
+  private def knnPass(points: DataFrame, qs: Array[Row], k: Int): DataFrame = {
     val spark = points.sparkSession
-    GraftFunctions.install(spark)
     import spark.implicits._
-    import graft.cell.Cells
-
-    // Dispatch + frontier load in ONE bounded job: collect at most
-    // threshold+1 query rows; overflow ⇒ route to the all-DataFrame ring
-    // loop (no driver state). This replaces the former dispatch-only
-    // `queries.count()` (an extra full Spark job per kNN call).
-    val lim = math.min(largeQThreshold, Int.MaxValue - 1L).toInt + 1 // clamp: no Int overflow for huge thresholds
-    val qraw = queries.select(col("id"), col("nx"), col("ny"))
-      .limit(lim).collect()
-    if (qraw.length > largeQThreshold)
-      return knnLarge(points, queries, k, level)
-        .select(col("q_id"), col("p_id"), col("d2"), col("rank"))
-
-    val n = 1L << level
-    val cellSize = 1.0 / n.toDouble
-    val pts = points.select(
-      col("id").as("p_id"), col("nx").as("p_nx"), col("ny").as("p_ny"),
-      call_function("st_cellid_norm", col("nx"), col("ny"), lit(level)).as("cell"))
-      .cache()
-    val nPts = pts.count() // materialize once; reused every round
-
-    // The query frontier is collected to the driver (queries ≪ points — the
-    // standard asymmetry; for query sets too large to hold, fall back to the
-    // all-DataFrame ring loop). Points stay fully distributed: each round is
-    // one broadcast-filtered scan of the cached point index.
-    final case class Q(id: String, nx: Double, ny: Double, cx: Long, cy: Long)
-    val qrows = qraw.map { row =>
-      val nx = row.getDouble(1); val ny = row.getDouble(2)
-      val cell = Cells.cellIdNorm(nx, ny, level)
-      Q(row.getString(0), nx, ny, Cells.mortonX(cell), Cells.mortonY(cell))
-    }
-
-    // per-query accumulated candidates (driver-side, ≤ k entries kept)
-    val acc = scala.collection.mutable.HashMap.empty[String, Array[(Double, String)]]
-    var remaining = qrows
-    var lo = 0L   // annulus [lo, hi) of Chebyshev cell rings probed this round
-    // density-adaptive initial radius (judge r3 watch item — q10's ring
-    // loop pays one distributed round per doubling): size the first
-    // annulus so an average-density neighborhood already satisfies the
-    // termination bound, instead of always starting at hi=2 and doubling
-    // up. Each extra initial ring costs only more (cell, query) probe rows
-    // (broadcast side), never a new job. Floor 2: a ring-0-only round can
-    // never satisfy the termination bound (covered radius is 0).
-    // Budget clamp (review r4): the GLOBAL density underestimates local
-    // density on clustered data, and the annulus cells are materialized
-    // driver-side per query — cap the first round at ~4M (cell, query)
-    // tuples so a sparse-but-clustered corpus can't balloon the driver
-    // Seq/broadcast; clustered queries then retire in the cheap hi=2-ish
-    // round exactly as under the fixed start.
-    var hi = {
-      val perQ = math.max(9L, (1L << 22) / math.max(1, qrows.length))
-      val hiCap = math.max(2L, (math.sqrt(perQ.toDouble).toLong - 1) / 2 + 1)
-      math.min(initialHi(k, nPts, n), hiCap)
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Double, Int)]
-    // once the annulus would cover a large fraction of the grid, probing
-    // mostly-empty cells costs more than scanning all points once
-    val bruteCutoff = math.max(4L, n / 4)
-    // Early-brute switch (r6): one ring round and the terminal exact scan
-    // cost about one distributed job each, so once the surviving frontier
-    // is small enough that remaining × nPts distance evals fit one cheap
-    // job, more doubling rounds only add scheduling latency. The budget is
-    // COMPUTE-bounded (pair evals), so at 10^12 points the switch only
-    // fires for near-empty frontiers — the ring loop stays the scale path.
-    def bruteNow(rem: Int): Boolean =
-      rem > 0 && rem.toLong <= bruteBudget / math.max(nPts, 1L)
-    while (remaining.nonEmpty && hi <= bruteCutoff && !bruteNow(remaining.length)) {
-      // candidate (cell → query) pairs for this round's annuli (deduped:
-      // antimeridian wrap can map two dx offsets to the same cell)
-      val cellPairs = remaining.iterator.flatMap { q =>
-        val cells = scala.collection.mutable.LinkedHashSet.empty[(Long, String)]
-        var dy = -(hi - 1)
-        while (dy <= hi - 1) {
-          var dx = -(hi - 1)
-          while (dx <= hi - 1) {
-            val cheb = math.max(math.abs(dx), math.abs(dy))
-            if (cheb >= lo) {
-              val y = q.cy + dy
-              if (y >= 0 && y < n) {
-                val wx = ((q.cx + dx) % n + n) % n
-                cells += ((Cells.morton(wx, y), q.id))
-              }
-            }
-            dx += 1
-          }
-          dy += 1
-        }
-        cells
-      }.toSeq
-      if (cellPairs.nonEmpty) {
-        val candCells = spark.createDataset(cellPairs).toDF("cell", "q_id")
-        val qmeta = spark.createDataset(remaining.toSeq.map(q => (q.id, q.nx, q.ny)))
-          .toDF("q_id", "nx", "ny")
-        // broadcast the (small) probe side; the point index never shuffles
-        val got = pts.join(broadcast(candCells), "cell")
-          .join(broadcast(qmeta), "q_id")
-          .select(col("q_id"), col("p_id"),
-            ((col("p_nx") - col("nx")) * (col("p_nx") - col("nx")) +
-             (col("p_ny") - col("ny")) * (col("p_ny") - col("ny"))).as("d2"))
-        // server-side top-k per query bounds the collect — via the
-        // map-side-combinable topk_pairs aggregate (r6): a row_number
-        // window ships EVERY candidate row across the exchange (tens of
-        // millions on clustered data), the bounded aggregate only
-        // n_queries·k per map task
-        val top = got.groupBy("q_id")
-          .agg(call_function("topk_pairs", col("d2"), col("p_id"), lit(k)).as("tk"))
-          .select(col("q_id"), explode(col("tk")).as("e"))
-          .select(col("q_id"), col("e.i").as("p_id"), col("e.o").as("d2")).collect()
-        top.foreach { row =>
-          val qid = row.getString(0)
-          val cur = acc.getOrElse(qid, Array.empty)
-          val merged = (cur :+ ((row.getDouble(2), row.getString(1))))
-            .sortBy(t => (t._1, t._2)).take(k)
-          acc(qid) = merged
+    val bq = spark.sparkContext.broadcast(
+      (qs.map(_.getString(0)), qs.map(_.getDouble(1)), qs.map(_.getDouble(2))))
+    points.select(col("id"), col("nx"), col("ny"))
+      .where(col("id").isNotNull && located("nx", "ny"))
+      .as[(String, Double, Double)]
+      .mapPartitions { it =>
+        val ids = Array.newBuilder[String]
+        val xs = Array.newBuilder[Double]
+        val ys = Array.newBuilder[Double]
+        it.foreach { case (id, x, y) => ids += id; xs += x; ys += y }
+        val tree = new KdTree(xs.result(), ys.result(), ids.result(), k)
+        val (qId, qx, qy) = bq.value
+        Iterator.range(0, qId.length).flatMap { q =>
+          tree.nearest(qx(q), qy(q)).iterator.map { case (p, d2) => (qId(q), p, d2) }
         }
       }
-      // done check: k candidates and kth distance within covered radius (hi-1 rings)
-      val bound = ((hi - 1).toDouble * cellSize) * ((hi - 1).toDouble * cellSize)
-      val (done, rest) = remaining.partition { q =>
-        val cand = acc.getOrElse(q.id, Array.empty)
-        cand.length >= k && cand(k - 1)._1 <= bound
-      }
-      done.foreach { q =>
-        acc(q.id).zipWithIndex.foreach { case ((d2, pid), i) =>
-          out += ((q.id, pid, d2, i + 1))
-        }
-      }
-      remaining = rest
-      lo = hi
-      hi = math.min(math.max(lo + 1, math.min(hi * 2, annulusCap(lo, remaining.length))), 2 * n)
-    }
-    if (remaining.nonEmpty) {
-      // sparse-region stragglers: one exact distributed scan replaces their
-      // state — ranked by topk_pairs so only n_queries·k rows cross the
-      // exchange (r6), never the full pts × frontier candidate set
-      val qmeta = spark.createDataset(remaining.toSeq.map(q => (q.id, q.nx, q.ny)))
-        .toDF("q_id", "nx", "ny")
-      val brute = pts.crossJoin(broadcast(qmeta))
-        .select(col("q_id"), col("p_id"),
-          ((col("p_nx") - col("nx")) * (col("p_nx") - col("nx")) +
-           (col("p_ny") - col("ny")) * (col("p_ny") - col("ny"))).as("d2"))
-        .groupBy("q_id")
-        .agg(call_function("topk_pairs", col("d2"), col("p_id"), lit(k)).as("tk"))
-        .select(col("q_id"), posexplode(col("tk")))
-        .select(col("q_id"), col("col.i").as("p_id"), col("col.o").as("d2"),
-          (col("pos") + 1).as("rank")).collect()
-      brute.foreach(r => out += ((r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))))
-    }
-    pts.unpersist()
-    spark.createDataset(out.toSeq).toDF("q_id", "p_id", "d2", "rank")
+      .toDF("q_id", "p_id", "d2")
+      .groupBy("q_id")
+      .agg(call_function("topk_pairs", col("d2"), col("p_id"), lit(k)).as("tk"))
+      .select(col("q_id"), posexplode(col("tk")))
+      .select(col("q_id"), col("col.i").as("p_id"), col("col.o").as("d2"),
+        (col("pos") + 1).as("rank"))
   }
 
   /** Pair-eval budget for the terminal exact scan (r6): remaining-frontier
@@ -877,19 +782,6 @@ object SpatialJoins {
     * handful of stragglers — exactly the sparse-region tail the scan was
     * already the fallback for. */
   private[join] val bruteBudget: Long = 1L << 24
-
-  /** Per-round driver budget for the small-Q annulus (judge r4 #8): the
-    * (cell, query) probe tuples for annulus [lo, hi) are materialized
-    * driver-side, so cap hi such that remaining · ((2hi−1)² − (2lo−1)²)
-    * stays ≈ 2²² tuples — the same budget the first round's clamp uses.
-    * Progress is still guaranteed (callers floor at lo+1), so a
-    * pathological density estimate costs extra rounds, never extra
-    * driver memory. */
-  private[join] def annulusCap(lo: Long, remaining: Int): Long = {
-    val perQ = math.max(9L, (1L << 22) / math.max(1, remaining))
-    val base = (2 * lo - 1).toDouble * (2 * lo - 1).toDouble
-    ((math.sqrt(base + perQ).toLong + 1) / 2).max(lo + 1)
-  }
 
   /** First annulus upper bound: enough rings that an average-density
     * neighborhood holds k points INSIDE the termination radius (hi-1
@@ -910,21 +802,27 @@ object SpatialJoins {
   }
 
   /**
-   * All-DataFrame kNN for LARGE query sets (#47 large-Q path; judge item 7
-   * r1): no per-query driver state — the query frontier, accumulated
-   * candidates, and satisfied flags all live in DataFrames; the driver
-   * loop only reads one count per round.
-   *
-   * Same annulus schedule and exact termination bound as `knn`: after
-   * probing Chebyshev rings < hi, any unseen point is at distance
-   * ≥ (hi-1)·cellSize, so a query with k candidates inside that radius is
-   * exactly solved. Rounds double hi; stragglers in sparse regions fall
-   * back to one distributed full scan.
+   * Batch exact kNN for large query sets: the same routing and result as
+   * [[knn]]. Query sets of at most B = 2²² rows take the single broadcast
+   * pass; larger ones the all-DataFrame ring loop ([[knnRings]]).
    */
-  def knnLarge(points: DataFrame, queries: DataFrame, k: Int, level: Int): DataFrame = {
+  def knnLarge(points: DataFrame, queries: DataFrame, k: Int, level: Int): DataFrame =
+    knn(points, queries, k, level)
+
+  /**
+   * All-DataFrame kNN ring loop for query sets above [[KnnBroadcastRows]]
+   * (#47 large-Q path): no per-query driver state — the query frontier,
+   * accumulated candidates, and satisfied flags all live in DataFrames;
+   * the driver loop only reads one count per round.
+   *
+   * After probing Chebyshev cell rings < hi at `level`, any unseen point is
+   * at distance ≥ (hi-1)·cellSize, so a query with k candidates inside that
+   * radius is exactly solved. Rounds double hi; stragglers in sparse
+   * regions fall back to one distributed full scan.
+   */
+  private[join] def knnRings(points: DataFrame, queries: DataFrame, k: Int, level: Int): DataFrame = {
     val spark = points.sparkSession
     GraftFunctions.install(spark)
-    import graft.cell.Cells
 
     val n = 1L << level
     val cellSize = 1.0 / n.toDouble
@@ -941,23 +839,15 @@ object SpatialJoins {
 
     var frontier = qAll
     var frontierCnt = qAll.count()
-    val dbg = sys.env.contains("GRAFT_KNN_DEBUG")
-    var tTick = System.nanoTime()
-    def tick(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      println(f"[knnLarge] $tag%-18s +${(now - tTick) / 1e9}%.2fs (frontier=$frontierCnt)")
-      tTick = now
-    }
-    tick("setup")
     var cands: DataFrame = null // (q_id, nx, ny, p_id, d2) — global top-k so far
     var lo = 0L
-    var hi = initialHi(k, nPts, n) // density-adaptive first annulus (see knn)
+    var hi = initialHi(k, nPts, n) // density-adaptive first annulus
     val bruteCutoff = math.max(4L, n / 4)
 
-    // early-brute switch (r6, same rule as `knn`): once frontier × nPts
-    // pair evals fit one cheap job, the terminal exact scan beats more
-    // doubling rounds — compute-bounded, so it never fires for a large
-    // frontier over a large corpus
+    // early-brute switch (r6): once frontier × nPts pair evals fit one
+    // cheap job, the terminal exact scan beats more doubling rounds —
+    // compute-bounded, so it never fires for a large frontier over a
+    // large corpus
     def bruteNow: Boolean = frontierCnt > 0 && frontierCnt <= bruteBudget / math.max(nPts, 1L)
 
     while (hi <= bruteCutoff && frontierCnt > 0 && !bruteNow) {
@@ -982,7 +872,8 @@ object SpatialJoins {
       // every round sort-merge-shuffled the full point index)
       val annulus = (2 * hi - 1) * (2 * hi - 1) -
         (if (lo == 0) 0L else (2 * lo - 1) * (2 * lo - 1))
-      val probe = if (frontierCnt * math.max(annulus, 1L) <= (1L << 22)) broadcast(probe1) else probe1
+      // (the gate divides: frontierCnt · annulus can overflow a Long)
+      val probe = if (frontierCnt <= (1L << 22) / math.max(annulus, 1L)) broadcast(probe1) else probe1
       val fresh = pts.join(probe, "cell")
         .select(col("q_id"), col("nx"), col("ny"), col("p_id"),
           ((col("p_nx") - col("nx")) * (col("p_nx") - col("nx")) +
@@ -1001,7 +892,6 @@ object SpatialJoins {
         .localCheckpoint(true) // cut the per-round lineage growth
       if (cands != null) cands.unpersist()
       cands = merged
-      tick(s"round hi=$hi merge")
       // satisfied: k candidates whose kth distance is inside the probed radius
       val bound = ((hi - 1).toDouble * cellSize) * ((hi - 1).toDouble * cellSize)
       val solved = cands.groupBy("q_id")
@@ -1010,12 +900,10 @@ object SpatialJoins {
         .select("q_id")
       frontier = qAll.join(solved, Seq("q_id"), "left_anti")
       frontierCnt = frontier.count() // one job — replaces the isEmpty probe
-      tick(s"round hi=$hi solved")
       lo = hi
       hi = math.min(hi * 2, 2 * n)
     }
     if (frontierCnt > 0) {
-      tick("pre-brute")
       // sparse-region stragglers: exact distributed scan (points × remaining
       // queries); still no driver-side per-query state
       val brute = bruteTopK(pts, frontier, k)

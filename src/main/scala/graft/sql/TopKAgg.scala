@@ -30,6 +30,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * identical to Spark's string sort order). For a DESCENDING ord (cosine
  * similarity), callers pass the negated ord. K ≤ 4096 (the buffer is
  * O(K) per group; candidate-ranking ks are single digits).
+ *
+ * Equal (ord, id) pairs count once: a group fed the same pair twice
+ * returns it once, and the next distinct pair takes the freed place.
+ * Rows with a null ord or id are skipped. String ids are copied when they
+ * enter the buffer, so input rows may share one reused buffer.
  */
 case class TopKPairs(ordExpr: Expression, idExpr: Expression, kExpr: Expression,
                      mutableAggBufferOffset: Int = 0,
@@ -47,15 +52,17 @@ case class TopKPairs(ordExpr: Expression, idExpr: Expression, kExpr: Expression,
 
   type Buf = java.util.TreeSet[(Any, Any)]
 
+  private def cmp(o1: Any, i1: Any, o2: Any, i2: Any): Int = {
+    val c =
+      if (ordIsLong) java.lang.Long.compare(o1.asInstanceOf[Long], o2.asInstanceOf[Long])
+      else java.lang.Double.compare(o1.asInstanceOf[Double], o2.asInstanceOf[Double])
+    if (c != 0) c
+    else if (idIsLong) java.lang.Long.compare(i1.asInstanceOf[Long], i2.asInstanceOf[Long])
+    else i1.asInstanceOf[UTF8String].compareTo(i2.asInstanceOf[UTF8String])
+  }
+
   private object Cmp extends java.util.Comparator[(Any, Any)] {
-    override def compare(a: (Any, Any), b: (Any, Any)): Int = {
-      val c =
-        if (ordIsLong) java.lang.Long.compare(a._1.asInstanceOf[Long], b._1.asInstanceOf[Long])
-        else java.lang.Double.compare(a._1.asInstanceOf[Double], b._1.asInstanceOf[Double])
-      if (c != 0) c
-      else if (idIsLong) java.lang.Long.compare(a._2.asInstanceOf[Long], b._2.asInstanceOf[Long])
-      else a._2.asInstanceOf[UTF8String].compareTo(b._2.asInstanceOf[UTF8String])
-    }
+    override def compare(a: (Any, Any), b: (Any, Any)): Int = cmp(a._1, a._2, b._1, b._2)
   }
 
   override def children: Seq[Expression] = Seq(ordExpr, idExpr, kExpr)
@@ -68,6 +75,8 @@ case class TopKPairs(ordExpr: Expression, idExpr: Expression, kExpr: Expression,
 
   override def createAggregationBuffer(): Buf = new java.util.TreeSet[(Any, Any)](Cmp)
 
+  /** Inserts `e` if it ranks among the K smallest; an equal (ord, id)
+    * pair already held is not added again. */
   private def add(b: Buf, e: (Any, Any)): Unit = {
     if (b.size < k) { b.add(e); () }
     else if (Cmp.compare(e, b.last()) < 0) { if (b.add(e)) { b.pollLast(); () } }
@@ -76,7 +85,10 @@ case class TopKPairs(ordExpr: Expression, idExpr: Expression, kExpr: Expression,
   override def update(b: Buf, row: InternalRow): Buf = {
     val o = ordExpr.eval(row)
     val i = idExpr.eval(row)
-    if (o != null && i != null) add(b, (o, i))
+    // a string id may point into the input row's buffer, which the caller
+    // reuses for the next row: copy it, but only once it will be kept
+    if (o != null && i != null && (b.size < k || { val w = b.last(); cmp(o, i, w._1, w._2) < 0 }))
+      add(b, (o, if (idIsLong) i else i.asInstanceOf[UTF8String].clone()))
     b
   }
 

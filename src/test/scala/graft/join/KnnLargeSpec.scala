@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The all-DataFrame kNN ring loop (large-Q path) must be exact vs brute
-  * force when EVERY point is a query — the regime where the driver-frontier
-  * formulation would hold 2000 query states on the driver. */
+/** The large-query-set kNN must be exact vs brute force when EVERY point
+  * is a query: both the public entry (the broadcast pass below 2²² queries)
+  * and the all-DataFrame ring loop that takes over above that bound. */
 class KnnLargeSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -27,9 +27,10 @@ class KnnLargeSpec extends AnyFunSuite {
     val k = 3
     val level = 5
 
-    val got = SpatialJoins.knnLarge(img, img, k, level)
-      .select("q_id", "p_id", "rank")
+    def run(df: org.apache.spark.sql.DataFrame) = df.select("q_id", "p_id", "rank")
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+    val got = run(SpatialJoins.knnLarge(img, img, k, level))
+    val rings = run(SpatialJoins.knnRings(img, img, k, level))
 
     val q = img.select(col("id").as("q_id"), col("nx").as("qnx"), col("ny").as("qny"))
     val w = Window.partitionBy("q_id").orderBy(col("d2"), col("p_id"))
@@ -43,6 +44,7 @@ class KnnLargeSpec extends AnyFunSuite {
 
     assert(got.size == brute.size, s"got=${got.size} brute=${brute.size}")
     assert(got == brute, s"diff=${(got diff brute).take(3)} / ${(brute diff got).take(3)}")
+    assert(rings == brute, s"ring loop diff=${(rings diff brute).take(3)} / ${(brute diff rings).take(3)}")
   }
 
   test("brute-force fallback broadcasts the FRONTIER, never the points side") {
@@ -60,13 +62,16 @@ class KnnLargeSpec extends AnyFunSuite {
     assert(brute.count() == 14)
   }
 
-  test("knn() dispatches to the large-Q path above the threshold") {
+  test("knn() gives the same answer whatever largeQThreshold says") {
     GeoTables.ensure(spark, sfDir)
     val img = GeoTables.images(spark, sfDir)
       .select(col("image_id").as("id"), col("nx"), col("ny"))
-    // threshold 10 forces the large path even for 100 queries
+    // below 2²² queries the threshold selects no path: 10 and the default agree
     val queries = img.limit(100)
-    val viaLarge = SpatialJoins.knn(img, queries, k = 2, level = 5, largeQThreshold = 10)
-    assert(viaLarge.count() == 200)
+    def run(t: Long) = SpatialJoins.knn(img, queries, k = 2, level = 5, largeQThreshold = t)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
+    val low = run(10)
+    assert(low.size == 200)
+    assert(low == run(2000))
   }
 }
