@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
  * excluded from timing; a warm-up of the flagship query runs first
  * (JIT + codegen + parquet footer caches); per-query wall times follow.
  * Extra keys (rows/sec, images/sec) quantify the north-rule throughput
- * metric; "value" stays total seconds for the driver.
+ * metric; "value" stays total seconds for the driver. A query that throws
+ * keeps its time, counts -1 rows and appears in "failed" with its
+ * exception class; a failed warm-up prints its exception class to stderr.
  */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -46,12 +48,13 @@ object Bench {
     try {
       SparkEntry.queries("q08_pip_tile")(spark, sfDir).count()
       SparkEntry.queries("q07_pip_join")(spark, sfDir).count()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => System.err.println(s"bench warm-up failed: ${e.getClass.getName}") }
 
     var joinRows = 0L
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val n = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+      val n = try fn(spark, sfDir).count() catch { case e: Throwable => failed(name) = e.getClass.getName; -1L }
       if (name == "q07_pip_join") joinRows = n
       name -> ((System.nanoTime() - t0) / 1e9, n)
     }
@@ -66,7 +69,8 @@ object Bench {
       val t = results.find(_._1 == "q07_pip_join").map(_._2._1).getOrElse(1.0)
       if (t > 0) joinRows / t else 0.0
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","n_images":$nImg,"pip_join_rows":$joinRows,"images_per_sec":${imagesPerSec.toLong},"join_rows_per_sec":${joinRowsPerSec.toLong},"cpus":"$cpus"}""")
+    val failedJson = failed.map { case (k, c) => "\"" + k + "\":\"" + c + "\"" }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","n_images":$nImg,"pip_join_rows":$joinRows,"images_per_sec":${imagesPerSec.toLong},"join_rows_per_sec":${joinRowsPerSec.toLong},"cpus":"$cpus"}""")
     spark.stop()
   }
 }

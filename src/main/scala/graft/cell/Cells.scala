@@ -162,6 +162,17 @@ object Cells {
    * Level-L cells covering a geometry (via its envelope tile range, refined
    * by exact cell-rect × geometry intersection). Soundness lemma (tested):
    * pointInGeom(p) ⇒ cellId(p, L) ∈ cover(geom, L).
+   *
+   * Cells come in row-major order over the envelope's tile range. An
+   * axis-aligned rectangle takes every cell of the range; otherwise a cell
+   * is in when `Pred.intersects(cellRect, g)`. Polygons and MultiPolygons
+   * skip that relate wherever its answer is certain, with a margin `tol` =
+   * 1e-9 × the largest coordinate magnitude (at least 1e-9):
+   *  - an edge (a vertex included) meets the cell shrunk by `tol` ⇒ in;
+   *  - the cell centre inside (`pointInPolygonal == 1`) ⇒ in;
+   *  - otherwise, no edge meets the cell grown by `tol` ⇒ out;
+   *  - otherwise the relate decides.
+   * Other geometry types run the relate for every cell.
    */
   def cover(g: Geometry, level: Int, maxCells: Int = 1 << 20): Array[Long] = {
     val env = g.envelope
@@ -184,25 +195,153 @@ object Cells {
   private def coverEnvAtLevel(env: Env, g: Geometry, level: Int): Array[Long] = {
     val x0 = tileX(env.xmin, level); val x1 = tileX(env.xmax, level)
     val y0 = tileY(env.ymax, level); val y1 = tileY(env.ymin, level) // y inverted
-    val out = new ArrayBuffer[Long]()
     val isRect = isRectangle(g)
+    val polys = g match {
+      case p: graft.geom.Polygon => Array(p.rings)
+      case m: graft.geom.MultiPolygon => m.polys
+      case _ => null
+    }
+    val decided = if (isRect || polys == null) null else coverDecide(polys, x0, x1, y0, y1, level)
+    val nx = (x1 - x0 + 1).toInt
+    val out = new ArrayBuffer[Long]()
     var ty = y0
     while (ty <= y1) {
       var tx = x0
       while (tx <= x1) {
         val cell = morton(tx, ty)
-        if (isRect) out += cell
-        else {
-          val ce = cellEnvelope(cell, level)
-          // cheap refine: cell rect intersects geometry envelope always true here;
-          // exact refine via rect-polygon intersects for big covers
-          if (Pred.intersects(ce.toPolygon, g)) out += cell
-        }
+        val d = if (decided == null) Undecided else decided((ty - y0).toInt * nx + (tx - x0).toInt)
+        if (isRect || d == In ||
+            d == Undecided && Pred.intersects(cellEnvelope(cell, level).toPolygon, g)) out += cell
         tx += 1
       }
       ty += 1
     }
     out.toArray
+  }
+
+  private final val Undecided: Byte = 0
+  private final val In: Byte = 1
+  private final val Out: Byte = 2
+  /** Relative cover margin: far above the rounding of any coordinate
+    * expression here, far below a level-20 cell. */
+  private final val CoverTol = 1e-9
+
+  /**
+   * The cells of the tile range [x0, x1] × [y0, y1] whose cover answer is
+   * certain without the relate (see [[cover]]), row-major: In, Out or
+   * Undecided. Null when a coordinate is not finite.
+   */
+  private def coverDecide(polys: Array[Array[Array[Double]]], x0: Long, x1: Long,
+                          y0: Long, y1: Long, level: Int): Array[Byte] = {
+    val nx = (x1 - x0 + 1).toInt; val ny = (y1 - y0 + 1).toInt
+    val n = (1L << level).toDouble
+    // cell edges, the same expressions as cellEnvelope: column i spans
+    // [xs(i), xs(i+1)], row j spans [ys(j+1), ys(j)] (ys descends)
+    val xs = Array.tabulate(nx + 1)(i => tileXToLon((x0 + i) / n))
+    val ys = Array.tabulate(ny + 1)(j => tileYToLat((y0 + j) / n))
+    var scale = math.max(math.max(math.abs(xs(0)), math.abs(xs(nx))),
+      math.max(math.abs(ys(0)), math.abs(ys(ny))))
+    for (rs <- polys; r <- rs; v <- r) {
+      if (v.isNaN || v.isInfinite) return null
+      scale = math.max(scale, math.abs(v))
+    }
+    val tol = CoverTol * math.max(1.0, scale)
+    // column of x and row of y by binary search over the cell edges, to
+    // within one cell at a tie (the callers test the neighbours too)
+    def colOf(x: Double): Int = {
+      var lo = 0; var hi = nx + 1
+      while (lo < hi) { val m = (lo + hi) >>> 1; if (xs(m) <= x) lo = m + 1 else hi = m }
+      math.max(0, math.min(nx - 1, lo - 1))
+    }
+    def rowOf(y: Double): Int = {
+      var lo = 0; var hi = ny + 1
+      while (lo < hi) { val m = (lo + hi) >>> 1; if (ys(m) > y) lo = m + 1 else hi = m }
+      math.max(0, math.min(ny - 1, lo - 1))
+    }
+
+    val VertexIn = 1; val Near = 2; val Crossed = 4
+    val flag = new Array[Byte](nx * ny)
+    // a vertex strictly inside a cell shrunk by tol settles that cell; most
+    // covers need nothing more
+    var open = nx * ny
+    for (rs <- polys; r <- rs) {
+      var k = 0
+      while (open > 0 && k + 1 < r.length) {
+        val x = r(k); val y = r(k + 1)
+        val vi = colOf(x); val vj = rowOf(y)
+        var i = math.max(0, vi - 1)
+        while (i <= math.min(nx - 1, vi + 1)) {
+          var j = math.max(0, vj - 1)
+          while (j <= math.min(ny - 1, vj + 1)) {
+            if (flag(j * nx + i) == 0 && xs(i) + tol < x && x < xs(i + 1) - tol &&
+                ys(j + 1) + tol < y && y < ys(j) - tol) {
+              flag(j * nx + i) = VertexIn.toByte; open -= 1
+            }
+            j += 1
+          }
+          i += 1
+        }
+        k += 2
+      }
+    }
+    if (open == 0) return Array.fill(nx * ny)(In)
+
+    // Sets `bit` on the cells of row j whose rect grown by m (shrunk when
+    // m < 0) meets edge (ax, ay) → (bx, by): clip the edge to the row's
+    // grown band, then test the x-extent of the clipped part. Rounding in
+    // the clip is far below tol.
+    def mark(j: Int, m: Double, ax: Double, ay: Double, bx: Double, by: Double, bit: Int): Unit = {
+      val bot = ys(j + 1) - m; val top = ys(j) + m
+      if (bot <= top && bot <= math.max(ay, by) && top >= math.min(ay, by)) {
+        var ex0 = math.min(ax, bx); var ex1 = math.max(ax, bx)
+        if (ay != by) {
+          val t1 = (bot - ay) / (by - ay); val t2 = (top - ay) / (by - ay)
+          val tlo = math.max(0.0, math.min(t1, t2)); val thi = math.min(1.0, math.max(t1, t2))
+          val xa = ax + (bx - ax) * tlo; val xb = ax + (bx - ax) * thi
+          ex0 = math.min(xa, xb); ex1 = math.max(xa, xb)
+        }
+        var i = math.max(0, colOf(ex0 - tol) - 1); val iEnd = math.min(nx - 1, colOf(ex1 + tol) + 1)
+        while (i <= iEnd) {
+          if (xs(i) - m <= ex1 && xs(i + 1) + m >= ex0 && xs(i) - m <= xs(i + 1) + m)
+            flag(j * nx + i) = (flag(j * nx + i) | bit).toByte
+          i += 1
+        }
+      }
+    }
+    for (rs <- polys; r <- rs) {
+      var k = 0
+      while (k + 3 < r.length) {
+        val ax = r(k); val ay = r(k + 1); val bx = r(k + 2); val by = r(k + 3)
+        var j = math.max(0, rowOf(math.max(ay, by) + tol) - 1)
+        val jEnd = math.min(ny - 1, rowOf(math.min(ay, by) - tol) + 1)
+        while (j <= jEnd) {
+          // a boundary point strictly inside the cell shrunk by tol: the
+          // 2·tol shrink leaves tol for the rounding of the clip
+          mark(j, -2 * tol, ax, ay, bx, by, Crossed)
+          mark(j, tol, ax, ay, bx, by, Near)
+          j += 1
+        }
+        k += 2
+      }
+    }
+
+    val out = new Array[Byte](nx * ny)
+    var j = 0
+    while (j < ny) {
+      val cy = (ys(j) + ys(j + 1)) * 0.5
+      var i = 0
+      while (i < nx) {
+        val f = flag(j * nx + i)
+        out(j * nx + i) =
+          if ((f & (VertexIn | Crossed)) != 0 ||
+              Pred.pointInPolygonal(polys, (xs(i) + xs(i + 1)) * 0.5, cy) == 1) In
+          else if ((f & Near) == 0) Out
+          else Undecided
+        i += 1
+      }
+      j += 1
+    }
+    out
   }
 
   private def isRectangle(g: Geometry): Boolean = g match {

@@ -49,6 +49,10 @@ final class Prepared private[geom] (val geom: Geometry) {
     }
     idx.locate(x, y)
   }
+
+  /** Closed point test (st_intersects_xy): inside or on the geometry. */
+  def intersectsXY(x: Double, y: Double): Boolean =
+    if (isPolygonal) locate(x, y) >= 0 else Pred.intersects(geom, Point(x, y))
 }
 
 object Prepared {
@@ -103,16 +107,20 @@ object Prepared {
     * refill) because a hot working set repopulates in one pass and an LRU's
     * per-probe bookkeeping would tax the 99% hit path. */
   def of(wkb: Array[Byte]): Prepared = {
-    if (disabled || wkb.length < MIN_CACHE_BYTES) return new Prepared(GeometryZM.strip(Wkb.read(wkb)))
+    if (disabled || wkb.length < MIN_CACHE_BYTES) return uncached(wkb)
     val k = new BKey(wkb)
     var p = cache.get(k)
     if (p == null) {
       if (cache.size() >= MAX_ENTRIES || cachedBytes.get() >= MAX_BYTES) clearCache()
-      p = new Prepared(GeometryZM.strip(Wkb.read(wkb)))
+      p = uncached(wkb)
       if (cache.putIfAbsent(k, p) == null) cachedBytes.addAndGet(3L * wkb.length)
     }
     p
   }
+
+  /** Decode `wkb` into a fresh Prepared that no cache holds, for callers
+    * that keep their own per-geometry instances. Same answers as [[of]]. */
+  def uncached(wkb: Array[Byte]): Prepared = new Prepared(GeometryZM.strip(Wkb.read(wkb)))
 }
 
 /**

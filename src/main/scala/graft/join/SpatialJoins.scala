@@ -1,7 +1,13 @@
 package graft.join
 
+import graft.cell.Cells
+import graft.geom.{Env, GeometryZM, Prepared, Wkb}
 import graft.sql.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.graft.PipPass
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -10,15 +16,18 @@ import org.apache.spark.sql.expressions.Window
  * the single-process reference lacks.
  *
  * Cell-prefix join design: cover the polygon side at a level where covers
- * stay small, explode to (cell, zone) rows, equi-join with the point
- * side's st_cellid, refine with the exact PIP kernel. Pure DataFrame ops:
- * Catalyst/AQE pick broadcast vs shuffled-hash and split skew — no custom
- * planner surgery needed (SURVEY §4.2 phase-1 ruling).
+ * stay small, key each point by its st_cellid, and refine each (point,
+ * zone) candidate with the exact PIP kernel.
  *
- * At 10^12-image scale the points side never shuffles for the join: the
- * exploded zone cover is the broadcast side. Hot-cell skew (20% of points
- * in one cell in the fixture) therefore cannot skew the join; it only
- * skews downstream aggregations, which AQE rebalances.
+ * [[pipJoin]] runs this in one of two shapes. A zone side small enough to
+ * broadcast becomes one cell→zone index on the driver, and every point
+ * partition probes it in a single pass (the [[PipZones]] index under the
+ * `PipPass` plan node): the points never shuffle, so hot-cell skew (20%
+ * of points in one cell in the fixture) cannot skew the join, only
+ * downstream aggregations, which AQE rebalances. A larger zone side
+ * explodes its cover to (cell, zone) rows and equi-joins them with the
+ * points in plain DataFrame ops; Catalyst/AQE pick the join and split
+ * skew. The other cover joins here keep the exploded-cover shape.
  */
 object SpatialJoins {
 
@@ -30,18 +39,6 @@ object SpatialJoins {
       .withColumn("cell", explode(call_function("st_cover", col("zone_geom"), lit(level))))
   }
 
-  /**
-   * Point-in-polygon join: images(lon, lat) × zones(rect wkt) → matched rows.
-   * Closed-boundary semantics (st_intersects) to match `BETWEEN` oracles.
-   *
-   * Broadcast guard (judge r3 #3): under the stated zones≪points asymmetry
-   * the exploded cover is the broadcast side — one points-side scan, zero
-   * points-side shuffle. But a caller handing in a million-zone side would
-   * OOM the driver through an unconditional hint, so the hint is dispatched
-   * on one cheap `zones.count()`: above `broadcastMaxZones` the hint is
-   * dropped and Catalyst/AQE pick a shuffled hash join (the points side
-   * still only shuffles on the compact cell key, never on geometry).
-   */
   /** Broadcast-dispatch decision shared by every cover join: true when
     * the dim side is small enough to broadcast. The probe is bounded
     * (`limit(max+1).count()` — never a full scan of a huge side) and
@@ -51,23 +48,57 @@ object SpatialJoins {
     else dims.limit(math.min(broadcastMax, Int.MaxValue - 1L).toInt + 1)
       .count() <= broadcastMax
 
+  /**
+   * Point-in-polygon join: images(lon, lat) × zones(zone_id, wkt) → one
+   * row per (point, zone) with the point inside or on the zone:
+   * `cell`, the image columns, `zone_id`, `zone_geom` (the
+   * `st_geomfromwkt` bytes). Closed-boundary semantics (st_intersects_xy)
+   * to match `BETWEEN` oracles. Rows with a null `lon`/`lat` or a null
+   * `wkt` match nothing; duplicate zone rows stay separate rows.
+   *
+   * Dispatch: the zone side counts as small when `zonesCountHint` (if ≥ 0)
+   * or a bounded `limit(broadcastMaxZones + 1).count()` probe is at most
+   * `broadcastMaxZones`.
+   *  - Small: the broadcast pass. One job over the zones parses each WKT
+   *    and computes its level-`level` cover and envelope; the driver
+   *    collects them when pipJoin is called and broadcasts one
+   *    [[PipZones]] index (sorted cells, CSR offsets into the zones).
+   *    Each point partition then finds its point's cell by binary search
+   *    and tests the zones listed there: a closed envelope test, then the
+   *    exact test of st_intersects_xy on a prepared geometry built once
+   *    per zone per executor, outside the global `Prepared` cache.
+   *  - Large: the zones' covers explode to (cell, zone) rows and a
+   *    shuffled equi-join on `cell` meets the points, refined by
+   *    st_intersects_xy. The driver holds no zone state.
+   * Both give the same rows, schema and column order.
+   */
   def pipJoin(images: DataFrame, zones: DataFrame, level: Int = 8,
               broadcastMaxZones: Long = 100000, zonesCountHint: Long = -1): DataFrame = {
-    val spark = images.sparkSession
-    GraftFunctions.install(spark)
-    val pts = images.withColumn("cell",
-      call_function("st_cellid", col("lon"), col("lat"), lit(level)))
-    val coverRaw = zoneCover(zones, level)
-      .select(col("zone_id"), col("zone_geom"), col("cell"))
-    // bounded dispatch probe (review r4): limit(max+1).count() answers the
-    // ≤ test without fully scanning a huge zones side (the RTree.fromZones
-    // pattern). Callers that already know the zone-side cardinality (a dim
-    // table with catalog stats, a fixture) pass zonesCountHint ≥ 0 and skip
-    // the probe job entirely — one fewer serial driver job per call.
-    val few = fewDims(zones, broadcastMaxZones, zonesCountHint)
-    val cover = if (few) broadcast(coverRaw) else coverRaw
-    pts.join(cover, "cell")
-      .where(call_function("st_intersects_xy", col("zone_geom"), col("lon"), col("lat")))
+    GraftFunctions.install(images.sparkSession)
+    if (fewDims(zones, broadcastMaxZones, zonesCountHint)) pipPass(images, zones, level)
+    else {
+      val pts = images.withColumn("cell",
+        call_function("st_cellid", col("lon"), col("lat"), lit(level)))
+      val cover = zoneCover(zones, level).select(col("zone_id"), col("zone_geom"), col("cell"))
+      pts.join(cover, "cell")
+        .where(call_function("st_intersects_xy", col("zone_geom"), col("lon"), col("lat")))
+    }
+  }
+
+  /** The broadcast pass of [[pipJoin]]. */
+  private def pipPass(images: DataFrame, zones: DataFrame, level: Int): DataFrame = {
+    val zt = zones.select(col("zone_id"), call_function("st_geomfromwkt", col("wkt")).as("zone_geom"))
+    val idType = zt.schema(0).dataType
+    val rows = zt.where(col("zone_geom").isNotNull).queryExecution.toRdd.mapPartitions { it =>
+      it.map { r =>
+        val wkb = r.getBinary(1)
+        val g = GeometryZM.strip(Wkb.read(wkb))
+        (InternalRow.copyValue(r.get(0, idType)), wkb, Cells.cover(g, level), g.envelope)
+      }
+    }.collect()
+    val bz = images.sparkSession.sparkContext.broadcast(PipZones(level,
+      rows.map(_._1), rows.map(_._2), rows.map(_._3), rows.map(_._4)))
+    PipPass.frame(images, bz, zt.schema(0), zt.schema(1))
   }
 
   /**
@@ -954,5 +985,99 @@ object SpatialJoins {
       .agg(count(lit(1)).as("_partial"))
     partial.groupBy(keyCols.map(col): _*)
       .agg(sum(col("_partial")).cast("long").as("n"))
+  }
+}
+
+/**
+ * The zone side of [[SpatialJoins.pipJoin]]'s broadcast pass: zone z has
+ * id `ids(z)` (a Catalyst value), geometry bytes `wkbs(z)` and envelope
+ * `envs(z)`. `cells` holds the distinct cover cells in ascending order,
+ * and the zones whose cover holds `cells(k)` are
+ * `zone(start(k)) .. zone(start(k + 1) - 1)`, in zone order.
+ */
+final class PipZones private (level: Int, ids: Array[Any], wkbs: Array[Array[Byte]],
+                              envs: Array[Env], cells: Array[Long], start: Array[Int],
+                              zone: Array[Int]) extends Serializable {
+
+  /** Decoded once per zone per JVM on first use; a racy double build is harmless. */
+  @transient private lazy val prepared = new Array[Prepared](ids.length)
+  @transient private lazy val zoneRows: Array[InternalRow] =
+    Array.tabulate(ids.length)(z => new GenericInternalRow(Array[Any](ids(z), wkbs(z))))
+
+  /** Closed envelope test, then the exact test of st_intersects_xy. */
+  private def holds(z: Int, x: Double, y: Double): Boolean = {
+    val e = envs(z)
+    x >= e.xmin && x <= e.xmax && y >= e.ymin && y <= e.ymax && {
+      var p = prepared(z)
+      if (p == null) { p = Prepared.uncached(wkbs(z)); prepared(z) = p }
+      p.intersectsXY(x, y)
+    }
+  }
+
+  /** Every (point, holding zone) pair of one partition, as rows of
+    * (cell, point columns, zone id, zone bytes) made by `out`. `coords`
+    * turns a point row into (lon, lat); rows with a null coordinate give
+    * nothing. */
+  def probe(points: Iterator[InternalRow], coords: UnsafeProjection,
+            out: UnsafeProjection): Iterator[InternalRow] = new Iterator[InternalRow] {
+    private val cellRow = new SpecificInternalRow(Seq(LongType))
+    private val left = new JoinedRow
+    private val joined = new JoinedRow
+    private var x = 0.0
+    private var y = 0.0
+    private var e = 0 // next candidate in zone(e until end)
+    private var end = 0
+    private var hit = -1 // zone of the next output row, or -1
+
+    def hasNext: Boolean = {
+      while (hit < 0) {
+        while (hit < 0 && e < end) {
+          val z = zone(e); e += 1
+          if (holds(z, x, y)) hit = z
+        }
+        if (hit < 0) {
+          if (!points.hasNext) return false
+          val p = points.next()
+          val c = coords(p)
+          if (!c.isNullAt(0) && !c.isNullAt(1)) {
+            x = c.getDouble(0); y = c.getDouble(1)
+            val cell = Cells.cellId(x, y, level)
+            val k = java.util.Arrays.binarySearch(cells, cell)
+            if (k >= 0) {
+              cellRow.setLong(0, cell)
+              left(cellRow, p)
+              e = start(k); end = start(k + 1)
+            }
+          }
+        }
+      }
+      true
+    }
+
+    def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException
+      val z = hit
+      hit = -1
+      out(joined(left, zoneRows(z)))
+    }
+  }
+}
+
+object PipZones {
+  /** The index over zone rows (id, bytes, level-`level` cover, envelope). */
+  def apply(level: Int, ids: Array[Any], wkbs: Array[Array[Byte]],
+            covers: Array[Array[Long]], envs: Array[Env]): PipZones = {
+    val cells = covers.flatten.distinct
+    java.util.Arrays.sort(cells)
+    val start = new Array[Int](cells.length + 1)
+    for (cv <- covers; c <- cv) start(java.util.Arrays.binarySearch(cells, c) + 1) += 1
+    for (k <- cells.indices) start(k + 1) += start(k)
+    val fill = start.clone()
+    val zone = new Array[Int](start(cells.length))
+    for (z <- covers.indices; c <- covers(z)) {
+      val k = java.util.Arrays.binarySearch(cells, c)
+      zone(fill(k)) = z; fill(k) += 1
+    }
+    new PipZones(level, ids, wkbs, envs, cells, start, zone)
   }
 }

@@ -277,9 +277,13 @@ object GraftFunctions {
     "st_asmvt_agg" -> (e => StAsMvtAgg(e(0), e(1)))
   )
 
+  private val ObjAggFallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+  private val ObjAggFallbackDefault = "16384"
+
   @volatile private var installedSessions = Set.empty[SparkSession]
 
-  /** Idempotent per-session registration (functions + optimizer rule). */
+  /** Idempotent per-session registration (functions, the optimizer rule
+    * and the `PipPass` planner strategy). */
   def install(spark: SparkSession): SparkSession = {
     if (!installedSessions.contains(spark)) synchronized {
       if (!installedSessions.contains(spark)) {
@@ -293,13 +297,15 @@ object GraftFunctions {
         // bounded aggregates like topk_pairs (r6: the kNN round measured
         // 5.6 s sort-fallback vs 1.0 s hash at sf0.1). The engine's typed
         // aggregates keep O(K)-bounded or low-group-count buffers, so 16k
-        // in-memory groups is a few MB per task; env-overridable for
-        // deployments whose group-count × buffer-size product differs.
-        spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-          sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK", "16384"))
+        // in-memory groups is a few MB per task. A value the session
+        // already sets is left alone.
+        if (!spark.sessionState.conf.contains(ObjAggFallbackKey))
+          spark.conf.set(ObjAggFallbackKey, ObjAggFallbackDefault)
         if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[SpatialJoinRewrite]))
           spark.experimental.extraOptimizations =
             spark.experimental.extraOptimizations :+ SpatialJoinRewrite()
+        if (!spark.experimental.extraStrategies.contains(PipPassStrategy))
+          spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ PipPassStrategy
         installedSessions += spark
       }
     }

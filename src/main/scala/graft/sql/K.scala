@@ -140,11 +140,8 @@ object K {
     if (p.isPolygonal) p.locate(x, y) == 1
     else Pred.contains(p.geom, Point(x, y))
   }
-  def intersectsXY(poly: Array[Byte], x: Double, y: Double): Boolean = {
-    val p = Prepared.of(poly)
-    if (p.isPolygonal) p.locate(x, y) >= 0
-    else Pred.intersects(p.geom, Point(x, y))
-  }
+  def intersectsXY(poly: Array[Byte], x: Double, y: Double): Boolean =
+    Prepared.of(poly).intersectsXY(x, y)
 
   /** Fixed-radius predicate ("within distance d") — the most common
     * spatial-join condition in production radius workloads ⟨ref(engine):

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** pipJoin's broadcast dispatch (judge r3 #3): under the zones≪points
-  * asymmetry the exploded cover is broadcast; above `broadcastMaxZones` the
-  * hint is dropped so a huge polygon side degrades to a shuffled join
-  * instead of OOMing the driver — with bit-identical results. */
+  * asymmetry the zone index is broadcast to a one-pass probe; above
+  * `broadcastMaxZones` the covers explode into a shuffled join instead of
+  * OOMing the driver — with bit-identical results. */
 class PipGuardSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -27,16 +27,20 @@ class PipGuardSpec extends AnyFunSuite {
     val images = GeoTables.images(spark, sfDir)
     val zones = GeoTables.zones(spark, sfDir)
 
+    def shuffleJoin(plan: String): Boolean =
+      plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")
+
     val hinted = SpatialJoins.pipJoin(images, zones)
       .select("image_id", "zone_id")
-    assert(hinted.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
-      "small zone side must ride the broadcast hint")
+    val hPlan = hinted.queryExecution.executedPlan.toString
+    assert(!shuffleJoin(hPlan) && hPlan.contains("PipPass"),
+      s"small zone side must take the broadcast pass, not a shuffle join:\n$hPlan")
 
     val guarded = SpatialJoins.pipJoin(images, zones, broadcastMaxZones = 0)
       .select("image_id", "zone_id")
     val gPlan = guarded.queryExecution.executedPlan.toString
-    assert(!gPlan.contains("BroadcastHashJoin"),
-      s"above the zone threshold the broadcast hint must be dropped:\n$gPlan")
+    assert(!gPlan.contains("BroadcastHashJoin") && shuffleJoin(gPlan),
+      s"above the zone threshold the zones must shuffle-join:\n$gPlan")
 
     val a = hinted.collect().map(r => (r.getString(0), r.getString(1))).toSet
     val b = guarded.collect().map(r => (r.getString(0), r.getString(1))).toSet

@@ -124,23 +124,29 @@ class SpatialJoinRewriteSpec extends AnyFunSuite {
     val images = GeoTables.images(spark, sfDir)
     val zones = GeoTables.zones(spark, sfDir)
 
-    val joined = SpatialJoins.pipJoin(images, zones)
     // the defect stacked a second explode(st_cover) on the zones side:
-    // the executed plan must contain exactly ONE cover Generate. (String
-    // count, not collect{GenerateExec}: AQE hides children pre-execution.)
+    // the shuffle path's executed plan must contain exactly ONE cover
+    // Generate, and the broadcast pass, which covers on the driver's zone
+    // job, none. (String count, not collect{GenerateExec}: AQE hides
+    // children pre-execution.)
     def coverGenerates(df: org.apache.spark.sql.DataFrame): Int =
       "Generate explode\\(stcover".r
         .findAllIn(df.queryExecution.executedPlan.toString).size
-    assert(coverGenerates(joined) == 1,
-      s"expected exactly one cover Generate in pipJoin's executed plan:\n" +
+    val shuffled = SpatialJoins.pipJoin(images, zones, broadcastMaxZones = 0)
+    assert(coverGenerates(shuffled) == 1,
+      s"expected exactly one cover Generate in pipJoin's shuffle-path plan:\n" +
+        shuffled.queryExecution.executedPlan.toString)
+    val joined = SpatialJoins.pipJoin(images, zones)
+    assert(coverGenerates(joined) == 0,
+      s"expected no cover Generate in pipJoin's broadcast-pass plan:\n" +
         joined.queryExecution.executedPlan.toString)
 
     // and it must run at naive-join speed, not quadratic-broadcast speed
     // (63-88 s when broken even on a degraded host; < 5 s healthy)
     val t0 = System.nanoTime()
-    val n = joined.count()
+    val n = shuffled.count()
     val secs = (System.nanoTime() - t0) / 1e9
-    assert(n > 0)
+    assert(n > 0 && joined.count() == n)
     assert(secs < 10.0, s"pipJoin at sf0.001 took $secs s — quadratic rewrite is back?")
 
     // a join that already has an ordinary equi key + PIP refine is left alone
