@@ -2445,7 +2445,8 @@ object SparkEntry {
     // 5 fixed iterations of pure-BIGINT PageRank over the zone-adjacency
     // graph — every step is ⌊85·⌊r/deg⌋/100⌋ floor arithmetic, so Spark
     // and the oracle's unrolled CTE chain agree bit-for-bit with no
-    // float-sum ordering hazard. One equi-join + one agg per iteration.
+    // float-sum ordering hazard. Below Graph's 2²⁰-vertex cap the rounds
+    // run vertex-dense: one Spark job per iteration.
     "q131_pagerank" -> ((s, dir) => {
       val z = GeoTables.zones(s, dir)
       val edges = SpatialJoins.polyJoin(z, z, level = 8)
@@ -5911,8 +5912,9 @@ object SparkEntry {
     // token contract) through the SAME integer PageRank q131 runs on the
     // zone graph — 0.15·1e9 base, floor-div damping, 5 synchronized
     // rounds — then the top-20 by (rank, token). Vocab-bounded: the graph
-    // is tokens², not captions; the oracle replays all 5 rounds with
-    // identical BIGINT arithmetic.
+    // is tokens², not captions, and below Graph's 2²⁰-vertex cap the
+    // rounds run vertex-dense (one Spark job each); the oracle replays
+    // all 5 rounds with identical BIGINT arithmetic.
     "q229_textrank" -> ((s, dir) => {
       GeoTables.ensure(s, dir)
       val toks = s.read.parquet(GeoTables.imagesPath(dir))
@@ -5927,7 +5929,7 @@ object SparkEntry {
           .select(col("d").as("s"), col("s").as("d"))).distinct()
       val verts = toks.select(explode(col("ts")).as("id")).distinct()
       // sym is already distinct + irreflexive — canonical skips
-      // pagerank's internal distinct (one full edge shuffle, r6)
+      // pagerank's own dedup of the edges
       graft.join.Graph.pagerank(sym, "s", "d", vertices = verts, canonical = true)
         // vocab-bounded top-20: orderBy().limit() compiles to
         // TakeOrderedAndProject (per-partition partial top-20, merged) —
@@ -6503,8 +6505,8 @@ object SparkEntry {
     // distinct words, authorities = words many distinct words precede).
     // Integer-exact: 4 rounds of sum + ppm renormalization through the
     // base-100 ladder (Graph.hits), oracle replays the rounds unrolled.
-    // Per round: two shuffle equi-joins + two aggregates + a broadcast
-    // single-row total — vocab-bounded after the one corpus scan.
+    // Below Graph's 2²⁰-vertex cap the rounds run vertex-dense: one
+    // Spark job per half-round, the global total summed on the driver.
     "q252_hits" -> ((s, dir) => {
       GeoTables.ensure(s, dir)
       val toks = s.read.parquet(GeoTables.imagesPath(dir))
@@ -6514,16 +6516,17 @@ object SparkEntry {
           """transform(sequence(1, size(ts) - 1),
              i -> named_struct('s', element_at(ts, i), 'd', element_at(ts, i + 1)))""")).as("p"))
         .select(col("p.s").as("s"), col("p.d").as("d"))
-      // (an int-dictionary encoding of the tokens was tried and measured
-      // NO faster — the rounds are shuffle-scheduling-bound, not
-      // string-hash-bound — so the simpler direct form stays)
+      // (the token strings are the vertex keys directly: Graph.hits
+      // numbers them once on the driver, so no int-dictionary encoding
+      // is needed)
       val verts = toks.select(explode(col("ts")).as("id")).distinct()
       val sc = graft.join.Graph.hits(big, "s", "d", vertices = verts, iters = 4)
       // per-kind top-10 via two TakeOrderedAndProject branches instead of
       // a row_number window partitioned by the 2-value `kind` (which sorts
       // the whole vocab-sized table on 2 reducers — the judge's r5
-      // low-cardinality-window nit); `sc` is checkpoint-backed (Graph.hits
-      // rebuild), so the two branches don't re-run the iteration
+      // low-cardinality-window nit); `sc` is a driver-built frame below
+      // the cap (checkpointed rounds above it), so the two branches don't
+      // re-run the iteration
       def top10(kind: String, scoreCol: String): DataFrame = sc
         .select(col("id"), lit(kind).as("kind"), col(scoreCol).as("score_ppm"))
         .orderBy(desc("score_ppm"), asc("id")).limit(10)
@@ -8086,9 +8089,8 @@ object SparkEntry {
         .agg(sum("n").as("n"), sum("np").as("n_pos"),
           max("cumn").as("cum_n"), max("cump").as("cum_pos"),
           max("nt").as("nt"), max("pt").as("pt"))
-        .withColumn("capture_ppm", expr(ppmDivSql("cum_pos", "pt")))
-        .withColumn("lift_milli", expr(milliDivSql("(cum_pos * nt)",
-          "(cum_n * pt)", "div")))
+        .withColumn("capture_ppm", expr(q310CaptureSql("div")))
+        .withColumn("lift_milli", expr(q310LiftSql("div")))
     }),
 
     // ---------------- streamed AR(2) forecast (r5 s17) ----------------
@@ -9575,6 +9577,15 @@ object SparkEntry {
     * HUGEINT stays exact (review s12). */
   private def ppmDivSql(x: String, den: String): String =
     ppmDivSqlI(x, den, "div")
+
+  /** q310's capture ppm and lift milli over its decile columns, for the
+    * engine (`idiv` = "div") and the oracle ("//"): 0 when no row is
+    * positive (pt = 0), where the division would throw under ANSI SQL
+    * and give NULL in DuckDB. */
+  private[graft] def q310CaptureSql(idiv: String): String =
+    s"(CASE WHEN pt = 0 THEN 0 ELSE ${ppmDivSqlI("cum_pos", "pt", idiv)} END)"
+  private[graft] def q310LiftSql(idiv: String): String =
+    s"(CASE WHEN pt = 0 THEN 0 ELSE ${milliDivSql("(cum_pos * nt)", "(cum_n * pt)", idiv)} END)"
 
   /** Signed ppm division with a den ≤ 0 guard: the kappa/correlation
     * shape — sign-split so Spark div and DuckDB // agree on negatives
@@ -13607,8 +13618,8 @@ object SparkEntry {
              CAST(MAX(nt) AS BIGINT) AS nt, CAST(MAX(pt) AS BIGINT) AS pt
            FROM cw GROUP BY 1)
          SELECT decile, n, n_pos, cum_n, cum_pos, nt, pt,
-           CAST(${ppmDivSqlI("cum_pos", "pt", "//")} AS BIGINT) AS capture_ppm,
-           CAST(${milliDivSql("(cum_pos * nt)", "(cum_n * pt)", "//")} AS BIGINT) AS lift_milli
+           CAST(${q310CaptureSql("//")} AS BIGINT) AS capture_ppm,
+           CAST(${q310LiftSql("//")} AS BIGINT) AS lift_milli
          FROM dc""",
 
     // ground truth: the SAME oracle as q255 (fourteenth member)

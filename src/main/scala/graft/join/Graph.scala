@@ -151,29 +151,53 @@ object Graph {
    *
    * Dangling vertices (outdeg 0) simply leak their mass — the documented
    * integer-PR convention here; callers wanting conservation add a sink.
-   * Scale shape: one equi-join + one aggregation per iteration, keyed on
-   * the vertex id — O(E·iters) total, no all-pairs anywhere; the rebuild
-   * firewall caps plan growth across iterations.
+   * outdeg(u) counts every kept edge out of u, also those whose dst is not
+   * a vertex (their mass is dropped); an edge whose src is not a vertex
+   * contributes nothing. A null vertex id is returned with the base score
+   * (`scale` when iters = 0).
+   *
+   * Scale shape: when the distinct vertex ids fit [[maxBroadcastVerts]]
+   * and are of an integral or string type shared by src and dst, the
+   * rounds run vertex-dense ([[DenseGraph]]): the ranks live in a driver
+   * array, the edges are packed once into persisted blocks, and each
+   * round is one Spark job over them — O(E) per round, no shuffle. The
+   * result is a driver-built frame, so reading it again runs no round.
+   * Otherwise [[pagerankRounds]] runs one equi-join + one aggregation per
+   * round, keyed on the vertex id. Both give the same rows and schema.
    *
    * @param vertices one column `id` — the full vertex set (isolated
    *                 vertices keep the base score)
+   * @param canonical the edge list is ALREADY distinct and irreflexive —
+   *        nothing is filtered (self-loops count, and an edge to a null
+   *        dst counts in outdeg) and the distinct is skipped (the
+   *        triangles contract).
    */
-  /** Per-round score/degree frames are vertex-sized and narrow; when the
-    * MEASURED vertex count fits a sane broadcast relation they are hinted
-    * broadcast so the edge list never shuffles across iterations (r6; a
-    * checkpointed frame carries no size stats, so AQE cannot make this
-    * call itself and every round paid a sort-merge shuffle of the edges).
-    * Counting the already-checkpointed vertex RDD is one cheap local job;
-    * vertex sets beyond the cap fall back to the shuffle path — the
-    * correct shape when vertices scale with the data. */
-  private val maxBroadcastVerts = 1L << 20
-
-  /** @param canonical the edge list is ALREADY distinct and irreflexive —
-    *        skips the internal distinct shuffle (the triangles contract). */
   def pagerank(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                vertices: DataFrame, iters: Int = 5, scale: Long = 1000000000L,
                canonical: Boolean = false): DataFrame = {
     require(iters >= 0 && scale > 0, s"bad pagerank params iters=$iters scale=$scale")
+    DenseGraph.index(edges, srcCol, dstCol, vertices, maxBroadcastVerts) match {
+      case Some(ix) => DenseGraph.pagerank(ix, edges, srcCol, dstCol, iters, scale, canonical)
+      case None => pagerankRounds(edges, srcCol, dstCol, vertices, iters, scale, canonical)
+    }
+  }
+
+  /** Vertex sets (and frontiers) up to this many rows are held on the
+    * driver: [[pagerank]] and [[hits]] run vertex-dense below it, and the
+    * per-round frames of the DataFrame rounds are hinted broadcast below
+    * it, so the edge list never shuffles across rounds (a checkpointed
+    * frame carries no size stats, so AQE cannot make that call itself).
+    * Larger sets take the shuffle path — the correct shape when vertices
+    * scale with the data. */
+  private[join] val maxBroadcastVerts = 1 << 20
+
+  /** [[pagerank]] as DataFrame rounds: one equi-join + one aggregation per
+    * round, each round localCheckpointed through the rebuild firewall.
+    * Runs above [[maxBroadcastVerts]] and for id types the dense path does
+    * not admit; the reference the dense path is tested against. */
+  private[join] def pagerankRounds(edges: DataFrame, srcCol: String, dstCol: String,
+                                   vertices: DataFrame, iters: Int, scale: Long,
+                                   canonical: Boolean): DataFrame = {
     def rebuild(df: DataFrame): DataFrame = {
       val cp = df.localCheckpoint(true)
       cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
@@ -206,21 +230,36 @@ object Graph {
   /**
    * HITS hubs & authorities (Kleinberg 1999, public) over a DIRECTED
    * edge list, integer-exact: each half-round sums the opposite score
-   * across the edge relation (one shuffle equi-join + one aggregate),
-   * then renormalizes to ppm of the global total via the base-100
-   * long-division ladder — exact while raw·100 fits a long, i.e. hub
-   * in-mass to ~9.2e16. The global total rides a broadcast single-row
-   * aggregate (no driver scalar); every round localCheckpoints through
-   * the [[ImageDedup.components]] stats firewall. A bounded `iters`
-   * (oracle replays the same rounds unrolled) — HITS converges
-   * geometrically, and exactness demands a fixed round count, not a
-   * tolerance.
+   * across the edge relation, then renormalizes to ppm of the global
+   * total via the base-100 long-division ladder — exact while raw·100
+   * fits a long, i.e. hub in-mass to ~9.2e16. Self-loops and null
+   * endpoints are dropped and edges deduplicated. Endpoints that are not
+   * vertices carry scores and count in the total, but are not returned;
+   * neither is a null vertex id. A bounded `iters` (oracle replays the
+   * same rounds unrolled) — HITS converges geometrically, and exactness
+   * demands a fixed round count, not a tolerance.
+   *
+   * Scale shape as [[pagerank]]: vertex-dense when the ids fit
+   * [[maxBroadcastVerts]] (one Spark job per half-round, the total and
+   * the ladder on the driver, a driver-built result), else
+   * [[hitsRounds]]. Both give the same rows and schema.
    *
    * @return (id, a_ppm, h_ppm) for every vertex
    */
   def hits(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
            vertices: DataFrame, iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 16, s"bad hits iters=$iters")
+    DenseGraph.index(edges, srcCol, dstCol, vertices, maxBroadcastVerts)
+      .flatMap(DenseGraph.hits(_, edges, srcCol, dstCol, iters, maxBroadcastVerts))
+      .getOrElse(hitsRounds(edges, srcCol, dstCol, vertices, iters))
+  }
+
+  /** [[hits]] as DataFrame rounds: per half-round one equi-join + one
+    * aggregate, the global total as a window, localCheckpointed through
+    * the [[ImageDedup.components]] stats firewall. Runs where the dense
+    * path does not; the reference it is tested against. */
+  private[join] def hitsRounds(edges: DataFrame, srcCol: String, dstCol: String,
+                               vertices: DataFrame, iters: Int): DataFrame = {
     def rebuild(df: DataFrame): DataFrame = {
       val cp = df.localCheckpoint(true)
       cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
@@ -233,7 +272,7 @@ object Graph {
          + ((((raw * 100) % t) * 100 % t) * 100 DIV t) END"""
     val v = rebuild(vertices.select(col("id")).distinct())
     // count-gated broadcast of the per-half-round score frames — see
-    // pagerank's maxBroadcastVerts note (r6)
+    // the maxBroadcastVerts note
     val smallV = v.count() <= maxBroadcastVerts
     def bc(df: DataFrame): DataFrame = if (smallV) F.broadcast(df) else df
     val e = rebuild(edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
