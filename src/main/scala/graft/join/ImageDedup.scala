@@ -93,7 +93,7 @@ object ImageDedup {
    *
    * Bounded dispatch (r5): edge sets under `driverMaxEdges` collect to a
    * driver union-find (path-compressed, milliseconds) — the same bounded-
-   * collect contract as the R-tree build and the kNN small-Q frontier.
+   * collect contract as the PIP zone index and the kNN query broadcast.
    * This matters because the CONTRACTED graphs the engine feeds in here
    * (dbscan cell graphs, near-dup clusters) are tiny relative to the data
    * they summarize, while one distributed hash-min round costs several
@@ -185,8 +185,6 @@ object ImageDedup {
       val clean = next.drop("_changed")
       labels = clean.sparkSession.createDataFrame(clean.rdd, clean.schema)
       rounds += 1
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(f"[cc] round $rounds changed=$changed")
     }
     // hash-min converges in O(component diameter) rounds; a diameter above
     // maxRounds means the labels are WRONG, not slow — fail loudly rather

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
  * ANSI-SQL oracle can replay it EXACTLY:
  *
  * - init: the k points with smallest ids, in id order (bounded driver
- *   collect of k rows — the R-tree/kNN bounded-contract pattern);
+ *   collect of k rows — the PIP-index/kNN bounded-contract pattern);
  * - assignment: argmin over the k broadcast-literal centroids, ties to
  *   the smallest cluster index (array_min over (d², j) structs — plain
  *   codegen'd column arithmetic, no UDF);

@@ -27,7 +27,10 @@ import org.apache.spark.sql.expressions.Window
  * downstream aggregations, which AQE rebalances. A larger zone side
  * explodes its cover to (cell, zone) rows and equi-joins them with the
  * points in plain DataFrame ops; Catalyst/AQE pick the join and split
- * skew. The other cover joins here keep the exploded-cover shape.
+ * skew. That pass ([[pipPass]]) is the engine's only broadcast
+ * point-in-polygon probe; `Streams.spatialEnrich` uses it too. The other
+ * cover joins here keep the exploded-cover shape and broadcast the cover
+ * itself when the dim side has at most [[CoverBroadcastMax]] rows.
  */
 object SpatialJoins {
 
@@ -43,10 +46,14 @@ object SpatialJoins {
     * the dim side is small enough to broadcast. The probe is bounded
     * (`limit(max+1).count()` — never a full scan of a huge side) and
     * skipped entirely when the caller passes a cardinality hint ≥ 0. */
-  private def fewDims(dims: DataFrame, broadcastMax: Long, countHint: Long): Boolean =
+  private def fewDims(dims: DataFrame, broadcastMax: Long, countHint: Long = -1): Boolean =
     if (countHint >= 0) countHint <= broadcastMax
     else dims.limit(math.min(broadcastMax, Int.MaxValue - 1L).toInt + 1)
       .count() <= broadcastMax
+
+  /** Most dim rows the exploded-cover joins (compact, dwithin, snap,
+    * radius, sphere) broadcast; a larger side takes the shuffled join. */
+  private val CoverBroadcastMax: Long = 100000
 
   /**
    * Point-in-polygon join: images(lon, lat) × zones(zone_id, wkt) → one
@@ -85,8 +92,10 @@ object SpatialJoins {
     }
   }
 
-  /** The broadcast pass of [[pipJoin]]. */
-  private def pipPass(images: DataFrame, zones: DataFrame, level: Int): DataFrame = {
+  /** The broadcast pass of [[pipJoin]], without its size probe: the zones
+    * are collected and indexed when this is called, whatever their count.
+    * `Streams.spatialEnrich` calls it directly. */
+  private[graft] def pipPass(images: DataFrame, zones: DataFrame, level: Int): DataFrame = {
     val zt = zones.select(col("zone_id"), call_function("st_geomfromwkt", col("wkt")).as("zone_geom"))
     val idType = zt.schema(0).dataType
     val rows = zt.where(col("zone_geom").isNotNull).queryExecution.toRdd.mapPartitions { it =>
@@ -116,9 +125,7 @@ object SpatialJoins {
    * multiplicity with no dedup step.
    */
   def pipJoinCompact(images: DataFrame, zones: DataFrame,
-                     minLevel: Int = 6, maxLevel: Int = 12,
-                     broadcastMaxZones: Long = 100000,
-                     zonesCountHint: Long = -1): DataFrame = {
+                     minLevel: Int = 6, maxLevel: Int = 12): DataFrame = {
     val spark = images.sparkSession
     GraftFunctions.install(spark)
     val pts = images.withColumn("pk", explode(call_function("st_cell_ancestors",
@@ -129,8 +136,7 @@ object SpatialJoins {
       .withColumn("pk", explode(call_function("st_cover_compact",
         col("zone_geom"), lit(minLevel), lit(maxLevel))))
       .select(col("zone_id"), col("zone_geom"), col("pk"))
-    val few = fewDims(zones, broadcastMaxZones, zonesCountHint)
-    val cover = if (few) broadcast(coverRaw) else coverRaw
+    val cover = if (fewDims(zones, CoverBroadcastMax)) broadcast(coverRaw) else coverRaw
     pts.join(cover, "pk")
       .where(call_function("st_intersects_xy", col("zone_geom"), col("lon"), col("lat")))
   }
@@ -187,11 +193,10 @@ object SpatialJoins {
    * keys by `st_cellid`, and the exact `st_dwithin_xy` kernel refines
    * (envelope-gap quick reject inlined, prepared decode-once geometry).
    * Distance is planar lon/lat degrees, consistent with st_distance and
-   * every BETWEEN oracle. Broadcast dispatch identical to pipJoin.
+   * every BETWEEN oracle. The cover is broadcast when the zone side has
+   * at most [[CoverBroadcastMax]] rows.
    */
-  def dwithinJoin(images: DataFrame, zones: DataFrame, d: Double, level: Int = 8,
-                  broadcastMaxZones: Long = 100000,
-                  zonesCountHint: Long = -1): DataFrame = {
+  def dwithinJoin(images: DataFrame, zones: DataFrame, d: Double, level: Int = 8): DataFrame = {
     require(d >= 0, s"negative radius $d")
     val spark = images.sparkSession
     GraftFunctions.install(spark)
@@ -202,8 +207,7 @@ object SpatialJoins {
       .withColumn("cell", explode(call_function("st_cover",
         call_function("st_expand", col("zone_geom"), lit(d)), lit(level))))
       .select(col("zone_id"), col("zone_geom"), col("cell"))
-    val few = fewDims(zones, broadcastMaxZones, zonesCountHint)
-    val cover = if (few) broadcast(coverRaw) else coverRaw
+    val cover = if (fewDims(zones, CoverBroadcastMax)) broadcast(coverRaw) else coverRaw
     pts.join(cover, "cell")
       .where(call_function("st_dwithin_xy", col("zone_geom"), col("lon"), col("lat"), lit(d)))
   }
@@ -220,9 +224,8 @@ object SpatialJoins {
    * reduction shuffles O(candidates) and scales like the radius join.
    * Output adds the snapped boundary point (st_closest_point).
    */
-  def nearestSnapJoin(points: DataFrame, zones: DataFrame, d: Double, level: Int = 8,
-                      broadcastMaxZones: Long = 100000,
-                      zonesCountHint: Long = -1): DataFrame = {
+  def nearestSnapJoin(points: DataFrame, zones: DataFrame, d: Double,
+                      level: Int = 8): DataFrame = {
     require(d >= 0, s"negative radius $d")
     val spark = points.sparkSession
     GraftFunctions.install(spark)
@@ -234,8 +237,7 @@ object SpatialJoins {
       .withColumn("cell", explode(call_function("st_cover",
         call_function("st_expand", col("zone_geom"), lit(d)), lit(level))))
       .select(col("zone_id"), col("boundary"), col("cell"))
-    val few = fewDims(zones, broadcastMaxZones, zonesCountHint)
-    val cover = if (few) broadcast(coverRaw) else coverRaw
+    val cover = if (fewDims(zones, CoverBroadcastMax)) broadcast(coverRaw) else coverRaw
     val cand = pts.join(cover, "cell")
       .withColumn("dist", call_function("st_distance", col("boundary"),
         call_function("st_point", col("lon"), col("lat"))))
@@ -263,7 +265,6 @@ object SpatialJoins {
    * `maxMeters` (guarded).
    */
   def geoRadiusJoin(images: DataFrame, sites: DataFrame, meters: Double, level: Int = 8,
-                    broadcastMaxSites: Long = 100000,
                     sitesCountHint: Long = -1): DataFrame = {
     require(meters >= 0 && meters <= 1500000.0,
       s"geoRadiusJoin supports radii up to 1500 km (got $meters m) — the conservative " +
@@ -298,8 +299,8 @@ object SpatialJoins {
       .withColumn("cell", explode(call_function("st_cover", col("env"), lit(level))))
       .select(col("site_id"), col("site_lon"), col("site_lat"), col("cell"))
       .distinct() // wrap overlap must not duplicate candidate pairs
-    val few = fewDims(sites, broadcastMaxSites, sitesCountHint)
-    val cover = if (few) broadcast(coverRaw) else coverRaw
+    val cover = if (fewDims(sites, CoverBroadcastMax, sitesCountHint)) broadcast(coverRaw)
+      else coverRaw
     pts.join(cover, "cell")
       .where(call_function("st_distance_sphere",
         col("site_lon"), col("site_lat"), col("lon"), col("lat")) <= meters)
@@ -342,9 +343,9 @@ object SpatialJoins {
       math.sqrt(4.0 * k * earth / (n.toDouble * math.Pi))
     }, 1000.0)
     r = math.min(maxR, r)
-    // bounded probe (the fewDims pattern): exact when ≤ 100k, and the
-    // 100001 sentinel correctly fails geoRadiusJoin's broadcast test
-    val qn = queries.limit(100001).count()
+    // bounded probe (the fewDims pattern): exact up to the cap, and the
+    // cap + 1 sentinel correctly fails geoRadiusJoin's broadcast test
+    val qn = queries.limit(CoverBroadcastMax.toInt + 1).count()
     var pending = queries.select(col("id").as("site_id"), col("lon").as("site_lon"),
       col("lat").as("site_lat")).localCheckpoint()
     val acc = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -481,13 +482,6 @@ object SpatialJoins {
     // (and components' round loop); materializing them as RDD-scan leaves
     // keeps every task binary small instead of re-shipping the whole
     // union-of-joins plan per stage
-    val dbg = sys.env.contains("GRAFT_DEBUG_CC")
-    var tLast = System.nanoTime()
-    def tick(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[dbscan] $tag ${(now - tLast) / 1e9}%.2fs")
-      tLast = now
-    }
     def mat(df: DataFrame): DataFrame = {
       val c = df.localCheckpoint(true)
       spark.createDataFrame(c.rdd, c.schema)
@@ -535,9 +529,7 @@ object SpatialJoins {
       .where((col("alon") - col("blon")) * (col("alon") - col("blon")) +
              (col("alat") - col("blat")) * (col("alat") - col("blat")) <= eps2)
       .select(col("a"), col("b"), col("bcx"), col("bcy"))
-    tick("setup")
     val ringPtsM = mat(ringPts)
-    tick("ringPts")
     val ringCnt = ringPtsM.groupBy("a").agg(count(lit(1)).as("ring_n"))
     val sparseCore = mat(sparsePts
       .join(nearN, Seq("cx", "cy"))
@@ -572,9 +564,7 @@ object SpatialJoins {
     val e3b = coreRing.join(sparseCore.select(col("id").as("b")), "b")
       .select(col("a").as("ea"), col("b").as("eb"))
     val edges1 = e0.unionByName(e1).unionByName(e3a).unionByName(e3b)
-    tick("sparseCore+edges-built")
     val lab1 = ImageDedup.components(edges1, "ea", "eb")
-    tick("components1")
 
     // ---- phase-2: exact gap checks between dense ring cells ---------------
     val ddRing = shifted(denseCells.select(col("cx"), col("cy"), col("minid").as("ma")),
@@ -591,7 +581,6 @@ object SpatialJoins {
       .select("cx", "cy", "ncx", "ncy", "la", "lb")
       .persist()
     val nGaps = cand.count()
-    tick("gap-candidates")
     val lab2 = if (nGaps == 0) null
     else {
       val confirmed = cand
@@ -608,7 +597,6 @@ object SpatialJoins {
       confirmed.unpersist()
       l2
     }
-    tick("phase2")
     // final label = lab2∘lab1 (lab2 merges phase-1 labels; min of mins = min)
     val nodes = denseCells.select(col("minid").as("id")).union(sparseCore.select("id")).distinct()
     val labFinalBase = nodes
@@ -654,10 +642,8 @@ object SpatialJoins {
       st.gapChecks = nGaps
     }
     // materialize BEFORE releasing the caches (review finding r4)
-    tick("labels-final")
     val result = densePts.unionByName(sparseCorePts).unionByName(borders)
       .localCheckpoint(true)
-    tick("assemble")
     Seq(pts, cells, cand).foreach(_.unpersist())
     result
   }
@@ -671,9 +657,7 @@ object SpatialJoins {
    * pipJoin (the index never decides membership, only candidates) — the
    * q82 oracle states exactly that.
    */
-  def pipJoinSphere(images: DataFrame, zones: DataFrame, level: Int = 7,
-                    broadcastMaxZones: Long = 100000,
-                    zonesCountHint: Long = -1): DataFrame = {
+  def pipJoinSphere(images: DataFrame, zones: DataFrame, level: Int = 7): DataFrame = {
     val spark = images.sparkSession
     GraftFunctions.install(spark)
     val pts = images.withColumn("cell",
@@ -682,8 +666,7 @@ object SpatialJoins {
       .withColumn("cell", explode(call_function("st_cover_sphere",
         col("xmin"), col("ymin"), col("xmax"), col("ymax"), lit(level))))
       .select(col("zone_id"), col("xmin"), col("ymin"), col("xmax"), col("ymax"), col("cell"))
-    val few = fewDims(zones, broadcastMaxZones, zonesCountHint)
-    val cover = if (few) broadcast(coverRaw) else coverRaw
+    val cover = if (fewDims(zones, CoverBroadcastMax)) broadcast(coverRaw) else coverRaw
     pts.join(cover, "cell")
       .where(col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
              col("lat") >= col("ymin") && col("lat") <= col("ymax"))
@@ -713,22 +696,6 @@ object SpatialJoins {
       .agg(first(col("a_geom")).as("a_geom"), first(col("b_geom")).as("b_geom"))
       .where(call_function("st_intersects", col("a_geom"), col("b_geom")))
       .select(col("a_id"), col("b_id"))
-  }
-
-  /**
-   * PIP join via a plan-embedded broadcast STR R-tree (#45 alternative to
-   * the cell join): the tree over all zone polygons is built driver-side,
-   * shipped in the plan, and probed per image row — zero shuffle, zero
-   * explode, exact refine inside the probe. Preferable when zones are few
-   * and covers would be large; the cell join wins when the polygon side is
-   * itself big (see BENCH.md).
-   */
-  def pipJoinRtree(images: DataFrame, zones: DataFrame): DataFrame = {
-    val spark = images.sparkSession
-    GraftFunctions.install(spark)
-    val treeBytes = graft.join.RTree.toBytes(graft.join.RTree.fromZones(zones))
-    images.withColumn("zone_id",
-      explode(call_function("rtree_probe", lit(treeBytes), col("lon"), col("lat"))))
   }
 
   /**
@@ -831,14 +798,6 @@ object SpatialJoins {
     val rNeed = math.sqrt(2.0 * k / (math.Pi * math.max(density, 1e-300)))
     math.max(2L, 1L + math.ceil(rNeed).toLong)
   }
-
-  /**
-   * Batch exact kNN for large query sets: the same routing and result as
-   * [[knn]]. Query sets of at most B = 2²² rows take the single broadcast
-   * pass; larger ones the all-DataFrame ring loop ([[knnRings]]).
-   */
-  def knnLarge(points: DataFrame, queries: DataFrame, k: Int, level: Int): DataFrame =
-    knn(points, queries, k, level)
 
   /**
    * All-DataFrame kNN ring loop for query sets above [[KnnBroadcastRows]]

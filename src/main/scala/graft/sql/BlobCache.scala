@@ -2,12 +2,12 @@ package graft.sql
 
 /**
  * Per-JVM decode cache for binary blobs that ride query plans as
- * Literals (codebooks, centroid tables, serialized trees): executors
- * decode each distinct blob once. Collision-resistant SHA-256 key — two
+ * Literals (codebooks, centroid tables): executors decode each distinct
+ * blob once. Collision-resistant SHA-256 key — two
  * different blobs in a long-lived executor must never alias to the same
- * decoded value. One instance per blob kind (the decoded types differ);
- * shared here so the keying subtlety lives in one place
- * (code-review r5: was triplicated across AnnIndex/Pq/RTree).
+ * decoded value. One instance per blob kind (the decoded types differ:
+ * AnnIndex centroids, Pq codebooks); shared here so the keying subtlety
+ * lives in one place.
  */
 final class BlobCache[T](decode: Array[Byte] => T) extends Serializable {
   @transient private lazy val cache = new java.util.concurrent.ConcurrentHashMap[String, T]()

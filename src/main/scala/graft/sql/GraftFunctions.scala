@@ -247,7 +247,6 @@ object GraftFunctions {
     "text_shingles" -> (e => TextShingles(e(0), e(1))),
     "text_window_sig" -> (e => TextWindowSig(e(0), e(1))),
     "text_chunks" -> (e => TextChunks(e(0), e(1), e(2))),
-    "rtree_probe" -> (e => RtreeProbe(e(0), e(1), e(2))),
     // embedding vectors
     "vec_dot" -> (e => VecDot(e(0), e(1))),
     "vec_dot_q" -> (e => VecDotQ(e(0), e(1))),

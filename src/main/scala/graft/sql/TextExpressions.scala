@@ -205,11 +205,6 @@ object VecOps {
     }
     s
   }
-  /** Codegen-callable R-tree PIP probe (tree deserialized once per JVM). */
-  def rtreeProbe(bytes: Array[Byte], lon: Double, lat: Double): ArrayData = {
-    val ids = graft.join.RTree.fromBytesCached(bytes).probe(lon, lat)
-    new GenericArrayData(ids.map(UTF8String.fromString).asInstanceOf[Array[Any]])
-  }
 }
 
 case class VecDot(left: Expression, right: Expression) extends BinaryExpression
@@ -402,24 +397,6 @@ case class VecL2Q(left: Expression, right: Expression) extends BinaryExpression
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) => s"graft.join.Pq.l2q($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** rtree_probe(serializedTree, lon, lat) → array<string> of matching zone
-  * ids — the broadcast STR R-tree PIP path (SURVEY §2.6 #45). The tree
-  * bytes ride in the plan as a Literal; executors deserialize once per JVM
-  * via RTree.fromBytesCached. */
-case class RtreeProbe(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, DoubleType, DoubleType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    VecOps.rtreeProbe(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) =>
-      s"org.apache.spark.sql.graft.VecOps.rtreeProbe($a, $b, $c)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
 }
 
 /** PII scrub (email → ip → phone placeholders; Text.redactPii contract:

@@ -74,23 +74,23 @@ object Streams {
       .start()
 
   /**
-   * Stream-static spatial enrichment: the flagship broadcast cell-cover
-   * PIP join, streaming flavor — each micro-batch of (lon, lat) rows
-   * joins the STATIC broadcast zone cover on the cell key with the exact
-   * `st_intersects_xy` refine. No stream-side state: at 10^12 streamed
-   * rows the only standing cost is the broadcast cover, identical to the
-   * batch plan. (A training-data ingest tags every incoming image with
-   * its zones this way.)
+   * Stream-static spatial enrichment: the broadcast pass of
+   * [[graft.join.SpatialJoins.pipJoin]], streaming flavor. Output: `cell`,
+   * the stream's columns, `zone_id` — one row per (row, zone) with the
+   * row's DOUBLE (lon, lat) inside or on the zone.
+   *
+   * The zones are STATIC: they are read once, when this is called, into
+   * one cell→zone index that is always broadcast (there is no size probe
+   * and no shuffled fallback). Every micro-batch probes that same index in
+   * a single pass with the exact `st_intersects_xy` refine; the zone table
+   * is NOT re-read per micro-batch, so rows added to it after the call are
+   * not seen. No stream-side state: at 10^12 streamed rows the only
+   * standing cost is the broadcast index. (A training-data ingest tags
+   * every incoming image with its zones this way.)
    */
   def spatialEnrich(stream: DataFrame, zones: DataFrame, level: Int = 8): DataFrame = {
     GraftFunctions.install(stream.sparkSession)
-    val cover = broadcast(graft.join.SpatialJoins.zoneCover(zones, level)
-      .select(col("zone_id"), col("zone_geom"), col("cell")))
-    stream
-      .withColumn("cell", call_function("st_cellid", col("lon"), col("lat"), lit(level)))
-      .join(cover, "cell")
-      .where(call_function("st_intersects_xy", col("zone_geom"), col("lon"), col("lat")))
-      .drop("zone_geom")
+    graft.join.SpatialJoins.pipPass(stream, zones, level).drop("zone_geom")
   }
 
   /**

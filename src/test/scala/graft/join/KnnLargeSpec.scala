@@ -19,7 +19,7 @@ class KnnLargeSpec extends AnyFunSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 
-  test("knnLarge exact vs brute force with 2000 queries (= all points)") {
+  test("knn exact vs brute force with 2000 queries (= all points)") {
     spark.sparkContext.setLogLevel("WARN")
     GeoTables.ensure(spark, sfDir)
     val img = GeoTables.images(spark, sfDir)
@@ -29,7 +29,7 @@ class KnnLargeSpec extends AnyFunSuite {
 
     def run(df: org.apache.spark.sql.DataFrame) = df.select("q_id", "p_id", "rank")
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
-    val got = run(SpatialJoins.knnLarge(img, img, k, level))
+    val got = run(SpatialJoins.knn(img, img, k, level))
     val rings = run(SpatialJoins.knnRings(img, img, k, level))
 
     val q = img.select(col("id").as("q_id"), col("nx").as("qnx"), col("ny").as("qny"))

@@ -1,6 +1,6 @@
 package graft.sql
 
-import graft.join.{AnnIndex, RTree}
+import graft.join.AnnIndex
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -98,15 +98,6 @@ class CodegenSpec extends AnyFunSuite {
     assert(mm(0).getAs[org.apache.spark.sql.Row]("meta").getAs[Int]("n") == 6)
     assert(mm(0).getAs[Int]("n_parts") == 3 && mm(1).getAs[Int]("n_parts") == 2)
     assert(mm(0).getAs[Int]("f0len") == 4 * 3 * 3)
-
-    val unit = graft.geom.Wkt.read("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))")
-    val tree = RTree.build(Array(RTree.Entry(0, 0, 2, 2, "z1", unit)))
-    val tb = RTree.toBytes(tree)
-    val p = Seq((1.0, 1.0), (5.0, 5.0)).toDF("lon", "lat")
-      .select(call_function("rtree_probe", lit(tb), $"lon", $"lat").as("zones"))
-      .collect()
-    assert(p(0).getSeq[String](0).toList == List("z1"))
-    assert(p(1).getSeq[String](0).isEmpty)
   }
 
   test("r5 spatial scalar expressions evaluate under CODEGEN_ONLY") {

@@ -111,6 +111,38 @@ class StreamingSpec extends AnyFunSuite {
       .select("zone_id", "image_id")
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got == want && got.nonEmpty, s"got=${got.size} want=${want.size}")
+
+    // each micro-batch probes the broadcast zone index in one pass: the
+    // PipPass node, not a broadcast hash join on the cell key
+    val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+    assert(plan.contains("PipPass"), s"no PipPass in the micro-batch plan:\n$plan")
+    assert(!plan.contains("BroadcastHashJoin"), s"micro-batch plan joins on the cell key:\n$plan")
+  }
+
+  test("batch spatial enrichment runs at most 2 jobs: no zone-count probe") {
+    import graft.data.GeoTables
+    val sfDir = new java.io.File(eventsPath).getParent
+    GeoTables.ensure(spark, sfDir)
+    val images = GeoTables.images(spark, sfDir).select("image_id", "lon", "lat")
+    val zones = GeoTables.zones(spark, sfDir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Thread.sleep(500) // listener events are async; drain
+      jobs.set(0)
+      val enriched = Streams.spatialEnrich(images, zones)
+      val rows = enriched.collect()
+      Thread.sleep(500)
+      // one job collects the zone index, one runs the pass
+      assert(jobs.get() <= 2, s"spatialEnrich ran ${jobs.get()} jobs")
+      assert(enriched.columns.toSeq == Seq("cell", "image_id", "lon", "lat", "zone_id"))
+      assert(rows.nonEmpty)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("watermarked streaming dedup drops in-watermark duplicate phashes") {
