@@ -18,11 +18,13 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (builder only — the driver sets no env):
-    // SPARK_GRAFT_ONLY=q53,q70 runs just the named prefixes
+    // local-iteration filter: SPARK_GRAFT_ONLY=q53,q70 runs just the named
+    // queries — an entry selects the query whose full name it is, or whose
+    // qNN id it is (q29 selects q29_..., not q290_...)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
+      case Some(es) => SparkEntry.queries.filter { case (n, _) =>
+        es.exists(e => n == e || n.startsWith(e + "_")) }
       case None => SparkEntry.queries
     }
     // per query: (name, error class or null, wall seconds)

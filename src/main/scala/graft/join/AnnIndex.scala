@@ -1,9 +1,12 @@
 package graft.join
 
-import graft.sql.GraftFunctions
+import graft.sql.{GraftFunctions, K}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.RowsLiteral
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /**
  * EXACT cosine top-k via a spherical-k-means IVF index (SURVEY §2.6
@@ -24,12 +27,17 @@ import org.apache.spark.sql.expressions.Window
  * (derivation at quantEps; slack only ever adds probed buckets).
  *
  * 100 TB shape (r4): nBuckets ~ √n (configurable cap) so pruning power
- * grows with the corpus; centroids train DISTRIBUTED (Lloyd rounds =
- * assign-expression + map-side-combinable groupBy(bucket, pos) sum — only
- * the k·dim sums ever reach the driver); assignment is a codegen-able
- * per-row expression; the probe is points ⋈ broadcast(query, bucket)
- * pairs — the points side never shuffles and is prunable by a
- * bucket-partitioned layout.
+ * grows with the corpus; centroids train DISTRIBUTED (one single-stage
+ * job per Lloyd round — only the k·dim sums ever reach the driver);
+ * assignment is a codegen-able per-row expression; the probe is points ⋈
+ * broadcast(query, bucket) pairs — the points side never shuffles and is
+ * prunable by a bucket-partitioned layout.
+ *
+ * When the index does not pay: assigning n vectors to k buckets alone
+ * costs n·k centroid dots, while scanning every vector against Q queries
+ * costs n·Q metric dots. So `topK` builds no index when Q ≤ k: it answers
+ * in one scan of the vectors against the collected queries, with the
+ * probe's own metric and ranking (see [[topK]]).
  */
 object AnnIndex {
 
@@ -65,33 +73,45 @@ object AnnIndex {
 
   def unpackCached(bytes: Array[Byte]): Array[Array[Double]] = cache.get(bytes)
 
+  /** The bucket count of an index over n vectors: √n, within [4, maxBuckets]. */
+  private def bucketCount(n: Long, maxBuckets: Int): Int =
+    math.max(4, math.min(maxBuckets.toLong, math.sqrt(n.toDouble).toLong)).toInt
+
   /**
    * Distributed spherical k-means (judge r3 #2 — replaces the ≤4096-row
    * driver-collected sample): k = min(maxBuckets, √n) so pruning power
    * grows with the corpus instead of capping at 256 buckets.
    *
    * Init: k stride-sampled vectors (a bounded k-row collect — the centroid
-   * table is driver-sized by definition). Lloyd rounds are fully
-   * distributed: assignment is the same codegen'd `vec_ivf_assign`
-   * expression the index itself uses; the per-bucket mean arrives through
-   * posexplode → groupBy(bucket, pos) → sum, a map-side-combinable
-   * aggregation with k·dim distinct keys, and only the k·dim sums are
-   * collected. Distributed double summation is order-nondeterministic, so
-   * centroid bits may differ run-to-run — harmless: topK/cosineNearDup are
-   * EXACT for any centroids (bounds are computed from actual assignments
-   * and radii), so final answers never depend on it.
+   * table is driver-sized by definition). Each Lloyd round is ONE
+   * single-stage Spark job: every partition assigns its training rows with
+   * the same argmax-dot kernel the `vec_ivf_assign` expression uses
+   * (`K.ivfAssign`) and sums them into one k·dim array, and the driver
+   * adds up the per-partition arrays — no shuffle, and only k·dim sums
+   * per partition reach the driver. So fitting costs a row count, the
+   * init collect and `iters` jobs. The driver adds the arrays in task
+   * completion order, and double addition is not associative, so centroid
+   * bits may differ run to run — harmless: topK/cosineNearDup are EXACT
+   * for any centroids (bounds are computed from actual assignments and
+   * radii), so final answers never depend on them.
    */
-  def fitCentroids(base: DataFrame, maxBuckets: Int = 4096, iters: Int = 3): Array[Array[Double]] = {
+  def fitCentroids(base: DataFrame, maxBuckets: Int = 4096, iters: Int = 3): Array[Array[Double]] =
+    fit(base, base.count(), maxBuckets, iters)
+
+  /** [[fitCentroids]] over `base` of known row count `n`. */
+  private def fit(base: DataFrame, n: Long, maxBuckets: Int, iters: Int): Array[Array[Double]] = {
     GraftFunctions.install(base.sparkSession)
-    val n = base.count()
     require(n > 0, "fitCentroids: empty input")
-    val k = math.max(4, math.min(maxBuckets.toLong, math.sqrt(n.toDouble).toLong)).toInt
+    val k = bucketCount(n, maxBuckets)
     // training SAMPLE: ~64 vectors per bucket, stride-selected but kept
     // DISTRIBUTED (never collected) — Lloyd rounds cost O(k·64·dim)
     // aggregation instead of full-corpus scans; centroid quality only
     // affects pruning power, never exactness.
     val step = math.max(1L, n / (64L * k))
-    val train = base.where(pmod(col("vec_id"), lit(step)) === 0).cache()
+    // an RDD persist, not a Dataset cache: adaptive execution would
+    // materialize a cached Dataset in a job of its own
+    val train = base.where(pmod(col("vec_id"), lit(step)) === 0).select(col("embedding"))
+      .queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
     def unit(v: Array[Double]): Array[Double] = {
       var s = 0.0; var i = 0
       while (i < v.length) { s += v(i) * v(i); i += 1 }
@@ -101,7 +121,7 @@ object AnnIndex {
     // init: k stride-spread rows from BASE (not train — two stride filters
     // would compose as their lcm and under-sample); bounded collect — the
     // centroid table is driver-sized by definition
-    var cents = base.where(pmod(col("vec_id"), lit(math.max(1L, n / k))) === 0)
+    var cents = base.where(pmod(col("vec_id"), lit(math.max(1L, n / k))) === 0 && col("embedding").isNotNull)
       .orderBy("vec_id").limit(k)
       .collect()
       .map(r => unit(r.getSeq[Float](1).map(_.toDouble).toArray))
@@ -110,21 +130,34 @@ object AnnIndex {
     var it = 0
     while (it < iters) {
       val cb = packCentroids(cents)
-      val rows = train
-        .withColumn("bucket", call_function("vec_ivf_assign", col("embedding"), lit(cb)))
-        .select(col("bucket"), posexplode(col("embedding")))
-        .groupBy("bucket", "pos").agg(sum(col("col").cast("double")).as("s"))
-        .collect() // ≤ k·dim rows — driver-sized by definition
-      val sums = Array.fill(cents.length)(new Array[Double](dim))
-      val seen = new Array[Boolean](cents.length)
-      rows.foreach { r =>
-        val b = r.getInt(0); seen(b) = true
-        sums(b)(r.getInt(1)) = r.getDouble(2)
+      val nc = cents.length
+      // per partition: (k·dim sums, buckets holding a non-null component)
+      val (sums, seen) = train.mapPartitions { part =>
+        val cs = unpackCached(cb)
+        val s = new Array[Double](nc * dim)
+        val seen = new Array[Boolean](nc)
+        part.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val v = r.getArray(0)
+            val b = K.ivfAssign(v, cs)
+            val m = math.min(dim, v.numElements())
+            var i = 0
+            while (i < m) {
+              if (!v.isNullAt(i)) { s(b * dim + i) += v.getFloat(i).toDouble; seen(b) = true }
+              i += 1
+            }
+          }
+        }
+        Iterator((s, seen))
+      }.reduce { (a, b) =>
+        a._1.indices.foreach(i => a._1(i) += b._1(i))
+        a._2.indices.foreach(j => a._2(j) |= b._2(j))
+        a
       }
-      cents = Array.tabulate(cents.length) { j =>
+      cents = Array.tabulate(nc) { j =>
         if (!seen(j)) cents(j) // empty bucket keeps its centroid
         else {
-          val u = unit(sums(j))
+          val u = unit(java.util.Arrays.copyOfRange(sums, j * dim, (j + 1) * dim))
           if (u.forall(_ == 0.0)) cents(j) else u
         }
       }
@@ -245,6 +278,17 @@ object AnnIndex {
    * integer cosine (vec_dot_q), identical to the brute-force oracle.
    * Output: (q_vec, p_vec, rank) with rank ∈ 1..k.
    *
+   * Path: one job counts the n vectors and collects the Q query rows.
+   * The index would have k = max(4, min(maxBuckets, ⌊√n⌋)) buckets, and
+   * assigning the vectors to them alone costs n·k centroid dots; scanning
+   * the vectors against the queries costs n·Q. So when Q ≤ k, topK skips
+   * the index (training, bucket stats, both probe rounds) and answers in
+   * ONE scan: every vector meets every query, which ride in the plan, and
+   * `topk_pairs` ranks them, with the probe's own metric expressions —
+   * ties, nulls and duplicate ids come out as the IVF path's do. Members
+   * with a null embedding or a zero norm have no cosine and are never
+   * ranked. Otherwise the IVF index is trained and probed.
+   *
    * CONTRACT: the query side is materialized on the driver (rows matching
    * `queryPred`, plus per-(query,bucket) bounds), so it must stay small —
    * `maxQueries` ENFORCES this rather than assuming it: exceeding it fails
@@ -253,18 +297,94 @@ object AnnIndex {
    */
   def topK(emb: DataFrame, queryPred: Column, k: Int, maxQueries: Int = 8192,
            maxBuckets: Int = 4096): DataFrame = {
-    val spark = emb.sparkSession
-    GraftFunctions.install(spark)
-
+    GraftFunctions.install(emb.sparkSession)
     val base = emb.select(col("vec_id"), col("embedding"))
-    val cents = fitCentroids(base, maxBuckets)
+    val (n, queries, qType) = countAndQueries(base, queryPred, maxQueries)
+    if (queries.length <= bucketCount(n, maxBuckets)) scanTopK(base, queries, qType, k)
+    else ivfTopK(base, n, queryPred, k, maxQueries, maxBuckets)
+  }
+
+  /** [[topK]] through the IVF index whatever the query count; the tests
+    * and the VecFuzz tool keep the index path checked through it. */
+  private[graft] def topKIvf(emb: DataFrame, queryPred: Column, k: Int, maxQueries: Int = 8192,
+                             maxBuckets: Int = 4096): DataFrame = {
+    GraftFunctions.install(emb.sparkSession)
+    val base = emb.select(col("vec_id"), col("embedding"))
+    ivfTopK(base, base.count(), queryPred, k, maxQueries, maxBuckets)
+  }
+
+  private def checkQueries(matched: Int, maxQueries: Int): Unit =
+    require(matched <= maxQueries,
+      s"AnnIndex.topK materializes the query side on the driver; queryPred " +
+        s"matches > $maxQueries rows. Shrink the query set, raise maxQueries " +
+        s"deliberately, or use cosineNearDup for set-vs-set workloads.")
+
+  /** One job over `base` (vec_id, embedding): its row count and the rows
+    * matching `queryPred`, as (q_vec, q_emb, q_nrm) structs. Each
+    * partition keeps at most maxQueries + 1 of them, so a too-wide
+    * queryPred fails without flooding the driver. */
+  private def countAndQueries(base: DataFrame, queryPred: Column,
+                              maxQueries: Int): (Long, Array[InternalRow], StructType) = {
+    val flagged = base.select(when(queryPred, struct(col("vec_id").as("q_vec"), col("embedding").as("q_emb"),
+      call_function("vec_dot_q", col("embedding"), col("embedding")).as("q_nrm"))).as("q"))
+    val cap = maxQueries.toLong + 1
+    val parts = flagged.queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L
+      val kept = Array.newBuilder[InternalRow]
+      var nKept = 0L
+      it.foreach { r =>
+        n += 1
+        if (nKept < cap && !r.isNullAt(0)) { kept += r.getStruct(0, 3).copy(); nKept += 1 }
+      }
+      Iterator((n, kept.result()))
+    }.collect()
+    val hits = parts.flatMap(_._2)
+    checkQueries(hits.length, maxQueries)
+    (parts.map(_._1).sum, hits, flagged.schema(0).dataType.asInstanceOf[StructType])
+  }
+
+  /** The one-scan top-k of the collected `queries` against every member
+    * of `base`: each member row meets every query through an array
+    * literal, so the queries ride in the plan. */
+  private def scanTopK(base: DataFrame, queries: Array[InternalRow], qType: StructType,
+                       k: Int): DataFrame = {
+    // a zero-norm member's cosine is 0/0: null without ANSI mode and so
+    // never ranked, but an error under it — drop it before the division
+    val members = base.withColumn("nrm", call_function("vec_dot_q", col("embedding"), col("embedding")))
+      .where(col("nrm") =!= 0)
+    ranked(withCos(members.select(col("*"), inline(RowsLiteral(queries, qType)))), k)
+  }
+
+  /** The quantized cosine `cos` of each (query, member) row: q_emb, q_nrm
+    * against embedding, nrm. */
+  private def withCos(df: DataFrame): DataFrame = df
+    .withColumn("dot_q", call_function("vec_dot_q", col("q_emb"), col("embedding")))
+    .withColumn("cos", col("dot_q") / sqrt(col("q_nrm").cast("double") * col("nrm").cast("double")))
+
+  // per-query ranking via the map-side-combinable topk_pairs aggregate
+  // on the NEGATED cosine (ascending (−cos, vec_id) ≡ the former
+  // row_number over (cos DESC, vec_id ASC)) — candidate rows no longer
+  // cross the exchange, only n_queries·k pairs per map task (r6)
+  private def topkOf(df: DataFrame, k: Int): DataFrame = df
+    .groupBy("q_vec")
+    .agg(call_function("topk_pairs", negate(col("cos")), col("vec_id"), lit(k)).as("tk"))
+
+  /** (q_vec, p_vec, rank) of each query's k best candidates in `df`. */
+  private def ranked(df: DataFrame, k: Int): DataFrame =
+    topkOf(df, k)
+      .select(col("q_vec"), posexplode(col("tk")))
+      .select(col("q_vec"), col("col.i").as("p_vec"), (col("pos") + 1).cast("bigint").as("rank"))
+
+  private def ivfTopK(base: DataFrame, n: Long, queryPred: Column, k: Int, maxQueries: Int,
+                      maxBuckets: Int): DataFrame = {
+    val cents = fit(base, n, maxBuckets, 3)
     val centBytes = packCentroids(cents)
 
     // assignment is the expensive per-row expression (√n centroid dots per
-    // vector) and the frame is read by FIVE downstream jobs (bucket stats,
-    // the query collect, both probe rounds × two sides) — materialize it
-    // ONCE instead of re-assigning per scan (r6; the persisted-index path
-    // topKIndexed stores the assignment for the same reason)
+    // vector) and the frame is read by the bucket stats, the query collect
+    // and both probe rounds — materialize it ONCE instead of re-assigning
+    // per scan (r6; the persisted-index path topKIndexed stores the
+    // assignment for the same reason)
     val assigned = base
       .withColumn("bucket", call_function("vec_ivf_assign", col("embedding"), lit(centBytes)))
       .withColumn("nrm", call_function("vec_dot_q", col("embedding"), col("embedding")))
@@ -276,6 +396,7 @@ object AnnIndex {
       .agg(count(lit(1)).as("cnt"),
         min(call_function("vec_ivf_cos", col("embedding"), lit(centBytes), col("bucket"))).as("mincos_n"),
         min(call_function("vec_norm", col("embedding"))).as("minnrm"))
+      .where(col("bucket").isNotNull) // members without an embedding are never ranked
       .collect()
     val stats = rows.map(r => r.getInt(0) -> ((r.getLong(1), clampAcos(r.getDouble(2))))).toMap
     val eps = quantEps(if (cents.isEmpty) 1 else cents(0).length,
@@ -297,10 +418,7 @@ object AnnIndex {
       .select(col("vec_id"), col("embedding"), col("bucket"))
       .limit(maxQueries + 1)
       .collect()
-    require(qRowsRaw.length <= maxQueries,
-      s"AnnIndex.topK materializes the query side on the driver; queryPred " +
-        s"matches > $maxQueries rows. Shrink the query set, raise maxQueries " +
-        s"deliberately, or use cosineNearDup for set-vs-set workloads.")
+    checkQueries(qRowsRaw.length, maxQueries)
     val qRows = qRowsRaw
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
       .sortBy(_._1)
@@ -339,21 +457,14 @@ object AnnIndex {
         .select(col("vec_id").as("q_vec"), col("embedding").as("q_emb"), col("nrm").as("q_nrm")))
       // literal bucket filter ahead of the join: over the persisted layout
       // (bucketed + stored `bucket` column) this prunes whole bucket FILES
-      // at scan time; semantically redundant with the join itself
+      // at scan time; semantically redundant with the join itself. A
+      // zero-norm member has no cosine (0/0: null, or an error under ANSI
+      // mode) and is never ranked — drop it before the division.
       val probed = pairs.map(_._2).distinct.map(Int.box)
-      assigned.where(col("bucket").isin(probed: _*))
-        .join(p, "bucket").join(q, "q_vec")
-        .withColumn("dot_q", call_function("vec_dot_q", col("q_emb"), col("embedding")))
-        .withColumn("cos", col("dot_q") / sqrt(col("q_nrm").cast("double") * col("nrm").cast("double")))
+      withCos(assigned.where(col("bucket").isin(probed: _*) && col("nrm") =!= 0)
+        .join(p, "bucket").join(q, "q_vec"))
     }
 
-    // per-query ranking via the map-side-combinable topk_pairs aggregate
-    // on the NEGATED cosine (ascending (−cos, vec_id) ≡ the former
-    // row_number over (cos DESC, vec_id ASC)) — candidate rows no longer
-    // cross the exchange, only n_queries·k pairs per map task (r6)
-    def topkOf(df: DataFrame, kk: Int): DataFrame = df
-      .groupBy("q_vec")
-      .agg(call_function("topk_pairs", negate(col("cos")), col("vec_id"), lit(kk)).as("tk"))
     val pairs1 = round1.toSeq.flatMap { case (id, js) => js.map(id -> _) }
     val kth = topkOf(probeDf(pairs1), k)
       .where(size(col("tk")) === k)
@@ -367,9 +478,7 @@ object AnnIndex {
       bs.filter { case (j, b) => probed.contains(j) || b >= cut }.map(p => id -> p._1)
     }
 
-    topkOf(probeDf(finalPairs), k)
-      .select(col("q_vec"), posexplode(col("tk")))
-      .select(col("q_vec"), col("col.i").as("p_vec"), (col("pos") + 1).cast("bigint").as("rank"))
+    ranked(probeDf(finalPairs), k)
   }
 
   // ---------------- persisted layout: build once, probe many ----------------

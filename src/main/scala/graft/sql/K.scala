@@ -280,8 +280,11 @@ object K {
   def hilbert(tx: Long, ty: Long, order: Int): Long = graft.cell.Cells.hilbert(tx, ty, order)
 
   // ---- IVF (exact ANN; centroid blob rides in the plan, cached per JVM) ----
-  def ivfAssign(emb: org.apache.spark.sql.catalyst.util.ArrayData, cents: Array[Byte]): Int = {
-    val cs = graft.join.AnnIndex.unpackCached(cents)
+  def ivfAssign(emb: org.apache.spark.sql.catalyst.util.ArrayData, cents: Array[Byte]): Int =
+    ivfAssign(emb, graft.join.AnnIndex.unpackCached(cents))
+
+  /** The argmax-dot bucket of `emb` among the decoded centroids `cs`. */
+  def ivfAssign(emb: org.apache.spark.sql.catalyst.util.ArrayData, cs: Array[Array[Double]]): Int = {
     var best = 0; var bestDot = Double.NegativeInfinity
     var j = 0
     while (j < cs.length) {

@@ -274,6 +274,14 @@ case class VecDotQ(left: Expression, right: Expression) extends BinaryExpression
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
+/** Driver-held rows as one column: an array literal of struct type `t`,
+  * which ships inside the plan (no broadcast job). */
+object RowsLiteral {
+  def apply(rows: Array[org.apache.spark.sql.catalyst.InternalRow], t: StructType): org.apache.spark.sql.Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(
+      Literal(new GenericArrayData(rows.asInstanceOf[Array[Any]]), ArrayType(t, containsNull = false)))
+}
+
 /** vec_ivf_assign(embedding, centroidBlob) → bucket id (argmax centroid dot). */
 case class VecIvfAssign(left: Expression, right: Expression) extends BinaryExpression
     with ExpectsInputTypes {

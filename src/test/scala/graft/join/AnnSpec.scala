@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** AnnIndex.topK must be hash-exact vs the brute-force ranking (same
   * quantized metric, same tie-break) with no cartesian/nested-loop join in
   * the probe plan — judge item 6 r1. */
@@ -72,7 +74,9 @@ class AnnSpec extends AnyFunSuite {
       .cache()
     val k = 4
     val pred = col("vec_id") % 20000 === 0 // 5 queries
-    val got = AnnIndex.topK(e, pred, k)
+    // 5 queries ≤ 316 buckets would take topK's one-scan path: call the
+    // IVF entry so this case keeps testing the index at scale
+    val got = AnnIndex.topKIvf(e, pred, k)
     assert(AnnIndex.fitCentroids(e).length > 256, "√n law must exceed the old 256 cap at 1e5 rows")
 
     val withNorm = e.withColumn("nrm", call_function("vec_dot_q", col("embedding"), col("embedding")))
@@ -138,5 +142,98 @@ class AnnSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == brute, s"diff: ${(got diff brute).take(4)} / ${(brute diff got).take(4)}")
     e.unpersist()
+  }
+
+  private def rows3(df: org.apache.spark.sql.DataFrame): Map[(Long, Long, Long), Int] =
+    df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .groupBy(identity).map { case (t, v) => t -> v.size }
+
+  private def isScan(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("Generate inline")
+
+  test("one-scan top-k equals the IVF path around the bucket count, with duplicate, null and zero-norm members") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    import spark.implicits._
+    val dim = 6
+    def vec(i: Long): Seq[Float] = (0 until dim).map(j => (math.sin((i % 13 + 1) * (j + 1) * 0.9) +
+      0.3 * math.cos(i * (j + 2) * 0.37)).toFloat)
+    // 402 rows → ⌊√402⌋ = 20 buckets. Duplicate ids: 5 twice with one
+    // vector (a query), 300 twice with two. 350 has no embedding and 351
+    // is the zero vector; the session keeps its default ANSI setting.
+    val rows: Seq[(Long, Seq[Float])] = (0L until 400L).map {
+      case 350L => (350L, null)
+      case 351L => (351L, Seq.fill(dim)(0f))
+      case i => (i, vec(i))
+    } ++ Seq((5L, vec(5)), (300L, vec(7)))
+    val e = rows.toDF("vec_id", "embedding").repartition(3).cache()
+    val k = 6
+    for (t <- Seq(18, 19, 20)) { // Q = t + 1 query rows (id 5 twice): 19, 20, 21
+      val pred = col("vec_id") < t
+      val got = AnnIndex.topK(e, pred, k)
+      assert(isScan(got) == (t + 1 <= 20), s"Q=${t + 1}: wrong path")
+      val want = rows3(AnnIndex.topKIvf(e, pred, k))
+      val g = rows3(got)
+      assert(g == want, s"Q=${t + 1}: ${g.toSeq.diff(want.toSeq).take(4)} / ${want.toSeq.diff(g.toSeq).take(4)}")
+      assert(g.keySet.map(_._1) == (0L until t.toLong).toSet)
+      assert(!g.keySet.exists(r => r._2 == 350L || r._2 == 351L))
+    }
+    e.unpersist()
+  }
+
+  /** n 8-dim vectors in 4 partitions, with no shuffle upstream. */
+  private def synth(n: Long): org.apache.spark.sql.DataFrame =
+    spark.range(0, n, 1, 4).toDF("vec_id")
+      .withColumn("embedding", array((0 until 8).map(j =>
+        (sin(col("vec_id") * (j + 1) * 0.7 + j) * 0.5).cast("float")): _*))
+
+  test("the one-scan path enforces maxQueries with the same message") {
+    GraftFunctions.install(spark)
+    val e = synth(500) // 22 buckets
+    val pred = col("vec_id") < 8 // 8 queries
+    val err = intercept[IllegalArgumentException] {
+      AnnIndex.topK(e, pred, k = 3, maxQueries = 7)
+    }
+    assert(err.getMessage.contains("driver") && err.getMessage.contains("> 7 rows"))
+    val ok = AnnIndex.topK(e, pred, k = 3, maxQueries = 8)
+    assert(isScan(ok))
+    assert(ok.count() == 24)
+  }
+
+  /** Jobs started while `f` runs, each as its stage count. */
+  private def jobStages(f: => Unit): Seq[Int] = {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        stages.add(js.stageInfos.size)
+    }
+    Thread.sleep(500) // listener events are async; drain
+    spark.sparkContext.addSparkListener(listener)
+    try { f; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(listener)
+    stages.asScala.map(_.intValue).toSeq
+  }
+
+  test("the one-scan top-k runs at most 4 Spark jobs") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    val e = synth(500) // 22 buckets
+    AnnIndex.topK(e, col("vec_id") < 10, k = 3).collect() // warm
+    var got: org.apache.spark.sql.DataFrame = null
+    val jobs = jobStages { got = AnnIndex.topK(e, col("vec_id") < 10, k = 3); got.collect() }
+    assert(isScan(got)) // 10 queries ≤ 22 buckets
+    assert(jobs.size <= 4, s"${jobs.size} jobs")
+  }
+
+  test("fitCentroids runs one single-stage job per Lloyd round") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    val e = synth(2000) // no shuffle upstream, so a single-stage job lists one stage
+    for (i <- Seq(1, 3)) {
+      var cents: Array[Array[Double]] = null
+      val jobs = jobStages { cents = AnnIndex.fitCentroids(e, iters = i) }
+      assert(jobs.size <= i + 3, s"iters=$i: ${jobs.size} jobs")
+      assert(jobs.takeRight(i).forall(_ == 1), s"iters=$i: stages per job $jobs")
+      assert(cents.length == 44) // ⌊√2000⌋
+    }
   }
 }
