@@ -3,6 +3,7 @@ package graft.join
 import graft.sql.{GraftFunctions, K}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.RowsLiteral
 import org.apache.spark.sql.types.StructType
@@ -27,15 +28,17 @@ import org.apache.spark.storage.StorageLevel
  * (derivation at quantEps; slack only ever adds probed buckets).
  *
  * 100 TB shape (r4): nBuckets ~ √n (configurable cap) so pruning power
- * grows with the corpus; centroids train DISTRIBUTED (one single-stage
- * job per Lloyd round — only the k·dim sums ever reach the driver);
+ * grows with the corpus; centroids train DISTRIBUTED (one job per Lloyd
+ * round over a ~64·k-row sample held in P ≤ cores partitions — at most
+ * about 2√P k·dim partial sums reach the driver);
  * assignment is a codegen-able per-row expression; the probe is points ⋈
  * broadcast(query, bucket) pairs — the points side never shuffles and is
  * prunable by a bucket-partitioned layout.
  *
- * When the index does not pay: assigning n vectors to k buckets alone
- * costs n·k centroid dots, while scanning every vector against Q queries
- * costs n·Q metric dots. So `topK` builds no index when Q ≤ k: it answers
+ * When the index does not pay: scanning every vector against Q queries
+ * costs n·Q pair evaluations, while the index costs a fixed amount per
+ * vector (training, assignment, checkpoint, bucket stats, probes). So
+ * `topK` builds no index for up to [[ScanMaxQueries]] queries: it answers
  * in one scan of the vectors against the collected queries, with the
  * probe's own metric and ranking (see [[topK]]).
  */
@@ -73,9 +76,15 @@ object AnnIndex {
 
   def unpackCached(bytes: Array[Byte]): Array[Array[Double]] = cache.get(bytes)
 
-  /** The bucket count of an index over n vectors: √n, within [4, maxBuckets]. */
-  private def bucketCount(n: Long, maxBuckets: Int): Int =
-    math.max(4, math.min(maxBuckets.toLong, math.sqrt(n.toDouble).toLong)).toInt
+  /** topK scans instead of indexing up to this many queries. Per vector,
+    * the index cost about as much as scanning 300 queries: timed with
+    * `graft.tools.AnnPathTiming` (clustered 16-dim unit vectors, k = 11,
+    * local[4] on a 4-core box), the scan won every pair at Q ≤ 256 for
+    * n = 3000, 40000 and 160000 (and at Q = 320 for 160000), and the
+    * index won at Q = 320 for n = 40000 and at Q = 400 for n = 160000.
+    * The index's per-vector cost grows with its bucket count (√n), so
+    * larger inputs should move the crossover up; that is unmeasured. */
+  private[join] val ScanMaxQueries = 256
 
   /**
    * Distributed spherical k-means (judge r3 #2 — replaces the ≤4096-row
@@ -83,17 +92,19 @@ object AnnIndex {
    * grows with the corpus instead of capping at 256 buckets.
    *
    * Init: k stride-sampled vectors (a bounded k-row collect — the centroid
-   * table is driver-sized by definition). Each Lloyd round is ONE
-   * single-stage Spark job: every partition assigns its training rows with
-   * the same argmax-dot kernel the `vec_ivf_assign` expression uses
-   * (`K.ivfAssign`) and sums them into one k·dim array, and the driver
-   * adds up the per-partition arrays — no shuffle, and only k·dim sums
-   * per partition reach the driver. So fitting costs a row count, the
-   * init collect and `iters` jobs. The driver adds the arrays in task
-   * completion order, and double addition is not associative, so centroid
-   * bits may differ run to run — harmless: topK/cosineNearDup are EXACT
-   * for any centroids (bounds are computed from actual assignments and
-   * radii), so final answers never depend on them.
+   * table is driver-sized by definition). Each Lloyd round is ONE Spark
+   * job: every partition of the training sample (~64·k rows, coalesced to
+   * at most one partition per core) assigns its rows with the same
+   * argmax-dot kernel the `vec_ivf_assign` expression uses (`K.ivfAssign`)
+   * and sums them into one k·dim array; `treeReduce` adds the arrays up.
+   * With P sample partitions the job is a single stage while P ≤ 5; above
+   * that `treeReduce` adds one combine stage, so at most about 2√P of the
+   * k·dim arrays reach the driver, not P. So fitting costs a row count, the
+   * init collect and `iters` jobs. Arrays are added in task completion
+   * order, and double addition is not associative, so centroid bits may
+   * differ run to run — harmless: topK/cosineNearDup are EXACT for any
+   * centroids (bounds are computed from actual assignments and radii), so
+   * final answers never depend on them.
    */
   def fitCentroids(base: DataFrame, maxBuckets: Int = 4096, iters: Int = 3): Array[Array[Double]] =
     fit(base, base.count(), maxBuckets, iters)
@@ -102,16 +113,20 @@ object AnnIndex {
   private def fit(base: DataFrame, n: Long, maxBuckets: Int, iters: Int): Array[Array[Double]] = {
     GraftFunctions.install(base.sparkSession)
     require(n > 0, "fitCentroids: empty input")
-    val k = bucketCount(n, maxBuckets)
+    val k = math.max(4, math.min(maxBuckets.toLong, math.sqrt(n.toDouble).toLong)).toInt
     // training SAMPLE: ~64 vectors per bucket, stride-selected but kept
     // DISTRIBUTED (never collected) — Lloyd rounds cost O(k·64·dim)
     // aggregation instead of full-corpus scans; centroid quality only
     // affects pruning power, never exactness.
     val step = math.max(1L, n / (64L * k))
     // an RDD persist, not a Dataset cache: adaptive execution would
-    // materialize a cached Dataset in a job of its own
+    // materialize a cached Dataset in a job of its own. Every partition
+    // sends a k·dim partial per round whatever its share of the sample,
+    // so the sample keeps at most one partition per core
     val train = base.where(pmod(col("vec_id"), lit(step)) === 0).select(col("embedding"))
-      .queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+      .queryExecution.toRdd.map(_.copy())
+      .coalesce(base.sparkSession.sparkContext.defaultParallelism)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     def unit(v: Array[Double]): Array[Double] = {
       var s = 0.0; var i = 0
       while (i < v.length) { s += v(i) * v(i); i += 1 }
@@ -149,7 +164,7 @@ object AnnIndex {
           }
         }
         Iterator((s, seen))
-      }.reduce { (a, b) =>
+      }.treeReduce { (a, b) =>
         a._1.indices.foreach(i => a._1(i) += b._1(i))
         a._2.indices.foreach(j => a._2(j) |= b._2(j))
         a
@@ -279,15 +294,15 @@ object AnnIndex {
    * Output: (q_vec, p_vec, rank) with rank ∈ 1..k.
    *
    * Path: one job counts the n vectors and collects the Q query rows.
-   * The index would have k = max(4, min(maxBuckets, ⌊√n⌋)) buckets, and
-   * assigning the vectors to them alone costs n·k centroid dots; scanning
-   * the vectors against the queries costs n·Q. So when Q ≤ k, topK skips
-   * the index (training, bucket stats, both probe rounds) and answers in
-   * ONE scan: every vector meets every query, which ride in the plan, and
+   * Scanning the vectors against the queries costs n·Q pair evaluations;
+   * the index costs a fixed amount per vector (training, assignment,
+   * bucket stats, both probe rounds). So when Q ≤ [[ScanMaxQueries]],
+   * the measured crossover, topK skips the index and answers in ONE scan:
+   * every vector meets every query, which ride in the plan, and
    * `topk_pairs` ranks them, with the probe's own metric expressions —
    * ties, nulls and duplicate ids come out as the IVF path's do. Members
-   * with a null embedding or a zero norm have no cosine and are never
-   * ranked. Otherwise the IVF index is trained and probed.
+   * and queries with a null embedding or a zero norm have no cosine and
+   * are never ranked. Otherwise the IVF index is trained and probed.
    *
    * CONTRACT: the query side is materialized on the driver (rows matching
    * `queryPred`, plus per-(query,bucket) bounds), so it must stay small —
@@ -297,34 +312,50 @@ object AnnIndex {
    */
   def topK(emb: DataFrame, queryPred: Column, k: Int, maxQueries: Int = 8192,
            maxBuckets: Int = 4096): DataFrame = {
-    GraftFunctions.install(emb.sparkSession)
-    val base = emb.select(col("vec_id"), col("embedding"))
-    val (n, queries, qType) = countAndQueries(base, queryPred, maxQueries)
-    if (queries.length <= bucketCount(n, maxBuckets)) scanTopK(base, queries, qType, k)
-    else ivfTopK(base, n, queryPred, k, maxQueries, maxBuckets)
+    val (base, n, qs) = prepare(emb, queryPred, maxQueries)
+    if (qs.rows.length <= ScanMaxQueries) scanTopK(base, qs, k)
+    else ivfTopK(base, n, qs, k, maxBuckets)
   }
 
-  /** [[topK]] through the IVF index whatever the query count; the tests
-    * and the VecFuzz tool keep the index path checked through it. */
+  /** [[topK]] through the one scan whatever the query count; the tests and
+    * tools check and time both paths through this and [[topKIvf]]. */
+  private[graft] def topKScan(emb: DataFrame, queryPred: Column, k: Int,
+                              maxQueries: Int = 8192): DataFrame = {
+    val (base, _, qs) = prepare(emb, queryPred, maxQueries)
+    scanTopK(base, qs, k)
+  }
+
+  /** [[topK]] through the IVF index whatever the query count. */
   private[graft] def topKIvf(emb: DataFrame, queryPred: Column, k: Int, maxQueries: Int = 8192,
                              maxBuckets: Int = 4096): DataFrame = {
-    GraftFunctions.install(emb.sparkSession)
-    val base = emb.select(col("vec_id"), col("embedding"))
-    ivfTopK(base, base.count(), queryPred, k, maxQueries, maxBuckets)
+    val (base, n, qs) = prepare(emb, queryPred, maxQueries)
+    ivfTopK(base, n, qs, k, maxBuckets)
   }
 
-  private def checkQueries(matched: Int, maxQueries: Int): Unit =
-    require(matched <= maxQueries,
-      s"AnnIndex.topK materializes the query side on the driver; queryPred " +
-        s"matches > $maxQueries rows. Shrink the query set, raise maxQueries " +
-        s"deliberately, or use cosineNearDup for set-vs-set workloads.")
+  /** Query rows collected on the driver, as (q_vec, q_emb, q_nrm) structs
+    * of type `t`. */
+  private case class Queries(rows: Array[InternalRow], t: StructType) {
+    /** The rows as columns q_vec, q_emb, q_nrm of a generator. */
+    def inlined: Column = inline(RowsLiteral(rows, t))
+  }
+
+  /** (vec_id, embedding) of `emb`, its row count and its query rows. */
+  private def prepare(emb: DataFrame, queryPred: Column,
+                      maxQueries: Int): (DataFrame, Long, Queries) = {
+    GraftFunctions.install(emb.sparkSession)
+    val base = emb.select(col("vec_id"), col("embedding"))
+    val (n, qs) = countAndQueries(base, queryPred, maxQueries)
+    (base, n, qs)
+  }
 
   /** One job over `base` (vec_id, embedding): its row count and the rows
-    * matching `queryPred`, as (q_vec, q_emb, q_nrm) structs. Each
-    * partition keeps at most maxQueries + 1 of them, so a too-wide
-    * queryPred fails without flooding the driver. */
+    * matching `queryPred`. Each partition keeps at most maxQueries + 1 of
+    * them, so a too-wide queryPred fails without flooding the driver. A
+    * query without an embedding or with a zero norm has no cosine with
+    * anything (0/0: null, or an error under ANSI mode), so it answers no
+    * rows and is dropped after the check. */
   private def countAndQueries(base: DataFrame, queryPred: Column,
-                              maxQueries: Int): (Long, Array[InternalRow], StructType) = {
+                              maxQueries: Int): (Long, Queries) = {
     val flagged = base.select(when(queryPred, struct(col("vec_id").as("q_vec"), col("embedding").as("q_emb"),
       call_function("vec_dot_q", col("embedding"), col("embedding")).as("q_nrm"))).as("q"))
     val cap = maxQueries.toLong + 1
@@ -339,20 +370,23 @@ object AnnIndex {
       Iterator((n, kept.result()))
     }.collect()
     val hits = parts.flatMap(_._2)
-    checkQueries(hits.length, maxQueries)
-    (parts.map(_._1).sum, hits, flagged.schema(0).dataType.asInstanceOf[StructType])
+    require(hits.length <= maxQueries,
+      s"AnnIndex.topK materializes the query side on the driver; queryPred " +
+        s"matches > $maxQueries rows. Shrink the query set, raise maxQueries " +
+        s"deliberately, or use cosineNearDup for set-vs-set workloads.")
+    (parts.map(_._1).sum, Queries(hits.filter(r => !r.isNullAt(2) && r.getLong(2) != 0),
+      flagged.schema(0).dataType.asInstanceOf[StructType]))
   }
 
-  /** The one-scan top-k of the collected `queries` against every member
-    * of `base`: each member row meets every query through an array
-    * literal, so the queries ride in the plan. */
-  private def scanTopK(base: DataFrame, queries: Array[InternalRow], qType: StructType,
-                       k: Int): DataFrame = {
+  /** The one-scan top-k of the collected queries against every member of
+    * `base`: each member row meets every query through an array literal,
+    * so the queries ride in the plan. */
+  private def scanTopK(base: DataFrame, qs: Queries, k: Int): DataFrame = {
     // a zero-norm member's cosine is 0/0: null without ANSI mode and so
     // never ranked, but an error under it — drop it before the division
     val members = base.withColumn("nrm", call_function("vec_dot_q", col("embedding"), col("embedding")))
       .where(col("nrm") =!= 0)
-    ranked(withCos(members.select(col("*"), inline(RowsLiteral(queries, qType)))), k)
+    ranked(withCos(members.select(col("*"), qs.inlined)), k)
   }
 
   /** The quantized cosine `cos` of each (query, member) row: q_emb, q_nrm
@@ -375,16 +409,15 @@ object AnnIndex {
       .select(col("q_vec"), posexplode(col("tk")))
       .select(col("q_vec"), col("col.i").as("p_vec"), (col("pos") + 1).cast("bigint").as("rank"))
 
-  private def ivfTopK(base: DataFrame, n: Long, queryPred: Column, k: Int, maxQueries: Int,
-                      maxBuckets: Int): DataFrame = {
+  private def ivfTopK(base: DataFrame, n: Long, qs: Queries, k: Int, maxBuckets: Int): DataFrame = {
     val cents = fit(base, n, maxBuckets, 3)
     val centBytes = packCentroids(cents)
 
     // assignment is the expensive per-row expression (√n centroid dots per
-    // vector) and the frame is read by the bucket stats, the query collect
-    // and both probe rounds — materialize it ONCE instead of re-assigning
-    // per scan (r6; the persisted-index path topKIndexed stores the
-    // assignment for the same reason)
+    // vector) and the frame is read by the bucket stats and both probe
+    // rounds — materialize it ONCE instead of re-assigning per scan (r6;
+    // the persisted-index path topKIndexed stores the assignment for the
+    // same reason)
     val assigned = base
       .withColumn("bucket", call_function("vec_ivf_assign", col("embedding"), lit(centBytes)))
       .withColumn("nrm", call_function("vec_dot_q", col("embedding"), col("embedding")))
@@ -402,43 +435,40 @@ object AnnIndex {
     val eps = quantEps(if (cents.isEmpty) 1 else cents(0).length,
       rows.map(_.getDouble(3)).foldLeft(Double.MaxValue)(math.min))
 
-    topKCore(assigned, cents, stats, queryPred, k, maxQueries, eps)
+    topKCore(assigned, cents, stats, qs, k, eps)
   }
 
-  /** Exact two-round probe over an already-assigned vector set — shared by
-    * the ad-hoc path (topK) and the persisted layout (topKIndexed). */
+  /** Exact two-round probe of the collected queries over an already-
+    * assigned vector set — shared by the ad-hoc path (topK) and the
+    * persisted layout (topKIndexed). */
   private def topKCore(assigned: DataFrame, cents: Array[Array[Double]],
-                       stats: Map[Int, (Long, Double)], queryPred: Column,
-                       k: Int, maxQueries: Int, eps: Double): DataFrame = {
+                       stats: Map[Int, (Long, Double)], qs: Queries,
+                       k: Int, eps: Double): DataFrame = {
     val spark = assigned.sparkSession
-
-    // query rows — the collect is bounded so a too-wide queryPred fails
-    // loudly instead of flooding the driver (contract enforcement)
-    val qRowsRaw = assigned.where(queryPred)
-      .select(col("vec_id"), col("embedding"), col("bucket"))
-      .limit(maxQueries + 1)
-      .collect()
-    checkQueries(qRowsRaw.length, maxQueries)
-    val qRows = qRowsRaw
-      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
-      .sortBy(_._1)
 
     // per-(query, bucket) upper bound on achievable cosine — the query
     // angle uses the NORMALIZED dot (queries, like members, are arbitrary-
     // norm vectors; centroids are unit)
-    def bounds(q: Array[Double]): Array[(Int, Double)] = {
+    def bounds(emb: ArrayData): Map[Int, Double] = {
+      val q = Array.tabulate(emb.numElements())(i => if (emb.isNullAt(i)) 0.0 else emb.getFloat(i).toDouble)
       var s = 0.0; var i0 = 0
       while (i0 < q.length) { s += q(i0) * q(i0); i0 += 1 }
       val qn = math.max(math.sqrt(s), 1e-300)
-      stats.toArray.map { case (j, (_, r)) =>
+      stats.map { case (j, (_, r)) =>
         var d = 0.0; var i = 0
         while (i < q.length) { d += q(i) * cents(j)(i); i += 1 }
         val theta = clampAcos(d / qn)
         j -> math.cos(math.max(0.0, theta - r))
-      }.sortBy(-_._2)
+      }
     }
 
-    val qBounds = qRows.map { case (id, q) => id -> bounds(q) }.toMap
+    // an id that holds several query vectors is one ranking group: a
+    // bucket's bound for it is the best bound of any of its vectors
+    val qBounds = qs.rows.groupBy(_.getLong(0)).map { case (id, rs) =>
+      id -> rs.map(r => bounds(r.getArray(1)))
+        .reduce((a, b) => a.map { case (j, x) => j -> math.max(x, b(j)) })
+        .toArray.sortBy(-_._2)
+    }
 
     // round 1: probe the best-bound prefix holding ≥ k+2 rows per query
     val round1 = qBounds.map { case (id, bs) =>
@@ -450,11 +480,10 @@ object AnnIndex {
       }.map(_._1).toSet
     }
 
+    val q = broadcast(spark.range(1).select(qs.inlined))
     def probeDf(pairs: Seq[(Long, Int)]): DataFrame = {
       import spark.implicits._
       val p = broadcast(pairs.toDF("q_vec", "bucket"))
-      val q = broadcast(assigned.where(queryPred)
-        .select(col("vec_id").as("q_vec"), col("embedding").as("q_emb"), col("nrm").as("q_nrm")))
       // literal bucket filter ahead of the join: over the persisted layout
       // (bucketed + stored `bucket` column) this prunes whole bucket FILES
       // at scan time; semantically redundant with the join itself. A
@@ -540,6 +569,8 @@ object AnnIndex {
     val stats = rows.map(r => r.getInt(0) -> ((r.getLong(1), clampAcos(r.getDouble(2))))).toMap
     val eps = quantEps(if (cents.isEmpty) 1 else cents(0).length,
       rows.map(_.getDouble(3)).foldLeft(Double.MaxValue)(math.min))
-    topKCore(spark.table(vecTable(tag)), cents, stats, queryPred, k, maxQueries, eps)
+    val vecs = spark.table(vecTable(tag))
+    val (_, qs) = countAndQueries(vecs.select(col("vec_id"), col("embedding")), queryPred, maxQueries)
+    topKCore(vecs, cents, stats, qs, k, eps)
   }
 }

@@ -26,7 +26,9 @@ class AnnSpec extends AnyFunSuite {
     val k = 5
     val pred = col("vec_id") % 20 === 0 // 25 queries
 
-    val got = AnnIndex.topK(e, pred, k)
+    // 25 queries would take topK's one-scan path: call the IVF entry so
+    // this case keeps testing the index and its probe plan
+    val got = AnnIndex.topKIvf(e, pred, k)
     val plan = got.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), "IVF probe must not be cartesian")
     assert(!plan.contains("BroadcastNestedLoop"), "IVF probe must be an equi-join")
@@ -74,8 +76,8 @@ class AnnSpec extends AnyFunSuite {
       .cache()
     val k = 4
     val pred = col("vec_id") % 20000 === 0 // 5 queries
-    // 5 queries ≤ 316 buckets would take topK's one-scan path: call the
-    // IVF entry so this case keeps testing the index at scale
+    // 5 queries would take topK's one-scan path: call the IVF entry so
+    // this case keeps testing the index at scale
     val got = AnnIndex.topKIvf(e, pred, k)
     assert(AnnIndex.fitCentroids(e).length > 256, "√n law must exceed the old 256 cap at 1e5 rows")
 
@@ -138,7 +140,9 @@ class AnnSpec extends AnyFunSuite {
       .select(col("q_vec"), col("p_vec"), col("rank"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
-    val got = AnnIndex.topK(e, pred, k)
+    // ~87 queries would take topK's one-scan path; the pruning bound under
+    // test is the IVF index's
+    val got = AnnIndex.topKIvf(e, pred, k)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == brute, s"diff: ${(got diff brute).take(4)} / ${(brute diff got).take(4)}")
     e.unpersist()
@@ -148,10 +152,13 @@ class AnnSpec extends AnyFunSuite {
     df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .groupBy(identity).map { case (t, v) => t -> v.size }
 
-  private def isScan(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.executedPlan.toString.contains("Generate inline")
+  /** The one scan joins nothing; the IVF probe joins buckets and queries. */
+  private def isScan(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan.toString
+    plan.contains("Generate inline") && !plan.contains("Join")
+  }
 
-  test("one-scan top-k equals the IVF path around the bucket count, with duplicate, null and zero-norm members") {
+  test("one-scan top-k equals the IVF path around the query threshold, with duplicate, null and zero-norm rows") {
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.install(spark)
     import spark.implicits._
@@ -159,8 +166,9 @@ class AnnSpec extends AnyFunSuite {
     def vec(i: Long): Seq[Float] = (0 until dim).map(j => (math.sin((i % 13 + 1) * (j + 1) * 0.9) +
       0.3 * math.cos(i * (j + 2) * 0.37)).toFloat)
     // 402 rows → ⌊√402⌋ = 20 buckets. Duplicate ids: 5 twice with one
-    // vector (a query), 300 twice with two. 350 has no embedding and 351
-    // is the zero vector; the session keeps its default ANSI setting.
+    // vector, 300 twice with two; both are queries. 350 has no embedding
+    // and 351 is the zero vector: members and queries, which answer no
+    // rows. The session keeps its default ANSI setting.
     val rows: Seq[(Long, Seq[Float])] = (0L until 400L).map {
       case 350L => (350L, null)
       case 351L => (351L, Seq.fill(dim)(0f))
@@ -168,28 +176,50 @@ class AnnSpec extends AnyFunSuite {
     } ++ Seq((5L, vec(5)), (300L, vec(7)))
     val e = rows.toDF("vec_id", "embedding").repartition(3).cache()
     val k = 6
-    for (t <- Seq(18, 19, 20)) { // Q = t + 1 query rows (id 5 twice): 19, 20, 21
-      val pred = col("vec_id") < t
+    val cut = AnnIndex.ScanMaxQueries
+    assert(cut - 2 <= 300) // the ids below t stay clear of 300, 350 and 351
+    // ids below t, 5 and 300 twice: Q = t + 3 = cut − 1, cut, cut + 1
+    for (t <- Seq(cut - 4, cut - 3, cut - 2)) {
+      val pred = col("vec_id") < t || col("vec_id").isin(300L, 350L, 351L)
       val got = AnnIndex.topK(e, pred, k)
-      assert(isScan(got) == (t + 1 <= 20), s"Q=${t + 1}: wrong path")
+      assert(isScan(got) == (t + 3 <= cut), s"Q=${t + 3}: wrong path")
       val want = rows3(AnnIndex.topKIvf(e, pred, k))
       val g = rows3(got)
-      assert(g == want, s"Q=${t + 1}: ${g.toSeq.diff(want.toSeq).take(4)} / ${want.toSeq.diff(g.toSeq).take(4)}")
-      assert(g.keySet.map(_._1) == (0L until t.toLong).toSet)
+      assert(g == want, s"Q=${t + 3}: ${g.toSeq.diff(want.toSeq).take(4)} / ${want.toSeq.diff(g.toSeq).take(4)}")
+      assert(g.keySet.map(_._1) == (0L until t.toLong).toSet + 300L)
       assert(!g.keySet.exists(r => r._2 == 350L || r._2 == 351L))
     }
     e.unpersist()
   }
 
-  /** n 8-dim vectors in 4 partitions, with no shuffle upstream. */
-  private def synth(n: Long): org.apache.spark.sql.DataFrame =
-    spark.range(0, n, 1, 4).toDF("vec_id")
+  test("an id with two query vectors far apart: the IVF probe covers the buckets of both") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    import spark.implicits._
+    // 8 tight groups of 50 along the axes (20 buckets); id 1000 holds a
+    // copy of member 0 (axis 0) and of member 50 (axis 1). Its top 2 are
+    // members 0 and 50, both at cosine 1 — one from each group, so bounds
+    // taken from either vector alone prune the other's group away
+    def vec(i: Long): Seq[Float] = (0 until 8).map(j =>
+      (if (j == i / 50) 1.0 else 0.1 * math.sin(i * (j + 1) * 0.77)).toFloat)
+    val rows = (0L until 400L).map(i => (i, vec(i))) ++ Seq((1000L, vec(0)), (1000L, vec(50)))
+    val e = rows.toDF("vec_id", "embedding").repartition(3).cache()
+    val pred = col("vec_id") === 1000L
+    val want = Map((1000L, 0L, 1L) -> 1, (1000L, 50L, 2L) -> 1)
+    assert(rows3(AnnIndex.topKScan(e, pred, k = 2)) == want)
+    assert(rows3(AnnIndex.topKIvf(e, pred, k = 2)) == want)
+    e.unpersist()
+  }
+
+  /** n 8-dim vectors in `parts` partitions, with no shuffle upstream. */
+  private def synth(n: Long, parts: Int = 4): org.apache.spark.sql.DataFrame =
+    spark.range(0, n, 1, parts).toDF("vec_id")
       .withColumn("embedding", array((0 until 8).map(j =>
         (sin(col("vec_id") * (j + 1) * 0.7 + j) * 0.5).cast("float")): _*))
 
   test("the one-scan path enforces maxQueries with the same message") {
     GraftFunctions.install(spark)
-    val e = synth(500) // 22 buckets
+    val e = synth(500)
     val pred = col("vec_id") < 8 // 8 queries
     val err = intercept[IllegalArgumentException] {
       AnnIndex.topK(e, pred, k = 3, maxQueries = 7)
@@ -216,18 +246,22 @@ class AnnSpec extends AnyFunSuite {
   test("the one-scan top-k runs at most 4 Spark jobs") {
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.install(spark)
-    val e = synth(500) // 22 buckets
+    val e = synth(500)
     AnnIndex.topK(e, col("vec_id") < 10, k = 3).collect() // warm
     var got: org.apache.spark.sql.DataFrame = null
     val jobs = jobStages { got = AnnIndex.topK(e, col("vec_id") < 10, k = 3); got.collect() }
-    assert(isScan(got)) // 10 queries ≤ 22 buckets
+    assert(isScan(got)) // 10 queries
     assert(jobs.size <= 4, s"${jobs.size} jobs")
   }
 
   test("fitCentroids runs one single-stage job per Lloyd round") {
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.install(spark)
-    val e = synth(2000) // no shuffle upstream, so a single-stage job lists one stage
+    // no shuffle upstream, so a single-stage job lists one stage. The
+    // training sample keeps one partition per core (4), whatever the input
+    // has: 40 partitions would each send the driver a k·dim partial, and
+    // treeReduce would merge them in a second stage
+    val e = synth(2000, parts = 40)
     for (i <- Seq(1, 3)) {
       var cents: Array[Array[Double]] = null
       val jobs = jobStages { cents = AnnIndex.fitCentroids(e, iters = i) }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.expressions.Window
  * Idle-capacity differential fuzz for the vector surface (the DeepFuzz
  * counterpart for §2.6 similarity search): random (n, dim, m, kCodes,
  * kCoarse, distribution, k, query-set) configurations of Pq.topK,
- * Pq.topKSketched, Pq.topKIvfPq, AnnIndex.topK and its IVF entry
- * AnnIndex.topKIvf, each checked for SET
+ * Pq.topKSketched, Pq.topKIvfPq and AnnIndex.topK's two paths
+ * (AnnIndex.topKScan, AnnIndex.topKIvf), each checked for SET
  * EQUALITY against the brute-force ranking in the same metric. Exits 1
  * with the failing config on any divergence. Not part of `sbt test`.
  *
@@ -93,10 +93,10 @@ object VecFuzz {
         .withColumn("rank", row_number().over(wc).cast("bigint"))
         .where(col("rank") <= k)
         .select(col("q_vec"), col("p_vec"), col("rank")))
-      // topK takes its one-scan path when the query count is at most the
-      // bucket count; the IVF entry is checked on the same config
-      val d = s3(AnnIndex.topK(e, pred, k))
-      if (d != bruteCos) fail("AnnIndex.topK", d, bruteCos)
+      // topK runs one of its two paths by the query count; both entries
+      // are checked on every config
+      val d = s3(AnnIndex.topKScan(e, pred, k))
+      if (d != bruteCos) fail("AnnIndex.topKScan", d, bruteCos)
       val d2 = s3(AnnIndex.topKIvf(e, pred, k))
       if (d2 != bruteCos) fail("AnnIndex.topKIvf", d2, bruteCos)
 
