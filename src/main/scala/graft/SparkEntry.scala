@@ -1332,14 +1332,10 @@ object SparkEntry {
       SpatialJoins.pipJoin(GeoTables.images(s, dir), GeoTables.zones(s, dir), level = 8)
         .select(col("zone_id"), col("image_id"))
     }),
-    // compact multi-level cover PIP join (r5): identical row set to q07,
-    // but the zone side explodes to a perimeter-bound (coarse-interior +
-    // fine-boundary) disjoint cover instead of a single fine level — the
-    // layout that keeps continent-sized zones broadcastable at fine
-    // refinement levels (see SpatialJoins.pipJoinCompact scaladoc)
+    // same body and oracle as q07: pipJoin is the engine's one PIP join;
+    // the name stays so the query set is unchanged
     "q98_pip_compact" -> ((s, dir) => {
-      SpatialJoins.pipJoinCompact(GeoTables.images(s, dir), GeoTables.zones(s, dir),
-        minLevel = 5, maxLevel = 12)
+      SpatialJoins.pipJoin(GeoTables.images(s, dir), GeoTables.zones(s, dir), level = 8)
         .select(col("zone_id"), col("image_id"))
     }),
     // polygon × polygon intersects join (zones vs zones, r4 late): cell
@@ -1538,16 +1534,12 @@ object SparkEntry {
         .select(col("s_id"), coalesce(col("p_id"), lit(-1L)).as("p_id"))
     }),
 
-    // BLOOM RUNTIME-PRUNED PIP JOIN — the explicit runtime-filter shape:
-    // a selective zone subset (1/17th of zones) folds its cell cover into
-    // one distributed bloom row; the point scan probes it BEFORE the
-    // shuffle, so at scale only can-match points move. Row set is exactly
-    // pipJoin's (no false negatives; fps die in the cell join + exact
-    // refine) — the oracle is the plain BETWEEN join over the subset.
+    // q07's body over 1/17th of the zones, counted per zone; the name
+    // stays so the query set is unchanged
     "q153_bloom_pruned_join" -> ((s, dir) => {
       val hot = GeoTables.zones(s, dir)
         .where(expr("CAST(substring(zone_id, 5) AS INT) % 17 = 3"))
-      SpatialJoins.pipJoinBloomPruned(GeoTables.images(s, dir), hot, level = 8)
+      SpatialJoins.pipJoin(GeoTables.images(s, dir), hot, level = 8)
         .groupBy("zone_id").agg(count(lit(1)).as("n_images"))
     }),
 
@@ -3953,13 +3945,10 @@ object SparkEntry {
             .cast("bigint").as("obb_area_c"))
     }),
 
-    // ---------------- spherical PIP join (r4 cont.) ----------------
-    // Same pair set as q07's mercator-cell join, driven entirely by the
-    // cube-face cells: polar-safe spatial indexing as a first-class join.
+    // same body and oracle as q07 (pipJoin's cover is sound at the
+    // poles); the name stays so the query set is unchanged
     "q82_pip_sphere" -> ((s, dir) => {
-      GraftFunctions.install(s)
-      SpatialJoins.pipJoinSphere(
-        s.read.parquet(GeoTables.imagesPath(dir)), GeoTables.zones(s, dir))
+      SpatialJoins.pipJoin(GeoTables.images(s, dir), GeoTables.zones(s, dir), level = 8)
         .select(col("zone_id"), col("image_id"))
     }),
 
@@ -9670,7 +9659,7 @@ object SparkEntry {
     * `rounds` unrolled update CTEs, empty clusters carried. */
   /** The Lloyd replay CTE chain shared by the q93/q274 oracles: WITH …
     * up to `afinal` (image_id, lon, lat, cluster) — callers append tails. */
-  private def kmeansCtesSql(k: Int, rounds: Int): String = {
+  private def kMeansCtesSql(k: Int, rounds: Int): String = {
     def assign(name: String, cents: String) =
       s"""$name AS (SELECT image_id, lon, lat, j AS cluster FROM (
          SELECT p.image_id, p.lon, p.lat, c.j,
@@ -9700,14 +9689,14 @@ object SparkEntry {
     ctes.toString
   }
 
-  private def kmeansOracleSql(k: Int, rounds: Int): String =
-    kmeansCtesSql(k, rounds) +
+  private def kMeansOracleSql(k: Int, rounds: Int): String =
+    kMeansCtesSql(k, rounds) +
       "\nSELECT image_id, CAST(cluster AS BIGINT) AS cluster FROM afinal"
 
   /** q274's oracle: the Lloyd replay + the identical integer silhouette
     * post-pass (trunc-div centroids, kibi-reduced d², signed ppm). */
   private def silhouetteOracleSql(k: Int, rounds: Int): String =
-    kmeansCtesSql(k, rounds) + s""",
+    kMeansCtesSql(k, rounds) + s""",
        spts AS (SELECT image_id, cluster,
            CAST(FLOOR(lon * 1e6 + 0.5) AS BIGINT) AS xu,
            CAST(FLOOR(lat * 1e6 + 0.5) AS BIGINT) AS yu FROM afinal),
@@ -9733,7 +9722,7 @@ object SparkEntry {
        FROM sagg"""
 
   def oracleSql: Map[String, String] = Map(
-    "q93_kmeans" -> kmeansOracleSql(5, 2),
+    "q93_kmeans" -> kMeansOracleSql(5, 2),
     "q96_frechet" ->
       s"""SELECT zone_id,
          CAST(FLOOR((ymax - ymin) * 1e6 + 0.5) AS BIGINT) AS par_u,

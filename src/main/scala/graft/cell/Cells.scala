@@ -172,7 +172,9 @@ object Cells {
    *  - the cell centre inside (`pointInPolygonal == 1`) ⇒ in;
    *  - otherwise, no edge meets the cell grown by `tol` ⇒ out;
    *  - otherwise the relate decides.
-   * Other geometry types run the relate for every cell.
+   * Other geometry types run the relate for every cell. Since cellId
+   * clamps latitudes past ±MAX_LAT into the grid's top and bottom rows,
+   * those rows are tested as reaching out to the envelope's edge there.
    */
   def cover(g: Geometry, level: Int, maxCells: Int = 1 << 20): Array[Long] = {
     val env = g.envelope
@@ -201,7 +203,7 @@ object Cells {
       case m: graft.geom.MultiPolygon => m.polys
       case _ => null
     }
-    val decided = if (isRect || polys == null) null else coverDecide(polys, x0, x1, y0, y1, level)
+    val decided = if (isRect || polys == null) null else coverDecide(polys, env, x0, x1, y0, y1, level)
     val nx = (x1 - x0 + 1).toInt
     val out = new ArrayBuffer[Long]()
     var ty = y0
@@ -211,12 +213,21 @@ object Cells {
         val cell = morton(tx, ty)
         val d = if (decided == null) Undecided else decided((ty - y0).toInt * nx + (tx - x0).toInt)
         if (isRect || d == In ||
-            d == Undecided && Pred.intersects(cellEnvelope(cell, level).toPolygon, g)) out += cell
+            d == Undecided && Pred.intersects(coverCellEnvelope(cell, level, env).toPolygon, g)) out += cell
         tx += 1
       }
       ty += 1
     }
     out.toArray
+  }
+
+  /** [[cellEnvelope]] as [[cover]] tests it: the grid's top and bottom
+    * rows reach out to `env` where it lies past ±MAX_LAT. */
+  private def coverCellEnvelope(cell: Long, level: Int, env: Env): Env = {
+    val e = cellEnvelope(cell, level)
+    val ty = mortonY(cell)
+    Env(e.xmin, if (ty == (1L << level) - 1) math.min(e.ymin, env.ymin) else e.ymin,
+      e.xmax, if (ty == 0) math.max(e.ymax, env.ymax) else e.ymax)
   }
 
   private final val Undecided: Byte = 0
@@ -227,18 +238,20 @@ object Cells {
   private final val CoverTol = 1e-9
 
   /**
-   * The cells of the tile range [x0, x1] × [y0, y1] whose cover answer is
-   * certain without the relate (see [[cover]]), row-major: In, Out or
-   * Undecided. Null when a coordinate is not finite.
+   * The cells of the tile range [x0, x1] × [y0, y1] of envelope `env`
+   * whose cover answer is certain without the relate (see [[cover]]),
+   * row-major: In, Out or Undecided. Null when a coordinate is not finite.
    */
-  private def coverDecide(polys: Array[Array[Array[Double]]], x0: Long, x1: Long,
+  private def coverDecide(polys: Array[Array[Array[Double]]], env: Env, x0: Long, x1: Long,
                           y0: Long, y1: Long, level: Int): Array[Byte] = {
     val nx = (x1 - x0 + 1).toInt; val ny = (y1 - y0 + 1).toInt
     val n = (1L << level).toDouble
-    // cell edges, the same expressions as cellEnvelope: column i spans
+    // cell edges, the same expressions as coverCellEnvelope: column i spans
     // [xs(i), xs(i+1)], row j spans [ys(j+1), ys(j)] (ys descends)
     val xs = Array.tabulate(nx + 1)(i => tileXToLon((x0 + i) / n))
     val ys = Array.tabulate(ny + 1)(j => tileYToLat((y0 + j) / n))
+    if (y0 == 0) ys(0) = math.max(ys(0), env.ymax)
+    if (y1 == (1L << level) - 1) ys(ny) = math.min(ys(ny), env.ymin)
     var scale = math.max(math.max(math.abs(xs(0)), math.abs(xs(nx))),
       math.max(math.abs(ys(0)), math.abs(ys(ny))))
     for (rs <- polys; r <- rs; v <- r) {

@@ -1,7 +1,7 @@
 package graft.join
 
 import graft.sql.{GraftFunctions, K}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -182,45 +182,39 @@ object AnnIndex {
     cents
   }
 
-  /** Deterministic spherical k-means (argmax-dot assignment, renormalized
-    * means, fixed iteration order — no RNG). Driver-side variant kept for
-    * small in-memory samples and tests. */
-  def kmeans(sample: Array[Array[Double]], k: Int, iters: Int = 5): Array[Array[Double]] = {
-    require(sample.length >= k, s"sample ${sample.length} < k $k")
-    val dim = sample(0).length
-    var cents = Array.tabulate(k)(i => sample(i * (sample.length / k)).clone())
-    (0 until iters).foreach { _ =>
-      val sums = Array.fill(k)(new Array[Double](dim))
-      val counts = new Array[Int](k)
-      sample.foreach { x =>
-        var best = 0; var bestDot = Double.NegativeInfinity
-        var j = 0
-        while (j < k) {
-          var d = 0.0; var i = 0
-          while (i < dim) { d += x(i) * cents(j)(i); i += 1 }
-          if (d > bestDot) { bestDot = d; best = j }
-          j += 1
-        }
-        var i = 0
-        while (i < dim) { sums(best)(i) += x(i); i += 1 }
-        counts(best) += 1
-      }
-      cents = Array.tabulate(k) { j =>
-        if (counts(j) == 0) cents(j)
-        else {
-          val s = sums(j)
-          var nrm = 0.0; var i = 0
-          while (i < dim) { nrm += s(i) * s(i); i += 1 }
-          nrm = math.sqrt(nrm)
-          if (nrm == 0) cents(j) else s.map(_ / nrm)
-        }
-      }
-    }
-    cents
-  }
-
   @inline private def clampAcos(d: Double): Double =
     math.acos(math.max(-1.0, math.min(1.0, d)))
+
+  /** `base` (vec_id, embedding) with each member's IVF `bucket` and its
+    * quantized squared norm `nrm`. */
+  private def assign(base: DataFrame, centBytes: Array[Byte]): DataFrame = base
+    .withColumn("bucket", call_function("vec_ivf_assign", col("embedding"), lit(centBytes)))
+    .withColumn("nrm", call_function("vec_dot_q", col("embedding"), col("embedding")))
+
+  /**
+   * Per-bucket stats (bucket, cnt, mincos_n, minnrm) of an assigned vector
+   * set: member count, angular radius as the min full-precision COSINE to
+   * the (unit) centroid, and min norm, which feeds the quantization slack.
+   * `vec_ivf_cos` normalizes by ‖x‖; the raw dot is NOT a cosine for
+   * unnormalized embeddings and clamps to radius 0 (vecfuzz r5 s11).
+   * Members with a null embedding (so a null bucket) or a zero norm have
+   * no cosine and are never ranked, so they count in no bucket.
+   */
+  private def bucketStats(assigned: DataFrame, centBytes: Array[Byte]): DataFrame =
+    assigned.where(col("nrm") =!= 0).groupBy("bucket")
+      .agg(count(lit(1)).as("cnt"),
+        min(call_function("vec_ivf_cos", col("embedding"), lit(centBytes), col("bucket"))).as("mincos_n"),
+        min(call_function("vec_norm", col("embedding"))).as("minnrm"))
+
+  /** Collected [[bucketStats]] rows as bucket → (count, angular radius),
+    * and the bound slack over their min norm. */
+  private def readStats(rows: Array[Row],
+                        cents: Array[Array[Double]]): (Map[Int, (Long, Double)], Double) = {
+    val stats = rows.map(r => r.getInt(0) -> ((r.getLong(1), clampAcos(r.getDouble(2))))).toMap
+    val eps = quantEps(if (cents.isEmpty) 1 else cents(0).length,
+      rows.map(_.getDouble(3)).foldLeft(Double.MaxValue)(math.min))
+    (stats, eps)
+  }
 
   /**
    * EXACT embedding-cosine near-duplicate pairs (cos ≥ tau, quantized
@@ -230,7 +224,8 @@ object AnnIndex {
    * the broadcast bucket-pair list. On CLUSTERED embeddings this prunes
    * most pairs; on uniformly random vectors (the synthetic fixture) radii
    * approach 90° and no exact algorithm can prune, so the join degenerates
-   * to all-pairs — a data property, not a plan defect.
+   * to all-pairs — a data property, not a plan defect. Members with a
+   * null embedding or a zero norm have no cosine and pair with nothing.
    * Output: (a_vec, b_vec, cos) with a_vec < b_vec.
    */
   def cosineNearDup(emb: DataFrame, tau: Double, maxBuckets: Int = 4096): DataFrame = {
@@ -242,21 +237,11 @@ object AnnIndex {
     val cents = fitCentroids(base, maxBuckets)
     val centBytes = packCentroids(cents)
 
-    val assigned = base
-      .withColumn("bucket", call_function("vec_ivf_assign", col("embedding"), lit(centBytes)))
-      .withColumn("nrm", call_function("vec_dot_q", col("embedding"), col("embedding")))
-
-    // radius = max member ANGLE to the (unit) centroid — computed from the
-    // full-precision COSINE (vec_ivf_cos normalizes by ‖x‖; the raw dot is
-    // NOT a cosine for unnormalized embeddings and clamps to radius 0 —
-    // vecfuzz r5 s11). minnrm feeds the norm-aware quantization slack.
-    val radStats = assigned.groupBy("bucket")
-      .agg(min(call_function("vec_ivf_cos", col("embedding"), lit(centBytes), col("bucket"))).as("mincos_n"),
-        min(call_function("vec_norm", col("embedding"))).as("minnrm"))
-      .collect().map(r => r.getInt(0) -> ((clampAcos(r.getDouble(1)), r.getDouble(2)))).toMap
-    val radii = radStats.map { case (b, (r, _)) => b -> r }
-    val eps = quantEps(if (cents.isEmpty) 1 else cents(0).length,
-      radStats.values.map(_._2).foldLeft(Double.MaxValue)(math.min))
+    // a member with a null embedding or a zero norm has no cosine (0/0:
+    // null, or an error under ANSI mode) — drop it before the division
+    val assigned = assign(base, centBytes).where(col("nrm") =!= 0)
+    val (stats, eps) = readStats(bucketStats(assigned, centBytes).collect(), cents)
+    val radii = stats.map { case (b, (_, r)) => b -> r }
 
     // bucket pairs whose angular bound clears tau (both orientations so the
     // a<b id filter never drops a cross-bucket pair)
@@ -418,23 +403,8 @@ object AnnIndex {
     // rounds — materialize it ONCE instead of re-assigning per scan (r6;
     // the persisted-index path topKIndexed stores the assignment for the
     // same reason)
-    val assigned = base
-      .withColumn("bucket", call_function("vec_ivf_assign", col("embedding"), lit(centBytes)))
-      .withColumn("nrm", call_function("vec_dot_q", col("embedding"), col("embedding")))
-      .localCheckpoint()
-
-    // bucket stats: row count + angular radius (min full-precision COSINE
-    // to own centroid — see cosineNearDup's note) + min norm for the slack
-    val rows = assigned.groupBy("bucket")
-      .agg(count(lit(1)).as("cnt"),
-        min(call_function("vec_ivf_cos", col("embedding"), lit(centBytes), col("bucket"))).as("mincos_n"),
-        min(call_function("vec_norm", col("embedding"))).as("minnrm"))
-      .where(col("bucket").isNotNull) // members without an embedding are never ranked
-      .collect()
-    val stats = rows.map(r => r.getInt(0) -> ((r.getLong(1), clampAcos(r.getDouble(2))))).toMap
-    val eps = quantEps(if (cents.isEmpty) 1 else cents(0).length,
-      rows.map(_.getDouble(3)).foldLeft(Double.MaxValue)(math.min))
-
+    val assigned = assign(base, centBytes).localCheckpoint()
+    val (stats, eps) = readStats(bucketStats(assigned, centBytes).collect(), cents)
     topKCore(assigned, cents, stats, qs, k, eps)
   }
 
@@ -537,17 +507,11 @@ object AnnIndex {
     val base = emb.select(col("vec_id"), col("embedding"))
     val cents = fitCentroids(base, maxBuckets)
     val centBytes = packCentroids(cents)
-    val assigned = base
-      .withColumn("bucket", call_function("vec_ivf_assign", col("embedding"), lit(centBytes)))
-      .withColumn("nrm", call_function("vec_dot_q", col("embedding"), col("embedding")))
-    Bucketed.writeBucketed(assigned, vecTable(tag), s"$dir/vectors", "bucket", buckets)
+    Bucketed.writeBucketed(assign(base, centBytes), vecTable(tag), s"$dir/vectors", "bucket", buckets)
     // mincos_n (NORMALIZED cosine radius) + minnrm: the column names are
     // the format version — a stale raw-dot stats file fails the reader's
     // schema check loudly instead of silently loosening/tightening bounds
-    spark.table(vecTable(tag)).groupBy("bucket")
-      .agg(count(lit(1)).as("cnt"),
-        min(call_function("vec_ivf_cos", col("embedding"), lit(centBytes), col("bucket"))).as("mincos_n"),
-        min(call_function("vec_norm", col("embedding"))).as("minnrm"))
+    bucketStats(spark.table(vecTable(tag)), centBytes)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/stats.parquet")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
@@ -565,10 +529,7 @@ object AnnIndex {
     require(statsDf.columns.contains("mincos_n") && statsDf.columns.contains("minnrm"),
       s"$dir/stats.parquet is a pre-normalization index layout (raw-dot radii) — " +
         "rebuild it with AnnIndex.writeIndex")
-    val rows = statsDf.select("bucket", "cnt", "mincos_n", "minnrm").collect()
-    val stats = rows.map(r => r.getInt(0) -> ((r.getLong(1), clampAcos(r.getDouble(2))))).toMap
-    val eps = quantEps(if (cents.isEmpty) 1 else cents(0).length,
-      rows.map(_.getDouble(3)).foldLeft(Double.MaxValue)(math.min))
+    val (stats, eps) = readStats(statsDf.select("bucket", "cnt", "mincos_n", "minnrm").collect(), cents)
     val vecs = spark.table(vecTable(tag))
     val (_, qs) = countAndQueries(vecs.select(col("vec_id"), col("embedding")), queryPred, maxQueries)
     topKCore(vecs, cents, stats, qs, k, eps)

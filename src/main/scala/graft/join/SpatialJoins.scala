@@ -29,7 +29,8 @@ import org.apache.spark.sql.expressions.Window
  * points in plain DataFrame ops; Catalyst/AQE pick the join and split
  * skew. That pass ([[pipPass]]) is the engine's only broadcast
  * point-in-polygon probe; `Streams.spatialEnrich` uses it too. The other
- * cover joins here keep the exploded-cover shape and broadcast the cover
+ * point cover joins here ([[dwithinJoin]], [[nearestSnapJoin]],
+ * [[geoRadiusJoin]]) keep the exploded-cover shape and broadcast the cover
  * itself when the dim side has at most [[CoverBroadcastMax]] rows.
  */
 object SpatialJoins {
@@ -51,8 +52,8 @@ object SpatialJoins {
     else dims.limit(math.min(broadcastMax, Int.MaxValue - 1L).toInt + 1)
       .count() <= broadcastMax
 
-  /** Most dim rows the exploded-cover joins (compact, dwithin, snap,
-    * radius, sphere) broadcast; a larger side takes the shuffled join. */
+  /** Most dim rows the exploded-cover joins (dwithin, snap, radius)
+    * broadcast; a larger side takes the shuffled join. */
   private val CoverBroadcastMax: Long = 100000
 
   /**
@@ -108,80 +109,6 @@ object SpatialJoins {
     val bz = images.sparkSession.sparkContext.broadcast(PipZones(level,
       rows.map(_._1), rows.map(_._2), rows.map(_._3), rows.map(_._4)))
     PipPass.frame(images, bz, zt.schema(0), zt.schema(1))
-  }
-
-  /**
-   * PIP join over a COMPACT multi-level cover (r5; S2-style interior
-   * compaction, Cells.compactCover). Same one-scan shape as [[pipJoin]],
-   * but the zone side explodes to O(perimeter/cellSize(maxLevel) +
-   * area/cellArea(minLevel)) rows instead of O(area/cellArea(level)) —
-   * at the fine levels big zones want, that is the difference between a
-   * broadcastable cover and an area-bound shuffle (a continent at level
-   * 14 is ~10^6 single-level cells but ~10^3 compact ones). The point
-   * side pays one st_cellid at maxLevel plus an explode over its
-   * (maxLevel-minLevel+1)-entry ancestor chain; because the compact
-   * cover cells are DISJOINT (quadtree node emitted XOR recursed), each
-   * point meets each zone's cover in at most one cell — exact bag
-   * multiplicity with no dedup step.
-   */
-  def pipJoinCompact(images: DataFrame, zones: DataFrame,
-                     minLevel: Int = 6, maxLevel: Int = 12): DataFrame = {
-    val spark = images.sparkSession
-    GraftFunctions.install(spark)
-    val pts = images.withColumn("pk", explode(call_function("st_cell_ancestors",
-      call_function("st_cellid", col("lon"), col("lat"), lit(maxLevel)),
-      lit(maxLevel), lit(minLevel))))
-    val coverRaw = zones
-      .withColumn("zone_geom", call_function("st_geomfromwkt", col("wkt")))
-      .withColumn("pk", explode(call_function("st_cover_compact",
-        col("zone_geom"), lit(minLevel), lit(maxLevel))))
-      .select(col("zone_id"), col("zone_geom"), col("pk"))
-    val cover = if (fewDims(zones, CoverBroadcastMax)) broadcast(coverRaw) else coverRaw
-    pts.join(cover, "pk")
-      .where(call_function("st_intersects_xy", col("zone_geom"), col("lon"), col("lat")))
-  }
-
-  /**
-   * PIP join with BLOOM runtime pruning of the point scan (the explicit
-   * form of Spark's runtime row-level filtering, composable with any
-   * graft join). The at-scale scenario is the NON-broadcastable zone
-   * side: the cover join must shuffle every point, so a selective zone
-   * subset still pays a full-corpus shuffle. Here the cover's cell set
-   * is folded DISTRIBUTED into one bloom bit-array row (bloom_agg —
-   * partials OR together, nothing collects to the driver), broadcast to
-   * the point scan, and bloom_contains drops non-candidate points
-   * BEFORE the shuffle — the fact side shuffles only what can match.
-   * Correctness never depends on the filter (no false negatives; false
-   * positives fall to the exact cell equi-join + st_intersects_xy
-   * refine), so the row set is bit-identical to [[pipJoin]].
-   */
-  def pipJoinBloomPruned(images: DataFrame, zones: DataFrame, level: Int = 8,
-                         nbits: Int = 1 << 20, nhashes: Int = 7): DataFrame = {
-    val spark = images.sparkSession
-    GraftFunctions.install(spark)
-    // materialized once: read by the distributed bloom build AND the
-    // shuffle-join side (review: two plan branches would re-parse every
-    // zone's WKT and re-explode its cover)
-    val cover = zoneCover(zones, level)
-      .select(col("zone_id"), col("zone_geom"), col("cell"))
-      .localCheckpoint()
-    // The bit array is BUILT distributed (partials OR together); only the
-    // finished nbits/8-byte result crosses to the driver — Spark's own
-    // runtime-filter shape. It is then inlined as a CONSTANT into the
-    // scan filter: joining the one-row DataFrame instead would make the
-    // codegen'd filter re-copy the full bit array out of the joined row
-    // for EVERY fact row (review: ~128 KB × rows of pure arraycopy).
-    val bloomBits = cover.agg(
-      call_function("bloom_agg", col("cell"), lit(nbits), lit(nhashes)).as("bl"))
-      .head().getAs[Array[Byte]](0)
-    val pts = images
-      .withColumn("cell", call_function("st_cellid", col("lon"), col("lat"), lit(level)))
-      .where(call_function("bloom_contains", lit(bloomBits), col("cell"), lit(nhashes)))
-    // deliberately NO broadcast of the cover: this is the shuffle-join
-    // path the bloom prune exists for (small-zone cases should call
-    // pipJoin, which dispatches to broadcast on its own)
-    pts.join(cover, "cell")
-      .where(call_function("st_intersects_xy", col("zone_geom"), col("lon"), col("lat")))
   }
 
   /**
@@ -646,30 +573,6 @@ object SpatialJoins {
       .localCheckpoint(true)
     Seq(pts, cells, cand).foreach(_.unpersist())
     result
-  }
-
-  /**
-   * Spherical PIP join — the polar-safe variant of [[pipJoin]]: points key
-   * by `st_cellid_sphere`, zones explode their RIGOROUS spherical cover
-   * (`Cells.coverSphere` closed-form face bounds — sound at the poles and
-   * across the antimeridian where the mercator grid clamps or wraps), same
-   * broadcast dispatch, same exact refine. Result set is IDENTICAL to
-   * pipJoin (the index never decides membership, only candidates) — the
-   * q82 oracle states exactly that.
-   */
-  def pipJoinSphere(images: DataFrame, zones: DataFrame, level: Int = 7): DataFrame = {
-    val spark = images.sparkSession
-    GraftFunctions.install(spark)
-    val pts = images.withColumn("cell",
-      call_function("st_cellid_sphere", col("lon"), col("lat"), lit(level)))
-    val coverRaw = zones
-      .withColumn("cell", explode(call_function("st_cover_sphere",
-        col("xmin"), col("ymin"), col("xmax"), col("ymax"), lit(level))))
-      .select(col("zone_id"), col("xmin"), col("ymin"), col("xmax"), col("ymax"), col("cell"))
-    val cover = if (fewDims(zones, CoverBroadcastMax)) broadcast(coverRaw) else coverRaw
-    pts.join(cover, "cell")
-      .where(col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
-             col("lat") >= col("ymin") && col("lat") <= col("ymax"))
   }
 
   /**

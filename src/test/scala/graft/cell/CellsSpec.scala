@@ -1,6 +1,6 @@
 package graft.cell
 
-import graft.geom.Env
+import graft.geom.{Env, Wkt}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cell scheme properties (SURVEY.md §5.2 item 3) over deterministic samples. */
@@ -58,6 +58,24 @@ class CellsSpec extends AnyFunSuite {
         assert(cover.contains(Cells.cellId(px, py, lvl)), s"probe ($px,$py) @$lvl rect=$rect")
       }
     }
+    // polar triangles, north and south, wholly past ±MAX_LAT: cellId
+    // clamps their points into the grid's edge rows, which the cover must
+    // hold (not a rectangle, so the per-cell tests decide)
+    val r = new scala.util.Random(85)
+    (0 until 100).foreach { i =>
+      val s = if (i % 2 == 0) 1.0 else -1.0
+      val x0 = -179.0 + 350.0 * r.nextDouble(); val w = 0.5 + 8 * r.nextDouble()
+      val y0 = s * (85.2 + 2 * r.nextDouble()); val y1 = s * (87.5 + 2.4 * r.nextDouble())
+      val tri = Wkt.read(s"POLYGON (($x0 $y0, ${x0 + w} $y0, ${x0 + w / 2} $y1, $x0 $y0))")
+      val lvl = 2 + r.nextInt(10)
+      val cover = Cells.cover(tri, lvl).toSet
+      Seq((x0 + w / 2, (2 * y0 + y1) / 3), (x0 + w / 2, y0 + (y1 - y0) * 0.9),
+          (x0 + w * 0.3, y0 + (y1 - y0) * 0.1)).foreach { case (px, py) =>
+        assert(cover.contains(Cells.cellId(px, py, lvl)), s"probe ($px,$py) @$lvl tri=$tri")
+      }
+    }
+    assert(Cells.cover(Wkt.read("POLYGON ((0 86, 20 86, 10 89, 0 86))"), 8)
+      .contains(Cells.cellId(10, 87, 8)))
   }
 
   test("known golden vectors") {

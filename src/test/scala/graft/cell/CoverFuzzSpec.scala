@@ -10,7 +10,9 @@ class CoverFuzzSpec extends AnyFunSuite {
 
   /** The reference: the tile range of the envelope, every cell of it for
     * an axis-aligned rectangle, else the cells whose rect
-    * `Pred.intersects` the geometry, row-major. */
+    * `Pred.intersects` the geometry, row-major. `cellId` clamps latitudes
+    * past ±MAX_LAT into the grid's top and bottom rows, so the rects of
+    * those rows reach out to the envelope where it lies beyond. */
   private def coverByRelate(g: Geometry, level: Int): Array[Long] = {
     val env = g.envelope
     if (env.isEmpty) return Array.empty
@@ -26,7 +28,10 @@ class CoverFuzzSpec extends AnyFunSuite {
     val out = new ArrayBuffer[Long]()
     for (ty <- y0 to y1; tx <- x0 to x1) {
       val cell = Cells.morton(tx, ty)
-      if (isRect || Pred.intersects(Cells.cellEnvelope(cell, level).toPolygon, g)) out += cell
+      val e = Cells.cellEnvelope(cell, level)
+      val rect = Env(e.xmin, if (ty == (1L << level) - 1) math.min(e.ymin, env.ymin) else e.ymin,
+        e.xmax, if (ty == 0) math.max(e.ymax, env.ymax) else e.ymax)
+      if (isRect || Pred.intersects(rect.toPolygon, g)) out += cell
     }
     out.toArray
   }

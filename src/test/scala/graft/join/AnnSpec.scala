@@ -211,6 +211,54 @@ class AnnSpec extends AnyFunSuite {
     e.unpersist()
   }
 
+  /** 400 clustered 6-dim vectors; 350 has no embedding and 351 is the
+    * zero vector. */
+  private def withHoles(): Seq[(Long, Seq[Float])] = (0L until 400L).map {
+    case 350L => (350L, null)
+    case 351L => (351L, Seq.fill(6)(0f))
+    case i => (i, (0 until 6).map(j => (math.sin((i % 13 + 1) * (j + 1) * 0.9) +
+      0.3 * math.cos(i * (j + 2) * 0.37)).toFloat))
+  }
+
+  test("cosineNearDup skips null and zero-norm members and equals a driver brute force") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    import spark.implicits._
+    val rows = withHoles()
+    val e = rows.toDF("vec_id", "embedding").repartition(3).cache()
+    val tau = 0.9
+    // the quantized metric of vec_dot_q, on the driver; the session keeps
+    // its default ANSI setting
+    val q = rows.collect { case (id, v) if v != null => id -> v.map(x => math.floor(x * 1000.0 + 0.5).toLong) }
+    def dot(a: Seq[Long], b: Seq[Long]): Long = a.zip(b).map { case (x, y) => x * y }.sum
+    val want = (for {
+      (a, va) <- q; (b, vb) <- q
+      if a < b && dot(va, va) != 0 && dot(vb, vb) != 0
+      cos = dot(va, vb) / math.sqrt(dot(va, va).toDouble * dot(vb, vb).toDouble)
+      if cos >= tau
+    } yield (a, b, cos)).toSet
+    val got = AnnIndex.cosineNearDup(e, tau).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(want.size > 1000, s"${want.size} pairs")
+    assert(got == want, s"${(got diff want).take(4)} / ${(want diff got).take(4)}")
+    e.unpersist()
+  }
+
+  test("writeIndex and topKIndexed skip a null-embedding member") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    import spark.implicits._
+    val e = withHoles().toDF("vec_id", "embedding").repartition(3).cache()
+    val dir = java.nio.file.Files.createTempDirectory("ann_holes").toString
+    val pred = col("vec_id") % 9 === 0 || col("vec_id").isin(350L, 351L)
+    AnnIndex.writeIndex(e, dir, "holes")
+    val got = rows3(AnnIndex.topKIndexed(spark, dir, "holes", pred, k = 5))
+    assert(got == rows3(AnnIndex.topKScan(e, pred, k = 5)))
+    assert(got.keySet.map(_._1) == (0L until 400L by 9).toSet - 351L)
+    assert(!got.keySet.exists(r => r._2 == 350L || r._2 == 351L))
+    e.unpersist()
+  }
+
   /** n 8-dim vectors in `parts` partitions, with no shuffle upstream. */
   private def synth(n: Long, parts: Int = 4): org.apache.spark.sql.DataFrame =
     spark.range(0, n, 1, parts).toDF("vec_id")

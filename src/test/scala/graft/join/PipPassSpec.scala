@@ -152,6 +152,27 @@ class PipPassSpec extends AnyFunSuite {
     same(points(ps), zones(zs))
   }
 
+  test("polar triangles past the grid's ±85.05° edge rows match brute force") {
+    graft.sql.GraftFunctions.install(spark)
+    val r = rnd(10)
+    // cellId clamps these points into the grid's top and bottom rows
+    val zs = zones(Seq(("n", "POLYGON ((0 86, 20 86, 10 89, 0 86))"),
+      ("s", "POLYGON ((0 -86, 10 -89, 20 -86, 0 -86))")))
+    val ps = points((0 until 2000).map { i =>
+      (-2 + 24 * r.nextDouble(), (if (i % 2 == 0) 1 else -1) * (84.5 + 5.4 * r.nextDouble()))
+    } ++ Seq((10.0, 87.0), (10.0, -87.0)))
+    val n = same(ps, zs)
+    val brute = ps.crossJoin(zs.select(col("zone_id"),
+        call_function("st_geomfromwkt", col("wkt")).as("zone_geom")))
+      .where(call_function("st_intersects_xy", col("zone_geom"), col("lon"), col("lat")))
+    val key = (df: DataFrame) => df.select("image_id", "zone_id").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    val want = key(brute)
+    assert(want.contains(("p002000", "n")) && want.contains(("p002001", "s")))
+    assert(key(SpatialJoins.pipJoin(ps, zs)) == want)
+    assert(n == want.size && n > 200)
+  }
+
   test("an existing cell column is replaced; float coordinates fail on both paths") {
     val r = rnd(8)
     val zs = zones(Seq(("z", "POLYGON ((0 0, 3 0, 1 2, 0 0))")))
