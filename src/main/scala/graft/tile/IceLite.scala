@@ -15,9 +15,11 @@ import scala.jdk.CollectionConverters._
  * pointer), so swapping in iceberg-spark-runtime later is a config change.
  *
  * Layout:
- *   <root>/data/<bucket>/part-*.parquet      immutable data files
- *   <root>/meta/snap-<id>.json               snapshot (files + lineage)
- *   <root>/meta/_current                     atomic pointer (tmp + rename)
+ *   <root>/<dataDir>/bucket=<b>/part-*.parquet  immutable data files, one
+ *                                  dataDir per writer (listed at TileJob's
+ *                                  copy-on-write tail, commitRewrite)
+ *   <root>/meta/snap-<id>.json                  snapshot (files + lineage)
+ *   <root>/meta/_current                        atomic pointer (tmp + rename)
  *
  * Commit protocol: write data files → write snap-<id>.json (tmp+rename) →
  * swap _current (tmp+rename). A crash at any point leaves the previous

@@ -1,8 +1,9 @@
 package graft.tile
 
 import graft.sql.GraftFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -25,46 +26,59 @@ import scala.jdk.CollectionConverters._
  */
 object TileJob {
 
-  /** Deterministic per-row checksum, folded order-independently with XOR
-    * (no overflow under ANSI mode, which Spark 4 enables by default). */
-  private def checksumCol = xxhash64(col("image_id"), col("tx"), col("ty"), col("phash"))
-
-  /** Per-bucket (rows, cellMin, cellMax, checksum, lineage) from ONE
-    * read-back of the committed files under `basePath` (what readers
-    * will see), keyed by bucket id. */
-  private def bucketStats(spark: SparkSession, basePath: String, dirs: Seq[String],
-      jobId: String): Map[Long, (Long, Long, Long, Long, Seq[IceLite.LineageRow])] = {
-    if (dirs.isEmpty) return Map.empty
-    // ONE job: per-(bucket, partition) stats collected once; bucket
-    // totals fold in the driver (rows/cmin/cmax by sum/min/max, checksum
-    // by XOR over disjoint partition sets — commutes with the 53-bit
-    // mask). Was two full read-back jobs per call; on the streaming
-    // ingest path that is one job per micro-batch saved.
-    val perPid = spark.read
-      .option("basePath", basePath)
-      .parquet(dirs: _*)
-      .withColumn("bucket", col("bucket").cast("long"))
-      .withColumn("pid", spark_partition_id())
-      .withColumn("cs", checksumCol)
-      .groupBy("bucket", "pid")
-      .agg(count(lit(1)).as("rows"), min("cell").as("cmin"),
-        max("cell").as("cmax"), expr("bit_xor(cs)").as("cs"))
-      .collect()
-    perPid.groupBy(_.getLong(0)).map { case (b, rows) =>
-      val lineage = rows.sortBy(_.getInt(1)).map(r => IceLite.LineageRow(
-        jobId, r.getInt(1), r.getLong(2), r.getLong(2),
-        IceLite.mask53(r.getLong(5)))).toSeq
-      b -> ((rows.map(_.getLong(2)).sum,
-        rows.map(_.getLong(3)).min, rows.map(_.getLong(4)).max,
-        IceLite.mask53(rows.map(_.getLong(5)).reduce(_ ^ _)), lineage))
-    }
+  /** Per-bucket stats of a row set: rows, order-independent XOR checksum
+    * (53-bit masked, as the manifest stores it) and cell range. `+` merges
+    * disjoint row sets (XOR commutes with the mask). */
+  private final case class Stats(rows: Long, cs: Long, cmin: Long, cmax: Long) {
+    def +(o: Stats): Stats =
+      Stats(rows + o.rows, cs ^ o.cs, math.min(cmin, o.cmin), math.max(cmax, o.cmax))
+    def entry(b: Int, dir: String, lineage: Seq[IceLite.LineageRow]): IceLite.BucketEntry =
+      IceLite.BucketEntry(b, rows, cs, cmin, cmax, dir, lineage)
   }
+  private val NoRows = Stats(0L, 0L, Long.MaxValue, Long.MinValue)
+  private def statsOf(e: IceLite.BucketEntry): Stats = Stats(e.rows, e.checksum, e.cellMin, e.cellMax)
+
+  /** THE per-bucket aggregate, ONE collected job: [[Stats]] per (bucket,
+    * `by` cast to long). The row checksum is a deterministic xxhash64 folded
+    * with XOR (no overflow under ANSI mode, which Spark 4 enables by
+    * default). Every manifest number comes from here: ingest read-back,
+    * rebucket's expectation, the delete/merge match scan, merge's added
+    * rows and the verify read-back. */
+  private def statsBy(df: DataFrame, by: Column = lit(0L)): Map[(Long, Long), Stats] =
+    df.withColumn("_k", by.cast("long"))
+      .withColumn("_cs", xxhash64(col("image_id"), col("tx"), col("ty"), col("phash")))
+      .groupBy(col("bucket").cast("long"), col("_k"))
+      .agg(count(lit(1)), expr("bit_xor(_cs)"), min("cell"), max("cell"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        Stats(r.getLong(2), IceLite.mask53(r.getLong(3)), r.getLong(4), r.getLong(5)))
+      .toMap
+
+  /** Per-bucket (stats, lineage) from ONE read-back of the committed files
+    * under `basePath` (what readers will see), keyed by bucket id. */
+  private def bucketStats(spark: SparkSession, basePath: String, dirs: Seq[String],
+      jobId: String): Map[Long, (Stats, Seq[IceLite.LineageRow])] =
+    if (dirs.isEmpty) Map.empty
+    // ONE job: per-(bucket, partition) stats collected once; bucket totals
+    // fold in the driver. On the streaming ingest path that is one job per
+    // micro-batch.
+    else statsBy(spark.read.option("basePath", basePath).parquet(dirs: _*),
+        spark_partition_id()).groupBy(_._1._1).map { case (b, parts) =>
+      val byPid = parts.toSeq.sortBy(_._1._2)
+      b -> ((byPid.map(_._2).reduce(_ + _), byPid.map { case ((_, pid), s) =>
+        IceLite.LineageRow(jobId, pid.toInt, s.rows, s.rows, s.cs) }))
+    }
+
+  /** The core columns as the data files store them (the bucket lives in the
+    * dir name): the schema an empty table reads at. */
+  private val fileSchema = StructType.fromDDL("image_id STRING, caption STRING, " +
+    "w INT, h INT, fmt STRING, lon DOUBLE, lat DOUBLE, cell BIGINT, tx BIGINT, " +
+    "ty BIGINT, phash BIGINT, phash_ok BOOLEAN")
 
   /** The tile-assignment projection shared by the batch job and the
     * streaming ingest: bucket (coarse Morton cell), tile x/y, fine cell,
     * and the per-row pHash revalidation. */
-  private val coreCols = Seq("bucket", "image_id", "caption", "w", "h",
-    "fmt", "lon", "lat", "cell", "tx", "ty", "phash", "phash_ok")
+  private val coreCols = "bucket" +: fileSchema.fieldNames.toSeq
 
   private def tileProjection(df: DataFrame, zoom: Int, bucketLevel: Int,
                              extraCols: Seq[String] = Nil): DataFrame = {
@@ -146,9 +160,8 @@ object TileJob {
     }
     val stats = bucketStats(spark, base, dirs, jobId)
     val entries = prev.map(_.buckets.toVector).getOrElse(Vector.empty) ++
-      stats.toSeq.sortBy(_._1).map { case (b, (rows, cmin, cmax, cs, lineage)) =>
-        IceLite.BucketEntry(b.toInt, rows, cs, cmin, cmax, s"$base/bucket=$b", lineage)
-      }
+      stats.toSeq.sortBy(_._1).map { case (b, (st, lineage)) =>
+        st.entry(b.toInt, s"$base/bucket=$b", lineage) }
     val snap = IceLite.Snapshot(prev.map(_.snapshotId).getOrElse(0L) + 1,
       prev.map(_.snapshotId).getOrElse(-1L), jobId, entries)
     IceLite.commit(outRoot, snap)
@@ -196,11 +209,8 @@ object TileJob {
 
     // stats + lineage for every pending bucket in one read-back of the
     // committed files (what readers will see), keyed by bucket
-    val statRows: Map[Long, (Long, Long, Long, Long, Seq[IceLite.LineageRow])] =
-      if (pending.isEmpty) Map.empty
-      else bucketStats(spark, s"$outRoot/data",
-        pending.map(b => s"$outRoot/data/bucket=$b")
-          .filter(d => Files.exists(Paths.get(d))), jobId)
+    val statRows = bucketStats(spark, s"$outRoot/data",
+      pending.map(b => s"$outRoot/data/bucket=$b").filter(d => Files.exists(Paths.get(d))), jobId)
 
     // per-bucket snapshot commits (driver-only) keep the resume granularity:
     // a crash between commits loses at most one bucket's bookkeeping
@@ -211,16 +221,14 @@ object TileJob {
     pending.foreach { b =>
       if (failAfter >= 0 && processed >= failAfter) throw Failpoint(failAfter)
       val dataDir = s"$outRoot/data/bucket=$b"
-      val (rows, cmin, cmax, cs, lineage) =
-        statRows.getOrElse(b.toLong, (0L, Long.MaxValue, Long.MinValue, 0L, Seq.empty))
-      entries :+= IceLite.BucketEntry(b, rows, cs, cmin, cmax, dataDir, lineage)
+      val (st, lineage) = statRows.getOrElse(b.toLong, (NoRows, Seq.empty))
+      entries :+= st.entry(b, dataDir, lineage)
       snapId += 1
       IceLite.commit(outRoot, IceLite.Snapshot(snapId, parent, jobId, entries))
       parent = snapId
       processed += 1
     }
-    IceLite.currentSnapshot(outRoot).getOrElse(
-      throw new IllegalStateException("no snapshot after run"))
+    current(outRoot)
   }
 
   /**
@@ -228,22 +236,19 @@ object TileJob {
    * ingest leaves each bucket dir with many small parquet files, and scan
    * cost at scale is dominated by file-open overhead + lost row-group
    * locality. Rewrites every bucket whose dir holds more than
-   * `maxFilesPerBucket` part files into EXACTLY ONE sorted file under a
-   * fresh immutable dir (`data-c<snapId>/bucket=<b>`), verifies the
-   * rewrite (row count + order-independent xxhash64 checksum must equal
-   * the manifest entry — a mismatch aborts BEFORE publishing, leaving
-   * only orphan files readers never see), then commits one new snapshot
-   * whose entries point at the new dirs. Old dirs are untouched, so time
+   * `maxFilesPerBucket` part files into EXACTLY ONE sorted file through
+   * [[commitRewrite]] (`data-c<snapId>/bucket=<b>`): the expectation is the
+   * manifest itself (row count, XOR checksum and cell range folded over the
+   * bucket's entries, no extra scan), so a rewrite that drifts from what
+   * was committed aborts BEFORE publishing. Old dirs are untouched, so time
    * travel to pre-compaction snapshots keeps working; space is reclaimed
-   * separately by [[IceLite.expireSnapshots]]. One distributed job
-   * rewrites all selected buckets (repartition on the bucket key — a
-   * bucket lives in exactly one task, so each new dir gets exactly one
-   * file); nothing is collected to the driver but the per-bucket stats.
+   * separately by [[IceLite.expireSnapshots]]. One distributed job rewrites
+   * all selected buckets; nothing is collected to the driver but the
+   * verify read-back's per-bucket stats.
    */
   def compact(spark: SparkSession, outRoot: String,
               maxFilesPerBucket: Int = 1): IceLite.Snapshot = {
-    val snap = IceLite.currentSnapshot(outRoot)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot at $outRoot"))
+    val snap = current(outRoot)
     def partFiles(dir: String): Int = {
       val p = Paths.get(dir)
       if (!Files.exists(p)) 0
@@ -255,55 +260,17 @@ object TileJob {
         } finally s.close()
       }
     }
-    // entries grouped by bucket id: a streamed table (ingestBatch) holds
-    // one entry per micro-batch per bucket — compaction merges them into
-    // one entry with one file. Expected merged checksum = XOR of entry
-    // checksums (disjoint row sets; XOR commutes with the 53-bit mask).
-    val grouped = snap.buckets.filter(_.rows > 0).groupBy(_.bucket)
-    val selected = grouped.filter { case (_, es) =>
+    // a streamed table (ingestBatch) holds one entry per micro-batch per
+    // bucket — compaction merges them into one entry with one file
+    val selected = liveGroups(snap).filter { case (_, es) =>
       es.size > 1 || es.iterator.map(e => partFiles(e.dataDir)).sum > maxFilesPerBucket
-    }.toSeq.sortBy(_._1)
+    }
     if (selected.isEmpty) return snap
-
-    val newId = snap.snapshotId + 1
-    val newRoot = s"$outRoot/data-c$newId"
-    def newDir(b: Int): String = s"$newRoot/bucket=$b"
-    // bucket rides as a literal per source (the dir-name partition column
-    // is not stored in the files), so one union plan rewrites every
-    // selected bucket in a single job
-    // ONE multi-path scan per bucket (not per entry): a standing stream
-    // accumulates one entry per micro-batch per bucket, and a per-entry
-    // union would grow the plan with stream length — per-bucket it stays
-    // bounded by the bucket count like the batch table
-    // mergeSchema + allowMissingColumns: an evolved table holds entries
-    // written before a column was added; a plain read takes ONE footer's
-    // schema nondeterministically (dropping the added column from the
-    // rewrite = data loss), and strict unionByName throws across buckets
-    // of different widths. The rewrite materializes the UNION schema with
-    // NULLs for pre-evolution rows — Iceberg's rewrite-at-current-schema.
-    bucketUnion(spark, selected)
-      .repartition(selected.size, col("bucket"))
-      .sortWithinPartitions("bucket", "cell", "image_id")
-      // overwrite: a compaction that crashed between write and commit
-      // leaves data-c<id> orphaned (no manifest references it) — the
-      // retry recomputes the same id and must be able to reclaim it
-      .write.mode("overwrite").partitionBy("bucket").parquet(newRoot)
-
-    // verify the rewrite against the committed manifest BEFORE publishing
-    verifyRewrite(spark, "compaction", newDir, selected.map { case (b, es) =>
-      b -> ((es.map(_.rows).sum, es.map(_.checksum).reduce(_ ^ _)))
-    })
-
-    val merged = selected.map { case (b, es) =>
-      val rows = es.map(_.rows).sum; val cs = es.map(_.checksum).reduce(_ ^ _)
-      b -> (Some(IceLite.BucketEntry(b, rows, cs,
-        es.map(_.cellMin).min, es.map(_.cellMax).max, newDir(b),
-        es.flatMap(_.lineage) :+ IceLite.LineageRow("compact", b, rows, rows, cs))): Option[IceLite.BucketEntry])
-    }.toMap
-    val out = IceLite.Snapshot(newId, snap.snapshotId, s"compact-${snap.jobId}",
-      replaceEntries(snap, merged))
-    IceLite.commit(outRoot, out)
-    out
+    commitRewrite(spark, outRoot, snap, "compact", bucketUnion(spark, selected),
+      selected.map { case (b, es) =>
+        val st = es.map(statsOf).reduce(_ + _)
+        Rewrite(b, st, st.rows)
+      })
   }
 
   /**
@@ -313,13 +280,12 @@ object TileJob {
    * newLevel)`) — cells nest, so no lon/lat recompute and no decode.
    *
    * Two passes, deliberately: pass 1 aggregates expected per-new-bucket
-   * stats (rows, XOR checksum, cell range) reading ONLY the narrow
-   * columns (Parquet pruning skips `bytes`); pass 2 rewrites. Before
-   * anything publishes, (a) pass 1's totals must CONSERVE the manifest's
-   * global row count and XOR checksum exactly — a split/merge cannot
-   * invent or drop a row — and (b) the written files are read back and
-   * verified per new bucket ([[verifyRewrite]]). Old snapshots keep
-   * referencing the old layout: time travel still reads it, and
+   * stats reading ONLY the narrow columns (Parquet pruning skips `bytes`);
+   * pass 2 rewrites. Before anything is written, pass 1's totals must
+   * CONSERVE the manifest's global row count, XOR checksum and cell range
+   * exactly — a split/merge cannot invent or drop a row; the written files
+   * are then verified per new bucket by [[commitRewrite]]. Old snapshots
+   * keep referencing the old layout: time travel still reads it, and
    * [[IceLite.expireSnapshots]] reclaims it. Scale: write amplification
    * is the table size ONCE — the explicit cost of changing partition
    * layout, paid without taking the table offline.
@@ -329,62 +295,37 @@ object TileJob {
     GraftFunctions.install(spark)
     require(newBucketLevel >= 0 && newBucketLevel <= zoom,
       s"newBucketLevel $newBucketLevel out of range [0, zoom=$zoom]")
-    val snap = IceLite.currentSnapshot(outRoot)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot at $outRoot"))
-    val live = snap.buckets.filter(_.rows > 0)
-    if (live.isEmpty) return snap
-    val grouped = live.groupBy(_.bucket).toSeq.sortBy(_._1)
-    val newId = snap.snapshotId + 1
-    val newRoot = s"$outRoot/data-r$newId"
-    def newDir(b: Int): String = s"$newRoot/bucket=$b"
-    val src = bucketUnion(spark, grouped)
+    val snap = current(outRoot)
+    val groups = liveGroups(snap)
+    if (groups.isEmpty) return snap
+    val src = bucketUnion(spark, groups)
       .drop("bucket")
       .withColumn("bucket", call_function("st_cell_parent",
         col("cell"), lit(zoom), lit(newBucketLevel)))
-
-    val expected = src
-      .withColumn("cs", checksumCol)
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("rows"), expr("bit_xor(cs)").as("cs"),
-        min("cell").as("cmin"), max("cell").as("cmax"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        ((r.getLong(1), IceLite.mask53(r.getLong(2)), r.getLong(3), r.getLong(4))))
-      .toMap
-
+    val expected = statsBy(src).toSeq.map { case ((b, _), st) => b.toInt -> st }.sortBy(_._1)
     // global conservation vs the COMMITTED manifest before any write
-    val expRows = expected.values.map(_._1).sum
-    val expCs = IceLite.mask53(expected.values.map(_._2).reduce(_ ^ _))
-    val oldRows = live.map(_.rows).sum
-    val oldCs = IceLite.mask53(live.map(_.checksum).reduce(_ ^ _))
-    if (expRows != oldRows || expCs != oldCs)
+    val scanned = expected.map(_._2).reduce(_ + _)
+    val committed = groups.flatMap(_._2).map(statsOf).reduce(_ + _)
+    if (scanned != committed)
       throw new IllegalStateException(
-        s"rebucket conservation failed: rows $expRows vs $oldRows, " +
-          s"checksum $expCs vs $oldCs — nothing written")
-
-    val nParts = math.max(spark.sparkContext.defaultParallelism, expected.size)
-    src.repartitionByRange(nParts, col("bucket"), col("cell"), col("image_id"))
-      .sortWithinPartitions("bucket", "cell", "image_id")
-      .write.mode("overwrite").partitionBy("bucket").parquet(newRoot)
-
-    verifyRewrite(spark, "rebucket", newDir,
-      expected.toSeq.sortBy(_._1).map { case (b, (r, cs, _, _)) => b.toInt -> ((r, cs)) })
-
-    val entries = expected.toSeq.sortBy(_._1).map { case (b, (r, cs, cmin, cmax)) =>
-      IceLite.BucketEntry(b.toInt, r, cs, cmin, cmax, newDir(b.toInt),
-        Seq(IceLite.LineageRow(s"rebucket-L$newBucketLevel", b.toInt, r, r, cs)))
-    }
-    val out = IceLite.Snapshot(newId, snap.snapshotId,
-      s"rebucket-L$newBucketLevel-${snap.jobId}", entries)
-    IceLite.commit(outRoot, out)
-    out
+        s"rebucket conservation failed: scanned $scanned vs manifest $committed — nothing written")
+    commitRewrite(spark, outRoot, snap, s"rebucket-L$newBucketLevel", src,
+      expected.map { case (b, st) => Rewrite(b, st, st.rows) }, relayout = true)
   }
+
+  /** The live (rows > 0) manifest entries grouped by bucket, in bucket order. */
+  private def liveGroups(snap: IceLite.Snapshot): Seq[(Int, Seq[IceLite.BucketEntry])] =
+    snap.buckets.filter(_.rows > 0).groupBy(_.bucket).toSeq.sortBy(_._1)
 
   /** ONE multi-path scan per bucket over its manifest entries, bucket id as
     * a literal column (dir-name partition columns are not stored in the
-    * files), at the table's UNION schema (mergeSchema + allowMissingColumns
-    * — see [[compact]]'s evolution note). Plan size rides the bucket count,
-    * never the entry (micro-batch) count. */
+    * files). Plan size rides the bucket count, never the entry (micro-batch)
+    * count. mergeSchema + allowMissingColumns: an evolved table holds
+    * entries written before a column was added; a plain read takes ONE
+    * footer's schema nondeterministically (dropping the added column from a
+    * rewrite = data loss), and strict unionByName throws across buckets of
+    * different widths. A rewrite therefore materializes the UNION schema
+    * with NULLs for pre-evolution rows — Iceberg's rewrite-at-current-schema. */
   private def bucketUnion(spark: SparkSession,
       groups: Seq[(Int, Seq[IceLite.BucketEntry])]): DataFrame =
     groups.map { case (b, es) =>
@@ -392,52 +333,133 @@ object TileJob {
           .withColumn("bucket", lit(b.toLong)) }
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
-  /** Verify freshly rewritten bucket dirs against manifest-derived
-    * expectations BEFORE a snapshot publishes them: row count and
-    * order-independent xxhash64 XOR checksum must match per bucket.
-    * `expected` maps bucket → (rows, checksum); buckets expecting 0 rows
-    * must have no dir at all (partitionBy writes nothing for them). */
-  private def verifyRewrite(spark: SparkSession, op: String,
-      newDir: Int => String, expected: Seq[(Int, (Long, Long))]): Unit = {
-    val nonEmpty = expected.filter(_._2._1 > 0)
-    val back =
-      if (nonEmpty.isEmpty) Map.empty[Long, (Long, Long)]
-      else nonEmpty.map { case (b, _) => spark.read.parquet(newDir(b))
-          .withColumn("bucket", lit(b.toLong)) }
-        .reduce(_ unionByName _)
-        .withColumn("cs", checksumCol)
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("rows"), expr("bit_xor(cs)").as("cs"))
-        .collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), IceLite.mask53(r.getLong(2)))))
-        .toMap
-    expected.foreach { case (b, (expRows, expCs)) =>
-      if (expRows == 0) {
-        if (Files.exists(Paths.get(newDir(b))))
+  /** One bucket a copy-on-write rewrite writes. `expect` is what its new dir
+    * must hold, derived from the manifest and the op's own scan, never from
+    * the written files; `inRows` (the rows the op read for it) feeds the
+    * lineage. A `replaces` bucket supersedes the bucket's live entries and
+    * inherits their lineage; otherwise its entry is appended (an insert). */
+  private final case class Rewrite(bucket: Int, expect: Stats, inRows: Long,
+                                   replaces: Boolean = true)
+
+  /**
+   * THE copy-on-write commit tail of [[compact]], [[rebucket]],
+   * [[deleteWhere]] and [[mergeUpsert]]: write `rows` (bucket-keyed,
+   * sorted on bucket, cell, image_id) under one fresh immutable dir,
+   * verify every bucket in `outs` against its expectation, then publish
+   * ONE snapshot with jobId `<stage>-<parent jobId>`. A mismatch aborts
+   * before the commit, leaving only orphan files readers never see.
+   *
+   * The table's data dirs, one per writer; a manifest entry references
+   * `<dir>/bucket=<b>`:
+   *   - `data/` — [[run]], every bucket of the batch build, resumed in place;
+   *   - `data-s<batchId>/` — [[ingestBatch]], one per micro-batch;
+   *   - `data-<x><snapshotId>/` — this tail, x = c, r, d or m (the stage's
+   *     initial: compact, rebucket, delete, merge), id = the new snapshot.
+   * Write mode is overwrite: an op that crashed between write and commit
+   * leaves its dir orphaned, and the retry recomputes the same id and must
+   * be able to reclaim it.
+   *
+   * Each bucket is written by one task (one file per new dir), except under
+   * `relayout` ([[rebucket]]): big buckets then split across tasks by
+   * (cell, image_id) range, and the new entries replace the WHOLE manifest
+   * with fresh lineage. Otherwise a replacing bucket's entries collapse to
+   * one entry at the first slot of that bucket (or drop when it is left
+   * empty), untouched entries pass through byte-identical, and appended
+   * entries carry stage `<stage>-insert`.
+   */
+  private def commitRewrite(spark: SparkSession, outRoot: String, snap: IceLite.Snapshot,
+      stage: String, rows: DataFrame, outs: Seq[Rewrite],
+      relayout: Boolean = false): IceLite.Snapshot = {
+    val newRoot = s"$outRoot/data-${stage.head}${snap.snapshotId + 1}"
+    def newDir(b: Int): String = s"$newRoot/bucket=$b"
+    (if (!relayout) rows.repartition(outs.size, col("bucket"))
+     else rows.repartitionByRange(math.max(spark.sparkContext.defaultParallelism, outs.size),
+       col("bucket"), col("cell"), col("image_id")))
+      .sortWithinPartitions("bucket", "cell", "image_id")
+      .write.mode("overwrite").partitionBy("bucket").parquet(newRoot)
+    verifyRewrite(spark, stage, newRoot, outs.map(o => o.bucket -> o.expect))
+
+    val prior = liveGroups(snap).toMap
+    def entry(o: Rewrite, lineage: Seq[IceLite.LineageRow], st: String) =
+      o.expect.entry(o.bucket, newDir(o.bucket), lineage :+
+        IceLite.LineageRow(st, o.bucket, o.inRows, o.expect.rows, o.expect.cs))
+    val entries =
+      if (relayout) outs.map(entry(_, Nil, stage))
+      else {
+        val repl = outs.filter(_.replaces).map(o => o.bucket -> Option.when(o.expect.rows > 0)(
+          entry(o, prior(o.bucket).flatMap(_.lineage), stage))).toMap
+        val seen = scala.collection.mutable.Set.empty[Int]
+        snap.buckets.flatMap { e =>
+          if (e.rows == 0 || !repl.contains(e.bucket)) Some(e)
+          else if (seen.add(e.bucket)) repl(e.bucket)
+          else None
+        } ++ outs.filterNot(_.replaces).map(entry(_, Nil, s"$stage-insert"))
+      }
+    val out = IceLite.Snapshot(snap.snapshotId + 1, snap.snapshotId, s"$stage-${snap.jobId}", entries)
+    IceLite.commit(outRoot, out)
+    out
+  }
+
+  /** Verify freshly rewritten bucket dirs under `newRoot` against their
+    * expectations BEFORE a snapshot publishes them: rows, checksum and cell
+    * range must match per bucket, read back in one scan. Buckets expecting
+    * 0 rows must have no dir at all (partitionBy writes nothing for them). */
+  private def verifyRewrite(spark: SparkSession, op: String, newRoot: String,
+      expected: Seq[(Int, Stats)]): Unit = {
+    val written = expected.collect { case (b, st) if st.rows > 0 => s"$newRoot/bucket=$b" }
+    val back = if (written.isEmpty) Map.empty[(Long, Long), Stats]
+      else statsBy(spark.read.option("basePath", newRoot).parquet(written: _*))
+    expected.foreach { case (b, exp) =>
+      if (exp.rows == 0) {
+        if (Files.exists(Paths.get(s"$newRoot/bucket=$b")))
           throw new IllegalStateException(
             s"$op verify failed for bucket $b: expected empty, dir exists — not committed")
       } else {
-        val (rows, cs) = back.getOrElse(b.toLong, (-1L, -1L))
-        if (rows != expRows || cs != expCs)
+        val got = back.getOrElse((b.toLong, 0L), NoRows)
+        if (got != exp)
           throw new IllegalStateException(
-            s"$op verify failed for bucket $b: rows $rows vs $expRows, " +
-              s"checksum $cs vs $expCs — not committed")
+            s"$op verify failed for bucket $b: wrote $got, expected $exp — not committed")
       }
     }
   }
 
-  /** Manifest entries after a copy-on-write rewrite: each touched bucket's
-    * entries collapse to ONE entry at the FIRST slot of that bucket (or
-    * drop entirely when the rewrite left it empty); untouched entries pass
-    * through byte-identical. */
-  private def replaceEntries(snap: IceLite.Snapshot,
-      repl: Map[Int, Option[IceLite.BucketEntry]]): Seq[IceLite.BucketEntry] = {
-    val seen = scala.collection.mutable.Set.empty[Int]
-    snap.buckets.flatMap { b =>
-      if (b.rows == 0 || !repl.contains(b.bucket)) Some(b)
-      else if (seen.add(b.bucket)) repl(b.bucket)
-      else None
-    }
+  /** The keyed-out copy-on-write rewrite behind [[deleteWhere]] and
+    * [[mergeUpsert]]. `table` is the live table's bucket union carrying a
+    * boolean `_del` (TRUE = the row leaves); `adds` are tile-projected rows
+    * that join their target buckets. ONE scan collects per-(bucket, _del)
+    * stats. Only buckets that lose a row are rewritten (kept + added rows);
+    * buckets that only receive adds get an appended entry, so a pure insert
+    * writes exactly its own rows. A rewritten bucket's expected checksum is
+    * manifest XOR removed XOR added — independent of the rewrite it checks. */
+  private def keyOut(spark: SparkSession, outRoot: String, snap: IceLite.Snapshot,
+      stage: String, table: Option[DataFrame], adds: Option[DataFrame]): IceLite.Snapshot = {
+    val seen = table.map(statsBy(_, col("_del"))).getOrElse(Map.empty)
+    val added = adds.map(statsBy(_)).getOrElse(Map.empty).map { case ((b, _), st) => b.toInt -> st }
+    def part(b: Int, del: Boolean) = seen.getOrElse((b.toLong, if (del) 1L else 0L), NoRows)
+    val hit = liveGroups(snap).filter { case (b, _) => part(b, del = true).rows > 0 }.toMap
+    val touched = (hit.keys ++ added.keys).toSeq.distinct.sorted
+    if (touched.isEmpty) return snap
+    // filter the FULL union to hit buckets rather than re-unioning only
+    // them: a cond like `added_col IS NULL` matches rows in buckets whose
+    // files lack the column, so it must resolve against the union schema;
+    // each source carries its bucket as a literal, so the optimizer folds
+    // the IN-filter per source and prunes the other scans entirely
+    val kept = if (hit.isEmpty) None else table.map(_
+      .where(col("bucket").isInCollection(hit.keys.map(_.toLong)) && !col("_del"))
+      .drop("_del"))
+    commitRewrite(spark, outRoot, snap, stage,
+      (kept ++ adds).reduce(_.unionByName(_, allowMissingColumns = true)),
+      touched.map { b =>
+        val add = added.getOrElse(b, NoRows)
+        hit.get(b) match {
+          case Some(es) =>
+            val (keep, gone) = (part(b, del = false), part(b, del = true))
+            Rewrite(b, (keep + add).copy(cs =
+              IceLite.mask53(es.map(_.checksum).reduce(_ ^ _) ^ gone.cs ^ add.cs)),
+              keep.rows + gone.rows)
+          case None => Rewrite(b, add, add.rows, replaces = false)
+        }
+      })
   }
 
   /**
@@ -446,86 +468,27 @@ object TileJob {
    * it is false OR NULL are kept, the SQL DELETE contract (a predicate on
    * an added column is NULL on pre-evolution rows, which must survive).
    *
-   * Only buckets that actually contain matches are rewritten (to a fresh
-   * immutable `data-d<snapId>` dir); every rewrite is VERIFIED before the
-   * commit publishes: the expected kept-checksum is derived from the
-   * manifest in the same scan that finds the matches (old XOR deleted —
-   * XOR commutes with the 53-bit mask), so a rewrite that drops or
-   * duplicates even one row aborts with nothing published. Untouched
-   * buckets keep their files byte-identical. Old snapshots still reference
-   * the old dirs — time travel shows deleted rows exactly as committed;
-   * the hard-delete (GDPR reclaim) is [[IceLite.expireSnapshots]] retiring
-   * the superseded dirs. Scale: one distributed match scan (Parquet
-   * pushdown prunes where `cond` allows) + a rewrite of matched buckets
-   * only — write amplification is bounded by match locality, not table
-   * size.
+   * A merge with no added rows ([[keyOut]]): only buckets that actually
+   * contain matches are rewritten (to a fresh immutable `data-d<snapId>`
+   * dir), every rewrite is VERIFIED before the commit publishes, and
+   * untouched buckets keep their files byte-identical. Old snapshots still
+   * reference the old dirs — time travel shows deleted rows exactly as
+   * committed; the hard-delete (GDPR reclaim) is
+   * [[IceLite.expireSnapshots]] retiring the superseded dirs. Deleting
+   * every row leaves a manifest with no entries, which reads as an empty
+   * table. Scale: one distributed match scan (Parquet pushdown prunes
+   * where `cond` allows) + a rewrite of matched buckets only — write
+   * amplification is bounded by match locality, not table size.
    */
   def deleteWhere(spark: SparkSession, outRoot: String,
                   cond: Column): IceLite.Snapshot = {
-    val snap = IceLite.currentSnapshot(outRoot)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot at $outRoot"))
-    val grouped = snap.buckets.filter(_.rows > 0).groupBy(_.bucket).toSeq.sortBy(_._1)
-    if (grouped.isEmpty) return snap
+    val snap = current(outRoot)
+    val groups = liveGroups(snap)
+    if (groups.isEmpty) return snap
     // NULL never deletes: SQL's WHERE keeps only TRUE, so the delete set is
     // cond IS TRUE and the kept set is its complement
-    val del = coalesce(cond, lit(false))
-
-    // ONE pass: per-bucket match count, matched-row checksum, kept stats
-    val stats = bucketUnion(spark, grouped)
-      .withColumn("_del", del)
-      .withColumn("_cs", checksumCol)
-      .groupBy("bucket")
-      .agg(sum(when(col("_del"), 1L).otherwise(0L)).as("n_del"),
-        expr("bit_xor(CASE WHEN _del THEN _cs END)").as("del_cs"),
-        count(lit(1)).as("n_all"),
-        min(when(!col("_del"), col("cell"))).as("cmin"),
-        max(when(!col("_del"), col("cell"))).as("cmax"))
-      .collect()
-      .map(r => r.getLong(0).toInt ->
-        ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(3),
-          if (r.isNullAt(4)) Long.MaxValue else r.getLong(4),
-          if (r.isNullAt(5)) Long.MinValue else r.getLong(5))))
-      .toMap
-    val affected = grouped.filter { case (b, _) => stats(b)._1 > 0 }
-    if (affected.isEmpty) return snap
-
-    val newId = snap.snapshotId + 1
-    val newRoot = s"$outRoot/data-d$newId"
-    def newDir(b: Int): String = s"$newRoot/bucket=$b"
-    // filter the FULL union to affected buckets rather than re-unioning
-    // only them: the union schema must match the stats scan exactly (a
-    // cond like `added_col IS NULL` matches rows in buckets whose files
-    // lack the column — a narrower union would fail to resolve it), and
-    // each source carries its bucket as a literal, so the optimizer folds
-    // the IN-filter per source and prunes non-affected scans entirely
-    bucketUnion(spark, grouped)
-      .where(col("bucket").isInCollection(affected.map(_._1.toLong)))
-      .where(!del)
-      .repartition(affected.size, col("bucket"))
-      .sortWithinPartitions("bucket", "cell", "image_id")
-      // overwrite: a crashed delete leaves data-d<id> orphaned; the retry
-      // recomputes the same id and must reclaim it (compact's contract)
-      .write.mode("overwrite").partitionBy("bucket").parquet(newRoot)
-
-    val expected = affected.map { case (b, es) =>
-      val (nDel, delCs, nAll, _, _) = stats(b)
-      val oldCs = es.map(_.checksum).reduce(_ ^ _)
-      b -> ((nAll - nDel, IceLite.mask53(oldCs ^ delCs)))
-    }
-    verifyRewrite(spark, "delete", newDir, expected)
-
-    val repl = affected.map { case (b, es) =>
-      val (nDel, delCs, nAll, cmin, cmax) = stats(b)
-      val rows = nAll - nDel
-      val cs = IceLite.mask53(es.map(_.checksum).reduce(_ ^ _) ^ delCs)
-      b -> (if (rows == 0) None
-      else Some(IceLite.BucketEntry(b, rows, cs, cmin, cmax, newDir(b),
-        es.flatMap(_.lineage) :+ IceLite.LineageRow("delete", b, nAll, rows, cs))))
-    }.toMap
-    val out = IceLite.Snapshot(newId, snap.snapshotId,
-      s"delete-${snap.jobId}", replaceEntries(snap, repl))
-    IceLite.commit(outRoot, out)
-    out
+    keyOut(spark, outRoot, snap, "delete", Some(bucketUnion(spark, groups)
+      .withColumn("_del", coalesce(cond, lit(false)))), None)
   }
 
   /**
@@ -540,161 +503,82 @@ object TileJob {
    * tile projection as ingest (bucket/tile/cell assignment + pHash
    * revalidation); `extraCols` rides through for evolved tables.
    *
-   * Write amplification is bounded by MATCH locality, not insert volume:
-   * only buckets that lose a row (a matched id) are rewritten; buckets
-   * that merely RECEIVE inserts get an appended entry (the streaming-
-   * ingest multi-entry shape — [[compact]] merges them later), so a
-   * pure-insert merge writes exactly its own rows.
-   *
-   * Same verify-before-publish contract as [[deleteWhere]]: expected
-   * checksum = old XOR removed XOR added per bucket, derived independently
-   * of the rewrite it checks. Untouched buckets keep their files;
-   * time travel to pre-merge snapshots is unaffected.
+   * Write amplification is bounded by MATCH locality, not insert volume
+   * ([[keyOut]]): only buckets that lose a row (a matched id) are
+   * rewritten; buckets that merely RECEIVE inserts get an appended entry
+   * (the streaming-ingest multi-entry shape — [[compact]] merges them
+   * later). Same verify-before-publish contract as [[deleteWhere]];
+   * untouched buckets keep their files, and time travel to pre-merge
+   * snapshots is unaffected.
    */
   def mergeUpsert(spark: SparkSession, outRoot: String, updates: DataFrame,
                   zoom: Int = 8, bucketLevel: Int = 2,
                   extraCols: Seq[String] = Nil): IceLite.Snapshot = {
-    val snap = IceLite.currentSnapshot(outRoot)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot at $outRoot"))
-    val grouped = snap.buckets.filter(_.rows > 0).groupBy(_.bucket).toSeq.sortBy(_._1)
+    val snap = current(outRoot)
+    val groups = liveGroups(snap)
+    val table = if (groups.isEmpty) None else Some(bucketUnion(spark, groups))
     // EVOLVED columns ride through automatically on MERGE (a matched row is
     // REPLACED wholesale — projecting the update down to core columns would
     // silently blank evolved values the verify checksum cannot see, since
     // it hashes core columns only). Updates that lack an evolved table
     // column are rejected: the caller must carry it (explicit NULLs if
     // blanking is intended), the Iceberg MERGE schema-match contract.
-    val evolved: Seq[String] =
-      if (grouped.isEmpty) Nil
-      else bucketUnion(spark, grouped).columns.toSeq
-        .filterNot(c => coreCols.contains(c))
+    val evolved = table.toSeq.flatMap(_.columns).filterNot(c => coreCols.contains(c))
     val missing = evolved.filterNot(c =>
       updates.columns.contains(c) || extraCols.contains(c))
     require(missing.isEmpty,
       s"mergeUpsert updates lack evolved table column(s) ${missing.mkString(",")} — " +
         "supply them (explicit NULLs if blanking is intended)")
-    val rideThrough = (extraCols ++ evolved).distinct
     // materialized once: read by the uniqueness probe, the add-side stats,
     // and the rewrite union (the projection re-decodes images otherwise)
-    val proj = tileProjection(updates, zoom, bucketLevel, rideThrough)
+    val proj = tileProjection(updates, zoom, bucketLevel, (extraCols ++ evolved).distinct)
       .localCheckpoint()
     val dup = proj.groupBy("image_id").agg(count(lit(1)).as("n"))
       .where(col("n") > 1).limit(1).collect()
     require(dup.isEmpty,
       s"mergeUpsert updates must be unique by image_id (duplicate: ${dup.headOption.map(_.get(0))})")
+    // a table row leaves when an update carries its id; no broadcast hint —
+    // AQE converts the shuffle join when the id side is small, and a
+    // billion-row MERGE source must not OOM the driver
+    val ids = proj.select(col("image_id").as("_mid")).distinct().withColumn("_hit", lit(true))
+    keyOut(spark, outRoot, snap, "merge", table.map(_
+      .join(ids, col("image_id") === col("_mid"), "left")
+      .withColumn("_del", coalesce(col("_hit"), lit(false)))
+      .drop("_mid", "_hit")), Some(proj))
+  }
 
-    // add-side stats per TARGET bucket (new tile assignment of each update)
-    val addStats = proj.withColumn("_cs", checksumCol)
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_add"), expr("bit_xor(_cs)").as("add_cs"),
-        min("cell").as("cmin"), max("cell").as("cmax"))
-      .collect()
-      .map(r => r.getAs[Long]("bucket").toInt ->
-        ((r.getAs[Long]("n_add"), r.getAs[Long]("add_cs"),
-          r.getAs[Long]("cmin"), r.getAs[Long]("cmax"))))
-      .toMap
+  /** Current snapshot or throw — every op and reader starts here. */
+  private def current(outRoot: String): IceLite.Snapshot = IceLite.currentSnapshot(outRoot)
+    .getOrElse(throw new IllegalArgumentException(s"no snapshot at $outRoot"))
 
-    val ids = proj.select(col("image_id").as("_mid")).distinct()
-    // matched-side stats per EXISTING bucket (rows keyed out by id); no
-    // broadcast hint — AQE converts the shuffle join when the id side is
-    // small, and a billion-row MERGE source must not OOM the driver
-    val matchStats =
-      if (grouped.isEmpty) Map.empty[Int, (Long, Long, Long, Long, Long)]
-      else bucketUnion(spark, grouped)
-        .join(ids.withColumn("_hit", lit(true)),
-          col("image_id") === col("_mid"), "left")
-        .withColumn("_del", coalesce(col("_hit"), lit(false)))
-        .withColumn("_cs", checksumCol)
-        .groupBy("bucket")
-        .agg(sum(when(col("_del"), 1L).otherwise(0L)).as("n_del"),
-          expr("bit_xor(CASE WHEN _del THEN _cs END)").as("del_cs"),
-          count(lit(1)).as("n_all"),
-          min(when(!col("_del"), col("cell"))).as("cmin"),
-          max(when(!col("_del"), col("cell"))).as("cmax"))
-        .collect()
-        .map(r => r.getLong(0).toInt ->
-          ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(3),
-            if (r.isNullAt(4)) Long.MaxValue else r.getLong(4),
-            if (r.isNullAt(5)) Long.MinValue else r.getLong(5))))
-        .toMap
+  /** A committed snapshot by id or throw. */
+  private def snapshotAt(outRoot: String, id: Long): IceLite.Snapshot =
+    IceLite.snapshotById(outRoot, id).getOrElse(throw new IllegalArgumentException(
+      s"no snapshot $id at $outRoot (have: ${IceLite.listSnapshots(outRoot).mkString(", ")})"))
 
-    val byBucket = grouped.toMap
-    val rewriteB = matchStats.filter(_._2._1 > 0).keySet.toSeq.sorted
-    val touched = (rewriteB ++ addStats.keySet).distinct.sorted
-    if (touched.isEmpty) return snap
-
-    val newId = snap.snapshotId + 1
-    val newRoot = s"$outRoot/data-m$newId"
-    def newDir(b: Int): String = s"$newRoot/bucket=$b"
-    // one write job: rewritten buckets carry kept-old + added rows;
-    // insert-only buckets carry ONLY added rows (their old files stay)
-    val keptOld = {
-      val existing = rewriteB.flatMap(b => byBucket.get(b).map(b -> _))
-      if (existing.isEmpty) None
-      else Some(bucketUnion(spark, existing)
-        .join(ids, col("image_id") === col("_mid"), "left_anti"))
-    }
-    keptOld.map(_.unionByName(proj, allowMissingColumns = true)).getOrElse(proj)
-      .repartition(touched.size, col("bucket"))
-      .sortWithinPartitions("bucket", "cell", "image_id")
-      .write.mode("overwrite").partitionBy("bucket").parquet(newRoot)
-
-    val expected = touched.map { b =>
-      val (nAdd, addCs, _, _) = addStats.getOrElse(b, (0L, 0L, Long.MaxValue, Long.MinValue))
-      if (!rewriteB.contains(b)) b -> ((nAdd, IceLite.mask53(addCs)))
-      else {
-        val (nDel, delCs, nAll, _, _) = matchStats(b)
-        val oldCs = byBucket(b).map(_.checksum).reduce(_ ^ _)
-        b -> ((nAll - nDel + nAdd, IceLite.mask53(oldCs ^ delCs ^ addCs)))
-      }
-    }
-    verifyRewrite(spark, "merge", newDir, expected)
-
-    val expMap = expected.toMap
-    // rewritten buckets REPLACE their entries; insert-only buckets APPEND
-    // one entry (the ingestBatch multi-entry shape, compact merges later)
-    val repl = rewriteB.map { b =>
-      val (rows, cs) = expMap(b)
-      val (_, _, nAll, kmin, kmax) = matchStats(b)
-      val (_, _, amin, amax) = addStats.getOrElse(b, (0L, 0L, Long.MaxValue, Long.MinValue))
-      b -> (if (rows == 0) None
-      else Some(IceLite.BucketEntry(b, rows, cs,
-        math.min(kmin, amin), math.max(kmax, amax), newDir(b),
-        byBucket(b).flatMap(_.lineage) :+
-          IceLite.LineageRow("merge", b, nAll, rows, cs))))
-    }.toMap
-    val appended = touched.filterNot(rewriteB.contains).map { b =>
-      val (rows, cs) = expMap(b)
-      val (_, _, amin, amax) = addStats(b)
-      IceLite.BucketEntry(b, rows, cs, amin, amax, newDir(b),
-        Seq(IceLite.LineageRow("merge-insert", b, rows, rows, cs)))
-    }
-    val out = IceLite.Snapshot(newId, snap.snapshotId,
-      s"merge-${snap.jobId}", replaceEntries(snap, repl) ++ appended)
-    IceLite.commit(outRoot, out)
-    out
+  /** The one read path: the rows under the manifest dirs that exist (an
+    * empty bucket has none). A table with no data files — every row
+    * deleted, or built from an empty input — reads as zero rows at the
+    * core columns: a parquet read of zero paths cannot infer a schema. */
+  private def readDirs(spark: SparkSession, dirs: Seq[String],
+                       mergeSchema: Boolean = false): DataFrame = {
+    val live = dirs.filter(d => Files.exists(Paths.get(d)))
+    if (live.isEmpty) spark.createDataFrame(java.util.List.of[Row](), fileSchema)
+    else (if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read)
+      .parquet(live: _*)
   }
 
   /** Read the table as of the current snapshot (manifest-driven file list). */
-  def readCurrent(spark: SparkSession, outRoot: String): DataFrame = {
-    val snap = IceLite.currentSnapshot(outRoot)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot at $outRoot"))
-    val dirs = snap.buckets.map(_.dataDir).filter(d => Files.exists(Paths.get(d)))
-    spark.read.parquet(dirs: _*)
-  }
+  def readCurrent(spark: SparkSession, outRoot: String): DataFrame =
+    readDirs(spark, current(outRoot).buckets.map(_.dataDir))
 
   /** TIME TRAVEL: read the table as of an older committed snapshot.
     * Data files are immutable and snapshots are never rewritten, so any
     * historical id reproduces exactly the rows visible at that commit —
     * the audit/rollback read an Iceberg catalog would serve with
     * `VERSION AS OF`. */
-  def readAt(spark: SparkSession, outRoot: String, snapshotId: Long): DataFrame = {
-    val snap = IceLite.snapshotById(outRoot, snapshotId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no snapshot $snapshotId at $outRoot (have: ${IceLite.listSnapshots(outRoot).mkString(", ")})"))
-    val dirs = snap.buckets.map(_.dataDir).filter(d => Files.exists(Paths.get(d)))
-    if (dirs.isEmpty) readCurrent(spark, outRoot).limit(0)
-    else spark.read.parquet(dirs: _*)
-  }
+  def readAt(spark: SparkSession, outRoot: String, snapshotId: Long): DataFrame =
+    readDirs(spark, snapshotAt(outRoot, snapshotId).buckets.map(_.dataDir))
 
   /** SCHEMA EVOLUTION on read (the Iceberg add-column contract): bucket
     * files written before a column was added lack it on disk; plain
@@ -708,25 +592,16 @@ object TileJob {
     * add-column path is the one a training pipeline actually takes when
     * it starts logging a new feature). Old snapshots read via [[readAt]]
     * keep their own narrower schema — time travel is schema-faithful. */
-  def readEvolved(spark: SparkSession, outRoot: String): DataFrame = {
-    val snap = IceLite.currentSnapshot(outRoot)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot at $outRoot"))
-    val dirs = snap.buckets.map(_.dataDir).filter(d => Files.exists(Paths.get(d)))
-    spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-  }
+  def readEvolved(spark: SparkSession, outRoot: String): DataFrame =
+    readDirs(spark, current(outRoot).buckets.map(_.dataDir), mergeSchema = true)
 
   /** Manifest-driven pruning: only buckets whose cell range intersects. */
   def readCellRange(spark: SparkSession, outRoot: String,
-                    cellMin: Long, cellMax: Long): DataFrame = {
-    val snap = IceLite.currentSnapshot(outRoot)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot at $outRoot"))
-    val dirs = snap.buckets
-      .filter(b => b.rows > 0 && b.cellMin <= cellMax && b.cellMax >= cellMin)
-      .map(_.dataDir)
-    if (dirs.isEmpty) TileJob.readCurrent(spark, outRoot).limit(0)
-    else spark.read.parquet(dirs: _*)
+                    cellMin: Long, cellMax: Long): DataFrame =
+    readDirs(spark, current(outRoot).buckets
+        .filter(b => b.rows > 0 && b.cellMin <= cellMax && b.cellMax >= cellMin)
+        .map(_.dataDir))
       .where(col("cell") >= cellMin && col("cell") <= cellMax)
-  }
 
   /** The manifest-level prune behind [[snapshotDiff]]: data dirs present
     * in one snapshot but not the other. Data files are IMMUTABLE (every
@@ -765,11 +640,7 @@ object TileJob {
   def snapshotDiff(spark: SparkSession, outRoot: String,
                    fromId: Long, toId: Long): DataFrame = {
     import org.apache.spark.sql.types.BinaryType
-    val from = IceLite.snapshotById(outRoot, fromId).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $fromId at $outRoot"))
-    val to = IceLite.snapshotById(outRoot, toId).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $toId at $outRoot"))
-    val (fDirs, tDirs) = changedDirs(from, to)
+    val (fDirs, tDirs) = changedDirs(snapshotAt(outRoot, fromId), snapshotAt(outRoot, toId))
     val empty = spark.range(0).select(lit("insert").as("op"), lit("").as("image_id"))
     def rd(dirs: Seq[String]): Option[DataFrame] =
       if (dirs.isEmpty) None
@@ -834,11 +705,7 @@ object TileJob {
     * only as the spec's ground truth. */
   def incrementalTileAgg(spark: SparkSession, outRoot: String, prev: DataFrame,
                          fromId: Long, toId: Long): DataFrame = {
-    val from = IceLite.snapshotById(outRoot, fromId).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $fromId at $outRoot"))
-    val to = IceLite.snapshotById(outRoot, toId).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $toId at $outRoot"))
-    val (fDirs, tDirs) = changedDirs(from, to)
+    val (fDirs, tDirs) = changedDirs(snapshotAt(outRoot, fromId), snapshotAt(outRoot, toId))
     val sides = Seq(fDirs -> -1L, tDirs -> 1L).collect { case (dirs, sgn) if dirs.nonEmpty =>
       spark.read.option("mergeSchema", "true").parquet(dirs: _*)
         .select(col("tx"), col("ty"), lit(sgn).as("sgn"), col("w").cast("long").as("w"))

@@ -187,4 +187,38 @@ class MergeDeleteSpec extends AnyFunSuite {
       cur.select("image_id", "caption").orderBy("image_id").collect().toSeq)
     images.unpersist()
   }
+
+  test("deleting every row leaves an empty table that reads as zero rows") {
+    spark.sparkContext.setLogLevel("WARN")
+    GeoTables.ensure(spark, sfDir)
+    val images = spark.read.parquet(GeoTables.imagesPath(sfDir))
+      .orderBy("image_id").limit(30).cache()
+    val root = Files.createTempDirectory("cowempty").toString
+    TileJob.ingestBatch(spark, images.limit(15), root, batchId = 0, zoom = 6)
+    val sPre = TileJob.ingestBatch(spark, images.orderBy(desc("image_id")).limit(15),
+      root, batchId = 1, zoom = 6)
+    val full = TileJob.readAt(spark, root, sPre.snapshotId)
+
+    val sEmpty = TileJob.deleteWhere(spark, root, lit(true))
+    assert(sEmpty.snapshotId == sPre.snapshotId + 1 && sEmpty.buckets.isEmpty)
+    val cur = TileJob.readCurrent(spark, root)
+    assert(cur.count() == 0)
+    // the empty read carries the core columns at the table's own types
+    assert(cur.schema.map(f => f.name -> f.dataType) ==
+      full.schema.map(f => f.name -> f.dataType))
+    assert(TileJob.readEvolved(spark, root).count() == 0)
+    assert(TileJob.readCellRange(spark, root, Long.MinValue, Long.MaxValue).count() == 0)
+    assert(TileJob.tileAggOf(cur).collect().isEmpty)
+    // time travel still reads every row; compaction has nothing to do
+    assert(TileJob.readAt(spark, root, sPre.snapshotId).count() == 30)
+    assert(TileJob.compact(spark, root) == sEmpty)
+
+    // a batch build over an input with no rows reads as empty too
+    val noRows = Files.createTempDirectory("cowempty_in").resolve("images.parquet").toString
+    images.limit(0).write.parquet(noRows)
+    val built = Files.createTempDirectory("cowempty_run").toString
+    assert(TileJob.run(spark, noRows, built, zoom = 6).buckets.forall(_.rows == 0))
+    assert(TileJob.readCurrent(spark, built).count() == 0)
+    images.unpersist()
+  }
 }
