@@ -403,7 +403,9 @@ object Cells {
     if (env.isEmpty) return Array.empty
     val out = new ArrayBuffer[Long]()
     def rec(cell: Long, lvl: Int): Unit = {
-      val ce = cellEnvelope(cell, lvl).toPolygon
+      // the edge rows reach out past ±MAX_LAT as in cover(): cellId clamps
+      // every latitude beyond into them
+      val ce = coverCellEnvelope(cell, lvl, env).toPolygon
       if (!Pred.intersects(ce, g)) return
       if (lvl == maxLevel || Pred.contains(g, ce)) {
         if (out.length >= maxCells)

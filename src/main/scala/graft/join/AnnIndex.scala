@@ -40,7 +40,12 @@ import org.apache.spark.storage.StorageLevel
  * vector (training, assignment, checkpoint, bucket stats, probes). So
  * `topK` builds no index for up to [[ScanMaxQueries]] queries: it answers
  * in one scan of the vectors against the collected queries, with the
- * probe's own metric and ranking (see [[topK]]).
+ * probe's own metric and ranking (see [[topK]]). The same rule holds for
+ * `cosineNearDup`: its all-pairs scan costs n²·dim/2 multiply-adds, its
+ * index about ten Spark jobs, so up to [[NearDupScanMax]] members it
+ * answers in one pass against the broadcast members (see
+ * [[cosineNearDup]]). Both entries keep both paths: the scans grow with
+ * Q·n and n², the index more slowly wherever it prunes.
  */
 object AnnIndex {
 
@@ -91,8 +96,8 @@ object AnnIndex {
    * driver-collected sample): k = min(maxBuckets, √n) so pruning power
    * grows with the corpus instead of capping at 256 buckets.
    *
-   * Init: k stride-sampled vectors (a bounded k-row collect — the centroid
-   * table is driver-sized by definition). Each Lloyd round is ONE Spark
+   * Init: the k vectors of smallest `xxhash64(vec_id)` (a bounded k-row
+   * collect — the centroid table is driver-sized by definition). Each Lloyd round is ONE Spark
    * job: every partition of the training sample (~64·k rows, coalesced to
    * at most one partition per core) assigns its rows with the same
    * argmax-dot kernel the `vec_ivf_assign` expression uses (`K.ivfAssign`)
@@ -133,14 +138,15 @@ object AnnIndex {
       val nrm = math.sqrt(s)
       if (nrm == 0) v else v.map(_ / nrm)
     }
-    // init: k stride-spread rows from BASE (not train — two stride filters
-    // would compose as their lcm and under-sample); bounded collect — the
+    // init: the k rows of BASE with the smallest xxhash64(vec_id), spread
+    // whatever pattern the ids follow (every (n/k)-th id seeds from only a
+    // few clusters when ids cycle through them); bounded collect — the
     // centroid table is driver-sized by definition
-    var cents = base.where(pmod(col("vec_id"), lit(math.max(1L, n / k))) === 0 && col("embedding").isNotNull)
-      .orderBy("vec_id").limit(k)
+    var cents = base.where(col("embedding").isNotNull)
+      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
       .collect()
       .map(r => unit(r.getSeq[Float](1).map(_.toDouble).toArray))
-    require(cents.nonEmpty, "fitCentroids: stride sample came back empty")
+    require(cents.nonEmpty, "fitCentroids: no row has an embedding")
     val dim = cents(0).length
     var it = 0
     while (it < iters) {
@@ -218,23 +224,167 @@ object AnnIndex {
 
   /**
    * EXACT embedding-cosine near-duplicate pairs (cos ≥ tau, quantized
-   * metric). Bucket-pair pruning: members of buckets i, j satisfy
+   * metric). Members with a null id, a null embedding or a zero norm have
+   * no cosine and pair with nothing. Output: (a_vec, b_vec, cos) with
+   * a_vec < b_vec; `cos` is the quantized cosine of the brute-force
+   * oracle, `dot_q / sqrt(nrm_a · nrm_b)` in doubles, bit for bit on
+   * either path.
+   *
+   * Path: one job counts the rows and collects the members, at most
+   * [[NearDupScanMax]] + 1 per partition, quantized on the executors.
+   * Scanning every member pair costs n²·dim/2 multiply-adds; the index
+   * costs about ten Spark jobs whatever n is (training, assignment, bucket
+   * stats, the pair join). So up to [[NearDupScanMax]] members, the
+   * most at which the pass won on every measured shape, cosineNearDup
+   * builds no index and answers in ONE
+   * pass: the members ride to every task as one broadcast, and each row of
+   * `emb` meets the members of strictly greater id. Above it the IVF path
+   * ([[ivfNearDup]]) runs, fitted with the decision job's row count.
+   */
+  def cosineNearDup(emb: DataFrame, tau: Double, maxBuckets: Int = 4096): DataFrame = {
+    val base = vectors(emb)
+    countAndMembers(base, NearDupScanMax) match {
+      case (_, Some(ms)) => scanNearDup(base, ms, tau)
+      case (n, None) => ivfNearDup(base, n, tau, maxBuckets)
+    }
+  }
+
+  /** [[cosineNearDup]] through the one pass whatever the member count; the
+    * tests and tools check and time both paths through this and
+    * [[cosineNearDupIvf]]. */
+  private[graft] def cosineNearDupScan(emb: DataFrame, tau: Double): DataFrame = {
+    val base = vectors(emb)
+    scanNearDup(base, countAndMembers(base, Int.MaxValue)._2.get, tau)
+  }
+
+  /** [[cosineNearDup]] through the IVF index whatever the member count. */
+  private[graft] def cosineNearDupIvf(emb: DataFrame, tau: Double, maxBuckets: Int = 4096): DataFrame = {
+    val base = vectors(emb)
+    ivfNearDup(base, base.count(), tau, maxBuckets)
+  }
+
+  /** cosineNearDup scans instead of indexing up to this many members.
+    * Timed with `graft.tools.AnnPathTiming neardup` (unit vectors, spread
+    * 0.08, local[4] on a 4-core box), median seconds of pass / index:
+    *
+    * {{{
+    *   shape                        dim      3000       6000      12000      16000      24000      48000
+    *   clusters of 50, tau 0.95      16   0.18/0.96  0.25/1.08  0.74/2.73          -  2.16/12.7  7.40/52.5
+    *   clusters of 50, tau 0.95     128   0.32/1.56  0.61/3.91  1.76/16.7          -  5.89/50.2          -
+    *   64 clusters, tau 0.999        16          -  0.29/0.93  0.64/0.94  1.06/1.42  2.18/1.36          -
+    *   64 clusters, tau 0.999       128          -  0.60/1.49  1.82/2.34  3.29/3.07          -          -
+    * }}}
+    *
+    * With clusters of 50 the index's √n buckets each hold several
+    * clusters and prune little, so the pass won every pair at every size.
+    * With fewer clusters than buckets the index prunes to about n²/64
+    * candidate pairs, and it won from 16000 members at 128 dims and at
+    * 24000 at 16 dims (medians of 3 runs). The pass also holds every
+    * member on the driver and in each executor, 8·dim bytes apiece. */
+  private[join] val NearDupScanMax = 12000
+
+  /** (vec_id, embedding) of `emb`, with the functions installed. */
+  private def vectors(emb: DataFrame): DataFrame = {
+    GraftFunctions.install(emb.sparkSession)
+    emb.select(col("vec_id"), col("embedding"))
+  }
+
+  /** Quantized members sorted by id: member i is `vals(off(i) until
+    * off(i + 1))`, with id `ids(i)` and squared norm `nrm(i)`. */
+  private case class Members(ids: Array[Long], off: Array[Int], vals: Array[Long], nrm: Array[Long]) {
+    /** Index of the first member whose id is greater than `id`. */
+    def above(id: Long): Int = {
+      var lo = 0; var hi = ids.length
+      while (lo < hi) { val m = (lo + hi) >>> 1; if (ids(m) <= id) lo = m + 1 else hi = m }
+      lo
+    }
+  }
+
+  /** `v` quantized as `vec_dot_q` does: ×1000, floor + 0.5. */
+  private def quantize(v: ArrayData): Array[Long] =
+    Array.tabulate(v.numElements())(i => math.floor(v.getFloat(i).toDouble * 1000 + 0.5).toLong)
+
+  /** The integer dot of `a` with `b(from until to)`, over the shorter. */
+  @inline private def dotQ(a: Array[Long], b: Array[Long], from: Int, to: Int): Long = {
+    val m = math.min(a.length, to - from)
+    var s = 0L; var i = 0
+    while (i < m) { s += a(i) * b(from + i); i += 1 }
+    s
+  }
+
+  /** One job over `base` (vec_id, embedding): its row count and, when it
+    * holds at most `cap` members, the members. Each partition keeps at
+    * most cap + 1 of them, so a large input fails over to the index
+    * without flooding the driver. */
+  private def countAndMembers(base: DataFrame, cap: Int): (Long, Option[Members]) = {
+    val parts = base.queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L
+      val kept = Array.newBuilder[(Long, Array[Long], Long)]
+      var nKept = 0L
+      it.foreach { r =>
+        n += 1
+        if (nKept <= cap && !r.isNullAt(0) && !r.isNullAt(1)) {
+          val v = quantize(r.getArray(1))
+          val nrm = dotQ(v, v, 0, v.length)
+          if (nrm != 0) { kept += ((r.getLong(0), v, nrm)); nKept += 1 }
+        }
+      }
+      Iterator((n, kept.result()))
+    }.collect()
+    val n = parts.map(_._1).sum
+    val ms = parts.flatMap(_._2)
+    if (ms.length > cap) (n, None)
+    else {
+      val sorted = ms.sortBy(_._1)
+      (n, Some(Members(sorted.map(_._1), sorted.scanLeft(0)(_ + _._2.length), sorted.flatMap(_._2),
+        sorted.map(_._3))))
+    }
+  }
+
+  /** The one pass of [[cosineNearDup]]: every member row of `base` against
+    * the broadcast members of greater id. */
+  private def scanNearDup(base: DataFrame, ms: Members, tau: Double): DataFrame = {
+    val spark = base.sparkSession
+    import spark.implicits._
+    val bm = spark.sparkContext.broadcast(ms)
+    base.queryExecution.toRdd.mapPartitions { it =>
+      val m = bm.value
+      it.flatMap { r =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          val a = quantize(r.getArray(1))
+          val na = dotQ(a, a, 0, a.length)
+          if (na != 0) {
+            val id = r.getLong(0)
+            var j = m.above(id)
+            while (j < m.ids.length) {
+              val cos = dotQ(a, m.vals, m.off(j), m.off(j + 1)).toDouble /
+                math.sqrt(na.toDouble * m.nrm(j).toDouble)
+              if (cos >= tau) out += ((id, m.ids(j), cos))
+              j += 1
+            }
+          }
+        }
+        out.iterator
+      }
+    }.toDF("a_vec", "b_vec", "cos")
+  }
+
+  /**
+   * The IVF path of [[cosineNearDup]] over `base` of `n` rows. Bucket-pair
+   * pruning: members of buckets i, j satisfy
    * cos(x, y) ≤ cos(max(0, angle(c_i, c_j) − r_i − r_j)), so bucket pairs
    * whose bound clears tau − ε are the only ones joined — an equi-join on
    * the broadcast bucket-pair list. On CLUSTERED embeddings this prunes
    * most pairs; on uniformly random vectors (the synthetic fixture) radii
    * approach 90° and no exact algorithm can prune, so the join degenerates
-   * to all-pairs — a data property, not a plan defect. Members with a
-   * null embedding or a zero norm have no cosine and pair with nothing.
-   * Output: (a_vec, b_vec, cos) with a_vec < b_vec.
+   * to all-pairs — a data property, not a plan defect.
    */
-  def cosineNearDup(emb: DataFrame, tau: Double, maxBuckets: Int = 4096): DataFrame = {
-    val spark = emb.sparkSession
-    GraftFunctions.install(spark)
+  private def ivfNearDup(base: DataFrame, n: Long, tau: Double, maxBuckets: Int): DataFrame = {
+    val spark = base.sparkSession
     import spark.implicits._
 
-    val base = emb.select(col("vec_id"), col("embedding"))
-    val cents = fitCentroids(base, maxBuckets)
+    val cents = fit(base, n, maxBuckets, 3)
     val centBytes = packCentroids(cents)
 
     // a member with a null embedding or a zero norm has no cosine (0/0:
@@ -327,8 +477,7 @@ object AnnIndex {
   /** (vec_id, embedding) of `emb`, its row count and its query rows. */
   private def prepare(emb: DataFrame, queryPred: Column,
                       maxQueries: Int): (DataFrame, Long, Queries) = {
-    GraftFunctions.install(emb.sparkSession)
-    val base = emb.select(col("vec_id"), col("embedding"))
+    val base = vectors(emb)
     val (n, qs) = countAndQueries(base, queryPred, maxQueries)
     (base, n, qs)
   }

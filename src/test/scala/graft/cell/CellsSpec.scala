@@ -78,6 +78,19 @@ class CellsSpec extends AnyFunSuite {
       .contains(Cells.cellId(10, 87, 8)))
   }
 
+  test("compact cover past ±85.05°: the edge rows reach out as in cover") {
+    // the packed levels 5..12 of a triangle wholly past MAX_LAT: cellId
+    // clamps (10, 87) into the top row, whose ancestor chain must meet them
+    val tri = Wkt.read("POLYGON ((0 86, 20 86, 10 89, 0 86))")
+    val packed = Cells.compactCover(tri, 5, 12)
+    assert(packed.nonEmpty)
+    val chain = Cells.cellAncestors(Cells.cellId(10, 87, 12), 12, 5).toSet
+    assert(packed.count(chain.contains) == 1)
+    val south = Wkt.read("POLYGON ((0 -86, 10 -89, 20 -86, 0 -86))")
+    val sChain = Cells.cellAncestors(Cells.cellId(10, -87, 12), 12, 5).toSet
+    assert(Cells.compactCover(south, 5, 12).count(sChain.contains) == 1)
+  }
+
   test("known golden vectors") {
     // level 1: world split in 4; (0,0)+ε is the NE quadrant → tx=1, ty=0
     assert(Cells.cellId(1.0, 1.0, 1) == Cells.morton(1, 0))

@@ -237,11 +237,80 @@ class AnnSpec extends AnyFunSuite {
       cos = dot(va, vb) / math.sqrt(dot(va, va).toDouble * dot(vb, vb).toDouble)
       if cos >= tau
     } yield (a, b, cos)).toSet
-    val got = AnnIndex.cosineNearDup(e, tau).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(want.size > 1000, s"${want.size} pairs")
-    assert(got == want, s"${(got diff want).take(4)} / ${(want diff got).take(4)}")
+    // 398 members take cosineNearDup's one pass; the IVF entry keeps the
+    // index covered
+    for ((path, df) <- Seq("pass" -> AnnIndex.cosineNearDup(e, tau), "ivf" -> AnnIndex.cosineNearDupIvf(e, tau))) {
+      val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got == want, s"$path: ${(got diff want).take(4)} / ${(want diff got).take(4)}")
+    }
     e.unpersist()
+  }
+
+  /** cosineNearDup's one pass joins nothing; its IVF path joins buckets. */
+  private def isPass(df: org.apache.spark.sql.DataFrame): Boolean =
+    !df.queryExecution.executedPlan.toString.contains("Join")
+
+  /** (a_vec, b_vec, cos) rows of `df`, sorted: a bag. */
+  private def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
+
+  test("near-dup pass equals the IVF path and a brute force just below and just above the member cap") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    import spark.implicits._
+    val dim = 8
+    val tau = 0.995
+    val cap = AnnIndex.NearDupScanMax
+    for (members <- Seq(cap, cap + 1)) {
+      // `members` unit vectors in clusters of about 40, ids shuffled so
+      // that no id range holds a cluster, and no id above 10 * members.
+      // Duplicate ids: 5 twice with one vector, 7 twice with two. Holes,
+      // which are no members: a null vec_id, a null embedding and the zero
+      // vector. The session keeps its default ANSI setting.
+      val r = new scala.util.Random(members)
+      val centres = Array.fill(members / 40)(Array.fill(dim)(r.nextGaussian()))
+      def vec(): Seq[Float] = {
+        val v = centres(r.nextInt(centres.length)).map(_ + 0.08 * r.nextGaussian())
+        val n = math.sqrt(v.map(x => x * x).sum)
+        v.map(x => (x / n).toFloat).toSeq
+      }
+      val ids = r.shuffle((10L until 10L * members).toVector).take(members - 4)
+      val rows: Seq[(Option[Long], Seq[Float])] =
+        ids.map(i => (Some(i), vec())) ++ {
+          val v5 = vec()
+          Seq((Some(5L), v5), (Some(5L), v5), (Some(7L), vec()), (Some(7L), vec()),
+            (None, vec()), (Some(8L), null), (Some(9L), Seq.fill(dim)(0f)))
+        }
+      val e = rows.toDF("vec_id", "embedding").repartition(4).cache()
+
+      // the quantized metric of vec_dot_q, on the driver
+      val q = rows.collect { case (Some(id), v) if v != null =>
+        (id, v.map(x => math.floor(x * 1000.0 + 0.5).toLong).toArray) }
+        .map { case (id, v) => (id, v, v.map(x => x * x).sum) }
+        .filter(_._3 != 0).toArray
+      assert(q.length == members)
+      val want = Vector.newBuilder[(Long, Long, Double)]
+      for (i <- q.indices; j <- q.indices if q(i)._1 < q(j)._1) {
+        val (a, va, na) = q(i); val (b, vb, nb) = q(j)
+        var d = 0L; var t = 0
+        while (t < dim) { d += va(t) * vb(t); t += 1 }
+        val cos = d.toDouble / math.sqrt(na.toDouble * nb.toDouble)
+        if (cos >= tau) want += ((a, b, cos))
+      }
+      val brute = want.result().sorted
+
+      val got = AnnIndex.cosineNearDup(e, tau)
+      assert(isPass(got) == (members <= cap), s"$members members: wrong path")
+      val ivf = AnnIndex.cosineNearDupIvf(e, tau)
+      assert(!isPass(ivf))
+      val g = pairs(got)
+      assert(brute.length > members, s"${brute.length} pairs")
+      assert(g == brute, s"$members members: ${g.diff(brute).take(4)} / ${brute.diff(g).take(4)}")
+      assert(pairs(ivf) == brute)
+      assert(g.count(p => p._1 == 5L || p._2 == 5L) % 2 == 0)
+      e.unpersist()
+    }
   }
 
   test("writeIndex and topKIndexed skip a null-embedding member") {
@@ -291,6 +360,30 @@ class AnnSpec extends AnyFunSuite {
     stages.asScala.map(_.intValue).toSeq
   }
 
+  test("the near-dup pass runs at most 2 Spark jobs and writes no shuffle bytes") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    val e = synth(500).cache()
+    e.count()
+    AnnIndex.cosineNearDup(e, 0.9).collect() // warm
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    var got: org.apache.spark.sql.DataFrame = null
+    var n = 0
+    Thread.sleep(500) // listener events are async; drain the warm-up's
+    spark.sparkContext.addSparkListener(listener)
+    val jobs = try jobStages { got = AnnIndex.cosineNearDup(e, 0.9); n = got.collect().length }
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(isPass(got))
+    assert(n > 1000, s"$n pairs")
+    assert(jobs.size <= 2, s"${jobs.size} jobs")
+    assert(shuffled.get == 0, s"${shuffled.get} shuffle bytes")
+    e.unpersist()
+  }
+
   test("the one-scan top-k runs at most 4 Spark jobs") {
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.install(spark)
@@ -300,6 +393,28 @@ class AnnSpec extends AnyFunSuite {
     val jobs = jobStages { got = AnnIndex.topK(e, col("vec_id") < 10, k = 3); got.collect() }
     assert(isScan(got)) // 10 queries
     assert(jobs.size <= 4, s"${jobs.size} jobs")
+  }
+
+  test("fitCentroids seeds from many clusters when ids cycle through them") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    import spark.implicits._
+    // analytics-shaped: 3000 unit vectors, 16 dims, cluster i % 60, so
+    // k = 54. Seeding from every 55th id reached 12 of the 60 clusters; a
+    // random draw of 54 reaches about 35
+    val r = new scala.util.Random(1)
+    val centres = Array.fill(60)(Array.fill(16)(r.nextGaussian()))
+    def unit(v: Array[Double]): Array[Double] = { val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n) }
+    val rows = (0 until 3000).map { i =>
+      (i.toLong, unit(centres(i % 60).map(_ + 0.08 * r.nextGaussian())).map(_.toFloat).toSeq)
+    }
+    val e = rows.toDF("vec_id", "embedding").repartition(4).cache()
+    val init = AnnIndex.fitCentroids(e, iters = 0)
+    assert(init.length == 54)
+    val units = centres.map(unit)
+    val reached = init.map(c => units.indices.maxBy(j => units(j).zip(c).map(t => t._1 * t._2).sum)).toSet
+    assert(reached.size == 35, s"${reached.size} clusters")
+    e.unpersist()
   }
 
   test("fitCentroids runs one single-stage job per Lloyd round") {

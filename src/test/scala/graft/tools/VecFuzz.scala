@@ -12,8 +12,11 @@ import org.apache.spark.sql.expressions.Window
  * kCoarse, distribution, k, query-set) configurations of Pq.topK,
  * Pq.topKSketched, Pq.topKIvfPq and AnnIndex.topK's two paths
  * (AnnIndex.topKScan, AnnIndex.topKIvf), each checked for SET
- * EQUALITY against the brute-force ranking in the same metric. Exits 1
- * with the failing config on any divergence. Not part of `sbt test`.
+ * EQUALITY against the brute-force ranking in the same metric, and
+ * AnnIndex.cosineNearDup's two paths (cosineNearDup's one pass at these
+ * sizes, cosineNearDupIvf), each checked for BAG equality against a
+ * driver brute force. Exits 1 with the failing config on any divergence.
+ * Not part of `sbt test`.
  *
  * Usage: Test/runMain graft.tools.VecFuzz [seed] [configs]
  */
@@ -65,10 +68,10 @@ object VecFuzz {
         .where(col("rank") <= k)
         .select(col("q_vec"), col("p_vec"), col("rank")))
 
-      def fail(which: String, got: Set[(Long, Long, Long)], want: Set[(Long, Long, Long)]): Unit = {
+      def fail(which: String, got: Iterable[Product], want: Iterable[Product]): Unit = {
         System.err.println(s"[vecfuzz] FAIL $which config#$t: n=$n dim=$dim m=$m kCodes=$kCodes " +
           s"kCoarse=$kCoarse clusters=$clusters jitter=$jitter k=$k qmod=$qmod dataSeed=$dataSeed " +
-          s"diff=${(got diff want).take(4)} / ${(want diff got).take(4)}")
+          s"diff=${got.toSeq.diff(want.toSeq).take(4)} / ${want.toSeq.diff(got.toSeq).take(4)}")
         sys.exit(1)
       }
 
@@ -99,6 +102,35 @@ object VecFuzz {
       if (d != bruteCos) fail("AnnIndex.topKScan", d, bruteCos)
       val d2 = s3(AnnIndex.topKIvf(e, pred, k))
       if (d2 != bruteCos) fail("AnnIndex.topKIvf", d2, bruteCos)
+
+      // near-duplicate pairs in the same quantized metric, on the driver.
+      // tau is the cosine that about 20000 pairs reach, read off 200000
+      // sampled pairs, so a one-cluster config stays small
+      val qv = rows.map(_._2.map(x => math.floor(x.toDouble * 1000 + 0.5).toLong))
+      val qn = qv.map(v => v.map(x => x * x).sum)
+      def cosQ(i: Int, j: Int): Double = {
+        var d = 0L; var c = 0
+        while (c < dim) { d += qv(i)(c) * qv(j)(c); c += 1 }
+        d.toDouble / math.sqrt(qn(i).toDouble * qn(j).toDouble)
+      }
+      val pick = new scala.util.Random(dataSeed)
+      val sample = Array.fill(200000) {
+        val i = pick.nextInt(n); val j = pick.nextInt(n)
+        if (i == j || qn(i) == 0 || qn(j) == 0) -2.0 else cosQ(i, j)
+      }.sorted
+      val tau = sample(math.max(0, sample.length - 1 - (200000.0 * 20000 / (n.toDouble * (n - 1) / 2)).toInt))
+      val nearBrute = Vector.newBuilder[(Long, Long, Double)]
+      for (i <- 0 until n if qn(i) != 0; j <- i + 1 until n if qn(j) != 0) {
+        val c = cosQ(i, j)
+        if (c >= tau) nearBrute += ((i.toLong, j.toLong, c))
+      }
+      val near = nearBrute.result().sorted
+      def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+        df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
+      val f = pairs(AnnIndex.cosineNearDup(e, tau))
+      if (f != near) fail(s"AnnIndex.cosineNearDup tau=$tau", f, near)
+      val f2 = pairs(AnnIndex.cosineNearDupIvf(e, tau))
+      if (f2 != near) fail(s"AnnIndex.cosineNearDupIvf tau=$tau", f2, near)
 
       e.unpersist()
       if (t % 5 == 0) System.err.println(
