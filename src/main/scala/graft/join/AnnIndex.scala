@@ -1,13 +1,17 @@
 package graft.join
 
 import graft.sql.{GraftFunctions, K}
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.RowsLiteral
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import scala.reflect.ClassTag
 
 /**
  * EXACT cosine top-k via a spherical-k-means IVF index (SURVEY §2.6
@@ -230,8 +234,9 @@ object AnnIndex {
    * oracle, `dot_q / sqrt(nrm_a · nrm_b)` in doubles, bit for bit on
    * either path.
    *
-   * Path: one job counts the rows and collects the members, at most
-   * [[NearDupScanMax]] + 1 per partition, quantized on the executors.
+   * Path: one job counts the rows and the members and collects the
+   * members, quantized on the executors, through [[countAndKeep]], so at
+   * most [[NearDupScanMax]] plus one per partition reach the driver.
    * Scanning every member pair costs n²·dim/2 multiply-adds; the index
    * costs about ten Spark jobs whatever n is (training, assignment, bucket
    * stats, the pair join). So up to [[NearDupScanMax]] members, the
@@ -283,15 +288,22 @@ object AnnIndex {
     * member on the driver and in each executor, 8·dim bytes apiece. */
   private[join] val NearDupScanMax = 12000
 
-  /** (vec_id, embedding) of `emb`, with the functions installed. */
+  /** (vec_id, embedding) of `emb`, with the functions installed. The
+    * passes read the rows directly, so the types are checked here: both
+    * paths fail alike on an int id or a double embedding. */
   private def vectors(emb: DataFrame): DataFrame = {
     GraftFunctions.install(emb.sparkSession)
-    emb.select(col("vec_id"), col("embedding"))
+    val base = emb.select(col("vec_id"), col("embedding"))
+    val Seq(id, e) = base.schema.fields.toSeq.map(_.dataType)
+    require(id == LongType, s"AnnIndex: vec_id must be bigint, not ${id.simpleString}")
+    require(e match { case ArrayType(FloatType, _) => true; case _ => false },
+      s"AnnIndex: embedding must be array<float>, not ${e.simpleString}")
+    base
   }
 
   /** Quantized members sorted by id: member i is `vals(off(i) until
     * off(i + 1))`, with id `ids(i)` and squared norm `nrm(i)`. */
-  private case class Members(ids: Array[Long], off: Array[Int], vals: Array[Long], nrm: Array[Long]) {
+  private[join] case class Members(ids: Array[Long], off: Array[Int], vals: Array[Long], nrm: Array[Long]) {
     /** Index of the first member whose id is greater than `id`. */
     def above(id: Long): Int = {
       var lo = 0; var hi = ids.length
@@ -312,32 +324,64 @@ object AnnIndex {
     s
   }
 
+  /** A (vec_id, embedding) row as (id, quantized vector, squared norm)
+    * when it is a member: it has an id, an embedding and a non-zero norm. */
+  private def member(r: InternalRow): Option[(Long, Array[Long], Long)] =
+    if (r.isNullAt(0) || r.isNullAt(1)) None
+    else {
+      val v = quantize(r.getArray(1))
+      val nrm = dotQ(v, v, 0, v.length)
+      if (nrm == 0) None else Some((r.getLong(0), v, nrm))
+    }
+
   /** One job over `base` (vec_id, embedding): its row count and, when it
-    * holds at most `cap` members, the members. Each partition keeps at
-    * most cap + 1 of them, so a large input fails over to the index
-    * without flooding the driver. */
-  private def countAndMembers(base: DataFrame, cap: Int): (Long, Option[Members]) = {
-    val parts = base.queryExecution.toRdd.mapPartitions { it =>
-      var n = 0L
-      val kept = Array.newBuilder[(Long, Array[Long], Long)]
-      var nKept = 0L
+    * holds at most `cap` members, the members. */
+  private[join] def countAndMembers(base: DataFrame, cap: Int): (Long, Option[Members]) =
+    countAndKeep(base.queryExecution.toRdd, cap)(member) match {
+      case (n, None) => (n, None)
+      case (n, Some(ms)) =>
+        val sorted = ms.sortBy(_._1)
+        (n, Some(Members(sorted.map(_._1), sorted.scanLeft(0)(_ + _._2.length), sorted.flatMap(_._2),
+          sorted.map(_._3))))
+    }
+
+  /**
+   * The row count of `rows` and, when `keep` picks at most `cap` of them,
+   * the picks in partition order. Bounded for the driver whatever the
+   * input: in the one job over every partition, a partition sends its
+   * picks only while it holds at most its share, cap / P + 1 of P, and
+   * otherwise sends just its counts, so at most cap + P picks reach the
+   * driver. A partition stops picking past cap + 1, which already decides
+   * the answer. When the picks fit under the cap but some partition held
+   * more than its share, a second job collects just those partitions,
+   * each bounded by the count the first job saw.
+   */
+  private def countAndKeep[T: ClassTag](rows: RDD[InternalRow], cap: Int)(
+      keep: InternalRow => Option[T]): (Long, Option[Array[T]]) = {
+    // (rows, picks up to cap + 1, the picks when at most `share` of them)
+    def scan(share: Long, it: Iterator[InternalRow]): (Long, Long, Option[Array[T]]) = {
+      var n = 0L; var m = 0L
+      val kept = Array.newBuilder[T]
       it.foreach { r =>
         n += 1
-        if (nKept <= cap && !r.isNullAt(0) && !r.isNullAt(1)) {
-          val v = quantize(r.getArray(1))
-          val nrm = dotQ(v, v, 0, v.length)
-          if (nrm != 0) { kept += ((r.getLong(0), v, nrm)); nKept += 1 }
-        }
+        if (m <= cap) keep(r).foreach { x => m += 1; if (m <= share) kept += x }
       }
-      Iterator((n, kept.result()))
-    }.collect()
+      (n, m, if (m <= share) Some(kept.result()) else None)
+    }
+    val share = cap.toLong / math.max(1, rows.getNumPartitions) + 1
+    val parts = rows.mapPartitions(it => Iterator(scan(share, it))).collect()
     val n = parts.map(_._1).sum
-    val ms = parts.flatMap(_._2)
-    if (ms.length > cap) (n, None)
+    if (parts.map(_._2).sum > cap) (n, None)
     else {
-      val sorted = ms.sortBy(_._1)
-      (n, Some(Members(sorted.map(_._1), sorted.scanLeft(0)(_ + _._2.length), sorted.flatMap(_._2),
-        sorted.map(_._3))))
+      val held = parts.indices.filter(parts(_)._3.isEmpty)
+      val seen = held.map(p => p -> parts(p)._2).toMap
+      val late = if (held.isEmpty) Map.empty[Int, Option[Array[T]]]
+        else held.zip(rows.sparkContext.runJob(rows,
+          (ctx: TaskContext, it: Iterator[InternalRow]) => scan(seen(ctx.partitionId()), it)._3, held)).toMap
+      val all = parts.indices.map(p => late.getOrElse(p, parts(p)._3))
+      // a partition that picks more the second time (a nondeterministic
+      // input) withholds its picks: the answer is then "over the cap"
+      if (all.exists(_.isEmpty)) (n, None) else (n, Some(all.flatMap(_.get).toArray))
     }
   }
 
@@ -351,18 +395,13 @@ object AnnIndex {
       val m = bm.value
       it.flatMap { r =>
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val a = quantize(r.getArray(1))
-          val na = dotQ(a, a, 0, a.length)
-          if (na != 0) {
-            val id = r.getLong(0)
-            var j = m.above(id)
-            while (j < m.ids.length) {
-              val cos = dotQ(a, m.vals, m.off(j), m.off(j + 1)).toDouble /
-                math.sqrt(na.toDouble * m.nrm(j).toDouble)
-              if (cos >= tau) out += ((id, m.ids(j), cos))
-              j += 1
-            }
+        member(r).foreach { case (id, a, na) =>
+          var j = m.above(id)
+          while (j < m.ids.length) {
+            val cos = dotQ(a, m.vals, m.off(j), m.off(j + 1)).toDouble /
+              math.sqrt(na.toDouble * m.nrm(j).toDouble)
+            if (cos >= tau) out += ((id, m.ids(j), cos))
+            j += 1
           }
         }
         out.iterator
@@ -483,8 +522,8 @@ object AnnIndex {
   }
 
   /** One job over `base` (vec_id, embedding): its row count and the rows
-    * matching `queryPred`. Each partition keeps at most maxQueries + 1 of
-    * them, so a too-wide queryPred fails without flooding the driver. A
+    * matching `queryPred`, collected through [[countAndKeep]], so a
+    * too-wide queryPred fails without flooding the driver. A
     * query without an embedding or with a zero norm has no cosine with
     * anything (0/0: null, or an error under ANSI mode), so it answers no
     * rows and is dropped after the check. */
@@ -492,23 +531,13 @@ object AnnIndex {
                               maxQueries: Int): (Long, Queries) = {
     val flagged = base.select(when(queryPred, struct(col("vec_id").as("q_vec"), col("embedding").as("q_emb"),
       call_function("vec_dot_q", col("embedding"), col("embedding")).as("q_nrm"))).as("q"))
-    val cap = maxQueries.toLong + 1
-    val parts = flagged.queryExecution.toRdd.mapPartitions { it =>
-      var n = 0L
-      val kept = Array.newBuilder[InternalRow]
-      var nKept = 0L
-      it.foreach { r =>
-        n += 1
-        if (nKept < cap && !r.isNullAt(0)) { kept += r.getStruct(0, 3).copy(); nKept += 1 }
-      }
-      Iterator((n, kept.result()))
-    }.collect()
-    val hits = parts.flatMap(_._2)
-    require(hits.length <= maxQueries,
+    val (n, hits) = countAndKeep(flagged.queryExecution.toRdd, maxQueries)(r =>
+      if (r.isNullAt(0)) None else Some(r.getStruct(0, 3).copy()))
+    require(hits.isDefined,
       s"AnnIndex.topK materializes the query side on the driver; queryPred " +
         s"matches > $maxQueries rows. Shrink the query set, raise maxQueries " +
         s"deliberately, or use cosineNearDup for set-vs-set workloads.")
-    (parts.map(_._1).sum, Queries(hits.filter(r => !r.isNullAt(2) && r.getLong(2) != 0),
+    (n, Queries(hits.get.filter(r => !r.isNullAt(2) && r.getLong(2) != 0),
       flagged.schema(0).dataType.asInstanceOf[StructType]))
   }
 

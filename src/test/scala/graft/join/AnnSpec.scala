@@ -384,6 +384,62 @@ class AnnSpec extends AnyFunSuite {
     e.unpersist()
   }
 
+  /** n `dim`-dim vectors in `parts` partitions; rows with id ≥ `holeFrom`
+    * have a null embedding, so they are no members. */
+  private def wide(n: Long, parts: Int, dim: Int, holeFrom: Long): org.apache.spark.sql.DataFrame =
+    spark.range(0, n, 1, parts).toDF("vec_id")
+      .withColumn("embedding", when(col("vec_id") < holeFrom, array((0 until dim).map(j =>
+        (sin(col("vec_id") * (j + 1) * 0.7 + j) * 0.5 + 0.6).cast("float")): _*)))
+
+  test("the near-dup decision sends the driver at most cap + P members whatever the partitioning") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    val cap = AnnIndex.NearDupScanMax
+    val dim = 64 // 512 bytes a quantized member
+    val parts = 100
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => resultBytes.addAndGet(m.resultSize))
+    }
+    // 2 * cap members, 240 a partition: each partition alone is under the
+    // cap, so a per-partition bound would send all of them (12 MB)
+    val over = wide(2L * cap, parts, dim, Long.MaxValue)
+    Thread.sleep(500) // listener events are async; drain
+    spark.sparkContext.addSparkListener(listener)
+    val (n, ms) = try { val r = AnnIndex.countAndMembers(over, cap); Thread.sleep(500); r }
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(n == 2L * cap)
+    assert(ms.isEmpty)
+    assert(resultBytes.get < 8L * dim * (cap + parts), s"${resultBytes.get} result bytes")
+
+    // under the cap, but every member in partition 0, over its share of
+    // cap / 100 + 1: a second job collects just that partition
+    val skewed = wide(200L * parts, parts, dim, 200)
+    var got: (Long, Option[AnnIndex.Members]) = null
+    val jobs = jobStages { got = AnnIndex.countAndMembers(skewed, cap) }
+    assert(jobs.size == 2, s"${jobs.size} jobs")
+    assert(got._1 == 200L * parts)
+    assert(got._2.map(_.ids.toSeq) == Some(0L until 200L))
+    assert(got._2.get.off.last == 200 * dim)
+  }
+
+  test("cosineNearDup and topK refuse an int vec_id and a double embedding on both paths") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    val base = synth(50)
+    val doubles = base.withColumn("embedding", col("embedding").cast("array<double>"))
+    val ints = base.withColumn("vec_id", col("vec_id").cast("int"))
+    for ((df, what) <- Seq(doubles -> "array<float>", ints -> "bigint")) {
+      val calls: Seq[() => Any] = Seq(() => AnnIndex.cosineNearDup(df, 0.9), () => AnnIndex.cosineNearDupIvf(df, 0.9),
+        () => AnnIndex.topK(df, col("vec_id") < 5, k = 3), () => AnnIndex.topKIvf(df, col("vec_id") < 5, k = 3))
+      for (c <- calls) {
+        val err = intercept[IllegalArgumentException](c())
+        assert(err.getMessage.contains(what), err.getMessage)
+      }
+    }
+  }
+
   test("the one-scan top-k runs at most 4 Spark jobs") {
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.install(spark)
