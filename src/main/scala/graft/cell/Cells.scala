@@ -1,6 +1,6 @@
 package graft.cell
 
-import graft.geom.{Env, Geometry, Ops, Pred}
+import graft.geom.{Env, Geometry, Pred}
 import scala.collection.mutable.ArrayBuffer
 
 /**
@@ -174,7 +174,9 @@ object Cells {
    *  - otherwise the relate decides.
    * Other geometry types run the relate for every cell. Since cellId
    * clamps latitudes past ±MAX_LAT into the grid's top and bottom rows,
-   * those rows are tested as reaching out to the envelope's edge there.
+   * and longitudes past ±180° into its first and last columns, those
+   * rows and columns are tested as reaching out to the envelope's edge
+   * there.
    */
   def cover(g: Geometry, level: Int, maxCells: Int = 1 << 20): Array[Long] = {
     val env = g.envelope
@@ -222,12 +224,16 @@ object Cells {
   }
 
   /** [[cellEnvelope]] as [[cover]] tests it: the grid's top and bottom
-    * rows reach out to `env` where it lies past ±MAX_LAT. */
+    * rows reach out to `env` where it lies past ±MAX_LAT, and its first
+    * and last columns where it lies past ±180°. */
   private def coverCellEnvelope(cell: Long, level: Int, env: Env): Env = {
     val e = cellEnvelope(cell, level)
-    val ty = mortonY(cell)
-    Env(e.xmin, if (ty == (1L << level) - 1) math.min(e.ymin, env.ymin) else e.ymin,
-      e.xmax, if (ty == 0) math.max(e.ymax, env.ymax) else e.ymax)
+    val tx = mortonX(cell); val ty = mortonY(cell)
+    val last = (1L << level) - 1
+    Env(if (tx == 0) math.min(e.xmin, env.xmin) else e.xmin,
+      if (ty == last) math.min(e.ymin, env.ymin) else e.ymin,
+      if (tx == last) math.max(e.xmax, env.xmax) else e.xmax,
+      if (ty == 0) math.max(e.ymax, env.ymax) else e.ymax)
   }
 
   private final val Undecided: Byte = 0
@@ -250,6 +256,8 @@ object Cells {
     // [xs(i), xs(i+1)], row j spans [ys(j+1), ys(j)] (ys descends)
     val xs = Array.tabulate(nx + 1)(i => tileXToLon((x0 + i) / n))
     val ys = Array.tabulate(ny + 1)(j => tileYToLat((y0 + j) / n))
+    if (x0 == 0) xs(0) = math.min(xs(0), env.xmin)
+    if (x1 == (1L << level) - 1) xs(nx) = math.max(xs(nx), env.xmax)
     if (y0 == 0) ys(0) = math.max(ys(0), env.ymax)
     if (y1 == (1L << level) - 1) ys(ny) = math.min(ys(ny), env.ymin)
     var scale = math.max(math.max(math.abs(xs(0)), math.abs(xs(nx))),
@@ -370,78 +378,6 @@ object Cells {
       }
       ok
     case _ => false
-  }
-
-  // ---------------- compact (multi-level) covers (r5) ----------------
-  //
-  // S2-style interior compaction: a single-level cover of a polygon costs
-  // O(area / cellArea(L)) rows — at the fine levels big-geometry joins
-  // want, that is the dominant shuffle/broadcast cost (a continent-sized
-  // zone at level 14 is ~10^6 cells). The compact cover instead keeps any
-  // coarse cell FULLY INSIDE the geometry at its coarse level and refines
-  // only boundary-crossing cells, so the row count is O(perimeter /
-  // cellSize(maxLevel) + area / cellArea(minLevel)) — perimeter-bound,
-  // not area-bound. Cells are packed as (cellId << 5) | level (levels
-  // 0..28: cellId < 2^56, so the shift never overflows a Long).
-  //
-  // Disjointness invariant (CompactCoverSpec): the emitted cells PARTITION
-  // the covered region — a quadtree node is emitted XOR recursed into —
-  // so a point's ancestor chain meets the cover in AT MOST one cell and
-  // a join on packed ids preserves exact bag multiplicity with no dedup.
-
-  val COMPACT_MAX_LEVEL = 28
-
-  @inline def packCell(cell: Long, level: Int): Long = (cell << 5) | level
-  @inline def packedCell(p: Long): Long = p >>> 5
-  @inline def packedLevel(p: Long): Int = (p & 31L).toInt
-
-  def compactCover(g: Geometry, minLevel: Int, maxLevel: Int,
-                   maxCells: Int = 1 << 20): Array[Long] = {
-    require(minLevel >= 0 && minLevel <= maxLevel && maxLevel <= COMPACT_MAX_LEVEL,
-      s"compact cover levels out of range: $minLevel..$maxLevel (cap $COMPACT_MAX_LEVEL)")
-    val env = g.envelope
-    if (env.isEmpty) return Array.empty
-    val out = new ArrayBuffer[Long]()
-    def rec(cell: Long, lvl: Int): Unit = {
-      // the edge rows reach out past ±MAX_LAT as in cover(): cellId clamps
-      // every latitude beyond into them
-      val ce = coverCellEnvelope(cell, lvl, env).toPolygon
-      if (!Pred.intersects(ce, g)) return
-      if (lvl == maxLevel || Pred.contains(g, ce)) {
-        if (out.length >= maxCells)
-          throw new IllegalArgumentException(
-            s"st_cover_compact would exceed $maxCells cells at levels $minLevel..$maxLevel; use coarser levels")
-        out += packCell(cell, lvl)
-      } else {
-        var c = 0L
-        while (c < 4) { rec((cell << 2) | c, lvl + 1); c += 1 }
-      }
-    }
-    // seed from the envelope's minLevel tile range (same guard as cover())
-    val x0 = tileX(env.xmin, minLevel); val x1 = tileX(env.xmax, minLevel)
-    val y0 = tileY(env.ymax, minLevel); val y1 = tileY(env.ymin, minLevel)
-    if ((x1 - x0 + 1) * (y1 - y0 + 1) > maxCells.toLong)
-      throw new IllegalArgumentException(
-        s"st_cover_compact minLevel $minLevel spans more than $maxCells seed cells; use a coarser minLevel")
-    var ty = y0
-    while (ty <= y1) {
-      var tx = x0
-      while (tx <= x1) { rec(morton(tx, ty), minLevel); tx += 1 }
-      ty += 1
-    }
-    out.toArray
-  }
-
-  /** The packed ancestor chain of a level-`level` cell down to minLevel —
-    * the point-side keys that meet a disjoint compact cover in ≤1 cell. */
-  def cellAncestors(cell: Long, level: Int, minLevel: Int): Array[Long] = {
-    require(minLevel >= 0 && minLevel <= level && level <= COMPACT_MAX_LEVEL,
-      s"ancestor levels out of range: $minLevel..$level")
-    val out = new Array[Long](level - minLevel + 1)
-    var l = level
-    var c = cell
-    while (l >= minLevel) { out(level - l) = packCell(c, l); c >>>= 2; l -= 1 }
-    out
   }
 
   /** Neighboring cells at ring distance r around a cell (Chebyshev ring). */
@@ -750,128 +686,6 @@ object Cells {
   def parentSphere(cell: Long, level: Int, parentLevel: Int): Long = {
     require(parentLevel <= level, s"parent level $parentLevel > $level")
     cell >> (2 * (level - parentLevel))
-  }
-
-  /** Inverse of [[uvToSt]]: s ∈ [0,1] → u ∈ [-1,1]. */
-  @inline def stToUv(s: Double): Double = math.tan((s - 0.5) * math.Pi)
-
-  /**
-   * RIGOROUS lon/lat bounds of a sphere cell — closed forms per face, no
-   * sampling (soundness is what makes [[coverSphere]] exact):
-   * on equatorial faces lon depends on one uv axis monotonically and
-   * |lat| is maximized where the other axis is closest to 0; on polar
-   * faces lat is a function of the uv radius (extremes at the rect's
-   * closest point / farthest corner from the origin) and the lon interval
-   * is the minimal arc covering the corner angles (attained at corners —
-   * the rect is convex and the origin lies outside, else the pole is
-   * inside and lon is the full circle).
-   * Returns (lonIntervals — one interval, or two when the cell crosses
-   * the antimeridian, or the full circle at a pole — latMin, latMax).
-   */
-  def sphereCellBounds(face: Int, u1: Double, u2: Double, v1: Double, v2: Double):
-      (Array[(Double, Double)], Double, Double) = {
-    @inline def deg(r: Double): Double = math.toDegrees(r)
-    // |lat|-extreme helper for lat = atan(w / sqrt(1 + t^2)), t ∈ [t1,t2]
-    @inline def tNear(t1: Double, t2: Double): Double =
-      if (t1 <= 0 && 0 <= t2) 0.0 else math.min(math.abs(t1), math.abs(t2))
-    @inline def tFar(t1: Double, t2: Double): Double = math.max(math.abs(t1), math.abs(t2))
-    @inline def latOf(w: Double, t: Double): Double = deg(math.atan(w / math.sqrt(1 + t * t)))
-    def eqFaceLats(w1: Double, w2: Double, t1: Double, t2: Double): (Double, Double) = {
-      val lmax = latOf(w2, if (w2 >= 0) tNear(t1, t2) else tFar(t1, t2))
-      val lmin = latOf(w1, if (w1 <= 0) tNear(t1, t2) else tFar(t1, t2))
-      (lmin, lmax)
-    }
-    def wrap(lo: Double, hi: Double): Array[(Double, Double)] =
-      if (lo <= hi) Array((lo, hi)) else Array((-180.0, hi), (lo, 180.0))
-    face match {
-      case 0 => // dir (1, u, v): lon = atan(u); lat = atan(v/√(1+u²))
-        val (lmin, lmax) = eqFaceLats(v1, v2, u1, u2)
-        (Array((deg(math.atan(u1)), deg(math.atan(u2)))), lmin, lmax)
-      case 1 => // dir (-u, 1, v): lon = atan2(1, -u) ↑ in u
-        val (lmin, lmax) = eqFaceLats(v1, v2, u1, u2)
-        (Array((deg(math.atan2(1, -u1)), deg(math.atan2(1, -u2)))), lmin, lmax)
-      case 3 => // dir (-1, -v, -u): lon runs CCW (increasing, wrapping
-        // through ±180) as v increases: v=-1 → +135°, v=0 → 180°≡-180°,
-        // v=+1 → -135°
-        val (lmin, lmax) = eqFaceLats(-u2, -u1, v1, v2)
-        (wrap(deg(math.atan2(-v1, -1)), deg(math.atan2(-v2, -1))), lmin, lmax)
-      case 4 => // dir (v, -1, -u): lon = atan2(-1, v) ↑ in v
-        val (lmin, lmax) = eqFaceLats(-u2, -u1, v1, v2)
-        (Array((deg(math.atan2(-1, v1)), deg(math.atan2(-1, v2)))), lmin, lmax)
-      case 2 | 5 =>
-        // polar: face 2 dir (-u, -v, 1); face 5 dir (v, u, -1)
-        val containsOrigin = u1 <= 0 && 0 <= u2 && v1 <= 0 && 0 <= v2
-        val du = math.max(math.abs(u1), math.abs(u2))
-        val dv = math.max(math.abs(v1), math.abs(v2))
-        val rFar = math.hypot(du, dv)
-        val ru = if (u1 <= 0 && 0 <= u2) 0.0 else math.min(math.abs(u1), math.abs(u2))
-        val rv = if (v1 <= 0 && 0 <= v2) 0.0 else math.min(math.abs(v1), math.abs(v2))
-        val rNear = math.hypot(ru, rv)
-        val latFar = deg(math.atan2(1, rFar))  // |lat| at farthest corner
-        val latNear = if (containsOrigin) 90.0 else deg(math.atan2(1, rNear))
-        val (lmin, lmax) = if (face == 2) (latFar, latNear) else (-latNear, -latFar)
-        if (containsOrigin) (Array((-180.0, 180.0)), lmin, lmax)
-        else {
-          val corners = Array((u1, v1), (u1, v2), (u2, v1), (u2, v2))
-          val angs = corners.map { case (u, v) =>
-            if (face == 2) deg(math.atan2(-v, -u)) else deg(math.atan2(u, v))
-          }.sorted
-          // minimal covering arc: complement of the largest gap
-          var gapAt = 0; var gapSize = -1.0
-          var i = 0
-          while (i < 4) {
-            val next = if (i == 3) angs(0) + 360 else angs(i + 1)
-            val gap = next - angs(i)
-            if (gap > gapSize) { gapSize = gap; gapAt = i }
-            i += 1
-          }
-          // covering arc = complement of the largest gap: starts at the
-          // angle AFTER the gap, ends at the angle where the gap begins
-          val start = angs((gapAt + 1) % 4)
-          val end = angs(gapAt)
-          (wrap(start, end), lmin, lmax)
-        }
-      case other => throw new IllegalArgumentException(s"bad face $other")
-    }
-  }
-
-  /**
-   * Cells at `level` intersecting a non-wrapping lon/lat rectangle —
-   * recursive descent from the 6 face roots using [[sphereCellBounds]]
-   * (sound: a point in the rect always lands in an emitted cell —
-   * CellsSpec cover-soundness fuzz). The spherical counterpart of
-   * [[cover]] for the polar-safe join path.
-   */
-  def coverSphere(xmin: Double, ymin: Double, xmax: Double, ymax: Double,
-                  level: Int): Array[Long] = {
-    require(level >= 0 && level <= 15, s"cover level $level out of [0,15]")
-    val out = new scala.collection.mutable.ArrayBuffer[Long]()
-    // 1e-9° pad: the closed-form bounds are exact in real arithmetic; the
-    // pad absorbs atan/atan2 rounding so boundary points never fall out
-    val EPS = 1e-9
-    def overlaps(b: (Array[(Double, Double)], Double, Double)): Boolean = {
-      val (lons, lmin, lmax) = b
-      if (lmax + EPS < ymin || lmin - EPS > ymax) return false
-      lons.exists { case (lo, hi) => hi + EPS >= xmin && lo - EPS <= xmax }
-    }
-    def rec(face: Int, lvl: Int, si: Long, ti: Long): Unit = {
-      val n = 1L << lvl
-      val u1 = stToUv(si.toDouble / n); val u2 = stToUv((si + 1).toDouble / n)
-      val v1 = stToUv(ti.toDouble / n); val v2 = stToUv((ti + 1).toDouble / n)
-      if (!overlaps(sphereCellBounds(face, u1, u2, v1, v2))) return
-      if (lvl == level) {
-        out += (face.toLong << (2 * level)) | spread(si) | (spread(ti) << 1)
-      } else {
-        var c = 0
-        while (c < 4) {
-          rec(face, lvl + 1, si * 2 + (c & 1), ti * 2 + (c >> 1))
-          c += 1
-        }
-      }
-    }
-    var f = 0
-    while (f < 6) { rec(f, 0, 0, 0); f += 1 }
-    out.toArray
   }
 
   /** ANSI-SQL replica of [[cellIdSphere]] (the q73 oracle contract —

@@ -1,8 +1,6 @@
 package graft.join
 
 import graft.sql.{GraftFunctions, K}
-import org.apache.spark.TaskContext
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -10,8 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.RowsLiteral
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructType}
 import org.apache.spark.storage.StorageLevel
-
-import scala.reflect.ClassTag
 
 /**
  * EXACT cosine top-k via a spherical-k-means IVF index (SURVEY §2.6
@@ -235,8 +231,8 @@ object AnnIndex {
    * either path.
    *
    * Path: one job counts the rows and the members and collects the
-   * members, quantized on the executors, through [[countAndKeep]], so at
-   * most [[NearDupScanMax]] plus one per partition reach the driver.
+   * members, quantized on the executors, through [[Bounded.countAndKeep]],
+   * so at most [[NearDupScanMax]] plus one per partition reach the driver.
    * Scanning every member pair costs n²·dim/2 multiply-adds; the index
    * costs about ten Spark jobs whatever n is (training, assignment, bucket
    * stats, the pair join). So up to [[NearDupScanMax]] members, the
@@ -337,53 +333,13 @@ object AnnIndex {
   /** One job over `base` (vec_id, embedding): its row count and, when it
     * holds at most `cap` members, the members. */
   private[join] def countAndMembers(base: DataFrame, cap: Int): (Long, Option[Members]) =
-    countAndKeep(base.queryExecution.toRdd, cap)(member) match {
+    Bounded.countAndKeep(base.queryExecution.toRdd, cap)(() => member) match {
       case (n, None) => (n, None)
       case (n, Some(ms)) =>
         val sorted = ms.sortBy(_._1)
         (n, Some(Members(sorted.map(_._1), sorted.scanLeft(0)(_ + _._2.length), sorted.flatMap(_._2),
           sorted.map(_._3))))
     }
-
-  /**
-   * The row count of `rows` and, when `keep` picks at most `cap` of them,
-   * the picks in partition order. Bounded for the driver whatever the
-   * input: in the one job over every partition, a partition sends its
-   * picks only while it holds at most its share, cap / P + 1 of P, and
-   * otherwise sends just its counts, so at most cap + P picks reach the
-   * driver. A partition stops picking past cap + 1, which already decides
-   * the answer. When the picks fit under the cap but some partition held
-   * more than its share, a second job collects just those partitions,
-   * each bounded by the count the first job saw.
-   */
-  private def countAndKeep[T: ClassTag](rows: RDD[InternalRow], cap: Int)(
-      keep: InternalRow => Option[T]): (Long, Option[Array[T]]) = {
-    // (rows, picks up to cap + 1, the picks when at most `share` of them)
-    def scan(share: Long, it: Iterator[InternalRow]): (Long, Long, Option[Array[T]]) = {
-      var n = 0L; var m = 0L
-      val kept = Array.newBuilder[T]
-      it.foreach { r =>
-        n += 1
-        if (m <= cap) keep(r).foreach { x => m += 1; if (m <= share) kept += x }
-      }
-      (n, m, if (m <= share) Some(kept.result()) else None)
-    }
-    val share = cap.toLong / math.max(1, rows.getNumPartitions) + 1
-    val parts = rows.mapPartitions(it => Iterator(scan(share, it))).collect()
-    val n = parts.map(_._1).sum
-    if (parts.map(_._2).sum > cap) (n, None)
-    else {
-      val held = parts.indices.filter(parts(_)._3.isEmpty)
-      val seen = held.map(p => p -> parts(p)._2).toMap
-      val late = if (held.isEmpty) Map.empty[Int, Option[Array[T]]]
-        else held.zip(rows.sparkContext.runJob(rows,
-          (ctx: TaskContext, it: Iterator[InternalRow]) => scan(seen(ctx.partitionId()), it)._3, held)).toMap
-      val all = parts.indices.map(p => late.getOrElse(p, parts(p)._3))
-      // a partition that picks more the second time (a nondeterministic
-      // input) withholds its picks: the answer is then "over the cap"
-      if (all.exists(_.isEmpty)) (n, None) else (n, Some(all.flatMap(_.get).toArray))
-    }
-  }
 
   /** The one pass of [[cosineNearDup]]: every member row of `base` against
     * the broadcast members of greater id. */
@@ -522,7 +478,7 @@ object AnnIndex {
   }
 
   /** One job over `base` (vec_id, embedding): its row count and the rows
-    * matching `queryPred`, collected through [[countAndKeep]], so a
+    * matching `queryPred`, collected through [[Bounded.countAndKeep]], so a
     * too-wide queryPred fails without flooding the driver. A
     * query without an embedding or with a zero norm has no cosine with
     * anything (0/0: null, or an error under ANSI mode), so it answers no
@@ -531,7 +487,7 @@ object AnnIndex {
                               maxQueries: Int): (Long, Queries) = {
     val flagged = base.select(when(queryPred, struct(col("vec_id").as("q_vec"), col("embedding").as("q_emb"),
       call_function("vec_dot_q", col("embedding"), col("embedding")).as("q_nrm"))).as("q"))
-    val (n, hits) = countAndKeep(flagged.queryExecution.toRdd, maxQueries)(r =>
+    val (n, hits) = Bounded.countAndKeep(flagged.queryExecution.toRdd, maxQueries)(() => r =>
       if (r.isNullAt(0)) None else Some(r.getStruct(0, 3).copy()))
     require(hits.isDefined,
       s"AnnIndex.topK materializes the query side on the driver; queryPred " +

@@ -79,10 +79,12 @@ private[join] object DenseGraph {
     * rounds: an id type outside [[DenseTypes]], src/dst of another type
     * than the id, or more than `cap` distinct ids (null counts as one).
     *
-    * One job dedups the ids within each partition and ships them while
-    * all partitions together stay within 4·cap ids; a partition holding
-    * more than its share ships only its count, and the ids are then
-    * collected by a bounded distinct instead. */
+    * One job collects the ids through [[Bounded.countAndKeep]], each
+    * partition deduplicating its own (a null id is kept once), with up to
+    * 4·(cap + 1) picks in all; the driver then rejects more than `cap`
+    * distinct ids. Picks past 4·(cap + 1), which repeated ids spread over
+    * many partitions can reach with `cap` or fewer distinct ids, also
+    * take the DataFrame rounds; those give the same rows. */
   def index(edges: DataFrame, srcCol: String, dstCol: String,
             vertices: DataFrame, cap: Int): Option[Index] = {
     val v = vertices.select(col("id"))
@@ -90,36 +92,28 @@ private[join] object DenseGraph {
     val t = idField.dataType
     val eTypes = edges.select(col(srcCol), col(dstCol)).schema.map(_.dataType)
     if (!DenseTypes(t) || eTypes.exists(_ != t)) return None
-    val rows = v.queryExecution.toRdd
-    val share = 4L * (cap + 1) / math.max(1, rows.getNumPartitions)
-    val parts = rows.mapPartitions { it =>
+    val (_, picks) = Bounded.countAndKeep(v.queryExecution.toRdd, 4 * (cap + 1)) { () =>
       val seen = new java.util.HashSet[AnyRef]
       var hasNull = false
-      while (it.hasNext && seen.size <= cap) {
-        val k = read(it.next(), 0, t)
-        if (k == null) hasNull = true
-        else if (!seen.contains(k)) seen.add(k match { case u: UTF8String => u.clone(); case o => o })
+      (r: InternalRow) => read(r, 0, t) match {
+        case null => if (hasNull) None else { hasNull = true; Some(null) }
+        case k if seen.contains(k) => None
+        case k =>
+          val own = k match { case u: UTF8String => u.clone(); case o => o }
+          seen.add(own); Some(own)
       }
-      val n = seen.size + (if (hasNull) 1 else 0)
-      Iterator((n, hasNull, if (n <= share) seen.toArray else null))
-    }.collect()
-    if (parts.exists(_._1 > cap)) return None
-    val keys = new JHashMap[AnyRef, Integer]
-    val ids = new ArrayBuffer[Any]
-    def add(k: AnyRef, id: Any): Unit =
-      if (!keys.containsKey(k)) { keys.put(k, Integer.valueOf(ids.length)); ids += id }
-    var hasNull = parts.exists(_._2)
-    if (parts.forall(_._3 != null)) parts.foreach(_._3.foreach(k => add(k, external(k, t))))
-    else v.distinct().limit(cap + 1).collect().foreach { r =>
-      if (r.isNullAt(0)) hasNull = true else add(keyOf(r.get(0)), r.get(0))
     }
-    if (ids.length + (if (hasNull) 1 else 0) > cap) None
-    else Some(new Index(ids.toArray, keys, hasNull, idField))
-  }
-
-  private def keyOf(v: Any): AnyRef = v match {
-    case s: String => UTF8String.fromString(s)
-    case n: java.lang.Number => java.lang.Long.valueOf(n.longValue)
+    picks.flatMap { ks =>
+      val keys = new JHashMap[AnyRef, Integer]
+      val ids = new ArrayBuffer[Any]
+      var hasNull = false
+      ks.foreach { k =>
+        if (k == null) hasNull = true
+        else if (!keys.containsKey(k)) { keys.put(k, Integer.valueOf(ids.length)); ids += external(k, t) }
+      }
+      if (ids.length + (if (hasNull) 1 else 0) > cap) None
+      else Some(new Index(ids.toArray, keys, hasNull, idField))
+    }
   }
 
   /** The id value of a key, as a Row of type `t` holds it. */

@@ -342,6 +342,22 @@ object SpatialJoins {
   }
 
   /**
+   * ST_ClusterWithin analog — single-linkage clustering: two points land
+   * in the same cluster iff a chain of ≤d hops connects them. Exactly
+   * [[dbscan]] at minPts = 1 (every point is core, no noise, no borders),
+   * which inherits the cell-contraction scale shape: cells of side
+   * d/(2√2) are intra-connected for free, Chebyshev-≤1 cell adjacency is
+   * edge-free (all cross pairs within d), and only label-straddling ring
+   * cells pay an exact ∃-pair check — never a materialized n² pair set.
+   * ⟨ref(engine): clustering is downstream composition of the DISTANCE
+   * operator; this is the Spark-native operatorization [M]⟩
+   *
+   * @return (id, cluster) — cluster = min point id of the cluster
+   */
+  def clusterWithin(points: DataFrame, idCol: String, d: Double): DataFrame =
+    dbscan(points, idCol, d, minPts = 1).select(col("id"), col("cluster"))
+
+  /**
    * Distributed DBSCAN over point rows (planar degree metric, documented —
    * consistent with every BETWEEN oracle), with INTRA-CELL CONTRACTION
    * (judge r4 #2) so the materialized pair set stays LINEAR in N however
@@ -383,22 +399,6 @@ object SpatialJoins {
    * identical semantics (and q85 oracle output) to the uncontracted
    * formulation, at O(Σ n_cell) instead of O(Σ n_cell²) pair rows.
    */
-  /**
-   * ST_ClusterWithin analog — single-linkage clustering: two points land
-   * in the same cluster iff a chain of ≤d hops connects them. Exactly
-   * [[dbscan]] at minPts = 1 (every point is core, no noise, no borders),
-   * which inherits the cell-contraction scale shape: cells of side
-   * d/(2√2) are intra-connected for free, Chebyshev-≤1 cell adjacency is
-   * edge-free (all cross pairs within d), and only label-straddling ring
-   * cells pay an exact ∃-pair check — never a materialized n² pair set.
-   * ⟨ref(engine): clustering is downstream composition of the DISTANCE
-   * operator; this is the Spark-native operatorization [M]⟩
-   *
-   * @return (id, cluster) — cluster = min point id of the cluster
-   */
-  def clusterWithin(points: DataFrame, idCol: String, d: Double): DataFrame =
-    dbscan(points, idCol, d, minPts = 1).select(col("id"), col("cluster"))
-
   def dbscan(points: DataFrame, idCol: String, eps: Double, minPts: Int,
              stats: Option[DbscanStats] = None): DataFrame = {
     require(eps > 0 && minPts >= 1, s"bad dbscan params eps=$eps minPts=$minPts")

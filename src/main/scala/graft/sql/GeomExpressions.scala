@@ -748,28 +748,6 @@ case class StCellIdSphere(first: Expression, second: Expression, third: Expressi
     copy(a, b, c)
 }
 
-/** st_cover_sphere(xmin, ymin, xmax, ymax, level) → array<long> of
-  * spherical cells intersecting the lon/lat rect (rigorous closed-form
-  * face bounds — sound at poles and across face boundaries). */
-case class StCoverSphere(children: Seq[Expression]) extends Expression
-    with ExpectsInputTypes with CodegenFallback {
-  require(children.length == 5, "st_cover_sphere(xmin, ymin, xmax, ymax, level)")
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(DoubleType, DoubleType, DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def eval(row: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val vs = children.map(_.eval(row))
-    if (vs.contains(null)) null
-    else new GenericArrayData(graft.cell.Cells.coverSphere(
-      vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Double],
-      vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double],
-      vs(4).asInstanceOf[Int]))
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
-    copy(children = cs)
-}
-
 /** st_morton(tx, ty) → interleaved-bit cell id (grid-coordinate form of
   * st_cellid, used by the distributed kNN ring join). */
 case class StMorton(left: Expression, right: Expression) extends BinaryExpression with ExpectsInputTypes {
@@ -1981,31 +1959,6 @@ case class StTileEnvelope(first: Expression, second: Expression, third: Expressi
     K.tileEnvelope(a.asInstanceOf[Int], b.asInstanceOf[Long], c.asInstanceOf[Long])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b, c) => s"graft.sql.K.tileEnvelope($a, $b, $c)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-/** Compact multi-level cover: packed (cell<<5)|level cells, coarse in the
-  * interior, fine at the boundary — perimeter-bound cover row counts for
-  * big-geometry joins (Cells.compactCover contract). */
-case class StCoverCompact(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes with CodegenFallback {
-  override def nullIntolerant: Boolean = true
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    new GenericArrayData(K.coverCompact(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Int], c.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
-/** Packed ancestor chain of a cell down to minLevel — the point-side join
-  * keys that meet a disjoint compact cover in at most one cell. */
-case class StCellAncestors(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes with CodegenFallback {
-  override def nullIntolerant: Boolean = true
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    new GenericArrayData(K.cellAncestors(a.asInstanceOf[Long], b.asInstanceOf[Int], c.asInstanceOf[Int]))
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }

@@ -144,14 +144,11 @@ object GraftFunctions {
     "st_quadkey_x" -> (e => StQuadkeyX(e.head)),
     "st_quadkey_y" -> (e => StQuadkeyY(e.head)),
     "st_cellid_sphere" -> (e => StCellIdSphere(e(0), e(1), e(2))),
-    "st_cover_sphere" -> (e => StCoverSphere(e)),
     "st_tile_x" -> (e => StTileX(e(0), e(1))),
     "st_tile_y" -> (e => StTileY(e(0), e(1))),
     "st_cell_parent" -> (e => StCellParent(e(0), e(1), e(2))),
     "st_cell_envelope" -> (e => StCellEnvelope(e(0), e(1))),
     "st_cover" -> (e => StCover(e(0), e(1))),
-    "st_cover_compact" -> (e => StCoverCompact(e(0), e(1), e(2))),
-    "st_cell_ancestors" -> (e => StCellAncestors(e(0), e(1), e(2))),
     "st_hexbin" -> (e => StHexbin(e(0), e(1), e(2))),
     "st_hexbin_centerx" -> (e => StHexbinCenterX(e(0), e(1))),
     "st_hexbin_centery" -> (e => StHexbinCenterY(e(0), e(1))),

@@ -505,15 +505,7 @@ object K {
   def cellParent(cell: Long, level: Int, parentLevel: Int): Long = Cells.parent(cell, level, parentLevel)
   def cellEnvelope(cell: Long, level: Int): Array[Byte] = wr(Cells.cellEnvelope(cell, level).toPolygon)
   def cover(b: Array[Byte], level: Int): Array[Long] = Cells.cover(rd(b), level)
-  def coverEnv(xmin: Double, ymin: Double, xmax: Double, ymax: Double, level: Int): Array[Long] =
-    Cells.cover(Env(xmin, ymin, xmax, ymax).toPolygon, level)
   def cellRing(cell: Long, level: Int, r: Int): Array[Long] = Cells.ring(cell, level, r)
-  // compact multi-level covers (r5): packed (cell << 5) | level; see
-  // Cells.compactCover for the disjointness/bag-multiplicity contract
-  def coverCompact(b: Array[Byte], minLevel: Int, maxLevel: Int): Array[Long] =
-    Cells.compactCover(rd(b), minLevel, maxLevel)
-  def cellAncestors(cell: Long, level: Int, minLevel: Int): Array[Long] =
-    Cells.cellAncestors(cell, level, minLevel)
 
   // ---- hex tessellation (r5; the density-binning complement to the square
   // Morton grid — pointy-top axial coordinates, `size` = circumradius in the

@@ -48,7 +48,8 @@ case class PipPassExec(cell: Attribute, lon: Expression, lat: Expression,
   override protected def withNewChildInternal(c: SparkPlan): PipPassExec = copy(child = c)
 }
 
-/** Plans [[PipPass]]; `GraftFunctions.install` registers it. */
+/** The strategy that turns a [[PipPass]] into a [[PipPassExec]];
+  * `GraftFunctions.install` registers it. */
 object PipPassStrategy extends SparkStrategy {
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: PipPass =>

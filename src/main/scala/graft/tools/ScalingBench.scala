@@ -40,7 +40,7 @@ object ScalingBench {
         (sys.env.getOrElse("SPARK_GRAFT_SCALE_SPLIT_MB", "32").toLong * 1024 * 1024).toString)
       // AQE stays ON by default (it is the skew story at real scale), but the
       // serial cost of its driver re-plan barriers is measurable on this
-      // 5-second job — SPARK_GRAFT_SCALE_AQE=0 quantifies it (ScalePhases).
+      // 5-second job — SPARK_GRAFT_SCALE_AQE=0 quantifies it.
       .config("spark.sql.adaptive.enabled",
         (sys.env.getOrElse("SPARK_GRAFT_SCALE_AQE", "1") != "0").toString)
       .config("spark.sql.session.timeZone", "UTC")

@@ -76,19 +76,15 @@ class CellsSpec extends AnyFunSuite {
     }
     assert(Cells.cover(Wkt.read("POLYGON ((0 86, 20 86, 10 89, 0 86))"), 8)
       .contains(Cells.cellId(10, 87, 8)))
-  }
-
-  test("compact cover past ±85.05°: the edge rows reach out as in cover") {
-    // the packed levels 5..12 of a triangle wholly past MAX_LAT: cellId
-    // clamps (10, 87) into the top row, whose ancestor chain must meet them
-    val tri = Wkt.read("POLYGON ((0 86, 20 86, 10 89, 0 86))")
-    val packed = Cells.compactCover(tri, 5, 12)
-    assert(packed.nonEmpty)
-    val chain = Cells.cellAncestors(Cells.cellId(10, 87, 12), 12, 5).toSet
-    assert(packed.count(chain.contains) == 1)
-    val south = Wkt.read("POLYGON ((0 -86, 10 -89, 20 -86, 0 -86))")
-    val sChain = Cells.cellAncestors(Cells.cellId(10, -87, 12), 12, 5).toSet
-    assert(Cells.compactCover(south, 5, 12).count(sChain.contains) == 1)
+    // triangles wholly past ±180° longitude: cellId clamps their points
+    // into the grid's first and last columns, which the cover must hold
+    Seq(("POLYGON ((185 10, 190 10, 187 15, 185 10))", 187.0),
+        ("POLYGON ((-185 10, -187 15, -190 10, -185 10))", -187.0)).foreach { case (wkt, px) =>
+      (2 to 12).foreach { lvl =>
+        val cover = Cells.cover(Wkt.read(wkt), lvl).toSet
+        assert(cover.contains(Cells.cellId(px, 12, lvl)), s"probe ($px,12) @$lvl tri=$wkt")
+      }
+    }
   }
 
   test("known golden vectors") {
@@ -153,52 +149,6 @@ class CellsSpec extends AnyFunSuite {
     // both poles resolve on the ±z faces
     assert(Cells.cellIdSphere(0.0, 90.0, 10) >> 20 == 2L)
     assert(Cells.cellIdSphere(0.0, -90.0, 10) >> 20 == 5L)
-  }
-
-  test("coverSphere soundness: point in rect ⇒ its sphere cell is emitted") {
-    var state = 1234567L
-    def frac(): Double = {
-      state ^= state << 13; state ^= state >>> 7; state ^= state << 17
-      (state >>> 11).toDouble / (1L << 53).toDouble
-    }
-    (0 until 250).foreach { trial =>
-      // rects across the globe, biased to include polar and face-boundary
-      // regions the mercator grid cannot express
-      val cx = -180 + 360 * frac()
-      val cy = -88 + 176 * frac()
-      val w = 0.5 + frac() * 40
-      val h = 0.5 + frac() * 30
-      val xmin = math.max(-180, cx - w / 2); val xmax = math.min(180, cx + w / 2)
-      val ymin = math.max(-89.99, cy - h / 2); val ymax = math.min(89.99, cy + h / 2)
-      val level = 4 + (trial % 4)
-      val cover = Cells.coverSphere(xmin, ymin, xmax, ymax, level).toSet
-      assert(cover.nonEmpty, s"trial $trial empty cover")
-      (0 until 60).foreach { _ =>
-        val lon = xmin + frac() * (xmax - xmin)
-        val lat = ymin + frac() * (ymax - ymin)
-        val c = Cells.cellIdSphere(lon, lat, level)
-        assert(cover.contains(c),
-          s"trial $trial level $level: point ($lon,$lat) cell $c not in cover " +
-            s"of [$xmin,$xmax]x[$ymin,$ymax] (${cover.size} cells)")
-      }
-    }
-  }
-
-  test("coverSphere includes polar caps and antimeridian-adjacent rects") {
-    // rect straddling the north pole region (high lat, wide lon)
-    val polar = Cells.coverSphere(-180, 85, 180, 89.99, 6).toSet
-    (0 until 200).foreach { k =>
-      val lon = -180 + k * 1.8
-      val lat = 85.5 + (k % 40) * 0.1
-      assert(polar.contains(Cells.cellIdSphere(lon, lat, 6)), s"polar point $lon,$lat")
-    }
-    // rect hugging the antimeridian on the west side
-    val am = Cells.coverSphere(170, -10, 180, 10, 6).toSet
-    (0 until 100).foreach { k =>
-      val lon = 170.05 + (k % 50) * 0.19
-      val lat = -9.9 + k * 0.19
-      assert(am.contains(Cells.cellIdSphere(lon, lat, 6)), s"am point $lon,$lat")
-    }
   }
 
   test("tan reprojection keeps occupancy near-uniform vs mercator blowup") {

@@ -11,8 +11,9 @@ class CoverFuzzSpec extends AnyFunSuite {
   /** The reference: the tile range of the envelope, every cell of it for
     * an axis-aligned rectangle, else the cells whose rect
     * `Pred.intersects` the geometry, row-major. `cellId` clamps latitudes
-    * past ±MAX_LAT into the grid's top and bottom rows, so the rects of
-    * those rows reach out to the envelope where it lies beyond. */
+    * past ±MAX_LAT into the grid's top and bottom rows, and longitudes
+    * past ±180° into its first and last columns, so the rects of those
+    * rows and columns reach out to the envelope where it lies beyond. */
   private def coverByRelate(g: Geometry, level: Int): Array[Long] = {
     val env = g.envelope
     if (env.isEmpty) return Array.empty
@@ -29,8 +30,11 @@ class CoverFuzzSpec extends AnyFunSuite {
     for (ty <- y0 to y1; tx <- x0 to x1) {
       val cell = Cells.morton(tx, ty)
       val e = Cells.cellEnvelope(cell, level)
-      val rect = Env(e.xmin, if (ty == (1L << level) - 1) math.min(e.ymin, env.ymin) else e.ymin,
-        e.xmax, if (ty == 0) math.max(e.ymax, env.ymax) else e.ymax)
+      val last = (1L << level) - 1
+      val rect = Env(if (tx == 0) math.min(e.xmin, env.xmin) else e.xmin,
+        if (ty == last) math.min(e.ymin, env.ymin) else e.ymin,
+        if (tx == last) math.max(e.xmax, env.xmax) else e.xmax,
+        if (ty == 0) math.max(e.ymax, env.ymax) else e.ymax)
       if (isRect || Pred.intersects(rect.toPolygon, g)) out += cell
     }
     out.toArray

@@ -141,9 +141,9 @@ class GraphDenseSpec extends AnyFunSuite {
       spark.createDataFrame(spark.sparkContext.parallelize(vs.map(Row(_)), parts),
         StructType(Seq(StructField("id", LongType)))), cap)
     val ten = (0 until 10).map(i => L(i))
-    // 8 partitions share 4·(cap + 1) = 44 ids: 5 each, so the partition
-    // holding 7 distinct ids ships only its count and the ids come from
-    // the bounded distinct
+    // 8 partitions share 4·(cap + 1) = 44 picks, 6 each: every partition
+    // ships its own deduplicated ids in the one job, and the driver
+    // merges the repeats
     val skewed = ten.take(7) ++ ten.take(7) ++ ten.drop(7)
     for ((vs, parts) <- Seq((ten ++ ten, 2), (skewed, 8))) {
       val ix = index(vs, parts, 10).get
