@@ -4828,13 +4828,13 @@ object SparkEntry {
 
     // ---------------- BPE tokenizer training (r5 s12) ----------------
     // Learns the merge table FROM the corpus (the Sennrich byte-pair
-    // loop) — the corpus is scanned once for word counts; every round
-    // then runs over the vocab-bounded word frame with exactly ONE
-    // argmax row collected (the KMeans bounded-driver contract). The
-    // sentinel string-rewrite merge is byte-identical in both engines,
-    // so the oracle replays all 10 rounds exactly (per-round pair-count
-    // CTE → deterministic argmax → recursive leftmost strpos/substr
-    // rewrite). See graft.text.Bpe for the 100 TB cost shape.
+    // loop) — the corpus is scanned once for word counts, the
+    // vocab-bounded (word, freq) table is collected once, and the rounds
+    // run on the driver over incremental pair counts. The sentinel
+    // string-rewrite merge is byte-identical in both engines, so the
+    // oracle replays all 10 rounds exactly (per-round pair-count CTE →
+    // deterministic argmax → recursive leftmost strpos/substr rewrite).
+    // See graft.text.Bpe for the 100 TB cost shape.
     "q185_bpe_train" -> ((s, dir) => {
       GraftFunctions.install(s)
       graft.text.Bpe.trainDf(s, s.read.parquet(s"$dir/documents.parquet"),
@@ -5008,9 +5008,10 @@ object SparkEntry {
 
     // ---------------- learned-BPE corpus tokenization (r5 s12) ----------------
     // The train→apply composition: learn 10 merges (q185's loop), then
-    // budget every document under the learned vocabulary — the merges
-    // fold into one codegen'd projection over the DISTINCT-word frame
-    // (10 chained text_bpe_merge calls), docs join word→count once.
+    // budget every document under the learned vocabulary — one pass maps
+    // each doc row to its word and token counts (a per-task memo folds
+    // the 10 merges once per word), and a map-side-combined group by
+    // doc_id sums them; no distinct-word frame, no join.
     "q190_bpe_tokenize" -> ((s, dir) => {
       GraftFunctions.install(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")

@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 
 import scala.reflect.ClassTag
 
-/** The one bounded collect of `graft.join`: the operators that switch on
-  * "small enough to collect" decide it through [[Bounded.countAndKeep]]. */
-private[join] object Bounded {
+/** The one bounded collect of `graft`: the operators that switch on
+  * "small enough to collect" decide it through [[Bounded.countAndKeep]]
+  * (the ANN scans, the dense graph index and `text.Bpe.train`). */
+private[graft] object Bounded {
 
   /**
    * The row count of `rows` and, when the picks number at most `cap`, the

@@ -4,6 +4,9 @@ import graft.sql.GraftFunctions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.concurrent.duration._
+import scala.concurrent.{Await, ExecutionContext, Future}
+
 /** Bpe.train vs a symbol-LIST reference BPE on the driver (greedy
   * left-to-right merge over word types weighted by frequency — the
   * classic Sennrich loop), plus mergePair string-rewrite semantics
@@ -161,6 +164,103 @@ class BpeSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  /** train (the driver rounds) next to trainRounds (the DataFrame rounds),
+    * merge for merge; returns the merges. */
+  private def agree(texts: Seq[String], rounds: Int): Seq[Bpe.Merge] = {
+    import spark.implicits._
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val driver = Bpe.train(df, "text", rounds)
+    assert(driver == Bpe.trainRounds(df, "text", rounds), s"corpus=$texts rounds=$rounds")
+    driver
+  }
+
+  test("train and trainRounds agree on the spec corpora, the early stop and empty corpora") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    assert(agree(Seq(
+      "the cat sat on the mat", "the hat that the cat had",
+      "aaa aaab abab table stable tablet", "low lower lowest low low",
+      "new newer newest news new", "aaa aaa abab"), 12).length == 12)
+    assert(agree(Seq(
+      "the cat sat on the mat", "aaa aaab abab table stable tablet",
+      "low lower lowest low low", "banana bandana ban"), 8).length == 8)
+    assert(agree(Seq("ab ab ab", "ab"), 50) == Seq(Bpe.Merge(1, "a", "b", 4L)))
+    assert(agree(Seq("!!! ... --", "", "?"), 5).isEmpty)
+    assert(agree(Seq("x y z 7"), 5).isEmpty) // one-character words hold no pair
+    assert(agree(Seq.empty, 3).isEmpty)
+  }
+
+  test("train and trainRounds agree on a tie-heavy corpus") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    // every pair count ties in round 1, and runs tie with their own merges
+    val ms = agree(Seq("ab ba cd dc ef fe ba ab", "abcabc bcabca cabcab zz yy xx",
+      "aaaa bbbb aabb bbaa", "0a a0 9z z9"), 30)
+    assert(ms.head == Bpe.Merge(1, "a", "b", 8L))
+  }
+
+  test("train and trainRounds agree on 200 seeded random corpora over {a,b,c}") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    var st = 0xb9e5L
+    def next(n: Int): Int = {
+      st ^= st << 13; st ^= st >>> 7; st ^= st << 17
+      ((st >>> 11) % n).toInt
+    }
+    val corpora = Seq.fill(200) {
+      Seq.fill(1 + next(3)) {
+        Seq.fill(1 + next(6))((0 until 1 + next(14)).map(_ => ('a' + next(3)).toChar).mkString).mkString(" ")
+      }
+    }
+    // the rounds are bound by per-job latency: four corpora at a time
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try Await.result(Future.traverse(corpora)(t => Future(agree(t, 20))), 20.minutes)
+    finally pool.shutdown()
+  }
+
+  test("over the word cap, train takes the DataFrame rounds and gives the same merges") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    import spark.implicits._
+    val df = Seq((1L, "low lower lowest newer"), (2L, "aaa abab aab stable"))
+      .toDF("doc_id", "text")
+    val driver = Bpe.train(df, "text", 10)
+    assert(Bpe.train(df, "text", 10, cap = 3) == driver)
+    assert(Bpe.train(df, "text", 10, cap = 0) == driver)
+    assert(driver == Bpe.trainRounds(df, "text", 10))
+  }
+
+  test("train runs at most 2 jobs and tokenize at most 2") {
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.install(spark)
+    import spark.implicits._
+    val df = Seq("the cat sat on the mat", "aaa aaab abab table stable tablet",
+      "low lower lowest low low", "banana bandana ban", "new newer newest news new")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    def count(f: => Unit): Int = {
+      Thread.sleep(500) // listener events are async; drain
+      jobs.set(0)
+      f
+      Thread.sleep(500)
+      jobs.get()
+    }
+    try {
+      var merges = Seq.empty[Bpe.Merge]
+      val nTrain = count { merges = Bpe.train(df, "text", rounds = 10) }
+      assert(merges.length == 10)
+      assert(nTrain <= 2, s"train: $nTrain jobs")
+      val nTok = count { Bpe.tokenize(df, "doc_id", "text", merges).collect() }
+      assert(nTok <= 2, s"tokenize: $nTok jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("ewma weights: the integer closed form equals the s_t recurrence") {
