@@ -2464,8 +2464,7 @@ object SparkEntry {
       GeoTables.ensureImgQuality(s, dir)
       val feat = s.read.parquet(GeoTables.imgQualityPath(dir)).select("image_id", "sharp")
       val aoi = GeoTables.zones(s, dir).where(col("zone_id") === "zone00000")
-      val inAoi = SpatialJoins.pipJoin(GeoTables.images(s, dir), aoi,
-          level = 8, zonesCountHint = 1)
+      val inAoi = SpatialJoins.pipJoin(GeoTables.images(s, dir), aoi, level = 8)
         .select(col("image_id"), col("bytes"), col("w"), col("h"),
           col("caption"), col("phash"))
       // materialized once: gated feeds THREE consumers (near-dup pairs,
@@ -3959,6 +3958,7 @@ object SparkEntry {
     // exactly. Oracle = closed-form point-to-rect distance in DuckDB.
     "q87_dwithin_join" -> ((s, dir) => {
       GraftFunctions.install(s)
+      GeoTables.ensure(s, dir) // the images are read by path below
       SpatialJoins.dwithinJoin(
         s.read.parquet(GeoTables.imagesPath(dir)), GeoTables.zones(s, dir),
         d = 0.05, level = 8)
@@ -3971,6 +3971,7 @@ object SparkEntry {
     // rebuilds rect-boundary distance and the snap closed-form in SQL.
     "q121_snap_join" -> ((s, dir) => {
       GraftFunctions.install(s)
+      GeoTables.ensure(s, dir) // the images are read by path below
       SpatialJoins.nearestSnapJoin(
         s.read.parquet(GeoTables.imagesPath(dir)), GeoTables.zones(s, dir),
         d = 0.05, level = 8)

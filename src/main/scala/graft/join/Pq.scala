@@ -399,12 +399,7 @@ object Pq {
       .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     val base = emb.select(col("vec_id"), col("embedding"))
 
-    val qRaw = base.where(queryPred).select(col("vec_id"), col("embedding"))
-      .limit(maxQueries + 1).collect()
-    require(qRaw.length <= maxQueries,
-      s"Pq.topKIvfPq materializes the query side on the driver; queryPred matches " +
-        s"> $maxQueries rows. Shrink the query set or raise maxQueries deliberately.")
-    val qs = qRaw.map(r => (r.getLong(0), r.getSeq[Float](1).map(qz).toArray)).sortBy(_._1)
+    val qs = queryRows(base, queryPred, maxQueries, "Pq.topKIvfPq")
     checkLutBudget(qs.length, fine.length, fine(0).length)
     val luts = qs.map { case (id, qv) => id -> lutBytes(qv, fine) }.toMap
     val lutDf = broadcast(luts.toSeq.toDF("q_vec", "lut"))
@@ -482,6 +477,21 @@ object Pq {
       .select(col("q_vec"), col("col.i").as("p_vec"), (col("pos") + 1).cast("bigint").as("rank"))
   }
 
+  /** `op`'s query side, (vec_id, quantized embedding) sorted by vec_id,
+    * collected by one [[Bounded.countAndKeep]] job; more than `maxQueries`
+    * rows fail loudly (contract enforcement, like AnnIndex.topK). */
+  private def queryRows(base: DataFrame, queryPred: Column, maxQueries: Int,
+                        op: String): Array[(Long, Array[Long])] = {
+    val rows = base.where(queryPred).select(col("vec_id"), col("embedding")).queryExecution.toRdd
+    val (_, qs) = Bounded.countAndKeep(rows, maxQueries) { () => r =>
+      Some((r.getLong(0), r.getArray(1).toFloatArray().map(qz)))
+    }
+    require(qs.isDefined,
+      s"$op materializes the query side on the driver; queryPred matches " +
+        s"> $maxQueries rows. Shrink the query set or raise maxQueries deliberately.")
+    qs.get.sortBy(_._1)
+  }
+
   private def probeCore(sketch: DataFrame, base: DataFrame, cbBytes: Array[Byte],
                         queryPred: Column, k: Int, maxQueries: Int): (DataFrame, DataFrame) = {
     val spark = base.sparkSession
@@ -489,13 +499,7 @@ object Pq {
     import spark.implicits._
     val cb = unpackCached(cbBytes)
 
-    // bounded driver query set (contract enforcement, like AnnIndex.topK)
-    val qRaw = base.where(queryPred).select(col("vec_id"), col("embedding"))
-      .limit(maxQueries + 1).collect()
-    require(qRaw.length <= maxQueries,
-      s"Pq.topK materializes the query side on the driver; queryPred matches " +
-        s"> $maxQueries rows. Shrink the query set or raise maxQueries deliberately.")
-    val qs = qRaw.map(r => (r.getLong(0), r.getSeq[Float](1).map(qz).toArray)).sortBy(_._1)
+    val qs = queryRows(base, queryPred, maxQueries, "Pq.topK")
     checkLutBudget(qs.length, cb.length, cb(0).length)
     val luts = qs.map { case (id, qv) => (id, lutBytes(qv, cb)) }.toSeq
 

@@ -2,7 +2,7 @@ package graft.join
 
 import graft.cell.Cells
 import graft.geom.{Env, GeometryZM, Prepared, Wkb}
-import graft.sql.GraftFunctions
+import graft.sql.{GraftFunctions, K}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, SpecificInternalRow, UnsafeProjection}
@@ -17,21 +17,14 @@ import org.apache.spark.sql.expressions.Window
  *
  * Cell-prefix join design: cover the polygon side at a level where covers
  * stay small, key each point by its st_cellid, and refine each (point,
- * zone) candidate with the exact PIP kernel.
- *
- * [[pipJoin]] runs this in one of two shapes. A zone side small enough to
- * broadcast becomes one cell→zone index on the driver, and every point
- * partition probes it in a single pass (the [[PipZones]] index under the
- * `PipPass` plan node): the points never shuffle, so hot-cell skew (20%
- * of points in one cell in the fixture) cannot skew the join, only
- * downstream aggregations, which AQE rebalances. A larger zone side
- * explodes its cover to (cell, zone) rows and equi-joins them with the
- * points in plain DataFrame ops; Catalyst/AQE pick the join and split
- * skew. That pass ([[pipPass]]) is the engine's only broadcast
- * point-in-polygon probe; `Streams.spatialEnrich` uses it too. The other
- * point cover joins here ([[dwithinJoin]], [[nearestSnapJoin]],
- * [[geoRadiusJoin]]) keep the exploded-cover shape and broadcast the cover
- * itself when the dim side has at most [[CoverBroadcastMax]] rows.
+ * zone) candidate with an exact kernel. [[pipJoin]], [[dwithinJoin]] and
+ * [[nearestSnapJoin]] share one body, [[coverJoin]]: one bounded zone job
+ * decides between a broadcast cell→zone index probed in a single pass
+ * over the points (the `PipPass` plan node; the points never shuffle, so
+ * hot-cell skew cannot skew the join) and a shuffled equi-join on the
+ * cell key, where Catalyst/AQE pick the join and split skew.
+ * [[geoRadiusJoin]] keeps its own exploded-cover join: its haversine test
+ * and `site_*` columns do not fit the index's two zone columns.
  */
 object SpatialJoins {
 
@@ -43,17 +36,16 @@ object SpatialJoins {
       .withColumn("cell", explode(call_function("st_cover", col("zone_geom"), lit(level))))
   }
 
-  /** Broadcast-dispatch decision shared by every cover join: true when
-    * the dim side is small enough to broadcast. The probe is bounded
-    * (`limit(max+1).count()` — never a full scan of a huge side) and
-    * skipped entirely when the caller passes a cardinality hint ≥ 0. */
+  /** Broadcast decision of [[geoRadiusJoin]]: true when the site side is
+    * small enough to broadcast. The probe is bounded (`limit(max+1).count()`)
+    * and skipped when the caller passes a cardinality hint ≥ 0. */
   private def fewDims(dims: DataFrame, broadcastMax: Long, countHint: Long = -1): Boolean =
     if (countHint >= 0) countHint <= broadcastMax
     else dims.limit(math.min(broadcastMax, Int.MaxValue - 1L).toInt + 1)
       .count() <= broadcastMax
 
-  /** Most dim rows the exploded-cover joins (dwithin, snap, radius)
-    * broadcast; a larger side takes the shuffled join. */
+  /** Most zones (dwithin, snap) or sites (radius) a cover join keeps on
+    * the driver; a larger side takes the shuffled join. */
   private val CoverBroadcastMax: Long = 100000
 
   /**
@@ -63,117 +55,115 @@ object SpatialJoins {
    * `st_geomfromwkt` bytes). Closed-boundary semantics (st_intersects_xy)
    * to match `BETWEEN` oracles. Rows with a null `lon`/`lat` or a null
    * `wkt` match nothing; duplicate zone rows stay separate rows.
-   *
-   * Dispatch: the zone side counts as small when `zonesCountHint` (if ≥ 0)
-   * or a bounded `limit(broadcastMaxZones + 1).count()` probe is at most
-   * `broadcastMaxZones`.
-   *  - Small: the broadcast pass. One job over the zones parses each WKT
-   *    and computes its level-`level` cover and envelope; the driver
-   *    collects them when pipJoin is called and broadcasts one
-   *    [[PipZones]] index (sorted cells, CSR offsets into the zones).
-   *    Each point partition then finds its point's cell by binary search
-   *    and tests the zones listed there: a closed envelope test, then the
-   *    exact test of st_intersects_xy on a prepared geometry built once
-   *    per zone per executor, outside the global `Prepared` cache.
-   *  - Large: the zones' covers explode to (cell, zone) rows and a
-   *    shuffled equi-join on `cell` meets the points, refined by
-   *    st_intersects_xy. The driver holds no zone state.
-   * Both give the same rows, schema and column order.
+   * [[coverJoin]] at radius 0: the index pass for at most
+   * `broadcastMaxZones` zones with a geometry, else the shuffled join,
+   * with the same rows, schema and column order. `zonesCountHint` is
+   * ignored (the zone job decides); it stays for source compatibility.
    */
   def pipJoin(images: DataFrame, zones: DataFrame, level: Int = 8,
-              broadcastMaxZones: Long = 100000, zonesCountHint: Long = -1): DataFrame = {
-    GraftFunctions.install(images.sparkSession)
-    if (fewDims(zones, broadcastMaxZones, zonesCountHint)) pipPass(images, zones, level)
-    else {
-      val pts = images.withColumn("cell",
-        call_function("st_cellid", col("lon"), col("lat"), lit(level)))
-      val cover = zoneCover(zones, level).select(col("zone_id"), col("zone_geom"), col("cell"))
-      pts.join(cover, "cell")
-        .where(call_function("st_intersects_xy", col("zone_geom"), col("lon"), col("lat")))
-    }
+              broadcastMaxZones: Long = 100000, zonesCountHint: Long = -1): DataFrame =
+    coverJoin(images, zoneGeoms(zones), 0.0, level, broadcastMaxZones)
+
+  /** (zone_id, zone_geom) of zones(zone_id, wkt). */
+  private[join] def zoneGeoms(zones: DataFrame): DataFrame = {
+    GraftFunctions.install(zones.sparkSession)
+    zones.select(col("zone_id"), call_function("st_geomfromwkt", col("wkt")).as("zone_geom"))
   }
 
-  /** The broadcast pass of [[pipJoin]], without its size probe: the zones
-    * are collected and indexed when this is called, whatever their count.
-    * `Streams.spatialEnrich` calls it directly. */
-  private[graft] def pipPass(images: DataFrame, zones: DataFrame, level: Int): DataFrame = {
-    val zt = zones.select(col("zone_id"), call_function("st_geomfromwkt", col("wkt")).as("zone_geom"))
-    val idType = zt.schema(0).dataType
-    val rows = zt.where(col("zone_geom").isNotNull).queryExecution.toRdd.mapPartitions { it =>
-      it.map { r =>
+  /**
+   * points(lon, lat) × zones(zone_id, zone_geom) → `cell`, the point
+   * columns, `zone_id`, `zone_geom`: one row per (point, zone) with the
+   * point within `d` of the zone (inside or on it at d = 0). A null or
+   * empty zone geometry matches nothing.
+   *
+   * One job computes each zone's level-`level` cover and envelope through
+   * [[Bounded.countAndKeep]], capped at `maxZones`; at d > 0 they are the
+   * cover of its `st_expand(g, d)` rectangle (a superset of the
+   * d-dilation) and the envelope dilated by d.
+   *  - Kept: the driver broadcasts one [[PipZones]] index. Each point
+   *    partition finds its point's cell by binary search and tests the
+   *    zones listed there: a closed envelope test, then st_intersects_xy
+   *    (`K.dwithinXY` at d > 0) on a prepared geometry built once per zone
+   *    per executor, outside the global `Prepared` cache.
+   *  - Over the cap: the covers explode to (cell, zone) rows and a
+   *    shuffled equi-join on `cell` meets the points, refined by
+   *    st_intersects_xy (st_dwithin_xy at d > 0). The driver holds no
+   *    zone state.
+   */
+  private[join] def coverJoin(points: DataFrame, zones: DataFrame, d: Double, level: Int,
+                              maxZones: Long): DataFrame = {
+    val idType = zones.schema(0).dataType
+    val rows = zones.where(col("zone_geom").isNotNull).queryExecution.toRdd
+    val (_, picks) = Bounded.countAndKeep(rows, math.min(maxZones, Int.MaxValue - 1L).toInt) {
+      () => r =>
         val wkb = r.getBinary(1)
         val g = GeometryZM.strip(Wkb.read(wkb))
-        (InternalRow.copyValue(r.get(0, idType)), wkb, Cells.cover(g, level), g.envelope)
-      }
-    }.collect()
-    val bz = images.sparkSession.sparkContext.broadcast(PipZones(level,
-      rows.map(_._1), rows.map(_._2), rows.map(_._3), rows.map(_._4)))
-    PipPass.frame(images, bz, zt.schema(0), zt.schema(1))
+        val env = g.envelope.buffer(d)
+        if (g.isEmpty) None
+        else Some((InternalRow.copyValue(r.get(0, idType)), wkb,
+          Cells.cover(if (d == 0) g else env.toPolygon, level), env))
+    }
+    picks match {
+      case Some(zs) =>
+        val bz = points.sparkSession.sparkContext.broadcast(PipZones(level, d,
+          zs.map(_._1), zs.map(_._2), zs.map(_._3), zs.map(_._4)))
+        PipPass.frame(points, bz, zones.schema(0), zones.schema(1))
+      case None =>
+        val g = col("zone_geom")
+        val (area, hit) =
+          if (d == 0) (g, call_function("st_intersects_xy", g, col("lon"), col("lat")))
+          else (call_function("st_expand", g, lit(d)),
+            call_function("st_dwithin_xy", g, col("lon"), col("lat"), lit(d)))
+        points.withColumn("cell", call_function("st_cellid", col("lon"), col("lat"), lit(level)))
+          .join(zones.where(!call_function("st_isempty", g)).select(col("zone_id"), g,
+            explode(call_function("st_cover", area, lit(level))).as("cell")), "cell")
+          .where(hit)
+    }
   }
 
   /**
    * Fixed-radius distance join ("all images within d of each zone") —
    * the most common production spatial-join predicate (judge r4 missing
-   * #1). Same one-scan shape as [[pipJoin]]: the geometry side covers its
-   * d-EXPANDED envelope (`st_expand` — a closed-form superset of the
-   * d-dilated geometry, so no candidate can be missed), the point side
-   * keys by `st_cellid`, and the exact `st_dwithin_xy` kernel refines
-   * (envelope-gap quick reject inlined, prepared decode-once geometry).
+   * #1): [[coverJoin]] at radius `d`, with [[pipJoin]]'s output columns.
+   * Each zone covers its d-EXPANDED envelope (`st_expand`), so no
+   * candidate can be missed, and the exact `st_dwithin_xy` test refines.
    * Distance is planar lon/lat degrees, consistent with st_distance and
-   * every BETWEEN oracle. The cover is broadcast when the zone side has
-   * at most [[CoverBroadcastMax]] rows.
+   * every BETWEEN oracle. At d = 0 this is [[pipJoin]].
    */
   def dwithinJoin(images: DataFrame, zones: DataFrame, d: Double, level: Int = 8): DataFrame = {
     require(d >= 0, s"negative radius $d")
-    val spark = images.sparkSession
-    GraftFunctions.install(spark)
-    val pts = images.withColumn("cell",
-      call_function("st_cellid", col("lon"), col("lat"), lit(level)))
-    val coverRaw = zones
-      .withColumn("zone_geom", call_function("st_geomfromwkt", col("wkt")))
-      .withColumn("cell", explode(call_function("st_cover",
-        call_function("st_expand", col("zone_geom"), lit(d)), lit(level))))
-      .select(col("zone_id"), col("zone_geom"), col("cell"))
-    val cover = if (fewDims(zones, CoverBroadcastMax)) broadcast(coverRaw) else coverRaw
-    pts.join(cover, "cell")
-      .where(call_function("st_dwithin_xy", col("zone_geom"), col("lon"), col("lat"), lit(d)))
+    coverJoin(images, zoneGeoms(zones), d, level, CoverBroadcastMax)
   }
 
   /**
    * MAP-MATCHING join: snap each point to the NEAREST zone boundary
    * within `d` (planar) — the "match GPS fix to road/parcel edge" shape.
-   * Candidates come from the same expanded cell cover as [[dwithinJoin]]
-   * (a point meets a zone at most once: one cell per point at a fixed
-   * level, disjoint cover cells), refined by exact boundary distance,
-   * then reduced per point by a deterministic (dist, zone_id) argmin
-   * window. The window partitions on image_id over cover-bounded
-   * candidate rows (a few zones per point), never over all zones, so the
-   * reduction shuffles O(candidates) and scales like the radius join.
-   * Output adds the snapped boundary point (st_closest_point).
+   * Candidates come from [[coverJoin]] at radius `d` over each zone's
+   * `st_boundary` (boundary distance ≤ d is exactly `dwithinXY` on a
+   * lineal geometry; an empty boundary, a POINT zone's say, matches nothing).
+   * A deterministic (dist, zone_id) argmin window per image_id, over
+   * cover-bounded candidate rows, picks one zone per point. Output: the
+   * point columns, `zone_id`, `dist` and the snapped boundary point
+   * `snap` (st_closest_point).
    */
   def nearestSnapJoin(points: DataFrame, zones: DataFrame, d: Double,
-                      level: Int = 8): DataFrame = {
+                      level: Int = 8): DataFrame =
+    snapJoin(points, zones, d, level, CoverBroadcastMax)
+
+  /** [[nearestSnapJoin]] with the zone cap as a parameter. */
+  private[join] def snapJoin(points: DataFrame, zones: DataFrame, d: Double, level: Int,
+                             maxZones: Long): DataFrame = {
     require(d >= 0, s"negative radius $d")
-    val spark = points.sparkSession
-    GraftFunctions.install(spark)
-    val pts = points.withColumn("cell",
-      call_function("st_cellid", col("lon"), col("lat"), lit(level)))
-    val coverRaw = zones
-      .withColumn("zone_geom", call_function("st_geomfromwkt", col("wkt")))
-      .withColumn("boundary", call_function("st_boundary", col("zone_geom")))
-      .withColumn("cell", explode(call_function("st_cover",
-        call_function("st_expand", col("zone_geom"), lit(d)), lit(level))))
-      .select(col("zone_id"), col("boundary"), col("cell"))
-    val cover = if (fewDims(zones, CoverBroadcastMax)) broadcast(coverRaw) else coverRaw
-    val cand = pts.join(cover, "cell")
-      .withColumn("dist", call_function("st_distance", col("boundary"),
-        call_function("st_point", col("lon"), col("lat"))))
-      .where(col("dist") <= d)
+    val bounds = zoneGeoms(zones)
+      .select(col("zone_id"), call_function("st_boundary", col("zone_geom")).as("zone_geom"))
     val win = Window.partitionBy("image_id").orderBy(col("dist"), col("zone_id"))
-    cand.withColumn("rn", row_number().over(win)).where(col("rn") === 1)
-      .withColumn("snap", call_function("st_closest_point", col("boundary"),
+    coverJoin(points, bounds, d, level, maxZones)
+      .withColumn("dist", call_function("st_distance", col("zone_geom"),
+        call_function("st_point", col("lon"), col("lat"))))
+      .withColumn("rn", row_number().over(win)).where(col("rn") === 1)
+      .withColumn("snap", call_function("st_closest_point", col("zone_geom"),
         col("lon"), col("lat")))
-      .drop("rn", "cell", "boundary")
+      .drop("rn", "cell", "zone_geom")
   }
 
   /**
@@ -851,13 +841,13 @@ object SpatialJoins {
 }
 
 /**
- * The zone side of [[SpatialJoins.pipJoin]]'s broadcast pass: zone z has
- * id `ids(z)` (a Catalyst value), geometry bytes `wkbs(z)` and envelope
- * `envs(z)`. `cells` holds the distinct cover cells in ascending order,
- * and the zones whose cover holds `cells(k)` are
+ * The zone side of [[SpatialJoins.coverJoin]]'s pass at radius `d`: zone
+ * z has id `ids(z)` (a Catalyst value), geometry bytes `wkbs(z)` and
+ * envelope `envs(z)`, dilated by `d`. `cells` holds the distinct cover
+ * cells in ascending order, and the zones whose cover holds `cells(k)` are
  * `zone(start(k)) .. zone(start(k + 1) - 1)`, in zone order.
  */
-final class PipZones private (level: Int, ids: Array[Any], wkbs: Array[Array[Byte]],
+final class PipZones private (level: Int, d: Double, ids: Array[Any], wkbs: Array[Array[Byte]],
                               envs: Array[Env], cells: Array[Long], start: Array[Int],
                               zone: Array[Int]) extends Serializable {
 
@@ -866,13 +856,13 @@ final class PipZones private (level: Int, ids: Array[Any], wkbs: Array[Array[Byt
   @transient private lazy val zoneRows: Array[InternalRow] =
     Array.tabulate(ids.length)(z => new GenericInternalRow(Array[Any](ids(z), wkbs(z))))
 
-  /** Closed envelope test, then the exact test of st_intersects_xy. */
+  /** Closed envelope test, then st_intersects_xy (st_dwithin_xy at d > 0). */
   private def holds(z: Int, x: Double, y: Double): Boolean = {
     val e = envs(z)
     x >= e.xmin && x <= e.xmax && y >= e.ymin && y <= e.ymax && {
       var p = prepared(z)
       if (p == null) { p = Prepared.uncached(wkbs(z)); prepared(z) = p }
-      p.intersectsXY(x, y)
+      if (d == 0) p.intersectsXY(x, y) else K.dwithinXY(p, x, y, d)
     }
   }
 
@@ -926,8 +916,9 @@ final class PipZones private (level: Int, ids: Array[Any], wkbs: Array[Array[Byt
 }
 
 object PipZones {
-  /** The index over zone rows (id, bytes, level-`level` cover, envelope). */
-  def apply(level: Int, ids: Array[Any], wkbs: Array[Array[Byte]],
+  /** The index over zone rows (id, bytes, level-`level` cover, envelope),
+    * whose covers and envelopes are already those at radius `d`. */
+  def apply(level: Int, d: Double, ids: Array[Any], wkbs: Array[Array[Byte]],
             covers: Array[Array[Long]], envs: Array[Env]): PipZones = {
     val cells = covers.flatten.distinct
     java.util.Arrays.sort(cells)
@@ -940,6 +931,6 @@ object PipZones {
       val k = java.util.Arrays.binarySearch(cells, c)
       zone(fill(k)) = z; fill(k) += 1
     }
-    new PipZones(level, ids, wkbs, envs, cells, start, zone)
+    new PipZones(level, d, ids, wkbs, envs, cells, start, zone)
   }
 }

@@ -157,8 +157,11 @@ object K {
   }
   /** dwithin fast path on raw coords — the distance-join refine kernel
     * (no point WKB alloc; prepared decode-once on the geometry side). */
-  def dwithinXY(g: Array[Byte], x: Double, y: Double, d: Double): Boolean = {
-    val p = Prepared.of(g)
+  def dwithinXY(g: Array[Byte], x: Double, y: Double, d: Double): Boolean =
+    dwithinXY(Prepared.of(g), x, y, d)
+  /** [[dwithinXY]] on an already prepared geometry (the index pass keeps
+    * its own per-zone instances). */
+  def dwithinXY(p: Prepared, x: Double, y: Double, d: Double): Boolean = {
     val e = p.geom.envelope
     val gx = math.max(0.0, math.max(e.xmin - x, x - e.xmax))
     val gy = math.max(0.0, math.max(e.ymin - y, y - e.ymax))

@@ -12,11 +12,11 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StructField}
 
 /**
- * Plan node of `SpatialJoins.pipJoin`'s broadcast pass: every child row (a
- * point) followed by each zone of the broadcast [[PipZones]] index that
- * holds it. Output: `cell`, the child's columns, `zone_id`, `zone_geom`,
- * the column order of the cell equi-join. A plain unary node, so column
- * pruning reaches the points scan through it.
+ * Plan node of `SpatialJoins.coverJoin`'s broadcast pass: every child row
+ * (a point) followed by each zone of the broadcast [[PipZones]] index
+ * within the index's radius of it. Output: `cell`, the child's columns,
+ * `zone_id`, `zone_geom`, the column order of the cell equi-join. A plain
+ * unary node, so column pruning reaches the points scan through it.
  */
 case class PipPass(cell: Attribute, lon: Expression, lat: Expression,
                    zoneId: Attribute, zoneGeom: Attribute,

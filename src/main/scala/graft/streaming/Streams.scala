@@ -74,24 +74,18 @@ object Streams {
       .start()
 
   /**
-   * Stream-static spatial enrichment: the broadcast pass of
-   * [[graft.join.SpatialJoins.pipJoin]], streaming flavor. Output: `cell`,
-   * the stream's columns, `zone_id` — one row per (row, zone) with the
-   * row's DOUBLE (lon, lat) inside or on the zone.
-   *
-   * The zones are STATIC: they are read once, when this is called, into
-   * one cell→zone index that is always broadcast (there is no size probe
-   * and no shuffled fallback). Every micro-batch probes that same index in
-   * a single pass with the exact `st_intersects_xy` refine; the zone table
-   * is NOT re-read per micro-batch, so rows added to it after the call are
-   * not seen. No stream-side state: at 10^12 streamed rows the only
-   * standing cost is the broadcast index. (A training-data ingest tags
-   * every incoming image with its zones this way.)
+   * Stream-static spatial enrichment: [[graft.join.SpatialJoins.pipJoin]]
+   * over a stream. Output: `cell`, the stream's columns, `zone_id` — one
+   * row per (row, zone) with the row's DOUBLE (lon, lat) inside or on the
+   * zone. The zones are STATIC: one bounded job reads them when this is
+   * called. Under pipJoin's zone cap every micro-batch probes one
+   * broadcast cell→zone index in a single pass, so rows added to the zone
+   * table later are not seen; over the cap each micro-batch runs a
+   * stream-static equi-join on the cell key instead of the driver
+   * collecting an unbounded zone table. No stream-side state.
    */
-  def spatialEnrich(stream: DataFrame, zones: DataFrame, level: Int = 8): DataFrame = {
-    GraftFunctions.install(stream.sparkSession)
-    graft.join.SpatialJoins.pipPass(stream, zones, level).drop("zone_geom")
-  }
+  def spatialEnrich(stream: DataFrame, zones: DataFrame, level: Int = 8): DataFrame =
+    graft.join.SpatialJoins.pipJoin(stream, zones, level).drop("zone_geom")
 
   /**
    * Streaming exact dedup on a key column (e.g. the pHash of an image

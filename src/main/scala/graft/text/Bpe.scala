@@ -2,7 +2,7 @@ package graft.text
 
 import graft.join.Bounded
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
@@ -38,9 +38,9 @@ import scala.collection.mutable
  *
  * 100 TB: the corpus is touched once (word counting); under the cap,
  * training is that aggregate and one bounded collect whatever `rounds`
- * is. A vocabulary over the cap takes [[trainRounds]]: it counts the
- * words again, then runs one explode+agg over the vocab frame plus a
- * narrow re-encoding per round, with 1 row to the driver per round.
+ * is. A vocabulary over the cap takes [[trainRounds]]'s rounds over the
+ * same aggregate: one explode+agg over the vocab frame plus a narrow
+ * re-encoding per round, with 1 row to the driver per round.
  * `rounds` is the vocabulary budget knob.
  */
 object Bpe {
@@ -85,16 +85,19 @@ object Bpe {
     train(docs, textCol, rounds, WordCap)
 
   /** [[train]] with the word-type cap as a parameter: over `cap` word
-    * types it takes [[trainRounds]]. */
+    * types it runs [[trainRounds]]'s rounds over the same aggregate rows,
+    * whose shuffle output is reused rather than the corpus counted again. */
   private[text] def train(docs: DataFrame, textCol: String, rounds: Int, cap: Int): Seq[Merge] = {
     checkRounds(rounds)
     val freq = wordFreq(docs, textCol)
-    val (_, table) = Bounded.countAndKeep(freq.queryExecution.toRdd, cap) { () =>
+    val rows = freq.queryExecution.toRdd
+    val (_, table) = Bounded.countAndKeep(rows, cap) { () =>
       (r: InternalRow) => Some((r.getUTF8String(0).toString, r.getLong(1)))
     }
     table match {
       case Some(t) => learn(t, rounds)
-      case None => trainRounds(docs, textCol, rounds)
+      case None => roundsOver(docs.sparkSession.createDataFrame(
+        rows.map(r => Row(r.getUTF8String(0).toString, r.getLong(1))), freq.schema), rounds)
     }
   }
 
@@ -170,9 +173,13 @@ object Bpe {
     * aggregate with the argmax row collected, then the merge applied to
     * every word by `text_bpe_merge` and the frame re-checkpointed so the
     * lineage stays one round deep. */
-  private[text] def trainRounds(docs: DataFrame, textCol: String, rounds: Int): Seq[Merge] = {
+  private[text] def trainRounds(docs: DataFrame, textCol: String, rounds: Int): Seq[Merge] =
+    roundsOver(wordFreq(docs, textCol), rounds)
+
+  /** The rounds of [[trainRounds]] over a (word, freq) frame. */
+  private def roundsOver(freq: DataFrame, rounds: Int): Seq[Merge] = {
     checkRounds(rounds)
-    var enc = wordFreq(docs, textCol)
+    var enc = freq
       .withColumn("enc", sentinelEnc)
       .select("freq", "enc")
       .localCheckpoint(true) // vocab-bounded; cuts corpus lineage

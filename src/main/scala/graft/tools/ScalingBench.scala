@@ -52,14 +52,13 @@ object ScalingBench {
   }
 
   def job(spark: SparkSession, sfDir: String): Long = {
-    // explicit schema + zone-count hint: no footer-infer jobs, no dispatch
-    // probe job — the serial driver prelude is planning + broadcast only
-    // (these fixed per-job costs are exactly what Amdahl charges at 4N)
+    // explicit schema: no footer-infer jobs — the serial driver prelude is
+    // one zone job, planning and the broadcast (these fixed per-job costs
+    // are exactly what Amdahl charges at 4N)
     val images = spark.read.schema(GeoTables.imagesSchema)
       .parquet(GeoTables.imagesPath(sfDir))
       .where(call_function("img_phash", col("bytes")) === col("phash")) // per-row decode
-    val joined = SpatialJoins.pipJoin(images, GeoTables.zones(spark, sfDir), level = 8,
-      zonesCountHint = GeoTables.nZones(sfDir).toLong)
+    val joined = SpatialJoins.pipJoin(images, GeoTables.zones(spark, sfDir), level = 8)
       .withColumn("tx", call_function("st_tile_x", col("lon"), lit(8)))
       .withColumn("ty", call_function("st_tile_y", col("lat"), lit(8)))
     joined.groupBy("zone_id", "tx", "ty")

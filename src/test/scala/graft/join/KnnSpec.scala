@@ -235,4 +235,28 @@ class KnnSpec extends AnyFunSuite {
       }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("knn collects a local query frame without a job") {
+    import spark.implicits._
+    // the query frame of a local Seq (as the benchmark builds it) is
+    // collected by the driver alone; a bounded countAndKeep collect would
+    // add one job per call
+    val next = rng(59)
+    val ptsDf = (0 until 500).map(i => (f"p$i%05d", next(), next())).toDF("id", "nx", "ny")
+    val qDf = (0 until 120).map(j => (f"q$j%05d", next(), next())).toDF("id", "nx", "ny")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Thread.sleep(800) // listener events are async; drain
+      jobs.set(0)
+      val df = SpatialJoins.knn(ptsDf, qDf, k = 3, level = 8)
+      Thread.sleep(800)
+      assert(jobs.get() == 0, s"knn ran ${jobs.get()} jobs before its result was collected")
+      assert(df.count() == 120 * 3)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -1,7 +1,7 @@
 package graft.join
 
 import graft.data.GeoTables
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,5 +45,38 @@ class PipGuardSpec extends AnyFunSuite {
     val a = hinted.collect().map(r => (r.getString(0), r.getString(1))).toSet
     val b = guarded.collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(a == b && a.nonEmpty, s"hinted=${a.size} guarded=${b.size}")
+  }
+
+  test("pipJoin without a hint and dwithinJoin each run at most 2 jobs; the distance joins take the pass") {
+    spark.sparkContext.setLogLevel("WARN")
+    val images = GeoTables.images(spark, sfDir)
+    val zones = GeoTables.zones(spark, sfDir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // jobs from the call to the end of its collect
+    def jobsOf(join: => DataFrame): Int = {
+      Thread.sleep(500) // listener events are async; drain
+      jobs.set(0)
+      assert(join.collect().nonEmpty)
+      Thread.sleep(500)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // one zone job decides and builds the index, one runs the pass
+      val nPip = jobsOf(SpatialJoins.pipJoin(images, zones))
+      assert(nPip <= 2, s"pipJoin ran $nPip jobs")
+      val nWithin = jobsOf(SpatialJoins.dwithinJoin(images, zones, 0.07))
+      assert(nWithin <= 2, s"dwithinJoin ran $nWithin jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    for (join <- Seq(SpatialJoins.dwithinJoin(images, zones, 0.07),
+                     SpatialJoins.nearestSnapJoin(images, zones, 0.07))) {
+      val plan = join.queryExecution.executedPlan.toString
+      assert(plan.contains("PipPass") && !plan.contains("BroadcastHashJoin"), plan)
+    }
   }
 }

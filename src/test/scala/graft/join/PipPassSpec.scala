@@ -38,10 +38,22 @@ class PipPassSpec extends AnyFunSuite {
       case v => v
     }).groupBy(identity).view.mapValues(_.size).toMap
 
-  /** Runs both paths; returns the number of joined rows. */
-  private def same(pts: DataFrame, zs: DataFrame, level: Int = 8): Long = {
-    val pass = SpatialJoins.pipJoin(pts, zs, level)
-    val ref = SpatialJoins.pipJoin(pts, zs, level, broadcastMaxZones = 0)
+  /** Runs both paths at radius `d` (pipJoin at 0, dwithinJoin above);
+    * returns the number of joined rows. */
+  private def same(pts: DataFrame, zs: DataFrame, level: Int = 8, d: Double = 0.0): Long =
+    if (d == 0) agree(SpatialJoins.pipJoin(pts, zs, level),
+      SpatialJoins.pipJoin(pts, zs, level, broadcastMaxZones = 0))
+    else agree(SpatialJoins.dwithinJoin(pts, zs, d, level),
+      SpatialJoins.coverJoin(pts, SpatialJoins.zoneGeoms(zs), d, level, maxZones = 0))
+
+  /** nearestSnapJoin's pass against its shuffled path at radius `d`. */
+  private def sameSnap(pts: DataFrame, zs: DataFrame, level: Int, d: Double): Long =
+    agree(SpatialJoins.nearestSnapJoin(pts, zs, d, level),
+      SpatialJoins.snapJoin(pts, zs, d, level, maxZones = 0))
+
+  /** `pass` runs the PipPass and `ref` a join, with the same schema and
+    * bag of rows; returns the number of rows. */
+  private def agree(pass: DataFrame, ref: DataFrame): Long = {
     val plan = pass.queryExecution.executedPlan.toString
     assert(plan.contains("PipPass") && !plan.contains("Join"), s"not the pass:\n$plan")
     assert(ref.queryExecution.executedPlan.toString.contains("Join"))
@@ -194,5 +206,105 @@ class PipPassSpec extends AnyFunSuite {
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("ReadSchema") && !plan.contains("payload"), plan)
     assert(joined.count() > 50)
+  }
+
+  // The shapes above again at radius 0.05: dwithinJoin and nearestSnapJoin
+  // take the same pass, so each must agree with its shuffled path.
+  private val D = 0.05
+
+  /** (name, level, points, zones) of each shape above, rebuilt from its seed. */
+  private def shapes: Seq[(String, Int, Seq[(Any, Any)], Seq[(String, String)])] = {
+    val hot = {
+      val r = rnd(1)
+      val zs = (0 until 20).map { i =>
+        val d = 0.02 + 0.5 * r.nextDouble()
+        val wkt = if (i % 2 == 0) rect(10.0 - d, 20.0 - d, 10.02 + d, 20.02 + d)
+          else s"POLYGON ((${10.0 - d} ${20.0 - d}, ${10.02 + 2 * d} 20.0, ${10.0 + d} ${20.02 + d}, ${10.0 - d} ${20.0 - d}))"
+        (f"z$i%02d", wkt)
+      }
+      val ps = (0 until 3000).map { i =>
+        if (i % 3 == 0) (9.0 + 2.5 * r.nextDouble(), 19.0 + 2.5 * r.nextDouble())
+        else (10.0 + 0.02 * r.nextDouble(), 20.0 + 0.02 * r.nextDouble())
+      }
+      ("one hot cell under 20 zones", 8, ps, zs)
+    }
+    val many = {
+      val r = rnd(2)
+      val zs = for (i <- 0 until 96; j <- 0 until 96) yield {
+        val (x, y) = (i * 0.25, j * 0.25)
+        val wkt = if ((i + j) % 2 == 0) rect(x, y, x + 0.2, y + 0.2)
+          else s"POLYGON (($x $y, ${x + 0.24} $y, $x ${y + 0.24}, $x $y))"
+        (s"z${i}_$j", wkt)
+      }
+      ("more than 8192 zones", 9, (0 until 20000).map(_ => (24.0 * r.nextDouble(), 24.0 * r.nextDouble())), zs)
+    }
+    val dups = {
+      val r = rnd(3)
+      ("duplicate zone ids and null wkt", 8,
+        (0 until 2000).map(_ => (-0.5 + 4 * r.nextDouble(), -0.5 + 4 * r.nextDouble())),
+        Seq(("a", rect(0, 0, 2, 2)), ("a", rect(0, 0, 2, 2)), ("a", rect(1, 1, 3, 3)),
+          ("b", null), (null, rect(0.5, 0.5, 1.5, 1.5)), ("c", null)))
+    }
+    val nulls = {
+      val r = rnd(4)
+      ("null and NaN lon/lat", 4, (0 until 1000).map { i =>
+        (i % 5) match {
+          case 0 => (null, 0.5)
+          case 1 => (0.5, null)
+          case 2 => (Double.NaN, 0.5)
+          case 3 => (0.25, Double.NaN)
+          case _ => (-2 + 4 * r.nextDouble(), -2 + 4 * r.nextDouble())
+        }
+      }, Seq(("z", rect(-1, -1, 1, 1)), ("w", rect(-180, -85, 180, 85))))
+    }
+    val edges = ("points on vertices and edges", 8,
+      Seq((0.0, 0.0), (4.0, 0.0), (0.0, 3.0), (2.0, 0.0), (0.0, 1.5), (2.0, 1.5),
+        (4.0, 1.0), (6.0, 3.0), (5.0, 3.0), (4.0, 0.75), (1.0, 1.0), (3.0, 1.0), (6.0001, 1.0)),
+      Seq(("tri", "POLYGON ((0 0, 4 0, 0 3, 0 0))"), ("box", rect(4, 0, 6, 3))))
+    val hole = {
+      val r = rnd(6)
+      ("a MultiPolygon with a hole", 8,
+        (0 until 3000).map(_ => (-0.5 + 6 * r.nextDouble(), -0.5 + 4 * r.nextDouble())) ++
+          Seq((1.0, 1.0), (1.5, 1.5), (1.5, 1.0), (4.5, 1.0), (4.5, 0.5)),
+        Seq(("mp", "MULTIPOLYGON (((0 0, 3 0, 3 3, 0 3, 0 0), (1 1, 1 2, 2 2, 2 1, 1 1)), " +
+          "((4 0, 5 0, 4.5 1, 4 0)))")))
+    }
+    val lines = {
+      val r = rnd(7)
+      ("LINESTRING and POINT zones", 8,
+        (0 until 500).map(_ => (4 * r.nextDouble(), 4 * r.nextDouble())) ++
+          Seq((1.0, 1.0), (2.0, 2.0), (3.0, 1.0), (1.0, 3.0), (0.5, 0.5), (4.0, 0.0)),
+        Seq(("line", "LINESTRING (0 0, 2 2, 4 0)"), ("pt", "POINT (1 3)"), ("poly", rect(0, 0, 1, 1))))
+    }
+    val polar = {
+      val r = rnd(10)
+      ("polar triangles past the grid's ±85.05° edge rows", 8,
+        (0 until 2000).map { i =>
+          (-2 + 24 * r.nextDouble(), (if (i % 2 == 0) 1 else -1) * (84.5 + 5.4 * r.nextDouble()))
+        } ++ Seq((10.0, 87.0), (10.0, -87.0)),
+        Seq(("n", "POLYGON ((0 86, 20 86, 10 89, 0 86))"), ("s", "POLYGON ((0 -86, 10 -89, 20 -86, 0 -86))")))
+    }
+    Seq(hot, many, dups, nulls, edges, hole, lines, polar)
+  }
+
+  for ((name, level, ps, zs) <- shapes) {
+    test(s"$name, at d = $D: dwithinJoin and nearestSnapJoin agree with their shuffled paths") {
+      spark.sparkContext.setLogLevel("WARN")
+      val (p, z) = (points(ps), zones(zs))
+      val within = same(p, z, level, D)
+      assert(within >= same(p, z, level) && within > 0)
+      val snapped = sameSnap(p, z, level, D)
+      assert(snapped > 0 && snapped <= within)
+    }
+  }
+
+  test("an empty zone geometry matches nothing on either path, at d = 0 and 0.05") {
+    spark.sparkContext.setLogLevel("WARN")
+    val r = rnd(11)
+    val p = points((0 until 500).map(_ => (-1 + 4 * r.nextDouble(), -1 + 4 * r.nextDouble())))
+    val solid = Seq(("a", rect(0, 0, 2, 2)), ("b", "POLYGON ((1 1, 3 1, 1 3, 1 1))"))
+    val withEmpty = zones(solid :+ ("e" -> "POLYGON EMPTY"))
+    for (d <- Seq(0.0, D)) assert(same(p, withEmpty, 8, d) == same(p, zones(solid), 8, d))
+    assert(sameSnap(p, withEmpty, 8, D) == sameSnap(p, zones(solid), 8, D))
   }
 }

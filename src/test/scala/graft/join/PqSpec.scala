@@ -211,4 +211,19 @@ class PqSpec extends AnyFunSuite {
     assert(got == want)
     assert(got.size == 3) // all rows ranked, rank never exceeds corpus size
   }
+
+  test("a queryPred matching maxQueries + 1 rows fails loudly; maxQueries rows run") {
+    GraftFunctions.install(spark)
+    import spark.implicits._
+    val e = (0L until 40L).map(i => (i, Array.tabulate(4)(j => ((i * 7 + j * 3) % 11).toFloat)))
+      .toDF("vec_id", "embedding")
+    val err = intercept[IllegalArgumentException](
+      Pq.topK(e, col("vec_id") < 6, k = 2, m = 2, kCodes = 4, maxQueries = 5))
+    assert(err.getMessage.contains("Pq.topK materializes the query side on the driver; " +
+      "queryPred matches > 5 rows. Shrink the query set or raise maxQueries deliberately."),
+      err.getMessage)
+    val got = Pq.topK(e, col("vec_id") < 5, k = 2, m = 2, kCodes = 4, maxQueries = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == brute(e, col("vec_id") < 5, 2))
+  }
 }

@@ -120,6 +120,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastHashJoin"), s"micro-batch plan joins on the cell key:\n$plan")
   }
 
+  test("over the zone cap, pipJoin over a stream takes the stream-static equi-join") {
+    import graft.data.GeoTables
+    val sfDir = new java.io.File(eventsPath).getParent
+    GeoTables.ensure(spark, sfDir)
+    val images = GeoTables.images(spark, sfDir).select("image_id", "lon", "lat")
+    val zones = GeoTables.zones(spark, sfDir)
+    val dir = java.nio.file.Files.createTempDirectory("stream_pip_cap").toString
+    images.write.mode("overwrite").parquet(dir)
+    val stream = Streams.parquetStream(spark, dir, images.schema)
+
+    val q = graft.join.SpatialJoins.pipJoin(stream, zones, broadcastMaxZones = 0)
+      .drop("zone_geom").writeStream
+      .outputMode("append").format("memory").queryName("pip_cap_out").start()
+    q.processAllAvailable()
+    q.stop()
+
+    val got = spark.table("pip_cap_out").select("zone_id", "image_id")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val want = graft.join.SpatialJoins.pipJoin(images, zones)
+      .select("zone_id", "image_id")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(got == want && got.nonEmpty, s"got=${got.size} want=${want.size}")
+    val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+    assert(!plan.contains("PipPass") && plan.contains("Join"), s"not the equi-join:\n$plan")
+  }
+
   test("batch spatial enrichment runs at most 2 jobs: no zone-count probe") {
     import graft.data.GeoTables
     val sfDir = new java.io.File(eventsPath).getParent

@@ -228,8 +228,22 @@ class BpeSpec extends AnyFunSuite {
     val df = Seq((1L, "low lower lowest newer"), (2L, "aaa abab aab stable"))
       .toDF("doc_id", "text")
     val driver = Bpe.train(df, "text", 10)
-    assert(Bpe.train(df, "text", 10, cap = 3) == driver)
-    assert(Bpe.train(df, "text", 10, cap = 0) == driver)
+    // the stages that read the corpus: the word aggregate's map stage
+    val corpusStages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (s.stageInfo.rddInfos.exists(_.name == "ParallelCollectionRDD")) corpusStages.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (cap <- Seq(3, 0)) {
+        Thread.sleep(500) // listener events are async; drain
+        corpusStages.set(0)
+        assert(Bpe.train(df, "text", 10, cap = cap) == driver)
+        Thread.sleep(500)
+        assert(corpusStages.get() == 1, s"cap $cap: the corpus was read by ${corpusStages.get()} stages")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
     assert(driver == Bpe.trainRounds(df, "text", 10))
   }
 
