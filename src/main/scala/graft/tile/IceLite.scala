@@ -1,5 +1,6 @@
 package graft.tile
 
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable.ArrayBuffer
@@ -18,12 +19,25 @@ import scala.jdk.CollectionConverters._
  *   <root>/<dataDir>/bucket=<b>/part-*.parquet  immutable data files, one
  *                                  dataDir per writer (listed at TileJob's
  *                                  copy-on-write tail, commitRewrite)
- *   <root>/meta/snap-<id>.json                  snapshot (files + lineage)
+ *   <root>/meta/snap-<id>.json                  snapshot (files + lineage
+ *                                  + table schema)
  *   <root>/meta/_current                        atomic pointer (tmp + rename)
  *
  * Commit protocol: write data files → write snap-<id>.json (tmp+rename) →
  * swap _current (tmp+rename). A crash at any point leaves the previous
  * snapshot intact; orphan data files are ignored by readers (GC later).
+ * A `_current` that names a missing snapshot file is corruption, not an
+ * empty table: [[currentSnapshot]] throws rather than let the next commit
+ * restart the chain at id 1 over the old history.
+ *
+ * Schema: each snapshot records the table schema (`"schema"`, Spark's
+ * `StructType` JSON, which keeps nullability and field metadata), as
+ * Iceberg's metadata does, so readers pass it to `spark.read.schema` and
+ * never open data-file footers to learn it. A commit records its parent's
+ * schema plus the columns it adds (add-column evolution; the `bucket` dir
+ * column is never part of it). A manifest written before the field existed
+ * has no `"schema"` key and parses to `None`; TileJob then infers the
+ * schema from the footers once, and the next commit records it.
  */
 object IceLite {
 
@@ -35,7 +49,7 @@ object IceLite {
                                lineage: Seq[LineageRow])
 
   final case class Snapshot(snapshotId: Long, parentId: Long, jobId: String,
-                            buckets: Seq[BucketEntry])
+                            buckets: Seq[BucketEntry], schema: Option[StructType] = None)
 
   // ---------- tiny JSON (de)serializer — deterministic field order ----------
 
@@ -55,15 +69,19 @@ object IceLite {
       }.mkString("[", ",", "]")
       s"""{"bucket":${b.bucket},"rows":${b.rows},"checksum":${b.checksum},"cellMin":${b.cellMin},"cellMax":${b.cellMax},"dataDir":${esc(b.dataDir)},"lineage":$lin}"""
     }.mkString(","))
-    sb.append("]}")
+    sb.append("]")
+    s.schema.foreach(st => sb.append(",\"schema\":").append(st.json))
+    sb.append("}")
     sb.toString
   }
 
-  /** Minimal parser for the exact shape toJson emits. */
+  /** Minimal parser for the exact shape toJson emits; a manifest without
+    * the `"schema"` key (written before snapshots recorded it) parses with
+    * `schema = None`. */
   def fromJson(j: String): Snapshot = {
     // piggyback on the GeoJson walker's tolerant value model via regex-free scan
     val p = new JsonP(j)
-    val m = p.obj()
+    val m = p.obj(raw = Set("schema"))
     def num(k: String): Long = m(k).asInstanceOf[Double].toLong
     val buckets = m("buckets").asInstanceOf[ArrayBuffer[Any]].map { bAny =>
       val b = bAny.asInstanceOf[Map[String, Any]]
@@ -77,7 +95,8 @@ object IceLite {
         b("checksum").asInstanceOf[Double].toLong, b("cellMin").asInstanceOf[Double].toLong,
         b("cellMax").asInstanceOf[Double].toLong, b("dataDir").asInstanceOf[String], lineage)
     }.toSeq
-    Snapshot(num("snapshotId"), num("parentId"), m("jobId").asInstanceOf[String], buckets)
+    Snapshot(num("snapshotId"), num("parentId"), m("jobId").asInstanceOf[String], buckets,
+      m.get("schema").map(s => DataType.fromJson(s.asInstanceOf[String]).asInstanceOf[StructType]))
   }
 
   /** JSON checksums ride in Long but JSON numbers parse as Double — for
@@ -87,14 +106,18 @@ object IceLite {
   private final class JsonP(s: String) {
     var pos = 0
     def ws(): Unit = while (pos < s.length && Character.isWhitespace(s.charAt(pos))) pos += 1
-    def obj(): Map[String, Any] = {
+    /** An object; the values of `raw` keys come back as their JSON text. */
+    def obj(raw: Set[String] = Set.empty): Map[String, Any] = {
       ws(); require(s.charAt(pos) == '{'); pos += 1
       val m = scala.collection.mutable.LinkedHashMap.empty[String, Any]
       ws()
       if (s.charAt(pos) == '}') { pos += 1; return m.toMap }
       while (true) {
         val k = str(); ws(); require(s.charAt(pos) == ':'); pos += 1
-        m(k) = value()
+        ws()
+        val start = pos
+        val v = value()
+        m(k) = if (raw(k)) s.substring(start, pos) else v
         ws()
         if (s.charAt(pos) == ',') { pos += 1; ws() } else { require(s.charAt(pos) == '}'); pos += 1; return m.toMap }
       }
@@ -150,14 +173,20 @@ object IceLite {
 
   def metaDir(root: String): Path = Paths.get(root, "meta")
 
+  private def readSnapshot(f: Path): Snapshot =
+    fromJson(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
+
+  /** The snapshot `_current` names; `None` when there is no `_current` (no
+    * table). A pointer to a missing snapshot file throws. */
   def currentSnapshot(root: String): Option[Snapshot] = {
     val cur = metaDir(root).resolve("_current")
     if (!Files.exists(cur)) None
     else {
       val name = new String(Files.readAllBytes(cur), StandardCharsets.UTF_8).trim
       val f = metaDir(root).resolve(name)
-      if (!Files.exists(f)) None
-      else Some(fromJson(new String(Files.readAllBytes(f), StandardCharsets.UTF_8)))
+      if (!Files.exists(f))
+        throw new IllegalStateException(s"snapshot pointer $cur names $f, which does not exist")
+      Some(readSnapshot(f))
     }
   }
 
@@ -181,7 +210,7 @@ object IceLite {
   def snapshotById(root: String, snapshotId: Long): Option[Snapshot] = {
     val f = metaDir(root).resolve(s"snap-$snapshotId.json")
     if (!Files.exists(f)) None
-    else Some(fromJson(new String(Files.readAllBytes(f), StandardCharsets.UTF_8)))
+    else Some(readSnapshot(f))
   }
 
   /**
@@ -200,16 +229,12 @@ object IceLite {
         snapshotById(root, id).map(_.parentId).getOrElse(-1L))
       .takeWhile(_ >= 0).take(keep).toSet
     val all = listSnapshots(root)
-    val expireNames = all.filter { n =>
-      val id = n.stripPrefix("snap-").stripSuffix(".json").toLong
-      !retainedIds.contains(id)
-    }
+    val expireNames = all.filterNot { case SnapName(id) => retainedIds.contains(id.toLong) }
     val retainedDirs = retainedIds.flatMap(id =>
       snapshotById(root, id).toSeq.flatMap(_.buckets.map(_.dataDir)))
     // parse expiring manifests BEFORE deleting them to learn their dirs
     val expireDirs = expireNames.flatMap { n =>
-      fromJson(new String(Files.readAllBytes(metaDir(root).resolve(n)),
-        StandardCharsets.UTF_8)).buckets.map(_.dataDir)
+      readSnapshot(metaDir(root).resolve(n)).buckets.map(_.dataDir)
     }.toSet -- retainedDirs
     expireNames.foreach(n => Files.deleteIfExists(metaDir(root).resolve(n)))
     var dirsRemoved = 0
@@ -226,11 +251,18 @@ object IceLite {
     (expireNames.size, dirsRemoved)
   }
 
+  private val SnapName = """snap-(\d+)\.json""".r
+
+  /** The committed snapshot file names, in snapshot-id order. */
   def listSnapshots(root: String): Seq[String] = {
     val meta = metaDir(root)
     if (!Files.exists(meta)) Seq.empty
-    else Files.list(meta).iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith("snap-") && n.endsWith(".json")).toSeq.sorted
+    else {
+      val s = Files.list(meta)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .collect { case n @ SnapName(id) => id.toLong -> n }.toSeq.sortBy(_._1).map(_._2)
+      finally s.close()
+    }
   }
 
   /**
@@ -263,8 +295,7 @@ object IceLite {
       finally s.close()
     }
     val referenced: Set[Path] = listSnapshots(root).flatMap { n =>
-      val snap = fromJson(new String(Files.readAllBytes(metaDir(root).resolve(n)),
-        StandardCharsets.UTF_8))
+      val snap = readSnapshot(metaDir(root).resolve(n))
       snap.buckets.filter(_.rows > 0).map { b =>
         val raw = Paths.get(b.dataDir)
         // in-root resolution FIRST: TileJob always writes under root, so

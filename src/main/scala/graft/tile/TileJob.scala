@@ -3,7 +3,7 @@ package graft.tile
 import graft.sql.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -56,21 +56,28 @@ object TileJob {
 
   /** Per-bucket (stats, lineage) from ONE read-back of the committed files
     * under `basePath` (what readers will see), keyed by bucket id. */
-  private def bucketStats(spark: SparkSession, basePath: String, dirs: Seq[String],
-      jobId: String): Map[Long, (Stats, Seq[IceLite.LineageRow])] =
+  private def bucketStats(spark: SparkSession, schema: StructType, basePath: String,
+      dirs: Seq[String], jobId: String): Map[Long, (Stats, Seq[IceLite.LineageRow])] =
     if (dirs.isEmpty) Map.empty
     // ONE job: per-(bucket, partition) stats collected once; bucket totals
     // fold in the driver. On the streaming ingest path that is one job per
     // micro-batch.
-    else statsBy(spark.read.option("basePath", basePath).parquet(dirs: _*),
+    else statsBy(readBack(spark, schema, basePath, dirs),
         spark_partition_id()).groupBy(_._1._1).map { case (b, parts) =>
       val byPid = parts.toSeq.sortBy(_._1._2)
       b -> ((byPid.map(_._2).reduce(_ + _), byPid.map { case ((_, pid), s) =>
         IceLite.LineageRow(jobId, pid.toInt, s.rows, s.rows, s.cs) }))
     }
 
+  /** Freshly written dirs under `basePath` at `schema`, their `bucket=`
+    * dir names discovered as the `bucket` column. */
+  private def readBack(spark: SparkSession, schema: StructType, basePath: String,
+      dirs: Seq[String]): DataFrame =
+    spark.read.schema(schema).option("basePath", basePath).parquet(dirs: _*)
+
   /** The core columns as the data files store them (the bucket lives in the
-    * dir name): the schema an empty table reads at. */
+    * dir name): the schema of a table with no data files and no recorded
+    * schema. */
   private val fileSchema = StructType.fromDDL("image_id STRING, caption STRING, " +
     "w INT, h INT, fmt STRING, lon DOUBLE, lat DOUBLE, cell BIGINT, tx BIGINT, " +
     "ty BIGINT, phash BIGINT, phash_ok BOOLEAN")
@@ -79,6 +86,48 @@ object TileJob {
     * streaming ingest: bucket (coarse Morton cell), tile x/y, fine cell,
     * and the per-row pHash revalidation. */
   private val coreCols = "bucket" +: fileSchema.fieldNames.toSeq
+
+  /** `t` as a data-file read reports it: every field, element and value
+    * nullable. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case o => o
+  }
+
+  /** The schema a commit records (the add-column rule): `parent`, then the
+    * columns of `written` it lacks, in `written`'s order, never the `bucket`
+    * dir column. A column both hold must keep its type. */
+  private def evolve(parent: StructType, written: StructType): StructType = {
+    val added = written.fields.filter(_.name != "bucket").flatMap { w =>
+      val f = nullable(w.dataType)
+      parent.fields.find(_.name.equalsIgnoreCase(w.name)) match {
+        case None => Some(w.copy(dataType = f, nullable = true))
+        case Some(p) =>
+          require(nullable(p.dataType) == f, s"column ${w.name} is " +
+            s"${p.dataType.simpleString} in the table but ${w.dataType.simpleString} here")
+          None
+      }
+    }
+    StructType(parent.fields ++ added)
+  }
+
+  /** The table schema as of `snap`: the recorded one. A manifest written
+    * before snapshots recorded it gets the footer union of its live dirs
+    * (one schema-inference job; the next commit records the result), or
+    * the core columns when it has no data files. */
+  private def schemaOf(spark: SparkSession, snap: IceLite.Snapshot): StructType =
+    snap.schema.getOrElse {
+      val live = liveDirs(snap.buckets.map(_.dataDir))
+      if (live.isEmpty) fileSchema
+      else spark.read.option("mergeSchema", "true").parquet(live: _*).schema
+    }
+
+  /** The dirs that exist (an empty bucket has none). */
+  private def liveDirs(dirs: Seq[String]): Seq[String] =
+    dirs.filter(d => Files.exists(Paths.get(d)))
 
   private def tileProjection(df: DataFrame, zoom: Int, bucketLevel: Int,
                              extraCols: Seq[String] = Nil): DataFrame = {
@@ -144,8 +193,9 @@ object TileJob {
         s"ingest marker $marker exists but the table has no current snapshot"))
 
     val base = s"$outRoot/data-s$batchId"
-    tileProjection(batch, zoom, bucketLevel, extraCols)
-      .sortWithinPartitions("bucket", "cell", "image_id")
+    val tiles = tileProjection(batch, zoom, bucketLevel, extraCols)
+    val schema = evolve(prev.fold(new StructType())(schemaOf(spark, _)), tiles.schema)
+    tiles.sortWithinPartitions("bucket", "cell", "image_id")
       .write.mode("overwrite").partitionBy("bucket").parquet(base)
 
     val dirs = {
@@ -158,12 +208,12 @@ object TileJob {
         finally s.close()
       }
     }
-    val stats = bucketStats(spark, base, dirs, jobId)
+    val stats = bucketStats(spark, schema, base, dirs, jobId)
     val entries = prev.map(_.buckets.toVector).getOrElse(Vector.empty) ++
       stats.toSeq.sortBy(_._1).map { case (b, (st, lineage)) =>
         st.entry(b.toInt, s"$base/bucket=$b", lineage) }
     val snap = IceLite.Snapshot(prev.map(_.snapshotId).getOrElse(0L) + 1,
-      prev.map(_.snapshotId).getOrElse(-1L), jobId, entries)
+      prev.map(_.snapshotId).getOrElse(-1L), jobId, entries, Some(schema))
     IceLite.commit(outRoot, snap)
     val tmp = IceLite.metaDir(outRoot).resolve(s"ingest-$jobId.done.tmp")
     Files.write(tmp, Array.emptyByteArray)
@@ -185,6 +235,7 @@ object TileJob {
     val jobId = s"tile-z$zoom-L$bucketLevel"
 
     val pending = (0 until nBuckets).filterNot(done.contains)
+    if (pending.isEmpty) return current(outRoot)
 
     // ONE pass over the input for all pending buckets (the per-bucket
     // `where(bucket_cell === b)` of the old design got no parquet pushdown
@@ -193,24 +244,23 @@ object TileJob {
     // instead of a coalesce(1) single-task choke; dynamic partition
     // overwrite only replaces the bucket dirs we actually write, so
     // committed buckets from a previous run are never touched.
-    if (pending.nonEmpty) {
-      val nParts = math.max(spark.sparkContext.defaultParallelism, pending.size)
-      // the bucket filter is pushed below the projection by Catalyst
-      // (alias substitution), so img_phash never runs on skipped buckets
-      tileProjection(spark.read.parquet(imagesPath), zoom, bucketLevel)
-        .where(col("bucket").isInCollection(pending.map(_.toLong)))
-        .repartitionByRange(nParts, col("bucket"), col("cell"), col("image_id"))
-        .sortWithinPartitions("bucket", "cell", "image_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(s"$outRoot/data")
-    }
+    val nParts = math.max(spark.sparkContext.defaultParallelism, pending.size)
+    val tiles = tileProjection(spark.read.parquet(imagesPath), zoom, bucketLevel)
+    val schema = evolve(prev.fold(new StructType())(schemaOf(spark, _)), tiles.schema)
+    // the bucket filter is pushed below the projection by Catalyst
+    // (alias substitution), so img_phash never runs on skipped buckets
+    tiles.where(col("bucket").isInCollection(pending.map(_.toLong)))
+      .repartitionByRange(nParts, col("bucket"), col("cell"), col("image_id"))
+      .sortWithinPartitions("bucket", "cell", "image_id")
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket")
+      .parquet(s"$outRoot/data")
 
     // stats + lineage for every pending bucket in one read-back of the
     // committed files (what readers will see), keyed by bucket
-    val statRows = bucketStats(spark, s"$outRoot/data",
-      pending.map(b => s"$outRoot/data/bucket=$b").filter(d => Files.exists(Paths.get(d))), jobId)
+    val statRows = bucketStats(spark, schema, s"$outRoot/data",
+      liveDirs(pending.map(b => s"$outRoot/data/bucket=$b")), jobId)
 
     // per-bucket snapshot commits (driver-only) keep the resume granularity:
     // a crash between commits loses at most one bucket's bookkeeping
@@ -224,7 +274,7 @@ object TileJob {
       val (st, lineage) = statRows.getOrElse(b.toLong, (NoRows, Seq.empty))
       entries :+= st.entry(b, dataDir, lineage)
       snapId += 1
-      IceLite.commit(outRoot, IceLite.Snapshot(snapId, parent, jobId, entries))
+      IceLite.commit(outRoot, IceLite.Snapshot(snapId, parent, jobId, entries, Some(schema)))
       parent = snapId
       processed += 1
     }
@@ -266,7 +316,8 @@ object TileJob {
       es.size > 1 || es.iterator.map(e => partFiles(e.dataDir)).sum > maxFilesPerBucket
     }
     if (selected.isEmpty) return snap
-    commitRewrite(spark, outRoot, snap, "compact", bucketUnion(spark, selected),
+    val schema = schemaOf(spark, snap)
+    commitRewrite(spark, outRoot, snap, schema, "compact", bucketUnion(spark, schema, selected),
       selected.map { case (b, es) =>
         val st = es.map(statsOf).reduce(_ + _)
         Rewrite(b, st, st.rows)
@@ -298,7 +349,8 @@ object TileJob {
     val snap = current(outRoot)
     val groups = liveGroups(snap)
     if (groups.isEmpty) return snap
-    val src = bucketUnion(spark, groups)
+    val schema = schemaOf(spark, snap)
+    val src = bucketUnion(spark, schema, groups)
       .drop("bucket")
       .withColumn("bucket", call_function("st_cell_parent",
         col("cell"), lit(zoom), lit(newBucketLevel)))
@@ -309,7 +361,7 @@ object TileJob {
     if (scanned != committed)
       throw new IllegalStateException(
         s"rebucket conservation failed: scanned $scanned vs manifest $committed — nothing written")
-    commitRewrite(spark, outRoot, snap, s"rebucket-L$newBucketLevel", src,
+    commitRewrite(spark, outRoot, snap, schema, s"rebucket-L$newBucketLevel", src,
       expected.map { case (b, st) => Rewrite(b, st, st.rows) }, relayout = true)
   }
 
@@ -317,21 +369,19 @@ object TileJob {
   private def liveGroups(snap: IceLite.Snapshot): Seq[(Int, Seq[IceLite.BucketEntry])] =
     snap.buckets.filter(_.rows > 0).groupBy(_.bucket).toSeq.sortBy(_._1)
 
-  /** ONE multi-path scan per bucket over its manifest entries, bucket id as
-    * a literal column (dir-name partition columns are not stored in the
-    * files). Plan size rides the bucket count, never the entry (micro-batch)
-    * count. mergeSchema + allowMissingColumns: an evolved table holds
-    * entries written before a column was added; a plain read takes ONE
-    * footer's schema nondeterministically (dropping the added column from a
-    * rewrite = data loss), and strict unionByName throws across buckets of
-    * different widths. A rewrite therefore materializes the UNION schema
-    * with NULLs for pre-evolution rows — Iceberg's rewrite-at-current-schema. */
-  private def bucketUnion(spark: SparkSession,
+  /** ONE multi-path scan per bucket over its manifest entries, at the table
+    * `schema`, bucket id as a literal column (dir-name partition columns are
+    * not stored in the files). Plan size rides the bucket count, never the
+    * entry (micro-batch) count, and no scan infers a schema, so a rewrite
+    * runs no job per bucket before any row moves. Entries written before a
+    * column was added read it as NULL: a rewrite materializes the table
+    * schema — Iceberg's rewrite-at-current-schema. */
+  private def bucketUnion(spark: SparkSession, schema: StructType,
       groups: Seq[(Int, Seq[IceLite.BucketEntry])]): DataFrame =
     groups.map { case (b, es) =>
-        spark.read.option("mergeSchema", "true").parquet(es.map(_.dataDir): _*)
+        spark.read.schema(schema).parquet(es.map(_.dataDir): _*)
           .withColumn("bucket", lit(b.toLong)) }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .reduce(_ unionByName _)
 
   /** One bucket a copy-on-write rewrite writes. `expect` is what its new dir
     * must hold, derived from the manifest and the op's own scan, never from
@@ -347,7 +397,9 @@ object TileJob {
    * sorted on bucket, cell, image_id) under one fresh immutable dir,
    * verify every bucket in `outs` against its expectation, then publish
    * ONE snapshot with jobId `<stage>-<parent jobId>`. A mismatch aborts
-   * before the commit, leaving only orphan files readers never see.
+   * before the commit, leaving only orphan files readers never see. The
+   * snapshot records `base` (the table schema `snap` reads at) plus the
+   * columns `rows` adds.
    *
    * The table's data dirs, one per writer; a manifest entry references
    * `<dir>/bucket=<b>`:
@@ -368,16 +420,17 @@ object TileJob {
    * entries carry stage `<stage>-insert`.
    */
   private def commitRewrite(spark: SparkSession, outRoot: String, snap: IceLite.Snapshot,
-      stage: String, rows: DataFrame, outs: Seq[Rewrite],
+      base: StructType, stage: String, rows: DataFrame, outs: Seq[Rewrite],
       relayout: Boolean = false): IceLite.Snapshot = {
     val newRoot = s"$outRoot/data-${stage.head}${snap.snapshotId + 1}"
     def newDir(b: Int): String = s"$newRoot/bucket=$b"
+    val schema = evolve(base, rows.schema)
     (if (!relayout) rows.repartition(outs.size, col("bucket"))
      else rows.repartitionByRange(math.max(spark.sparkContext.defaultParallelism, outs.size),
        col("bucket"), col("cell"), col("image_id")))
       .sortWithinPartitions("bucket", "cell", "image_id")
       .write.mode("overwrite").partitionBy("bucket").parquet(newRoot)
-    verifyRewrite(spark, stage, newRoot, outs.map(o => o.bucket -> o.expect))
+    verifyRewrite(spark, schema, stage, newRoot, outs.map(o => o.bucket -> o.expect))
 
     val prior = liveGroups(snap).toMap
     def entry(o: Rewrite, lineage: Seq[IceLite.LineageRow], st: String) =
@@ -395,7 +448,8 @@ object TileJob {
           else None
         } ++ outs.filterNot(_.replaces).map(entry(_, Nil, s"$stage-insert"))
       }
-    val out = IceLite.Snapshot(snap.snapshotId + 1, snap.snapshotId, s"$stage-${snap.jobId}", entries)
+    val out = IceLite.Snapshot(snap.snapshotId + 1, snap.snapshotId, s"$stage-${snap.jobId}",
+      entries, Some(schema))
     IceLite.commit(outRoot, out)
     out
   }
@@ -404,11 +458,11 @@ object TileJob {
     * expectations BEFORE a snapshot publishes them: rows, checksum and cell
     * range must match per bucket, read back in one scan. Buckets expecting
     * 0 rows must have no dir at all (partitionBy writes nothing for them). */
-  private def verifyRewrite(spark: SparkSession, op: String, newRoot: String,
-      expected: Seq[(Int, Stats)]): Unit = {
+  private def verifyRewrite(spark: SparkSession, schema: StructType, op: String,
+      newRoot: String, expected: Seq[(Int, Stats)]): Unit = {
     val written = expected.collect { case (b, st) if st.rows > 0 => s"$newRoot/bucket=$b" }
     val back = if (written.isEmpty) Map.empty[(Long, Long), Stats]
-      else statsBy(spark.read.option("basePath", newRoot).parquet(written: _*))
+      else statsBy(readBack(spark, schema, newRoot, written))
     expected.foreach { case (b, exp) =>
       if (exp.rows == 0) {
         if (Files.exists(Paths.get(s"$newRoot/bucket=$b")))
@@ -432,7 +486,8 @@ object TileJob {
     * writes exactly its own rows. A rewritten bucket's expected checksum is
     * manifest XOR removed XOR added — independent of the rewrite it checks. */
   private def keyOut(spark: SparkSession, outRoot: String, snap: IceLite.Snapshot,
-      stage: String, table: Option[DataFrame], adds: Option[DataFrame]): IceLite.Snapshot = {
+      schema: StructType, stage: String, table: Option[DataFrame],
+      adds: Option[DataFrame]): IceLite.Snapshot = {
     val seen = table.map(statsBy(_, col("_del"))).getOrElse(Map.empty)
     val added = adds.map(statsBy(_)).getOrElse(Map.empty).map { case ((b, _), st) => b.toInt -> st }
     def part(b: Int, del: Boolean) = seen.getOrElse((b.toLong, if (del) 1L else 0L), NoRows)
@@ -447,7 +502,7 @@ object TileJob {
     val kept = if (hit.isEmpty) None else table.map(_
       .where(col("bucket").isInCollection(hit.keys.map(_.toLong)) && !col("_del"))
       .drop("_del"))
-    commitRewrite(spark, outRoot, snap, stage,
+    commitRewrite(spark, outRoot, snap, schema, stage,
       (kept ++ adds).reduce(_.unionByName(_, allowMissingColumns = true)),
       touched.map { b =>
         val add = added.getOrElse(b, NoRows)
@@ -487,7 +542,8 @@ object TileJob {
     if (groups.isEmpty) return snap
     // NULL never deletes: SQL's WHERE keeps only TRUE, so the delete set is
     // cond IS TRUE and the kept set is its complement
-    keyOut(spark, outRoot, snap, "delete", Some(bucketUnion(spark, groups)
+    val schema = schemaOf(spark, snap)
+    keyOut(spark, outRoot, snap, schema, "delete", Some(bucketUnion(spark, schema, groups)
       .withColumn("_del", coalesce(cond, lit(false)))), None)
   }
 
@@ -516,7 +572,8 @@ object TileJob {
                   extraCols: Seq[String] = Nil): IceLite.Snapshot = {
     val snap = current(outRoot)
     val groups = liveGroups(snap)
-    val table = if (groups.isEmpty) None else Some(bucketUnion(spark, groups))
+    val schema = schemaOf(spark, snap)
+    val table = if (groups.isEmpty) None else Some(bucketUnion(spark, schema, groups))
     // EVOLVED columns ride through automatically on MERGE (a matched row is
     // REPLACED wholesale — projecting the update down to core columns would
     // silently blank evolved values the verify checksum cannot see, since
@@ -541,7 +598,7 @@ object TileJob {
     // AQE converts the shuffle join when the id side is small, and a
     // billion-row MERGE source must not OOM the driver
     val ids = proj.select(col("image_id").as("_mid")).distinct().withColumn("_hit", lit(true))
-    keyOut(spark, outRoot, snap, "merge", table.map(_
+    keyOut(spark, outRoot, snap, schema, "merge", table.map(_
       .join(ids, col("image_id") === col("_mid"), "left")
       .withColumn("_del", coalesce(col("_hit"), lit(false)))
       .drop("_mid", "_hit")), Some(proj))
@@ -556,52 +613,55 @@ object TileJob {
     IceLite.snapshotById(outRoot, id).getOrElse(throw new IllegalArgumentException(
       s"no snapshot $id at $outRoot (have: ${IceLite.listSnapshots(outRoot).mkString(", ")})"))
 
-  /** The one read path: the rows under the manifest dirs that exist (an
-    * empty bucket has none). A table with no data files — every row
-    * deleted, or built from an empty input — reads as zero rows at the
-    * core columns: a parquet read of zero paths cannot infer a schema. */
-  private def readDirs(spark: SparkSession, dirs: Seq[String],
-                       mergeSchema: Boolean = false): DataFrame = {
-    val live = dirs.filter(d => Files.exists(Paths.get(d)))
-    if (live.isEmpty) spark.createDataFrame(java.util.List.of[Row](), fileSchema)
-    else (if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read)
-      .parquet(live: _*)
+  /** The one read path: the rows under those of `snap`'s dirs in `dirs`
+    * that exist (an empty bucket has none), at `snap`'s table schema
+    * ([[schemaOf]]), so no footer decides the columns. Files written before
+    * a column was added read it as NULL — the read-side semantics an
+    * Iceberg catalog serves after ADD COLUMN. A table with no data files —
+    * every row deleted, or built from an empty input — reads as zero rows
+    * at the same schema. */
+  private def readDirs(spark: SparkSession, snap: IceLite.Snapshot,
+                       dirs: Seq[String]): DataFrame = {
+    val schema = schemaOf(spark, snap)
+    val live = liveDirs(dirs)
+    if (live.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+    else spark.read.schema(schema).parquet(live: _*)
   }
 
   /** Read the table as of the current snapshot (manifest-driven file list). */
-  def readCurrent(spark: SparkSession, outRoot: String): DataFrame =
-    readDirs(spark, current(outRoot).buckets.map(_.dataDir))
+  def readCurrent(spark: SparkSession, outRoot: String): DataFrame = {
+    val snap = current(outRoot)
+    readDirs(spark, snap, snap.buckets.map(_.dataDir))
+  }
 
   /** TIME TRAVEL: read the table as of an older committed snapshot.
     * Data files are immutable and snapshots are never rewritten, so any
     * historical id reproduces exactly the rows visible at that commit —
     * the audit/rollback read an Iceberg catalog would serve with
     * `VERSION AS OF`. */
-  def readAt(spark: SparkSession, outRoot: String, snapshotId: Long): DataFrame =
-    readDirs(spark, snapshotAt(outRoot, snapshotId).buckets.map(_.dataDir))
+  def readAt(spark: SparkSession, outRoot: String, snapshotId: Long): DataFrame = {
+    val snap = snapshotAt(outRoot, snapshotId)
+    readDirs(spark, snap, snap.buckets.map(_.dataDir))
+  }
 
-  /** SCHEMA EVOLUTION on read (the Iceberg add-column contract): bucket
-    * files written before a column was added lack it on disk; plain
-    * `spark.read.parquet(dirs)` picks ONE file's schema nondeterministically
-    * — the added column silently vanishes whenever an old file wins.
-    * `mergeSchema` unions every file footer instead, and rows from
-    * pre-evolution files carry NULL in the added columns — exactly the
-    * read-side semantics an Iceberg catalog serves after ADD COLUMN.
-    * Scale note: footer-union cost rides the FILE count (manifest-bounded
-    * here), not rows; type changes / renames are out of scope (the
-    * add-column path is the one a training pipeline actually takes when
-    * it starts logging a new feature). Old snapshots read via [[readAt]]
-    * keep their own narrower schema — time travel is schema-faithful. */
+  /** SCHEMA EVOLUTION on read (the Iceberg add-column contract): the
+    * current table at its evolved schema, NULL in added columns for rows
+    * from pre-evolution files. Every read is at the snapshot's recorded
+    * schema, so this is [[readCurrent]]; type changes / renames are out of
+    * scope. Old snapshots read via [[readAt]] keep their own narrower
+    * schema — time travel is schema-faithful. */
   def readEvolved(spark: SparkSession, outRoot: String): DataFrame =
-    readDirs(spark, current(outRoot).buckets.map(_.dataDir), mergeSchema = true)
+    readCurrent(spark, outRoot)
 
   /** Manifest-driven pruning: only buckets whose cell range intersects. */
   def readCellRange(spark: SparkSession, outRoot: String,
-                    cellMin: Long, cellMax: Long): DataFrame =
-    readDirs(spark, current(outRoot).buckets
+                    cellMin: Long, cellMax: Long): DataFrame = {
+    val snap = current(outRoot)
+    readDirs(spark, snap, snap.buckets
         .filter(b => b.rows > 0 && b.cellMin <= cellMax && b.cellMax >= cellMin)
         .map(_.dataDir))
       .where(col("cell") >= cellMin && col("cell") <= cellMax)
+  }
 
   /** The manifest-level prune behind [[snapshotDiff]]: data dirs present
     * in one snapshot but not the other. Data files are IMMUTABLE (every
@@ -626,45 +686,52 @@ object TileJob {
      live(to.buckets.filterNot(b => f.contains(b.dataDir))))
   }
 
+  /** The rows of the dirs only snapshot `fromId` holds and of those only
+    * `toId` holds ([[changedDirs]]), `None` for a side with no dirs. Both
+    * read at the two snapshots' schemas combined, so every column either
+    * holds reads on both sides (NULL where a file lacks it). */
+  private def changedRows(spark: SparkSession, outRoot: String, fromId: Long,
+      toId: Long): (Option[DataFrame], Option[DataFrame]) = {
+    val (from, to) = (snapshotAt(outRoot, fromId), snapshotAt(outRoot, toId))
+    val (fDirs, tDirs) = changedDirs(from, to)
+    lazy val schema = evolve(schemaOf(spark, from), schemaOf(spark, to))
+    def rd(dirs: Seq[String]): Option[DataFrame] =
+      Option.when(dirs.nonEmpty)(spark.read.schema(schema).parquet(dirs: _*))
+    (rd(fDirs), rd(tDirs))
+  }
+
   /** CDC CHANGELOG between two committed snapshots — Iceberg's
     * incremental/changelog scan: one row per changed image_id with
     * op ∈ insert | delete | update. Buckets whose manifest entry points
     * at the same immutable data dir in both snapshots are pruned WITHOUT
     * reading (see [[changedDirs]]); inside the changed set, a full outer
-    * join on image_id compares an all-columns fingerprint (footer-union
-    * reads, so evolved columns participate; binary columns hash via md5,
-    * everything else via a null-sentineled string cast). Rows that moved
-    * buckets with identical content (e.g. rebucket) correctly vanish
-    * from the changelog. At 10^12 rows an incremental consumer pays for
-    * the delta, never the table. */
+    * join on image_id compares an all-columns fingerprint (both sides read
+    * at the combined schema, so evolved columns participate; binary
+    * columns hash via md5, everything else via a null-sentineled string
+    * cast). Rows that moved buckets with identical content (e.g.
+    * rebucket) correctly vanish from the changelog. At 10^12 rows an
+    * incremental consumer pays for the delta, never the table. */
   def snapshotDiff(spark: SparkSession, outRoot: String,
                    fromId: Long, toId: Long): DataFrame = {
     import org.apache.spark.sql.types.BinaryType
-    val (fDirs, tDirs) = changedDirs(snapshotAt(outRoot, fromId), snapshotAt(outRoot, toId))
     val empty = spark.range(0).select(lit("insert").as("op"), lit("").as("image_id"))
-    def rd(dirs: Seq[String]): Option[DataFrame] =
-      if (dirs.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(dirs: _*))
-    (rd(fDirs), rd(tDirs)) match {
+    changedRows(spark, outRoot, fromId, toId) match {
       case (None, None) => empty.limit(0)
       case (a, b) =>
-        // Fingerprint over the union of both sides' columns, sorted by
-        // name. ONE sentinel for both "column absent from this side's
-        // schema" and "value is NULL": Iceberg's ADD COLUMN produces no
-        // CDC rows, so a rewrite that merely materializes a new all-NULL
-        // column must fingerprint identically to the pre-evolution file
-        // (distinct sentinels would flag every untouched row as an
-        // update). Every branch is coalesced -- xxhash64 SKIPS null
-        // children rather than hashing them, so an uncoalesced md5(null)
-        // would silently drop the column from the hash.
-        val types = (a.toSeq ++ b.toSeq)
-          .flatMap(_.schema.fields.map(f => f.name -> f.dataType)).toMap
-        val names = types.keys.toSeq.sorted.filter(_ != "image_id")
+        // Fingerprint over the combined columns, sorted by name. A file
+        // that lacks a column reads it as NULL, so ONE sentinel covers
+        // "column absent from this file" and "value is NULL": Iceberg's ADD
+        // COLUMN produces no CDC rows, so a rewrite that merely
+        // materializes a new all-NULL column must fingerprint identically
+        // to the pre-evolution file. Every branch is coalesced -- xxhash64
+        // SKIPS null children rather than hashing them, so an uncoalesced
+        // md5(null) would silently drop the column from the hash.
+        val fields = (a ++ b).head.schema.fields
+          .filter(_.name != "image_id").sortBy(_.name)
         val nullSentinel = lit("\u0000null")
-        def fp(df: DataFrame): Column = xxhash64(names.map { n =>
-          if (!df.columns.contains(n)) nullSentinel
-          else if (types(n) == BinaryType) coalesce(md5(col(n)), nullSentinel)
-          else coalesce(col(n).cast("string"), nullSentinel)
+        def fp(df: DataFrame): Column = xxhash64(fields.toSeq.map { f =>
+          if (f.dataType == BinaryType) coalesce(md5(col(f.name)), nullSentinel)
+          else coalesce(col(f.name).cast("string"), nullSentinel)
         }: _*)
         def side(df: Option[DataFrame], hname: String): DataFrame = df match {
           case Some(d) => d.select(col("image_id"), fp(d).as(hname))
@@ -705,10 +772,9 @@ object TileJob {
     * only as the spec's ground truth. */
   def incrementalTileAgg(spark: SparkSession, outRoot: String, prev: DataFrame,
                          fromId: Long, toId: Long): DataFrame = {
-    val (fDirs, tDirs) = changedDirs(snapshotAt(outRoot, fromId), snapshotAt(outRoot, toId))
-    val sides = Seq(fDirs -> -1L, tDirs -> 1L).collect { case (dirs, sgn) if dirs.nonEmpty =>
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-        .select(col("tx"), col("ty"), lit(sgn).as("sgn"), col("w").cast("long").as("w"))
+    val (gone, added) = changedRows(spark, outRoot, fromId, toId)
+    val sides = Seq(gone -> -1L, added -> 1L).collect { case (Some(df), sgn) =>
+      df.select(col("tx"), col("ty"), lit(sgn).as("sgn"), col("w").cast("long").as("w"))
     }
     if (sides.isEmpty) return prev
     val delta = sides.reduce(_ unionByName _)
